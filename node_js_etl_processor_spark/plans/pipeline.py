@@ -17,11 +17,17 @@ source (O2) and never abort the run; an empty extract still transforms
 and stages empty outputs (the reference's ``if (rawData)`` gate is
 always-truthy for arrays, server.js:147); sink failures DO fail the run
 (server.js:134-135, 163-165).
+
+A refresh costs one Spark job: ``stage`` collects the transformed rows
+once and renders both staged files from them on the driver, so the
+JSON and the CSV of one refresh share one ``last_updated`` stamp.
+Concurrent ``run()`` calls on one pipeline take turns.
 """
 
 from __future__ import annotations
 
 import logging
+import threading
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 from typing import Any
@@ -33,10 +39,7 @@ from node_js_etl_processor_spark.sources.http_json import (
     DEFAULT_COUNTRIES,
     fetch_universities_driver,
 )
-from node_js_etl_processor_spark.universities import (
-    csv_export_frame,
-    transform_universities,
-)
+from node_js_etl_processor_spark.universities import transform_universities
 
 logger = logging.getLogger(__name__)
 
@@ -86,7 +89,9 @@ class UniversitiesPipeline:
     csv_path: str = "data/universities.csv"
     countries: Sequence[str] = DEFAULT_COUNTRIES
     fetcher: Callable | None = None
-    small_output: bool = True
+    _lock: threading.Lock = field(
+        default_factory=threading.Lock, init=False, repr=False, compare=False
+    )
 
     def extract(self) -> tuple[DataFrame, list[str]]:
         return fetch_universities_driver(
@@ -97,26 +102,27 @@ class UniversitiesPipeline:
         return transform_universities(raw)
 
     def stage(self, transformed: DataFrame) -> int:
-        n = write_json_array(transformed_iso(transformed), self.json_path,
-                             small_output=self.small_output)
-        write_csv_export(
-            csv_export_frame(transformed), self.csv_path, small_output=self.small_output
-        )
+        # one collect feeds both sinks; asDict keeps every key with an
+        # explicit null, like the reference's JSON.stringify
+        rows = [r.asDict() for r in transformed_iso(transformed).collect()]
+        n = write_json_array(rows, self.json_path)
+        write_csv_export(rows, self.csv_path)
         return n
 
     def run(self) -> ETLResult:
         """O1: the full run with the reference's result record."""
-        logger.info("Starting ETL process...")
-        try:
-            raw, failed = self.extract()
-            # always-transform gate (server.js:147: `[]` is truthy)
-            transformed = self.transform(raw)
-            n = self.stage(transformed)
-            logger.info("ETL process completed successfully. %d records", n)
-            return ETLResult(success=True, record_count=n, failed_sources=failed)
-        except Exception as exc:  # sink/transform failures propagate
-            logger.error("ETL process failed: %s", exc)
-            return ETLResult(success=False, error=str(exc))
+        with self._lock:
+            logger.info("Starting ETL process...")
+            try:
+                raw, failed = self.extract()
+                # always-transform gate (server.js:147: `[]` is truthy)
+                transformed = self.transform(raw)
+                n = self.stage(transformed)
+                logger.info("ETL process completed successfully. %d records", n)
+                return ETLResult(success=True, record_count=n, failed_sources=failed)
+            except Exception as exc:  # sink/transform failures propagate
+                logger.error("ETL process failed: %s", exc)
+                return ETLResult(success=False, error=str(exc))
 
 
 def transformed_iso(df: DataFrame) -> DataFrame:

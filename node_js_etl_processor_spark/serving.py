@@ -21,17 +21,20 @@ envelopes:
   (O8, server.js:251-261); handler exceptions — 500 ``{error,
   timestamp}`` (server.js:242-248).
 
-Scale note: serving reads ONLY driver-local staged artifacts (the
-reference's actual contract — thousands of rows), so no Spark job runs
+Serving reads ONLY driver-local staged artifacts, so no Spark job runs
 on the read path; the engine is touched exclusively by POST /refresh.
-A 100 TB deployment would swap the staged-file read for a pointer to
-partitioned output and push pagination into the store; the envelope
-and catalog contract stay as they are here.
+Both GET endpoints share one small render cache per server: each read
+opens the staged file, ``fstat``s that descriptor and reuses the stored
+response bytes while ``(st_ino, st_mtime_ns, st_size)`` is unchanged.
+The sinks publish by atomic replace, so a refresh changes the key
+(a new inode) and the next read renders the new file once; a JSON read
+otherwise costs a ``stat`` plus a byte write, like the CSV passthrough.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import threading
 from datetime import datetime, timezone
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -69,13 +72,14 @@ def json_envelope(rows: list[dict[str, Any]]) -> dict[str, Any]:
     }
 
 
-def envelope_from_df(df) -> dict[str, Any]:
-    """A2 over a DataFrame at the serving edge: schema-complete dicts
-    (explicit nulls, like write_json_array) wrapped in the envelope.
-    Driver-side collect is the point here — this is the single-file
-    serving contract, never a mid-pipeline operator."""
-    cols = df.columns
-    return json_envelope([{c: r[c] for c in cols} for r in df.collect()])
+def _render_json(raw: bytes) -> bytes:
+    """A2 response bytes for a staged JSON array (raises on bad JSON)."""
+    return json.dumps(json_envelope(json.loads(raw.decode("utf-8")))).encode()
+
+
+def _render_csv(raw: bytes) -> bytes:
+    """S6: the staged CSV is served verbatim (server.js:181-197)."""
+    return raw
 
 
 class _Handler(BaseHTTPRequestHandler):
@@ -85,6 +89,11 @@ class _Handler(BaseHTTPRequestHandler):
     json_path: str = "data/universities.json"
     csv_path: str = "data/universities.csv"
     refresh_fn: Callable[[], dict[str, Any]] | None = None
+    # path -> ((st_ino, st_mtime_ns, st_size), response bytes); serve()
+    # gives every server its own dict. Handler threads share it without a
+    # lock: a race at worst renders a file twice or stores an entry whose
+    # key the next read sees as stale.
+    rendered: dict[str, tuple[tuple[int, int, int], bytes]] = {}
 
     def log_message(self, fmt: str, *args: Any) -> None:  # quiet tests
         pass
@@ -101,6 +110,20 @@ class _Handler(BaseHTTPRequestHandler):
         self.end_headers()
         self.wfile.write(payload)
 
+    def _staged(self, path: str, render: Callable[[bytes], bytes]) -> bytes:
+        """Response bytes for the staged file at ``path``, re-rendered
+        only when the file's stat key changes. Raises FileNotFoundError
+        like the reference's fs.access gate."""
+        with open(path, "rb") as fh:
+            st = os.fstat(fh.fileno())
+            key = (st.st_ino, st.st_mtime_ns, st.st_size)
+            hit = self.rendered.get(path)
+            if hit is not None and hit[0] == key:
+                return hit[1]
+            body = render(fh.read())
+        self.rendered[path] = (key, body)
+        return body
+
     def _not_found_catalog(self) -> None:
         self._send(404, {"error": "Endpoint not found",
                          "availableEndpoints": AVAILABLE_ENDPOINTS})
@@ -111,9 +134,7 @@ class _Handler(BaseHTTPRequestHandler):
                 self._send(200, INDEX_BODY)
             elif self.path == "/api/universities/csv":
                 try:
-                    from node_js_etl_processor_spark.sources.files import read_csv_bytes
-
-                    data = read_csv_bytes(self.csv_path)
+                    data = self._staged(self.csv_path, _render_csv)
                 except FileNotFoundError:
                     self._send(404, {
                         "error": "CSV file not found. Please run the ETL process first.",
@@ -125,8 +146,7 @@ class _Handler(BaseHTTPRequestHandler):
                 })
             elif self.path == "/api/universities/json":
                 try:
-                    with open(self.json_path, encoding="utf-8") as fh:
-                        rows = json.load(fh)
+                    body = self._staged(self.json_path, _render_json)
                 # the reference catches JSON.parse failures in the same
                 # try/catch as fs.access (server.js:200-219): an
                 # unparseable staged file gets the 404 envelope too
@@ -136,7 +156,7 @@ class _Handler(BaseHTTPRequestHandler):
                         "suggestion": "Try calling /api/refresh to generate the data",
                     })
                     return
-                self._send(200, json_envelope(rows))
+                self._send(200, body)
             else:
                 self._not_found_catalog()
         except Exception:  # O8 error middleware (server.js:242-248)
@@ -180,6 +200,7 @@ def serve(
         "json_path": json_path,
         "csv_path": csv_path,
         "refresh_fn": staticmethod(refresh_fn) if refresh_fn else None,
+        "rendered": {},
     })
     httpd = ThreadingHTTPServer(("127.0.0.1", port), handler)
     threading.Thread(target=httpd.serve_forever, daemon=True).start()

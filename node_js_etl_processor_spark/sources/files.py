@@ -2,19 +2,18 @@
 
 - S3 (server.js:106): ONE pretty-printed JSON **array** file. Spark
   natively writes JSONL directories, so the array-file contract is a
-  deliberate export step at the edge (``small_output=True`` semantics —
-  SURVEY.md §4): never used mid-pipeline, and the engine-internal
-  staging format stays parquet/JSONL.
+  deliberate export step at the edge, never used mid-pipeline.
 - S4 (server.js:109-130): ONE CSV file, fixed 7-column header order,
-  nulls as empty strings (quoting matches json2csv v6: fields quoted
-  only when needed... json2csv actually quotes all strings by default;
-  pinned by the golden test).
+  nulls as empty strings, every field double-quoted (json2csv v6's
+  default, pinned by the golden test).
 - S5 (server.js:203-204): read-back of the staged JSON array via
   multiLine JSON.
 
-At scale the same writers are used with ``small_output=False``, which
-keeps Spark's partitioned output (directory of part files) — the
-single-file contract is an anti-scale choice isolated here on purpose.
+Both sinks take rows the pipeline has already collected on the driver
+(one collect per refresh feeds both files) and only render and
+publish. Publishing writes a temporary file beside the target and
+``os.replace``s it over the target, so a concurrent reader sees either
+the previous complete file or the new one, never a partial write.
 """
 
 from __future__ import annotations
@@ -23,60 +22,60 @@ import csv as _csv
 import io
 import json
 import os
+import uuid
+from collections.abc import Mapping, Sequence
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
 from node_js_etl_processor_spark.schemas import CSV_EXPORT_COLUMNS
 
 
-def write_json_array(df: DataFrame, path: str, small_output: bool = True) -> int:
-    """S3: JSON-array file export. Returns the row count.
-
-    ``small_output=True`` materializes on the driver (the reference's
-    actual scale: thousands of rows in one file). ``False`` writes a
-    JSONL directory (the 100 TB path) at ``path + 'l'``.
-    """
-    if not small_output:
-        df.write.mode("overwrite").json(path + "l")
-        return -1
-    # build dicts from the schema, NOT df.toJSON(): Spark's JSON render
-    # drops null fields, but the reference's JSON.stringify emits every
-    # key with explicit null (server.js:79-91, 106)
-    cols = df.columns
-    rows = [{c: r[c] for c in cols} for r in df.collect()]
+def _publish(path: str, data: bytes) -> None:
+    """Atomically replace ``path`` with ``data`` (readers never see a
+    half-written file). The temporary file lives in the target's
+    directory so the rename never crosses a filesystem."""
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "w", encoding="utf-8") as fh:
-        json.dump(rows, fh, indent=2, ensure_ascii=False)
+    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+    try:
+        with open(tmp, "xb") as fh:
+            fh.write(data)
+        os.replace(tmp, path)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
+
+
+def write_json_array(rows: Sequence[Mapping[str, Any]], path: str) -> int:
+    """S3: JSON-array file export of driver-side rows. Returns the row
+    count.
+
+    Rows are schema-complete dicts, NOT ``df.toJSON()`` output: Spark's
+    JSON render drops null fields, but the reference's JSON.stringify
+    emits every key with explicit null (server.js:79-91, 106).
+    """
+    text = json.dumps(rows, indent=2, ensure_ascii=False)
+    _publish(path, text.encode("utf-8"))
     return len(rows)
 
 
-def write_csv_export(df: DataFrame, path: str, small_output: bool = True) -> int:
+def write_csv_export(rows: Sequence[Mapping[str, Any]], path: str) -> int:
     """S4: CSV export with the fixed header order (server.js:109-117).
+    Returns the row count.
 
-    Expects the frame already shaped by
-    ``universities.csv_export_frame`` (7 string columns). json2csv v6
-    double-quotes every field by default (pinned by golden test), which
-    csv.QUOTE_ALL reproduces; Spark's writer path uses quoteAll.
+    Takes the same rows as ``write_json_array`` (``last_updated``
+    already ISO-rendered) and keeps the 7 export columns, with nulls
+    as ``''`` — the driver-side twin of ``universities.csv_export_frame``
+    (server.js:122-126). json2csv v6 double-quotes every field by
+    default (pinned by golden test), which csv.QUOTE_ALL reproduces.
     """
-    cols = [c for c in CSV_EXPORT_COLUMNS if c in df.columns] or df.columns
-    shaped = df.select(*cols)
-    if not small_output:
-        (
-            shaped.write.mode("overwrite")
-            .option("header", True)
-            .option("quoteAll", True)
-            .csv(path + ".d")
-        )
-        return -1
-    rows = shaped.collect()
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     buf = io.StringIO()
     w = _csv.writer(buf, quoting=_csv.QUOTE_ALL, lineterminator="\n")
-    w.writerow(cols)
+    w.writerow(CSV_EXPORT_COLUMNS)
     for r in rows:
-        w.writerow(["" if v is None else v for v in r])
-    with open(path, "w", encoding="utf-8") as fh:
-        fh.write(buf.getvalue())
+        w.writerow(["" if r[c] is None else r[c] for c in CSV_EXPORT_COLUMNS])
+    _publish(path, buf.getvalue().encode("utf-8"))
     return len(rows)
 
 
@@ -87,14 +86,6 @@ def read_json_array(spark: SparkSession, path: str, schema=None) -> DataFrame:
     if schema is not None:
         reader = reader.schema(schema)
     return reader.json(path)
-
-
-def read_csv_bytes(path: str) -> bytes:
-    """S6: raw byte passthrough of the staged CSV (server.js:181-197
-    serves the file verbatim with text/csv headers — no parse step).
-    Raises FileNotFoundError like the reference's fs.access gate."""
-    with open(path, "rb") as fh:
-        return fh.read()
 
 
 def read_csv_export(spark: SparkSession, path: str) -> DataFrame:

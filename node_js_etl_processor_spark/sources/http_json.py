@@ -19,16 +19,25 @@ Two engine paths:
 
 Both isolate per-source failures: a failed URL contributes zero rows
 and an entry in the failure log, never a job abort.
+
+The driver path also isolates malformed rows: ``normalize_raw_row``
+coerces each feed row to the raw schema before ``createDataFrame``, so
+one row with a string-valued ``domains`` or a number-valued ``name``
+can never fail the whole refresh.
 """
 
 from __future__ import annotations
 
 import json
 import logging
+import math
 from collections.abc import Iterator, Sequence
 from concurrent.futures import ThreadPoolExecutor
+from decimal import Decimal
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType
 
 from node_js_etl_processor_spark.schemas import UNIVERSITIES_RAW_SCHEMA
 
@@ -50,6 +59,75 @@ def _http_get_json(url: str, timeout: float = 30.0) -> list[dict]:
     if not isinstance(body, list):
         raise ValueError(f"expected JSON array from {url}")
     return body
+
+
+def js_number_string(x: int | float) -> str:
+    """JS ``String(x)`` for a JSON number (ECMA-262 Number::toString):
+    shortest round-trip digits, plain notation for magnitudes in
+    [1e-6, 1e21) and ``1e+21`` / ``1e-7`` style outside it."""
+    try:
+        x = float(x)  # JS numbers are doubles: big ints round like JSON.parse
+    except OverflowError:
+        x = math.inf if x > 0 else -math.inf
+    if math.isnan(x):
+        return "NaN"
+    if math.isinf(x):
+        return "Infinity" if x > 0 else "-Infinity"
+    if x == 0:
+        return "0"  # String(-0) is "0"
+    sign, digits, exp = Decimal(repr(x)).normalize().as_tuple()
+    s = "".join(map(str, digits))
+    k, n = len(s), exp + len(s)  # value = 0.s * 10**n
+    if k <= n <= 21:
+        body = s + "0" * (n - k)
+    elif 0 < n <= 21:
+        body = s[:n] + "." + s[n:]
+    elif -6 < n <= 0:
+        body = "0." + "0" * -n + s
+    else:
+        body = (s[0] + "." + s[1:] if k > 1 else s) + f"e{n - 1:+d}"
+    return "-" * sign + body
+
+
+def _js_scalar_string(v: Any) -> str | None:
+    """``String(v)`` for a JSON scalar; None for null, objects and arrays
+    (the engine keeps no ``"[object Object]"`` / ``"a,b"`` renders)."""
+    if isinstance(v, str):
+        return v
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, (int, float)):
+        return js_number_string(v)
+    return None
+
+
+def normalize_raw_row(row: dict) -> dict:
+    """Coerce one feed row to ``UNIVERSITIES_RAW_SCHEMA`` with the
+    reference's JS semantics (SURVEY.md §2a P1/P3/P4):
+
+    - string fields: a string stays; a number or bool becomes its
+      ``String()`` text when truthy and null when falsy (``0``,
+      ``false``, ``NaN``), which is where the reference's ``x ? ... :``
+      and F1 truthiness checks send it; an object or array becomes null;
+    - ``domains`` / ``web_pages``: a non-array becomes null, so P4
+      yields ``[]`` and F1 drops a row without ``web_pages``; array
+      elements keep strings and nulls, numbers and bools become their
+      ``String()`` text, objects and arrays become null.
+
+    Documented divergences (beside P4's ``String(null)``): JS would
+    render an object as ``"[object Object]"`` and an array as its
+    comma-joined elements; the engine maps both to null.
+    """
+    out: dict[str, Any] = {}
+    for f in UNIVERSITIES_RAW_SCHEMA.fields:
+        v = row.get(f.name)
+        if isinstance(f.dataType, ArrayType):
+            out[f.name] = [_js_scalar_string(e) for e in v] if isinstance(v, list) else None
+        else:
+            if isinstance(v, (bool, int, float)) and not (v and v == v):
+                v = None  # JS-falsy 0, false, NaN
+            out[f.name] = _js_scalar_string(v)
+    return out
 
 
 def fetch_universities_driver(
@@ -81,10 +159,10 @@ def fetch_universities_driver(
             except Exception as exc:  # per-source isolation (O2)
                 failed.append(country)
                 logger.error("error fetching data for %s: %s", country, exc)
-    # keep only declared fields; extras in the feed are dropped (the
-    # reference's transform also only reads the 6 known keys)
-    fields = [f.name for f in UNIVERSITIES_RAW_SCHEMA.fields]
-    cleaned = [{k: r.get(k) for k in fields} for r in rows if isinstance(r, dict)]
+    # keep only declared fields, coerced to the raw schema; extras in the
+    # feed are dropped (the reference's transform also only reads the 6
+    # known keys)
+    cleaned = [normalize_raw_row(r) for r in rows if isinstance(r, dict)]
     return spark.createDataFrame(cleaned, UNIVERSITIES_RAW_SCHEMA), failed
 
 
@@ -134,7 +212,6 @@ def parse_universities_payloads(payloads: DataFrame) -> DataFrame:
     JSON-array payload into typed raw rows (from_json with explicit
     schema — no inference)."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import ArrayType
 
     arr = F.from_json(F.col("payload_json"), ArrayType(UNIVERSITIES_RAW_SCHEMA))
     return (

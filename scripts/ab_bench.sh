@@ -9,7 +9,7 @@
 # exit with the working tree still stashed (NEW changes silently
 # parked). The EXIT trap now guarantees the pop; STASHED tracks
 # whether a pop is owed so a clean exit doesn't pop someone else's
-# stash entry.
+# stash entry; it is set only when `git stash` really made an entry.
 set -e
 Q="$1"; PAIRS="${2:-4}"; export SPARK_GRAFT_BENCH_RUNS="${3:-5}"
 GATE="${AB_LOAD_GATE:-2.0}"
@@ -30,8 +30,12 @@ wait_quiet() {
 for i in $(seq 1 "$PAIRS"); do
   wait_quiet
   python bench.py --only="$Q" 2>/dev/null | python3 -c "import json,sys; print('NEW', json.loads(sys.stdin.read())['queries'])"
-  git stash -q && STASHED=1
+  # `git stash` exits 0 on a clean tree without making an entry, so a
+  # pop is owed only when the stash list grew
+  N_BEFORE=$(git stash list | wc -l)
+  git stash -q
+  if [ "$(git stash list | wc -l)" -gt "$N_BEFORE" ]; then STASHED=1; fi
   wait_quiet
   python bench.py --only="$Q" 2>/dev/null | python3 -c "import json,sys; print('OLD', json.loads(sys.stdin.read())['queries'])"
-  git stash pop -q && STASHED=0
+  restore
 done

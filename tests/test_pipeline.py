@@ -2,8 +2,10 @@
 
 from __future__ import annotations
 
+import csv
 import json
-import os
+import threading
+import uuid
 
 import pytest
 
@@ -114,6 +116,126 @@ def test_sink_failure_fails_run(spark, tmp_path):
     res = p.run()
     assert not res.success
     assert res.error
+
+
+def _staged_rows(json_path, csv_path):
+    with open(json_path, encoding="utf-8") as f:
+        data = json.load(f)
+    with open(csv_path, encoding="utf-8", newline="") as f:
+        lines = list(csv.reader(f))
+    return data, lines
+
+
+def test_json_and_csv_of_one_refresh_share_last_updated(spark, tmp_path):
+    p = UniversitiesPipeline(
+        spark, json_path=str(tmp_path / "u.json"), csv_path=str(tmp_path / "u.csv"),
+        fetcher=fake_fetcher,
+    )
+    assert p.run().success
+    data, lines = _staged_rows(p.json_path, p.csv_path)
+    stamps = {r["last_updated"] for r in data}
+    assert len(stamps) == 1
+    assert {row[-1] for row in lines[1:]} == stamps
+
+
+def test_one_refresh_runs_one_spark_job(spark, tmp_path):
+    p = UniversitiesPipeline(
+        spark, json_path=str(tmp_path / "u.json"), csv_path=str(tmp_path / "u.csv"),
+        fetcher=fake_fetcher,
+    )
+    sc = spark.sparkContext
+    group = f"refresh-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        assert p.run().success
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(jobs) == 1
+
+
+def test_readers_never_see_a_partial_staged_file(spark, tmp_path):
+    """Atomic publish: a reader polling both staged files while
+    refreshes run always parses a whole file with every row."""
+    n_rows = 300
+    feed = [
+        {"name": f"University {i}", "country": "Testland", "state-province": None,
+         "alpha_two_code": "TL", "domains": [f"u{i}.edu"],
+         "web_pages": [f"https://u{i}.edu"]}
+        for i in range(n_rows)
+    ]
+    p = UniversitiesPipeline(
+        spark, json_path=str(tmp_path / "u.json"), csv_path=str(tmp_path / "u.csv"),
+        countries=("Testland",), fetcher=lambda country: feed,
+    )
+    assert p.run().success
+    stop, reads, errors = threading.Event(), [0], []
+
+    def reader():
+        while not stop.is_set():
+            try:
+                data, lines = _staged_rows(p.json_path, p.csv_path)
+                assert len(data) == n_rows and len(lines) == n_rows + 1
+                reads[0] += 1
+            except Exception as exc:  # a torn read: short body or bad JSON
+                errors.append(repr(exc)[:200])
+
+    t = threading.Thread(target=reader)
+    t.start()
+    try:
+        results = [p.run() for _ in range(5)]
+    finally:
+        stop.set()
+        t.join(timeout=60)
+    assert not t.is_alive()
+    assert all(r.success and r.record_count == n_rows for r in results)
+    assert errors == []
+    assert reads[0] > 0
+    # no temporary files are left beside the targets
+    assert sorted(f.name for f in tmp_path.iterdir()) == ["u.csv", "u.json"]
+
+
+def test_js_number_string_matches_node():
+    from node_js_etl_processor_spark.sources.http_json import js_number_string
+
+    # String(x) as printed by Node for each value
+    for value, text in [
+        (1, "1"), (1.0, "1"), (-0.0, "0"), (1.5, "1.5"), (-2.5, "-2.5"),
+        (0.1, "0.1"), (123.456, "123.456"), (1e-6, "0.000001"), (1e-7, "1e-7"),
+        (1e20, "100000000000000000000"), (1e21, "1e+21"), (1.5e300, "1.5e+300"),
+        (12345678901234567890, "12345678901234567000"), (5e-324, "5e-324"),
+        (float("nan"), "NaN"), (float("-inf"), "-Infinity"), (10**400, "Infinity"),
+    ]:
+        assert js_number_string(value) == text, value
+
+
+def test_malformed_feed_rows_do_not_fail_refresh(spark, tmp_path):
+    """Non-array domains/web_pages and non-string scalars are coerced at
+    the driver boundary instead of failing createDataFrame."""
+    feed = [
+        {"name": "Str Domains U", "country": "X", "domains": "a.edu", "web_pages": ["w1"]},
+        {"name": "Str Pages U", "country": "X", "web_pages": "https://p.edu"},
+        {"name": 42, "country": True, "alpha_two_code": 0, "web_pages": [7, False]},
+        {"name": {"k": 1}, "country": "X", "web_pages": ["w3"]},
+        {"name": "List State U", "country": "X", "state-province": ["s"],
+         "domains": [{"d": 1}, "b.edu"], "web_pages": ["w4"]},
+    ]
+    p = UniversitiesPipeline(
+        spark, json_path=str(tmp_path / "u.json"), csv_path=str(tmp_path / "u.csv"),
+        countries=("X",), fetcher=lambda country: feed,
+    )
+    res = p.run()
+    assert res.success, res.error
+    data, _ = _staged_rows(p.json_path, p.csv_path)
+    by_name = {r["name"]: r for r in data}
+    assert set(by_name) == {"Str Domains U", "42", "List State U"}
+    assert by_name["Str Domains U"]["domains"] == []
+    assert by_name["42"]["country"] == "true"
+    assert by_name["42"]["alpha_two_code"] is None  # JS: 0 is falsy
+    assert by_name["42"]["web_pages"] == ["7", "false"]
+    assert by_name["List State U"]["state_province"] is None
+    assert by_name["List State U"]["domains"] == [None, "b.edu"]
 
 
 def test_partitioned_fetch_scale_path(spark):

@@ -99,6 +99,116 @@ def test_transform_matches_js_model(spark, rows):
     assert got == _model(rows)
 
 
+#: JSON floats with the text Node's ``String()`` prints for them.
+FLOAT_TEXT = {0.0: "0", 0.5: "0.5", 1.0: "1", -2.5: "-2.5", 1e21: "1e+21", 1e-7: "1e-7"}
+SCALAR = st.one_of(
+    st.none(),
+    st.text(alphabet=" abX", max_size=4),
+    st.booleans(),
+    st.integers(-2, 2),
+    st.sampled_from(sorted(FLOAT_TEXT)),
+)
+MESSY = st.one_of(SCALAR, st.just({"k": 1}), st.lists(st.integers(0, 2), max_size=2))
+MESSY_ROW = st.fixed_dictionaries(
+    {
+        "name": MESSY,
+        "country": MESSY,
+        "state-province": MESSY,
+        "alpha_two_code": MESSY,
+        "domains": st.one_of(MESSY, st.lists(MESSY, max_size=3)),
+        "web_pages": st.one_of(MESSY, st.lists(MESSY, max_size=3)),
+    }
+)
+
+
+def _js_string(x):
+    """Node's ``String(x)`` on a JSON value, with the engine's documented
+    divergences: null, objects and arrays map to null."""
+    if x is None or isinstance(x, (dict, list)):
+        return None
+    if isinstance(x, bool):
+        return "true" if x else "false"
+    if isinstance(x, float):
+        return FLOAT_TEXT[x]
+    return str(x)
+
+
+def _js_model_messy(rows):
+    """The JS reference over raw feed values: ``x ? String(x) : null`` for
+    string fields (F1 and P3 test truthiness first), per-element
+    ``String(d)`` for arrays and non-arrays left for F1/P4 to reject."""
+
+    def field(x):
+        return _js_string(x) if x not in (None, False, 0, "") else None
+
+    def arr(a):
+        return [_js_string(d) for d in a] if isinstance(a, list) else None
+
+    return _model(
+        [
+            {
+                **{k: field(r[k]) for k in ("name", "country", "state-province", "alpha_two_code")},
+                "domains": arr(r["domains"]),
+                "web_pages": arr(r["web_pages"]),
+            }
+            for r in rows
+        ]
+    )
+
+
+@settings(
+    max_examples=15,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(rows=st.lists(MESSY_ROW, max_size=10))
+@example(
+    rows=[
+        {"name": "S", "country": "C", "state-province": None, "alpha_two_code": None,
+         "domains": "d.edu", "web_pages": ["w"]},
+        {"name": "T", "country": "C", "state-province": None, "alpha_two_code": None,
+         "domains": ["d"], "web_pages": "https://w.edu"},
+        {"name": 1, "country": True, "state-province": {"k": 1}, "alpha_two_code": 0.5,
+         "domains": [1e21, False, [0]], "web_pages": [0, None]},
+    ]
+)
+def test_refresh_over_malformed_feed_matches_js_model(spark, rows):
+    """A refresh over feeds with non-array arrays, numbers, bools,
+    objects and arrays in any field succeeds, and the staged JSON equals
+    the JS model of the reference."""
+    import json
+    import tempfile
+
+    from node_js_etl_processor_spark.plans.pipeline import UniversitiesPipeline
+
+    with tempfile.TemporaryDirectory() as tmp:
+        p = UniversitiesPipeline(
+            spark, json_path=f"{tmp}/u.json", csv_path=f"{tmp}/u.csv",
+            countries=("X",), fetcher=lambda country: rows,
+        )
+        res = p.run()
+        assert res.success, res.error
+        with open(p.json_path, encoding="utf-8") as f:
+            staged = json.load(f)
+    got = sorted(
+        (
+            (
+                r["name"],
+                r["country"],
+                r["state_province"],
+                r["alpha_two_code"],
+                tuple(r["domains"]),
+                tuple(r["web_pages"]),
+                r["primary_domain"],
+                r["primary_website"],
+            )
+            for r in staged
+        ),
+        key=repr,
+    )
+    assert got == _js_model_messy(rows)
+
+
 @settings(
     max_examples=10,
     deadline=None,

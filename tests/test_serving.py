@@ -6,15 +6,17 @@ the reference's Express app is exercised."""
 from __future__ import annotations
 
 import json
+import threading
+import time
 import urllib.error
 import urllib.request
 
 import pytest
 
 from node_js_etl_processor_spark.plans.pipeline import UniversitiesPipeline
+from node_js_etl_processor_spark.schemas import CSV_EXPORT_COLUMNS
 from node_js_etl_processor_spark.serving import (
     AVAILABLE_ENDPOINTS,
-    envelope_from_df,
     json_envelope,
     serve,
 )
@@ -26,7 +28,8 @@ def _get(port, path):
         with urllib.request.urlopen(f"http://127.0.0.1:{port}{path}") as resp:
             return resp.status, resp.headers, resp.read()
     except urllib.error.HTTPError as e:
-        return e.code, e.headers, e.read()
+        with e:
+            return e.code, e.headers, e.read()
 
 
 def _post(port, path):
@@ -35,7 +38,8 @@ def _post(port, path):
         with urllib.request.urlopen(req) as resp:
             return resp.status, resp.read()
     except urllib.error.HTTPError as e:
-        return e.code, e.read()
+        with e:
+            return e.code, e.read()
 
 
 @pytest.fixture()
@@ -156,16 +160,111 @@ def test_refresh_endpoint_success_and_failure(spark, tmp_path):
         httpd.shutdown()
 
 
-def test_envelope_from_df_and_json_envelope(spark):
-    df = spark.createDataFrame(
-        [(1, "a", "2024-01-01T00:00:00.000Z"), (2, None, "2024-01-01T00:00:00.000Z")],
-        "id long, name string, last_updated string",
-    )
-    env = envelope_from_df(df)
+def test_json_envelope():
+    rows = [
+        {"id": 1, "name": "a", "last_updated": "2024-01-01T00:00:00.000Z"},
+        {"id": 2, "name": None, "last_updated": "2024-01-01T00:00:00.000Z"},
+    ]
+    env = json_envelope(rows)
     assert env["count"] == 2
     assert env["data"][1]["name"] is None  # explicit nulls, like the sink
     assert env["last_updated"] == "2024-01-01T00:00:00.000Z"
     assert json_envelope([]) == {"count": 0, "data": [], "last_updated": None}
+
+
+def test_json_body_is_envelope_of_staged_file_bytes(staged):
+    p, json_path, csv_path = staged
+    httpd, port = serve(json_path, csv_path)
+    try:
+        for _ in range(2):  # the first read renders, the second is cached
+            status, _, body = _get(port, "/api/universities/json")
+            assert status == 200
+            with open(json_path, encoding="utf-8") as f:
+                assert body == json.dumps(json_envelope(json.load(f))).encode()
+    finally:
+        httpd.shutdown()
+        httpd.server_close()
+
+
+def test_refresh_is_served_and_bad_file_gets_404(staged):
+    """The render cache follows the staged file: a refresh (atomic
+    replace) and an in-place overwrite are both seen by the next read."""
+    p, json_path, csv_path = staged
+    httpd, port = serve(json_path, csv_path, refresh_fn=lambda: p.run().as_dict())
+    try:
+        status, _, body = _get(port, "/api/universities/json")
+        assert status == 200
+        before = json.loads(body)["last_updated"]
+        time.sleep(0.01)  # stamps have millisecond resolution
+        assert _post(port, "/api/refresh")[0] == 200
+        status, _, body = _get(port, "/api/universities/json")
+        assert status == 200
+        after = json.loads(body)["last_updated"]
+        assert after != before
+        with open(json_path, encoding="utf-8") as f:
+            assert after == json.load(f)[0]["last_updated"]
+
+        with open(json_path, "w", encoding="utf-8") as fh:
+            fh.write("{not json")
+        status, _, body = _get(port, "/api/universities/json")
+        assert status == 404
+        assert set(json.loads(body)) == {"error", "suggestion"}
+    finally:
+        httpd.shutdown()
+        httpd.server_close()
+
+
+def test_concurrent_refresh_posts_all_succeed(spark, tmp_path):
+    """More concurrent POST /api/refresh calls than cores: all succeed,
+    the runs take turns (no two extracts overlap) and the final JSON and
+    CSV come from one run."""
+    import csv
+    import sys
+
+    active, overlaps, guard = [0], [], threading.Lock()
+
+    def fetcher(country):
+        with guard:
+            active[0] += 1
+            overlaps.append(active[0])
+        time.sleep(0.05)
+        with guard:
+            active[0] -= 1
+        return fake_fetcher(country)
+
+    json_path, csv_path = str(tmp_path / "u.json"), str(tmp_path / "u.csv")
+    p = UniversitiesPipeline(
+        spark, json_path=json_path, csv_path=csv_path, countries=("USA",), fetcher=fetcher
+    )
+    httpd, port = serve(json_path, csv_path, refresh_fn=lambda: p.run().as_dict())
+    results = []
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [
+            threading.Thread(target=lambda: results.append(_post(port, "/api/refresh")))
+            for _ in range(6)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(switch)
+        httpd.shutdown()
+        httpd.server_close()
+    assert [status for status, _ in results] == [200] * 6
+    assert max(overlaps) == 1
+    with open(json_path, encoding="utf-8") as f:
+        data = json.load(f)
+    with open(csv_path, encoding="utf-8", newline="") as f:
+        lines = list(csv.reader(f))
+    assert {json.loads(body)["recordCount"] for _, body in results} == {len(data)}
+    # both files come from one refresh: the CSV is the JSON's 7 columns
+    assert lines[1:] == [
+        ["" if r[c] is None else r[c] for c in CSV_EXPORT_COLUMNS] for r in data
+    ]
 
 
 def test_read_csv_export_roundtrip(spark, staged):
