@@ -1,21 +1,13 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Query registry of the PySpark engine, each query with a DuckDB twin.
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+``entry(spark)`` is a smoke query. Each ``queries()[name]`` is compared
+with ``oracle_sql()[name]`` on row count, column names and an
+order-insensitive value multiset, by ``tests/test_oracle_parity.py``
+and ``scripts/full_verify.py``.
 
 Every declared query maps to an operator documented in SURVEY.md §2;
 implementations live in ``node_js_etl_processor_spark/operators/``.
-ALL 147 queries (count as of r18 — the 145 carried from r17 plus
-the LAST TWO declarations under the registry-capacity policy, both
-pre-built and staged-oracle-verified in r16: q_equidepth_hist
-(per-group equi-depth histograms via the distributed grouped-rank
-rewrite, operators/histogram.py) and q_gini_concentration
-(per-source size-concentration Gini as integer sufficient
-statistics, operators/gini.py); the registry is now FROZEN at 147 —
-grep ``def queries`` below for
-the authoritative registry) carry a full DuckDB oracle — including the SRP-LSH /
+All 147 queries carry a full DuckDB oracle — including the SRP-LSH /
 IVF similarity family (deterministic hyperplane/centroid constants are
 embedded as SQL literals, so the blocking is cross-checked, not just
 the scores), the mapInPandas multimodal kernel (byte-deterministic
@@ -110,84 +102,13 @@ def _q(table_names: list[str], fn) -> Callable[[SparkSession, str], DataFrame]:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Declared queries, ORDERED BY CHECKABILITY: the driver records
-    correctness rows for the first 50 entries. ALL queries are
-    oracle-paired; entries outside the window are still covered by the
-    full local parity gate (tests/test_oracle_parity.py) AND — since
-    r9 — by the committed machine-readable sweep artifact
-    FULLVERIFY_r{N}.json (scripts/full_verify.py; same per-query
-    shape as CORRECTNESS, ALL registered queries at sf0.01).
+    """The query registry: name -> ``(spark, sf_dir) -> DataFrame``.
 
-    r21 rotation — exactly as the r20 ledger's binding plan wrote
-    it: the 50 r18-green rows lead (q_kl_divergence … q_doc_novelty —
-    last driver row r18, two cycles old, so the 3-round invariant
-    makes ALL of them mandatory this round; zero slack). This is also
-    the r20 verdict's item 1 resolved: the r20 optimizer touched
-    q_image_dedup, q_image_neardup, q_equidepth_hist,
-    q_lm_bigram_perplexity, the 15 media queries and (this round)
-    q_kmeans_step — every one of them is r18-green, so the mandatory
-    window puts them all in front of the driver's oracle with no
-    conflict. Changed-code queries that CANNOT fit (the zero-slack
-    corollary: q_dedup_clusters for the r20 checkpoint-regression fix,
-    plus whatever shared-module edits flag) are covered by explicit
-    recorded waivers (ROTATION_WAIVERS, printed by
-    scripts/check_rotation.py into every run) AND by the committed
-    FULLVERIFY_r21.json full-registry oracle sweep on the final tree.
-    No declarations — the registry is FROZEN at 147.
-
-    REGISTRY-CAPACITY POLICY (decided r17 — the r16 verdict's
-    structural ask): the registry is HARD-CAPPED at 150 registered
-    queries, the mathematical ceiling of the 3-round invariant
-    (50-row driver window × 3 rounds). Since r18's two declarations
-    the registry is 147 and FROZEN — the 3 remaining slots are
-    changed-code headroom only, never declarations.
-
-    Ledger after r21 (for any future window author): the 50 rows
-    above renew at r21; 47 rows are r19-green (invariant expires at
-    r22 — they are the r22 mandatory set, leaving 3 slack) and 50 are
-    r20-green (expire at r23). The r18-scheduled "diversity
-    tokenization consolidation" turned
-    out ALREADY DONE — diversity.py has imported spans.token_array
-    since r16 (its own docstring records it); the real remaining
-    private copies were colloc.py's and setsim.py's, both
-    consolidated in r19 while their queries were in-window. The ONE
-    copy left is dedup.py:59, and dedup.py stays FROZEN through r20
-    (it defines/feeds six queries split across windows, more than
-    the slack; if a fix is ever forced, record an explicit
-    check_rotation --waive in the round artifacts) — so r20 is the
-    final-artifact round: full-tree regeneration, plus any depth
-    whose changed-code set fits the 47+3 window. jpeg.py is likewise
-    frozen (its media queries are r18-green and exceed r20's slack);
-    the ±3 roundtrip envelope is pinned test-side in
-    tests/test_properties.py with the derivation. NOTE for the r20
-    window author: spans.py edits now flag q_pmi_collocations,
-    q_setsim_join and q_containment_decon too (all r19-green) on top
-    of q_span_extents, q_doc_novelty, q_simpson_diversity — spans.py
-    is effectively frozen as the shared-tokenizer root.
-
-    Rotation rule #2 ("changed code ⇒ in window") remains MECHANICAL:
-    scripts/check_rotation.py + tests/test_rotation.py on every
-    pytest run.
-
-    Honest rotation math: with a 50-slot driver window and 147
-    registered queries, a full sweep takes ceil(147/50) = 3 rounds,
-    so the invariant is: every registered query has a driver
-    CORRECTNESS row within the last 3 rounds (named deferrals are
-    the explicit schedule for the overflow), and ALL queries are
-    swept by the committed FULLVERIFY_r{N}.json on the final tree
-    EVERY round."""
+    Every query has a DuckDB twin under the same name in
+    ``oracle_sql()``. Both oracle-parity checkers run all of them:
+    ``tests/test_oracle_parity.py`` at sf0.001 in the tuned test
+    session, and ``scripts/full_verify.py`` at sf0.01 in a plain one."""
     return {
-        # ---- 50 oracle-paired queries inside the driver's window ----
-        # r21 rotation — exactly the ledger's binding plan recorded at
-        # r20 (docstring below): the 50 r18-green rows, whose 3-round
-        # invariant expires this round, lead with ZERO slack. This
-        # window also puts the r20-optimizer-touched paths that shipped
-        # without a driver row (q_image_dedup / q_image_neardup /
-        # q_equidepth_hist / q_lm_bigram_perplexity / the 15 media
-        # queries / q_kmeans_step) in front of the oracle — the r20
-        # verdict's item 1. Changed-code queries that cannot fit
-        # (zero slack) are covered by recorded check_rotation waivers
-        # + the committed FULLVERIFY_r21.json full-registry sweep.
         "q_kl_divergence": _q(["documents"], text.q_kl_divergence),
         "q_retention": _q(["events"], temporal.q_retention),
         "q_funnel": _q(["events"], sessionize.q_funnel),
@@ -239,18 +160,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_tiff_features": _q(["documents"], q_tiff_features),
         "q_interval_coverage": _q(["events"], intervals.q_interval_coverage),
         "q_skyline": _q(["part"], skyline.q_skyline),
-        # The LAST TWO declarations ever (capacity policy): staged
-        # since r16, registry-wired this round; registry freezes at 147.
         "q_equidepth_hist": _q(["lineitem"], histogram.q_equidepth_hist),
         "q_gini_concentration": _q(["documents"], gini.q_gini_concentration),
-        # r18 CHANGED-CODE slot (scripts/check_rotation.py):
-        # operators/novelty.py gained the digest-count-thresholded
-        # shuffle-semi-join fallback the r17 advice asked for.
         "q_doc_novelty": _q(["documents"], novelty.q_doc_novelty),
-        # ---- out-of-window: r20-green rows (fresh through r23;
-        # this whole block was the r20 window — 47 r17-green rows +
-        # 3 changed-code slack slots, all driver-green in
-        # CORRECTNESS_r20.json) ----
         "q_asof_join": _q(["events"], temporal.q_asof_join),
         "q_sessionize": _q(["events"], sessionize.q_sessionize),
         "q_decontaminate_hashed": _q(["documents"], text.q_decontaminate_hashed),
@@ -302,19 +214,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_cusum_alarms": _q(["events"], cusum.q_cusum_alarms),
         "q_ols_trend": _q(["orders"], trend.q_ols_trend),
         "q_simpson_diversity": _q(["documents"], diversity.q_simpson_diversity),
-        # r20 CHANGED-CODE slots (scripts/check_rotation.py), all
-        # three slack spent on the two r19 advice items: setsim.py's
-        # pigeonhole signature enumeration moved from per-(k, gid)
-        # filter scans to one hash-aggregated pass (flags both setsim
-        # queries), and bpe.py's driver-path gate now routes astral
-        # (non-BMP) corpora to the distributed loop (flags
-        # q_token_budget).
         "q_setsim_join": _q(["documents"], setsim.q_setsim_join),
         "q_containment_decon": _q(["documents"], setsim.q_containment_decon),
         "q_token_budget": _q(["documents"], bpe.q_token_budget),
-        # ---- out-of-window: r19-green rows (fresh through r22;
-        # q_setsim_join / q_containment_decon / q_token_budget renewed
-        # in the r20 slack slots above) ----
         "q_text_langid": _q(["documents"], text.q_text_langid),
         "q_text_quality": _q(["documents"], text.q_text_quality),
         "q_token_count": _q(["documents"], text.q_token_count),

@@ -1,39 +1,31 @@
-"""Full local oracle-parity sweep -> FULLVERIFY_r{N}.json.
+"""Oracle-parity sweep: registered queries against their DuckDB twins.
 
-The driver's CORRECTNESS gate only covers the first 50 ``queries()``
-entries per round; with >100 registered queries (112 as of the r10
-continuation) the rest were previously attested only by prose ("local
-parity sweep green"). This
-script makes that half auditable: it runs EVERY registered query in a
-plain (driver-like, untuned) SparkSession at sf0.01, compares each
-against its DuckDB oracle exactly the way the driver does (row count +
-column-name schema + order-insensitive value compare), and writes a
-machine-readable artifact with the SAME per-query shape as
-CORRECTNESS_r{N}.json:
+Runs each chosen query (default: all of ``queries()``) in a plain,
+untuned SparkSession, so ANSI mode and parquet timestamps behave as in
+a default Spark install rather than the engine's tuned session, and
+compares it with ``oracle_sql()[name]`` run by DuckDB over the same
+parquet tables: column names, row count and the multiset of normalized
+rows. ``tests/test_oracle_parity.py`` imports the same comparison
+(``normalize_cell``, ``frame_to_multiset``) and runs it at sf0.001.
+
+    python scripts/full_verify.py                        # all, sf0.01
+    python scripts/full_verify.py q_bm25 q_pagerank \\
+        --sf-dir DATA/sf0.001 --sf-dir DATA/sf0.01
+    python scripts/full_verify.py --out FULLVERIFY.json  # write artifact
+
+Exit status is 0 when every query matches, 1 otherwise.
+
+``--out`` writes one record per query (keyed ``<sf>:<query>`` when
+several ``--sf-dir`` are given):
 
     {"<query>": {"rows_match": bool, "schema_match": bool,
                  "hash_match": bool, "spark_rows": int,
                  "oracle_rows": int, "err": str | null}, ...}
 
-Run at round close (r8 verdict ask #2):
-
-    python scripts/full_verify.py --round 9        # -> FULLVERIFY_r9.json
-
-The value compare normalizes exactly like the driver: floats rounded
-to 6 places, NaN canonical, timestamps via isoformat, bytes via hex,
-then rows sorted order-insensitively with (column, value) pairs sorted
-within each row — so it is robust to column order and row order but
-sensitive to any real value drift.
-
-Artifact-staleness guard (r17 verdict "What's wrong" #1: the committed
-FULLVERIFY_r17.json described a tree 14 commits older than the round's
-final engine state): the artifact now records the exact HEAD it ran on
-under the ``"_meta"`` key, and the script REFUSES to run on a dirty
-working tree (uncommitted or untracked engine files would make the
-recorded hash a lie) unless ``--allow-dirty`` is passed — in which case
-the dirtiness is recorded into the artifact instead of hidden. The
-round-close rule this enforces mechanically: regenerate FULLVERIFY as
-the LAST commit of the round, after every engine-code change.
+plus a ``"_meta"`` receipt with the HEAD commit it ran on. So that the
+receipt never describes code that did not run, the script refuses
+(exit 2) to write an artifact from a dirty working tree unless
+``--allow-dirty`` is passed, which records the dirt instead.
 """
 
 from __future__ import annotations
@@ -46,7 +38,8 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -54,73 +47,83 @@ TABLES = (
 ).split()
 
 
-def _norm(v):
+def normalize_cell(v):
+    """One result cell as a string, so heterogeneous cells (None vs
+    float) stay hashable and comparable: floats rounded to 6 places,
+    NaN canonical, timestamps via isoformat, bytes as hex, lists
+    element-wise."""
     if v is None:
         return "<null>"
     if isinstance(v, float):
-        return "NaN" if math.isnan(v) else repr(round(v, 6))
-    if hasattr(v, "isoformat"):
+        if math.isnan(v):
+            return "NaN"
+        return repr(round(v, 6))
+    if hasattr(v, "isoformat"):  # datetime/date
         return v.isoformat()
     if isinstance(v, bytes):
         return v.hex()
+    if isinstance(v, list):
+        return repr([normalize_cell(x) for x in v])
     return repr(v)
 
 
-def _multiset(cols, rows):
-    return sorted(
-        sorted((cols[i], _norm(r[i])) for i in range(len(cols))) for r in rows
-    )
+def frame_to_multiset(cols, rows):
+    """Rows as a counted multiset of normalized tuples, with cells in
+    column-name order: blind to column and row order, not to
+    multiplicity."""
+    order = sorted(range(len(cols)), key=lambda i: cols[i])
+    out = {}
+    for r in rows:
+        key = tuple(normalize_cell(r[i]) for i in order)
+        out[key] = out.get(key, 0) + 1
+    return out
 
 
 def _git(args: "list[str]") -> str:
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     return subprocess.run(
-        ["git", *args], cwd=repo, capture_output=True, text=True, check=True
+        ["git", *args], cwd=REPO, capture_output=True, text=True, check=True
     ).stdout.strip()
 
 
-def main() -> int:
+def main(argv: "list[str] | None" = None) -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--round", type=int, required=True, help="round number N")
-    ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
-    ap.add_argument("--out", default=None, help="override output path")
+    ap.add_argument(
+        "--sf-dir", action="append",
+        help="table directory, repeatable (default: sf0.01)",
+    )
+    ap.add_argument("--out", default=None, help="write the JSON artifact here")
     ap.add_argument(
         "--allow-dirty", action="store_true",
-        help="run despite uncommitted changes (recorded into the artifact)",
+        help="write --out despite uncommitted changes (recorded into it)",
     )
     ap.add_argument("queries", nargs="*", help="subset (default: all)")
-    args = ap.parse_args()
-    out_path = args.out or f"FULLVERIFY_r{args.round}.json"
+    args = ap.parse_args(argv)
 
-    head = _git(["rev-parse", "HEAD"])
-    dirty = _git(["status", "--porcelain"])
-    if dirty and not args.allow_dirty:
-        print(
-            "REFUSING: working tree is dirty — the artifact's recorded HEAD "
-            "would not describe the code that actually ran. Commit first "
-            "(the round-close rule: FULLVERIFY is the LAST commit of the "
-            "round), or pass --allow-dirty to record the dirt instead:\n"
-            + dirty,
-            file=sys.stderr,
-        )
-        return 2
+    if args.out:
+        head = _git(["rev-parse", "HEAD"])
+        dirty = _git(["status", "--porcelain"])
+        if dirty and not args.allow_dirty:
+            print(
+                "REFUSING: working tree is dirty — the artifact's recorded "
+                "HEAD would not describe the code that actually ran. Commit "
+                "first, or pass --allow-dirty to record the dirt instead:\n"
+                + dirty,
+                file=sys.stderr,
+            )
+            return 2
 
     import duckdb
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry_mod
 
-    # Plain driver-like session: no engine tuning, so ANSI-mode /
-    # parquet-nanos behavior matches what the external driver sees.
+    sf_dirs = args.sf_dir or [
+        os.path.join(os.path.dirname(entry_mod.SMOKE_SF_DIR), "sf0.01")
+    ]
+    # Plain session: no engine tuning, so ANSI-mode / parquet-nanos
+    # behavior matches a default Spark install.
     spark = SparkSession.builder.master("local[32]").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{args.sf_dir}/{t}.parquet')"
-        )
 
     queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
@@ -129,58 +132,73 @@ def main() -> int:
     report: dict[str, dict] = {}
     failures = []
     t_start = time.time()
-    for name in names:
-        row = {
-            "rows_match": False,
-            "schema_match": False,
-            "hash_match": False,
-            "spark_rows": None,
-            "oracle_rows": None,
-            "err": None,
-        }
-        t0 = time.time()
-        try:
-            sdf = queries[name](spark, args.sf_dir)
-            cols = sdf.columns
-            rows = [tuple(r) for r in sdf.collect()]
-            row["spark_rows"] = len(rows)
-            res = con.execute(oracles[name])
-            dcols = [d[0] for d in res.description]
-            drows = res.fetchall()
-            row["oracle_rows"] = len(drows)
-            row["rows_match"] = len(rows) == len(drows)
-            row["schema_match"] = sorted(cols) == sorted(dcols)
-            row["hash_match"] = _multiset(cols, rows) == _multiset(dcols, drows)
-        except Exception as exc:  # record, keep sweeping
-            row["err"] = f"{type(exc).__name__}: {exc}"[:500]
-        report[name] = row
-        ok = row["rows_match"] and row["schema_match"] and row["hash_match"]
-        if not ok:
-            failures.append(name)
-        print(
-            f"[{name}] {'MATCH' if ok else 'FAIL'} "
-            f"rows={row['spark_rows']}/{row['oracle_rows']} "
-            f"({time.time() - t0:.1f}s)",
-            flush=True,
-        )
+    for sf in sf_dirs:
+        con = duckdb.connect()
+        for t in TABLES:
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM "
+                f"read_parquet('{sf}/{t}.parquet')"
+            )
+        for name in names:
+            label = name if len(sf_dirs) == 1 else f"{os.path.basename(sf)}:{name}"
+            row = {
+                "rows_match": False,
+                "schema_match": False,
+                "hash_match": False,
+                "spark_rows": None,
+                "oracle_rows": None,
+                "err": None,
+            }
+            t0 = time.time()
+            try:
+                sdf = queries[name](spark, sf)
+                cols = sdf.columns
+                rows = [tuple(r) for r in sdf.collect()]
+                row["spark_rows"] = len(rows)
+                res = con.execute(oracles[name])
+                dcols = [d[0] for d in res.description]
+                drows = res.fetchall()
+                row["oracle_rows"] = len(drows)
+                row["rows_match"] = len(rows) == len(drows)
+                row["schema_match"] = sorted(cols) == sorted(dcols)
+                row["hash_match"] = (
+                    frame_to_multiset(cols, rows) == frame_to_multiset(dcols, drows)
+                )
+            except Exception as exc:  # record, keep sweeping
+                row["err"] = f"{type(exc).__name__}: {exc}"[:500]
+            report[label] = row
+            ok = row["rows_match"] and row["schema_match"] and row["hash_match"]
+            if not ok:
+                failures.append(label)
+            print(
+                f"[{label}] {'MATCH' if ok else 'FAIL'} "
+                f"rows={row['spark_rows']}/{row['oracle_rows']} "
+                f"({time.time() - t0:.1f}s)",
+                flush=True,
+            )
+        con.close()
 
-    # The staleness guard's receipt: the exact tree this sweep ran on.
-    # Kept under a non-query key so per-query consumers can skip it.
-    report["_meta"] = {
-        "head": head,
-        "dirty": bool(dirty),
-        "round": args.round,
-        "sf_dir": args.sf_dir,
-        "queries_swept": len(names),
-    }
-    with open(out_path, "w") as f:
-        json.dump(report, f, indent=1)
-    print(
-        f"wrote {out_path}: {len(names) - len(failures)}/{len(names)} MATCH "
-        f"in {time.time() - t_start:.0f}s on {head[:12]}"
-        f"{' (DIRTY TREE)' if dirty else ''}; "
-        f"failures: {failures or 'none'}"
+    checked = len(names) * len(sf_dirs)
+    summary = (
+        f"{checked - len(failures)}/{checked} MATCH in "
+        f"{time.time() - t_start:.0f}s; failures: {failures or 'none'}"
     )
+    if args.out:
+        # The receipt: the exact tree this sweep ran on, under a
+        # non-query key so per-query consumers can skip it.
+        report["_meta"] = {
+            "head": head,
+            "dirty": bool(dirty),
+            "sf_dirs": sf_dirs,
+            "queries_swept": len(names),
+        }
+        with open(args.out, "w") as f:
+            json.dump(report, f, indent=1)
+        summary = (
+            f"wrote {args.out} on {head[:12]}"
+            f"{' (DIRTY TREE)' if dirty else ''}: {summary}"
+        )
+    print(summary)
     return 1 if failures else 0
 
 

@@ -4,6 +4,8 @@ rows-only queries the oracle can't check) + property-based checks."""
 from __future__ import annotations
 
 import math
+import os
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,6 +18,9 @@ from node_js_etl_processor_spark.operators.multimodal import (
     documents_as_media,
     extract_features,
 )
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO, "scripts"))
 
 
 @pytest.fixture(scope="module")
@@ -1901,23 +1906,12 @@ def test_bpe_apply_merge_greedy_overlap(spark):
 
 
 def _duck_parity(spark_df, sql, sf_dir, tables=("documents",)):
-    """Order-insensitive (column, value) multiset compare against a
-    DuckDB query over the same parquet tables — the driver's exact
-    compare, run locally ahead of declaration."""
-    import math
-
+    """Column names, row count and the normalized row multiset against
+    a DuckDB query over the same parquet tables — the comparator of
+    scripts/full_verify.py, run locally ahead of declaration."""
     import duckdb
 
-    def norm(v):
-        if v is None:
-            return "<null>"
-        if isinstance(v, float):
-            return "NaN" if math.isnan(v) else repr(round(v, 6))
-        if hasattr(v, "isoformat"):
-            return v.isoformat()
-        if isinstance(v, bytes):
-            return v.hex()
-        return repr(v)
+    from full_verify import frame_to_multiset
 
     con = duckdb.connect()
     for t in tables:
@@ -1930,13 +1924,9 @@ def _duck_parity(spark_df, sql, sf_dir, tables=("documents",)):
     res = con.execute(sql)
     dcols = [d[0] for d in res.description]
     drows = res.fetchall()
-    sm = sorted(sorted((cols[i], norm(r[i])) for i in range(len(cols))) for r in rows)
-    dm = sorted(
-        sorted((dcols[i], norm(r[i])) for i in range(len(dcols))) for r in drows
-    )
     assert sorted(cols) == sorted(dcols), (cols, dcols)
     assert len(rows) == len(drows), (len(rows), len(drows))
-    assert sm == dm
+    assert frame_to_multiset(cols, rows) == frame_to_multiset(dcols, drows)
     return len(rows)
 
 
