@@ -15,4 +15,4 @@ function so Catalyst sees one composed plan.
 __version__ = "0.1.0"
 
 from node_js_etl_processor_spark.session import get_spark  # noqa: F401
-from node_js_etl_processor_spark.catalog import TABLES, load_table, load_tables  # noqa: F401
+from node_js_etl_processor_spark.catalog import TABLES, load_table  # noqa: F401

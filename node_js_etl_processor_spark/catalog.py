@@ -9,6 +9,16 @@ loader is format-agnostic (``spark.read.parquet`` handles both single
 files and partitioned directories) and relies on Catalyst for predicate
 pushdown + column pruning into the scan — callers must express filters
 and projections declaratively, never pre-collect.
+
+``load_table`` resolves each table once per session. Resolving lists
+the file and runs one Spark job to infer its schema; later calls from
+the same ``SparkSession`` get the same lazy DataFrame back while the
+path's ``os.stat`` stamp ``(st_ino, st_mtime_ns, st_size)`` is
+unchanged, which an atomic replace, a Spark overwrite (new directory
+inode) or an append (new directory mtime) all change. Only the plan is
+kept, never rows: no frame here is cached, persisted or collected, so
+every query still scans its input. Another session never gets a frame
+resolved by this one.
 """
 
 from __future__ import annotations
@@ -33,9 +43,35 @@ TABLES: tuple[str, ...] = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+#: resolved tables: (id(session), path) -> (session, stat stamp, frame).
+#: The entry holds its session, so the id in the key cannot be reused
+#: while the entry lives.
+_resolved: dict[
+    tuple[int, str], tuple[SparkSession, tuple[int, int, int], DataFrame]
+] = {}
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    try:
+        st = os.stat(path)
+    except OSError:
+        # missing or not a local path: resolve uncached, so a missing
+        # table raises what a plain read raises
+        return _resolve(spark, path, name)
+    stamp = (st.st_ino, st.st_mtime_ns, st.st_size)
+    key = (id(spark), path)
+    hit = _resolved.get(key)
+    if hit is not None and hit[0] is spark and hit[1] == stamp:
+        return hit[2]
+    df = _resolve(spark, path, name)
+    _resolved[key] = (spark, stamp, df)
+    return df
+
+
+def _resolve(spark: SparkSession, path: str, name: str) -> DataFrame:
     if name == "events":
         # events.ts arrives as parquet TIMESTAMP(NANOS) in some driver
         # datasets (Spark's vectorized reader rejects it: read nanos as
@@ -46,23 +82,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # math dispatches through functions/timeutil.py). The dtype gate
         # below keeps both shapes correct.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        df = spark.read.parquet(path)
         from pyspark.sql import functions as F
 
         if dict(df.dtypes).get("ts") in ("bigint", "long"):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register each table as a temp view for spark.sql use."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+    return spark.read.parquet(path)
 
 
 def spread(df: DataFrame, min_per_core_rows: int = 0) -> DataFrame:

@@ -259,13 +259,9 @@ def minhash_candidates(
     DuckDB oracle reproduces verbatim.
 
     ``materialize`` (r21): checkpoint the postings before the
-    self-join (the r20 rescan fix). The r20 verdict hypothesized this
-    barrier caused the q_dedup_clusters driver regression
-    (2.13→3.19 s); the r21 interleaved A/B REFUTED that — lazy
-    postings measured a wash-to-slightly-worse (median pair ratio
-    1.09 over 7 calm pairs, OPTIMIZATION_r21.md), so the checkpoint
-    stays default-on for every caller and the knob remains for
-    callers that want the lazy single-plan form.
+    self-join (the r20 rescan fix). The checkpoint is default-on for
+    every caller; the knob remains for callers that want the lazy
+    single-plan form.
 
     ``dedup`` (r21): the min/max pair ``distinct()`` — a full shuffle
     + hash-agg over the candidate pair set. Callers that feed the

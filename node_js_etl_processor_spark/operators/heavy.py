@@ -4,9 +4,7 @@ a full-key-space shuffle — per-partition constant-memory summaries
 Summaries", PODS 2012), a parameter-sized merge, a guarantee check on
 the merged summary ITSELF, and only then either a broadcast-filtered
 exact recount (skew certified) or the plain exact groupBy (skew not
-certifiable — correctness never rides on the sketch). Lives in its
-own module so the rotation checker (scripts/check_rotation.py) scopes
-its changes to this family.
+certifiable — correctness never rides on the sketch).
 """
 
 from __future__ import annotations

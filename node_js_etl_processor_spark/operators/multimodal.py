@@ -862,9 +862,7 @@ def synth_gif_media(documents: DataFrame) -> DataFrame:
 
 
 def q_gif_frames(documents: DataFrame) -> DataFrame:
-    """r10-candidate declared query (NOT in the r9 registry — the r9
-    window composition is fixed by the rotation plan; new queries
-    enter the window on declaration): the full distributed GIF loop —
+    """Declared query (added in r10): the full distributed GIF loop —
     ``synth_gif_media`` (real LZW encode, closed-form animations) →
     ``sample_gif_frames`` (real decode + compositing, every 2nd
     frame) — with every output column closed-form in doc_id, so a SQL

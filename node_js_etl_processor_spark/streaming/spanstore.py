@@ -379,13 +379,10 @@ def exact_twin_reps(docs: DataFrame) -> DataFrame:
     verdict a dedup gate owes them.
 
     The keeper rule (group by ``text.fingerprint``, keep min doc_id)
-    deliberately MIRRORS ``dedup.q_dedup_docs`` and the exact-dedup
-    applier's bootstrap rather than importing a shared helper:
-    operators/dedup.py is rotation-frozen through r20 (its queries
-    span both remaining driver windows — the registry docstring's
-    capacity math), so the consolidation would cost window slots the
-    schedule doesn't have; the three sites' agreement is pinned by
-    the gate's sequential-simulation equality test instead.
+    is written out here, in ``dedup.q_dedup_docs`` and in the
+    exact-dedup applier's bootstrap; the gate's sequential-simulation
+    equality test pins their agreement. Sharing one helper among the
+    three is an open consolidation.
 
     Scale: one window over the 16-byte content fingerprint, batch-
     sized (the drop, never the store)."""

@@ -37,7 +37,6 @@ from node_js_etl_processor_spark.functions.js_semantics import (
     first_element_or_null,
     js_truthy_str,
 )
-from node_js_etl_processor_spark.schemas import CSV_EXPORT_COLUMNS
 
 
 def filter_valid_raw(df: DataFrame) -> DataFrame:
@@ -83,19 +82,3 @@ def transform_universities(df: DataFrame) -> DataFrame:
     """The full parity transform: F1 → P1..P6 → F2 (server.js:65-97)."""
     return filter_post_trim(project_clean(filter_valid_raw(df)))
 
-
-def csv_export_frame(df: DataFrame) -> DataFrame:
-    """P7+P8: prune/reorder to the 7 CSV columns and coalesce nulls to
-    '' (reference server.js:109-127); timestamps rendered ISO-8601 with
-    milliseconds + 'Z', matching ``Date.toISOString()`` output."""
-    from node_js_etl_processor_spark.functions.js_semantics import null_to_empty
-
-    cols = []
-    for c in CSV_EXPORT_COLUMNS:
-        if c == "last_updated":
-            cols.append(
-                F.date_format(F.col(c), "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'").alias(c)
-            )
-        else:
-            cols.append(null_to_empty(F.col(c)).alias(c))
-    return df.select(*cols)

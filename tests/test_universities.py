@@ -6,13 +6,15 @@ Node behavior in SURVEY.md §2a (reference server.js:65-97).
 
 from __future__ import annotations
 
+import csv
+import re
+
 import pytest
 
+from node_js_etl_processor_spark.plans.pipeline import transformed_iso
 from node_js_etl_processor_spark.schemas import UNIVERSITIES_RAW_SCHEMA
-from node_js_etl_processor_spark.universities import (
-    csv_export_frame,
-    transform_universities,
-)
+from node_js_etl_processor_spark.sources.files import write_csv_export
+from node_js_etl_processor_spark.universities import transform_universities
 
 RAW_ROWS = [
     # 1. fully clean row — survives everything
@@ -148,10 +150,16 @@ def test_first_element_rule(transformed):
     assert transformed["TwoDomains U"]["primary_domain"] == "a.edu"
 
 
-def test_csv_export_shape(spark):
+def test_csv_export_shape(spark, tmp_path):
+    """The staged CSV bytes, rendered from the driver-side rows the
+    pipeline collects."""
     raw = spark.createDataFrame(RAW_ROWS, UNIVERSITIES_RAW_SCHEMA)
-    out = csv_export_frame(transform_universities(raw))
-    assert out.columns == [
+    collected = transformed_iso(transform_universities(raw)).collect()
+    path = tmp_path / "u.csv"
+    write_csv_export([r.asDict() for r in collected], str(path))
+    with open(path, newline="", encoding="utf-8") as fh:
+        header, *body = csv.reader(fh)
+    assert header == [
         "name",
         "country",
         "state_province",
@@ -160,13 +168,11 @@ def test_csv_export_shape(spark):
         "primary_website",
         "last_updated",
     ]
-    rows = {r["name"]: r.asDict() for r in out.collect()}
+    rows = {r[0]: dict(zip(header, r)) for r in body}
     # P8: nulls become '' at the CSV boundary
     assert rows["NoState U"]["state_province"] == ""
     assert rows["NoDomains U"]["primary_domain"] == ""
     # ISO-8601 with milliseconds + Z (Date.toISOString shape)
-    import re
-
     assert re.fullmatch(
         r"\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}\.\d{3}Z",
         rows["NoState U"]["last_updated"],
