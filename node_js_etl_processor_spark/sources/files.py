@@ -66,8 +66,9 @@ def write_csv_export(rows: Sequence[Mapping[str, Any]], path: str) -> int:
 
     Takes the same rows as ``write_json_array`` (``last_updated``
     already ISO-rendered) and keeps the 7 export columns, with nulls
-    as ``''`` (server.js:122-126). json2csv v6 double-quotes every field by
-    default (pinned by golden test), which csv.QUOTE_ALL reproduces.
+    as ``''`` (server.js:122-126). json2csv v6 double-quotes every
+    field by default (pinned by golden test), which csv.QUOTE_ALL
+    reproduces.
     """
     buf = io.StringIO()
     w = _csv.writer(buf, quoting=_csv.QUOTE_ALL, lineterminator="\n")

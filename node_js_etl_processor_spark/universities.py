@@ -81,4 +81,3 @@ def filter_post_trim(df: DataFrame) -> DataFrame:
 def transform_universities(df: DataFrame) -> DataFrame:
     """The full parity transform: F1 → P1..P6 → F2 (server.js:65-97)."""
     return filter_post_trim(project_clean(filter_valid_raw(df)))
-

@@ -76,16 +76,15 @@ for m in metrics:
     name, lower = m["name"], m["better"] == "lower"
     stats = {}
     for s in ("old", "new"):
-        vals = [side[s][p]["metrics"][name] for p in pairs]
+        vals = [side[s][p]["metrics"][name]["value"] for p in pairs]
         q1, med, q3 = statistics.quantiles(vals, n=4) if len(vals) > 1 else vals * 3
         stats[s] = (q1, med, q3)
         print(f"{name} {s}: median {med:.4g} [q1 {q1:.4g}, q3 {q3:.4g}] "
               f"spread {(q3 - q1) / med if med else 0:.3f}")
-    wins = sum(
-        (n < o) if lower else (n > o)
-        for o, n in ((side["old"][p]["metrics"][name], side["new"][p]["metrics"][name])
-                     for p in pairs)
-    )
+    wins = 0
+    for p in pairs:
+        o, n = (side[s][p]["metrics"][name]["value"] for s in ("old", "new"))
+        wins += (n < o) if lower else (n > o)
     gap = stats["new"][1] - stats["old"][1]
     iqr_old = stats["old"][2] - stats["old"][0]
     print(f"{name}: NEW wins {wins}/{len(pairs)}, median gap {gap:+.4g} "

@@ -122,4 +122,3 @@ def test_events_ts_is_a_timestamp_on_miss_and_hit(spark, tmp_path, unit):
         assert isinstance(df.schema["ts"].dataType, (TimestampType, TimestampNTZType))
         (row,) = df.select(F.unix_micros(F.to_timestamp("ts")).alias("us")).collect()
         assert row.us == micros
-
