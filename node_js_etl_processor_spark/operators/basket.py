@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from node_js_etl_processor_spark.functions import barrier
+
 #: minimum number of baskets a pair must co-occur in
 MIN_SUPPORT = 2
 
@@ -89,10 +91,10 @@ def q_itemset_pairs(
     opts into the mega-basket cap (default exact); when capped, every
     statistic counts only the surviving baskets — internally
     consistent, documented recall."""
-    # localCheckpoint: baskets feed THREE consumers (pairs, per-part
-    # counts, the total) — without it the corpus aggregation re-runs
-    # per branch (the r15 review's double-built-subtree class)
-    baskets = order_baskets(lineitem, max_basket).localCheckpoint(eager=True)
+    # baskets feed THREE consumers (pairs, per-part counts, the total)
+    # — without the cut the corpus aggregation re-runs per branch (the
+    # double-built-subtree class)
+    baskets = barrier.cut(order_baskets(lineitem, max_basket), "basket.baskets")
     pairs = basket_pairs(baskets)
     support = (
         pairs.groupBy("a", "b")

@@ -18,7 +18,7 @@ WORD-FREQUENCY table (vocabulary-sized), never the corpus:
 - ``bpe_train``: the driver loop — per merge step one argmax
   round-trip (a 1-row ``first()``, the kmeans_train trainer
   discipline: parameter-sized, n_merges of them) and a
-  localCheckpoint so the fold expressions never stack;
+  ``barrier.cut`` so the fold expressions never stack;
 - ``bpe_encode``: Arrow-batched inference (mapInPandas) applying the
   learned merge list per document — the per-row kernel side, batch
   equivalence with the JVM fold test-pinned.
@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from node_js_etl_processor_spark.functions import barrier
 from node_js_etl_processor_spark.operators.text import tokens
 
 #: End-of-word marker (Sennrich 2016 §3.2) — distinguishes "est</w>"
@@ -161,7 +162,7 @@ def bpe_train(
     finding), takes the distributed loop —
     per step one pair-count agg + one deterministic argmax (1-row
     ``first()``, the kmeans_train trainer discipline) + one
-    ``aggregate``-fold merge, localCheckpointed so folds never stack.
+    ``aggregate``-fold merge, cut so folds never stack.
 
     Both paths are bit-identical by construction ON BMP TEXT: same
     integer pair sums, same (freq DESC, a ASC, b ASC) argmax (Python
@@ -178,7 +179,7 @@ def bpe_train(
     the distributed loop (the r19 advice's conservative-gate fix;
     ``astral_words`` rides the same statistics pass). The divergence
     itself is pinned in tests so the gate can't silently rot."""
-    wf = word_frequencies(documents, text_col).localCheckpoint(eager=True)
+    wf = barrier.cut(word_frequencies(documents, text_col), "bpe.word_frequencies")
     stats = wf.agg(
         F.count("*").alias("n"),
         F.coalesce(F.sum(F.length("word")), F.lit(0)).alias("chars"),
@@ -198,7 +199,7 @@ def bpe_train(
         and stats["astral_words"] == 0
     ):
         return _bpe_train_driver(wf, n_merges, min_pair_freq)
-    vocab = bpe_init_vocab(wf).localCheckpoint(eager=True)
+    vocab = barrier.cut(bpe_init_vocab(wf), "bpe.init_vocab")
     merges: list = []
     for _ in range(n_merges):
         best = (
@@ -209,8 +210,8 @@ def bpe_train(
         if best is None or best["pair_freq"] < min_pair_freq:
             break
         merges.append((best["a"], best["b"], int(best["pair_freq"])))
-        vocab = bpe_apply_merge(vocab, best["a"], best["b"]).localCheckpoint(
-            eager=True
+        vocab = barrier.cut(
+            bpe_apply_merge(vocab, best["a"], best["b"]), "bpe.apply_merge"
         )
     return merges, vocab
 

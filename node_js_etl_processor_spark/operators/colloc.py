@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from node_js_etl_processor_spark.functions import barrier
 from node_js_etl_processor_spark.operators.spans import token_array
 
 #: default support threshold for a candidate collocation
@@ -48,16 +49,16 @@ def q_pmi_collocations(documents: DataFrame, min_count: int = MIN_COUNT) -> Data
     (w1, w2) bigram with n_xy ≥ min_count and positive PMI, carrying
     the integer sufficient statistics (n_xy, n_x, n_y, n_tokens,
     n_bigrams)."""
-    # localCheckpoint: the tokenized frame feeds FOUR consumers
+    # the tokenized frame feeds FOUR consumers
     # (unigram counts, token total, bigram counts, bigram total) —
     # the same multi-consumer fan-out class as basket.py's baskets;
-    # without it the corpus tokenization re-runs per branch.
+    # without the cut the corpus tokenization re-runs per branch.
     # token_array is the span family's single tokenization definition
     # (r19 consolidation — this module's _toks was a textual copy;
     # the shared Column keeps q_pmi_collocations' bigram space
     # aligned with the span/novelty/vocabulary lanes by construction)
-    toks = documents.select(token_array().alias("ts")).localCheckpoint(
-        eager=True
+    toks = barrier.cut(
+        documents.select(token_array().alias("ts")), "colloc.tokens"
     )
     uni = toks.select(F.explode("ts").alias("w"))
     ucnt = uni.groupBy("w").agg(F.count("*").cast("long").alias("n"))

@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from node_js_etl_processor_spark.catalog import spread
+from node_js_etl_processor_spark.functions import barrier
 from node_js_etl_processor_spark.operators.text import fingerprint
 
 # ------------------------------------------------------------------ exact
@@ -244,7 +245,6 @@ def minhash_candidates(
     shingle_n: int = 3,
     portable: bool = False,
     materialize: bool = True,
-    dedup: bool = True,
 ) -> DataFrame:
     """LSH candidate pairs: docs sharing ≥1 (band, bucket).
 
@@ -258,23 +258,20 @@ def minhash_candidates(
     band bucket is then md5 of the comma-joined row minima, which the
     DuckDB oracle reproduces verbatim.
 
-    ``materialize`` (r21): checkpoint the postings before the
-    self-join (the r20 rescan fix). The checkpoint is default-on for
-    every caller; the knob remains for callers that want the lazy
-    single-plan form.
-
-    ``dedup`` (r21): the min/max pair ``distinct()`` — a full shuffle
-    + hash-agg over the candidate pair set. Callers that feed the
-    pairs straight into ``connected_components`` (which distincts its
-    edge input anyway) pass False and skip that exchange outright
-    (guide §2.4: back-to-back distincts on the same rows, one is
-    waste); result rows are identical by construction.
+    ``materialize``: cut the postings before the self-join, which
+    references them on both sides and would otherwise re-run the
+    signature build per side. ``q_dedup_minhash`` keeps the default.
+    ``q_dedup_components`` passes False: ``connected_components``
+    cuts its (distinct, self-loop-free) edge input anyway, so a
+    postings cut there is a second sequential job (measured
+    2.13 → 3.19 s) while lazy postings pipeline the whole LSH build
+    into that one cut. The rows are identical either way.
     """
     buckets = minhash_band_postings(
         documents, num_hashes, bands, shingle_n, portable=portable
     )
     if materialize:
-        buckets = buckets.localCheckpoint(eager=True)
+        buckets = barrier.cut(buckets, "dedup.minhash_candidates")
     a = buckets.alias("a")
     b = buckets.alias("b")
     pairs = a.join(
@@ -286,7 +283,7 @@ def minhash_candidates(
         F.col("a.doc_id").alias("doc_a"),
         F.col("b.doc_id").alias("doc_b"),
     )
-    return pairs.distinct() if dedup else pairs
+    return pairs.distinct()
 
 
 def q_dedup_minhash(documents: DataFrame) -> DataFrame:
@@ -302,10 +299,10 @@ def q_dedup_minhash(documents: DataFrame) -> DataFrame:
     """
     documents = spread(documents)
     cands = minhash_candidates(documents, portable=True)
-    # (r20-opt note: checkpointing this shingle frame for the two
-    # verify sides was measured a wash at sf0.1 and is NOT scale-sound
-    # — it materializes corpus-sized shingle arrays, unlike the
-    # postings checkpoint inside minhash_candidates, which is a few
+    # (cutting this shingle frame for the two verify sides was
+    # measured a wash at sf0.1 and is NOT scale-sound — it
+    # materializes corpus-sized shingle arrays, unlike the postings
+    # cut inside minhash_candidates, which is a few
     # bytes per doc. Left as two narrow passes deliberately.)
     sh = documents.select("doc_id", tokens(F.col("text")).alias("toks")).select(
         "doc_id", shingles_from_tokens(F.col("toks")).alias("sh")
@@ -387,7 +384,7 @@ def q_dedup_simhash(documents: DataFrame, max_hamming: int = 3) -> DataFrame:
     bit votes; ``portable=False`` (xxhash64) is the perf path.
 
     Scale design — ALL pair expansion is keyed joins (r3): the
-    signature frame is materialized ONCE (localCheckpoint — the batch
+    signature frame is materialized ONCE (a ``barrier.cut`` — the batch
     stand-in for the ingest-time signature column the layout story
     assumes; 16 bytes/row, and it keeps the Arrow kernel from
     re-running on every join branch). Intra-signature (hamming-0)
@@ -423,9 +420,10 @@ def simhash_pairs(
     # one vectorized unpackbits pass (SCALE.md "Python boundaries").
     # drop_tokenless fuses the featureless-doc exclusion into the same
     # projection that computes the token-hash array (no second pass).
-    sigs = simhash_signatures_numpy(
-        documents, drop_tokenless=True, portable=portable
-    ).localCheckpoint(eager=True)
+    sigs = barrier.cut(
+        simhash_signatures_numpy(documents, drop_tokenless=True, portable=portable),
+        "dedup.simhash_pairs",
+    )
 
     # 1) intra-signature pairs: hamming 0 via sig-keyed self-join
     a, b = sigs.alias("a"), sigs.alias("b")
@@ -669,7 +667,7 @@ def connected_components(
     round — O(|E|) per round on exactly the dense clusters dedup
     graphs are made of — star contraction's per-round cost decays
     with progress, and rounds are O(log n) worst-case rather than
-    O(diameter). ``localCheckpoint`` truncates lineage each round.
+    O(diameter). A ``barrier.cut`` truncates lineage each round.
 
     Hybrid finish: whenever the CURRENT edge set fits
     ``small_graph_threshold`` (checked before each round, using the
@@ -695,11 +693,11 @@ def connected_components(
     every doc appearing in at least one edge.
     """
     spark = edges.sparkSession
-    e = (
+    e = barrier.cut(
         edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "dedup.cc_edges",
     )
     n = e.count()
     for _ in range(max_iterations):
@@ -711,7 +709,7 @@ def connected_components(
             return spark.createDataFrame(
                 labels, f"doc_id {node_type}, component_id {node_type}"
             )
-        e = _small_star(_large_star(e)).localCheckpoint(eager=True)
+        e = barrier.cut(_small_star(_large_star(e)), "dedup.cc_round")
         n, n_src = e.agg(F.count("*"), F.countDistinct("src")).first()
         if n == n_src:
             # src-unique; star forest iff no node is both src and dst
@@ -746,12 +744,8 @@ def q_dedup_clusters(documents: DataFrame) -> DataFrame:
     (chain / star / disjoint) in tests/.
     """
     documents = spread(documents)
-    # materialize=False (r21): connected_components eagerly checkpoints
-    # its (distinct, self-loop-free) edge input anyway, so the postings
-    # barrier inside minhash_candidates was a SECOND sequential
-    # materialization job for this caller — the r20 regression
-    # (2.13→3.19 s). Lazy postings pipeline the whole LSH build into
-    # CC's first checkpoint job; identical rows either way.
+    # connected_components cuts its edge input anyway: a postings cut
+    # here would be a second sequential job (minhash_candidates says more)
     pairs = minhash_candidates(documents, portable=True, materialize=False)
     comps = connected_components(pairs)
     all_docs = documents.select("doc_id").join(
@@ -802,7 +796,6 @@ def q_fuzzy_match(
     customer: DataFrame,
     max_distance: int = 1,
     key_cap: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Fuzzy entity matching via FastSS deletion-neighborhood blocking
     (Bocek et al., "Fast Similarity Search in Large Dictionaries",
@@ -874,15 +867,12 @@ def q_fuzzy_match(
             .select("klen", "khash")
         )
         keyed = keyed.join(hot, ["klen", "khash"], "left_anti")
-    # r20-opt (``materialize``, default on): checkpoint the
-    # deletion-key postings once — the self-join references the frame
-    # on both sides, so the L+1-way explode + xxhash64 chain ran twice
-    # (measured 2.20 → 1.90 s solo median at sf0.1). Fixed-width
-    # ~20 B/posting at any scale (the r9 hardening's whole point).
-    # materialize=False keeps the lazy one-plan form the plan-pin
-    # tests inspect (a checkpoint truncates the plan at an RDD scan).
-    if materialize:
-        keyed = keyed.localCheckpoint(eager=True)
+    # cut the deletion-key postings once — the self-join references
+    # the frame on both sides, so the L+1-way explode + xxhash64 chain
+    # ran twice (measured 2.20 → 1.90 s solo median at sf0.1).
+    # Fixed-width ~20 B/posting at any scale (the r9 hardening's whole
+    # point).
+    keyed = barrier.cut(keyed, "dedup.q_fuzzy_match")
     a, b = keyed.alias("a"), keyed.alias("b")
     cand = (
         a.join(
@@ -960,8 +950,9 @@ def minhash_near_dup_keepers(
     Scale: candidates from the band-bucket self-join (never
     all-pairs), signature re-join per side (32 longs/row), anti-join
     to drop losers."""
-    sigs = minhash_signatures(documents, num_hashes, shingle_n).localCheckpoint(
-        eager=True
+    sigs = barrier.cut(
+        minhash_signatures(documents, num_hashes, shingle_n),
+        "dedup.minhash_near_dup_keepers",
     )
     post = minhash_band_postings(documents, num_hashes, bands, shingle_n)
     a, b = post.alias("a"), post.alias("b")

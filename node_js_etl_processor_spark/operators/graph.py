@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from node_js_etl_processor_spark.functions import barrier
+
 #: Standard damping factor.
 PR_DAMPING = 0.85
 
@@ -71,27 +73,27 @@ def pagerank(
     / node asc)."""
     from pyspark.sql.window import Window
 
-    # r20-opt: materialize the aggregated edge frame once. Catalyst
-    # shares no common subtrees, so WITHOUT this the edge-build
-    # subtree (a fact-table join for the declared query) re-evaluated
-    # at every reference — 14 lineitem scans / 56 exchanges in the
-    # unrolled q_pagerank plan; the checkpointed frame is the
-    # post-aggregation edge list (entity-graph sized, ≤ |V|² rows —
-    # the same frame every iteration shuffles anyway). trans/nodes
-    # checkpoint too, exactly pagerank_until's discipline, so each
-    # unrolled iteration replans from O(V)-row in-memory frames.
-    edges = edges.localCheckpoint(eager=True)
+    # cut the aggregated edge frame once. Catalyst shares no common
+    # subtrees, so WITHOUT this the edge-build subtree (a fact-table
+    # join for the declared query) re-evaluated at every reference —
+    # 14 lineitem scans / 56 exchanges in the unrolled q_pagerank
+    # plan; the cut frame is the post-aggregation edge list
+    # (entity-graph sized, ≤ |V|² rows — the same frame every
+    # iteration shuffles anyway). trans/nodes are cut too, exactly
+    # pagerank_until's discipline, so each unrolled iteration replans
+    # from O(V)-row in-memory frames.
+    edges = barrier.cut(edges, "graph.pagerank_edges")
     out = edges.groupBy("src").agg(F.sum("w").alias("outw"))
-    trans = (
+    trans = barrier.cut(
         edges.join(out, "src")
-        .select("src", "dst", (F.col("w") / F.col("outw")).alias("p"))
-        .localCheckpoint(eager=True)
+        .select("src", "dst", (F.col("w") / F.col("outw")).alias("p")),
+        "graph.pagerank_trans",
     )
-    nodes = (
+    nodes = barrier.cut(
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "graph.pagerank_nodes",
     )
     n = nodes.count()  # node count: a parameter (entity-graph sized
     # here; the 1-row-frame lazy form lives in pagerank_until, which
@@ -102,7 +104,7 @@ def pagerank(
         raise ValueError("pagerank: empty edge set (no nodes)")
     base = (1.0 - damping) / n
     ranks = nodes.select("node", F.lit(1.0 / n).alias("r"))
-    # (r20-opt note: explicit F.broadcast hints on ranks/contrib were
+    # (explicit F.broadcast hints on ranks/contrib were
     # measured SLOWER here — 2.4-2.9 s vs 2.0-2.4 s solo — each hint
     # forces a driver-serialized broadcast build per iteration, while
     # AQE's runtime conversion of these tiny joins pipelines better.)
@@ -218,7 +220,7 @@ def pagerank_until(
     """Fixed-point weighted PageRank (r9) — the production-grade twin
     of the oracle-grade unrolled ``pagerank``, with the same
     convergence discipline as ``dedup.connected_components`` (iterate
-    with per-round localCheckpoint, STOP on a structural signal,
+    with a per-round cut, STOP on a structural signal,
     refuse to return wrong answers on non-convergence):
 
     - **dangling-mass redistribution**: rank sitting on nodes with no
@@ -235,8 +237,8 @@ def pagerank_until(
       EXACTLY max_iter rounds, which is what pins this form equal to
       the unrolled ``pagerank`` in tests).
 
-    Each round is one keyed join + aggregation over O(V) checkpointed
-    rows; the scalar L1 aggregate (a driver action) runs only every
+    Each round is one keyed join + aggregation over O(V) cut rows;
+    the scalar L1 aggregate (a driver action) runs only every
     ``check_every`` rounds and on the final round (r10 — the per-round
     action was pure overhead: PageRank deltas shrink geometrically, so
     checking at round k, k+1, k+2 almost never stops earlier than
@@ -257,22 +259,22 @@ def pagerank_until(
             f"pagerank_until: check_every must be >= 1, got {check_every}"
         )
     out = edges.groupBy("src").agg(F.sum("w").alias("outw"))
-    trans = (
+    trans = barrier.cut(
         edges.join(out, "src")
-        .select("src", "dst", (F.col("w") / F.col("outw")).alias("p"))
-        .localCheckpoint(eager=True)
+        .select("src", "dst", (F.col("w") / F.col("outw")).alias("p")),
+        "graph.pagerank_until_trans",
     )
-    nodes = (
+    nodes = barrier.cut(
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "graph.pagerank_until_nodes",
     )
     ncount = nodes.agg(F.count("*").cast("double").alias("n_nodes"))
-    ranks = (
+    ranks = barrier.cut(
         nodes.crossJoin(ncount)
-        .select("node", (F.lit(1.0) / F.col("n_nodes")).alias("r"))
-        .localCheckpoint(eager=True)
+        .select("node", (F.lit(1.0) / F.col("n_nodes")).alias("r")),
+        "graph.pagerank_until_init",
     )
     src_nodes = out.select(F.col("src").alias("node"))
 
@@ -287,7 +289,7 @@ def pagerank_until(
         dangling = ranks.join(src_nodes, "node", "left_anti").agg(
             F.coalesce(F.sum("r"), F.lit(0.0)).alias("dmass")
         )
-        new_ranks = (
+        new_ranks = barrier.cut(
             nodes.join(contrib, "node", "left")
             .crossJoin(ncount)
             .crossJoin(dangling)
@@ -301,8 +303,8 @@ def pagerank_until(
                         + F.col("dmass") / F.col("n_nodes")
                     )
                 ).alias("r"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            "graph.pagerank_until_round",
         )
         check = iters % check_every == 0 or iters == max_iter
         if check:

@@ -13,6 +13,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from node_js_etl_processor_spark.functions import barrier
+
 #: Misra-Gries summary capacity per partition. The merged-summary
 #: guarantee: every key's merged MG count underestimates its true
 #: count by at most N/(MG_CAPACITY+1), so any key whose merged count
@@ -126,7 +128,7 @@ def heavy_hitters_plan(
     df = df.select(F.col(key_col).try_cast("long").alias(key_col)).filter(
         F.col(key_col).isNotNull()
     )
-    partials = mg_partials(df, key_col, capacity).localCheckpoint(eager=True)
+    partials = barrier.cut(mg_partials(df, key_col, capacity), "heavy.mg_partials")
     n_total = partials.filter(F.col("key").isNull()).agg(
         F.sum("mg_count")
     ).first()[0]

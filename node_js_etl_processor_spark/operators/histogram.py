@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from node_js_etl_processor_spark.functions import barrier
+
 #: bucket count — interpolated into the staged oracle so engine and
 #: oracle can never drift.
 N_BUCKETS = 8
@@ -54,7 +56,6 @@ def q_equidepth_hist(
     lineitem: DataFrame,
     n_buckets: int = N_BUCKETS,
     parts: int = _RANK_PARTS,
-    materialize: bool = True,
 ) -> DataFrame:
     """r18-scheduled declaration: per-returnflag equi-depth histogram
     of extended price — (l_returnflag, bucket, n, lo_cents, hi_cents),
@@ -72,15 +73,11 @@ def q_equidepth_hist(
     w_local = Window.partitionBy("pid", "l_returnflag").orderBy(
         "cents", "l_orderkey", "l_linenumber"
     )
+    # the locally-ranked frame feeds the offset counts AND the final
+    # rank join, so without the cut the range exchange + window sort
+    # over lineitem ran per reference (3 scans in the final plan)
     local = ranked.withColumn("lrn", F.row_number().over(w_local))
-    # r20-opt (``materialize``, default on — snm.global_rank's r20
-    # discipline): the locally-ranked frame feeds the offset counts
-    # AND the final rank join, so without the checkpoint the range
-    # exchange + window sort over lineitem ran per reference (3 scans
-    # in the final plan). materialize=False keeps the lazy one-plan
-    # form the plan-pin test inspects.
-    if materialize:
-        local = local.localCheckpoint(eager=True)
+    local = barrier.cut(local, "histogram.q_equidepth_hist")
     counts = local.groupBy("pid", "l_returnflag").agg(
         F.count("*").alias("cnt")
     )

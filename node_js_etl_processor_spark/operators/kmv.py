@@ -46,6 +46,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from node_js_etl_processor_spark.functions import barrier
+
 #: sketch capacity — 64 keeps the estimator's relative error
 #: ~ 1/sqrt(k-1) ≈ 13 % while the full sketch is one shuffle page
 KMV_K = 64
@@ -213,12 +215,12 @@ def q_kmv_distinct(orders: DataFrame) -> DataFrame:
         .filter(F.col("h").isNotNull())  # same null-key rule as kmv_sketch
         .distinct()
     )
-    # localCheckpoint: the sketch IS the synopsis — k rows per group.
-    # Without it every downstream consumer (theta, entries, both
+    # the sketch IS the synopsis — k rows per group. Without the cut
+    # every downstream consumer (theta, entries, both
     # algebra branches) re-expands the corpus-sized distinct+window
     # subtree; with it the heavy scan runs once and all set algebra
     # reuses the materialized k-row frames.
-    sk = kmv_bottom_k(hashed).localCheckpoint()
+    sk = barrier.cut(kmv_bottom_k(hashed), "kmv.q_kmv_distinct")
     th_c = kmv_theta(sk)
     ent_c = kmv_entries(sk, th_c)
     singles_df = kmv_estimates(sk, theta=th_c, entries=ent_c).withColumnRenamed(
@@ -279,7 +281,9 @@ def q_kmv_difference(orders: DataFrame) -> DataFrame:
     q_kmv_distinct. All arithmetic BIGINT; the oracle rebuilds both
     rows bit-for-bit.
     """
-    sk = kmv_sketch(orders, "o_orderstatus", "o_custkey").localCheckpoint()
+    sk = barrier.cut(
+        kmv_sketch(orders, "o_orderstatus", "o_custkey"), "kmv.q_kmv_difference"
+    )
     return kmv_set_difference(sk, "F", "O", "cust:F-O", "cust:O-F")
 
 

@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from node_js_etl_processor_spark.functions import barrier
+
 from .spans import (
     SPAN_W,
     corpus_tokens,
@@ -167,11 +169,11 @@ def novelty_of_drop(
     decided from the checkpointed frame's row count (an upper bound
     on distinct digests — no extra distinct pass). The drop-side work
     is batch-sized, and the drop's tokenize+md5 shingle subtree runs
-    exactly ONCE (the frame is localCheckpointed — batch-sized, so
-    inside the checkpoint discipline — and feeds the digest filter,
+    exactly ONCE (the frame is cut — batch-sized, so inside the
+    ``barrier.cut`` discipline — and feeds the digest filter,
     the duplication gate AND the totals, the q_doc_novelty
     single-hash-subtree invariant on the read path)."""
-    sh_d = shingle_positions(drop_docs, w).localCheckpoint(eager=True)
+    sh_d = barrier.cut(shingle_positions(drop_docs, w), "novelty.drop_shingles")
     drop_h = sh_d.select("h").distinct()
     if sh_d.count() <= broadcast_posting_cap:
         drop_h = F.broadcast(drop_h)

@@ -26,10 +26,9 @@ broadcasts it) + ONE keyed aggregation + ONE left-anti dedup against
 the visited set. No driver-side iteration state beyond the loop
 counter, no collect anywhere; the visited frame is bounded by the
 reachable vertex set (domains — many orders of magnitude smaller
-than the document corpus that generated the edges). For deep K the
-pagerank_until localCheckpoint discipline (graph.py:192) applies
-verbatim; at the declared K=3 the unrolled lineage is shallow enough
-to leave to Catalyst.
+than the document corpus that generated the edges). Each hop's
+frontier is cut (``bfs_hops_over_edges`` says why), so the lineage
+stays one hop deep at any K.
 """
 
 from __future__ import annotations
@@ -39,6 +38,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from node_js_etl_processor_spark.functions import barrier
 from node_js_etl_processor_spark.operators.graph import link_graph_edges
 
 #: fixed seed domains + hop budget — interpolated into the staged
@@ -47,38 +47,32 @@ SEEDS = ("d0.example", "d7.example")
 K_HOPS = 3
 
 
-def bfs_hops_over_edges(
-    edges: DataFrame, k_hops: int = K_HOPS, checkpoint_hops: bool = True
-) -> DataFrame:
+def bfs_hops_over_edges(edges: DataFrame, k_hops: int = K_HOPS) -> DataFrame:
     """The BFS core over any (src, dst) edge frame — q_bfs_hops feeds
     it the batch link extraction; ``bfs_hops_from_store`` feeds it the
     streamed edge store, so the ingest-day graph tier answers the same
     reachability questions as the batch operator (the theta-store
     difference-read discipline).
 
-    ``checkpoint_hops`` (r19 — the q_bfs_hops variance diagnosis):
-    each hop's frontier is eagerly localCheckpointed. Two reasons,
-    both measured. (1) Without it the final union of layers
+    Each hop's frontier is cut (``barrier.cut``). Two reasons, both
+    measured. (1) Without it the final union of layers
     RE-EVALUATES every earlier hop's subtree once per later layer —
     the K=3 plan carried 24 join operators for the 6 the recurrence
     defines (Catalyst does not share common subtrees across union
     branches), tripling hop-1's work. (2) A derived frontier's size
     is unknown at planning time, so AQE's broadcast-vs-SMJ choice for
-    the next hop's join flips run to run — the 2.1× driver/builder
-    variance the r18 verdict flagged; a checkpointed frontier has
+    the next hop's join flips run to run (a 2.1× run-to-run spread in
+    q_bfs_hops' time); a cut frontier has
     EXACT size statistics, so the choice is deterministic (and, the
     frontier being domain-bounded, lands on broadcast without an
     unconditional ``F.broadcast`` pin that would break at web scale
     where a frontier can exceed the broadcast table limit).
-    Checkpoint cost is one job per hop over a domain-sized frame.
-    ``False`` exposes the un-materialized recurrence so the plan
-    tests can still pin its shape (equi-joins only, partial+final
-    aggs)."""
-    # localCheckpoint: the edge frame feeds one join PER HOP, and
-    # without it each hop re-runs the upstream edge construction
-    # (the colloc.py multi-consumer fan-out discipline). The frame is
+    The cut costs one job per hop over a domain-sized frame."""
+    # the edge frame feeds one join PER HOP, and without the cut each
+    # hop re-runs the upstream edge construction (the colloc.py
+    # multi-consumer fan-out discipline). The frame is
     # domain-pair-sized — thousands of times smaller than the corpus.
-    edges = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
+    edges = barrier.cut(edges.select("src", "dst").distinct(), "paths.bfs_edges")
     spark = edges.sparkSession
     visited = spark.createDataFrame(
         [(s, 0, 1) for s in SEEDS], "domain string, dist int, n_paths long"
@@ -103,18 +97,14 @@ def bfs_hops_over_edges(
             .join(visited, "domain", "left_anti")
             .select("domain", "dist", "n_paths")
         )
-        if checkpoint_hops:
-            nxt = nxt.localCheckpoint(eager=True)
-            # r21 (VERDICT r20 item 5): exhausted frontier ⇒ every
-            # remaining hop is provably empty (BFS layer recurrence) —
-            # stop unrolling instead of running k more join+agg+anti
-            # jobs over an empty frame. Identical output: an empty
-            # layer contributes no rows to the union. The check is one
-            # take(1) over the ALREADY-MATERIALIZED checkpoint
-            # partitions (cheap); only taken on the checkpointed path
-            # — the lazy form stays a pure plan for the shape tests.
-            if nxt.isEmpty():
-                break
+        nxt = barrier.cut(nxt, "paths.bfs_hop")
+        # exhausted frontier ⇒ every remaining hop is provably empty
+        # (BFS layer recurrence) — stop unrolling instead of running k
+        # more join+agg+anti jobs over an empty frame. Identical
+        # output: an empty layer contributes no rows to the union. The
+        # check is one take(1) over the already-cut partitions (cheap).
+        if nxt.isEmpty():
+            break
         layers.append(nxt)
         frontier = nxt
         visited = visited.unionByName(nxt.select("domain", "dist", "n_paths"))

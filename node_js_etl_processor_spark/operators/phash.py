@@ -35,6 +35,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 from pyspark.sql.window import Window
 
+from node_js_etl_processor_spark.functions import barrier
+
 #: synth geometry: 18×16 source rasters downscale 2× onto the 9×8
 #: dHash grid, so the resize path is exercised, not bypassed
 PHASH_W, PHASH_H = 18, 16
@@ -318,14 +320,14 @@ def q_image_neardup(documents: DataFrame) -> DataFrame:
 
     Scale: one Arrow decode pass, then 2-byte-key band self-join —
     the text-simhash plan on perceptual keys."""
-    # r20-opt: materialize the decoded-hash frame once (media_id, ok,
-    # dhash — bytes per image, never pixels). The band self-join
-    # references it on BOTH sides, and without the checkpoint the
-    # whole synth-encode + Arrow-decode chain ran twice (8 MapInPandas
-    # nodes in the final plan); the streaming ingest (streaming/
-    # dedup.py) already checkpoints at exactly this point.
-    hashed = image_dhash(synth_phash_media(documents)).localCheckpoint(
-        eager=True
+    # cut the decoded-hash frame once (media_id, ok, dhash — bytes per
+    # image, never pixels). The band self-join references it on BOTH
+    # sides, and without the cut the whole synth-encode + Arrow-decode
+    # chain ran twice (8 MapInPandas nodes in the final plan); the
+    # streaming ingest (streaming/dedup.py) already cuts at exactly
+    # this point.
+    hashed = barrier.cut(
+        image_dhash(synth_phash_media(documents)), "phash.q_image_neardup"
     )
     return image_near_dup_pairs(hashed).orderBy("id_a", "id_b")
 
@@ -343,10 +345,10 @@ def q_image_dedup(documents: DataFrame) -> DataFrame:
 
     Scale: one Arrow decode pass (zero shuffles) + one 8-byte-key
     window exchange — the exact-text-dedup shape on a perceptual key."""
-    # r20-opt: same single-decode materialization as q_image_neardup —
-    # the ok/rejected branches of image_near_dup_groups otherwise each
-    # re-run the encode+decode chain (two full Python passes).
-    hashed = image_dhash(synth_phash_media(documents)).localCheckpoint(
-        eager=True
+    # the same single-decode cut as q_image_neardup — the ok/rejected
+    # branches of image_near_dup_groups otherwise each re-run the
+    # encode+decode chain (two full Python passes).
+    hashed = barrier.cut(
+        image_dhash(synth_phash_media(documents)), "phash.q_image_dedup"
     )
     return image_near_dup_groups(hashed).orderBy("media_id")

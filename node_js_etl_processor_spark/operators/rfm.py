@@ -42,6 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from node_js_etl_processor_spark.functions import barrier
+
 from .snm import global_rank
 
 
@@ -76,8 +78,8 @@ def q_rfm_segments(orders: DataFrame) -> DataFrame:
     metrics join-back (measured ~1.3× solo at sf0.1; BENCH.md r20).
     Segment arithmetic is unchanged: ``(5·(rank−1)) div n`` in true
     integer division, segments 0..4 ascending, custkey tiebreak."""
-    m = rfm_metrics(orders).localCheckpoint(eager=True)
-    n = m.count()  # one cheap job over the checkpointed frame
+    m = barrier.cut(rfm_metrics(orders), "rfm.metrics")
+    n = m.count()  # one cheap job over the cut frame
     tagged = (
         m.select(
             "custkey",

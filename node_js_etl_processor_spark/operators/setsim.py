@@ -100,6 +100,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from node_js_etl_processor_spark.functions import barrier
 from node_js_etl_processor_spark.operators.spans import token_array
 
 #: declared threshold: Jaccard >= 19/20 (exact rational — floats
@@ -197,7 +198,7 @@ def _pack_reps(sets: DataFrame) -> DataFrame:
     its digest), so ``first(toks)`` is deterministic-by-value and the
     old groupBy + re-join against the sets frame collapsed into a
     single keyed exchange."""
-    return (
+    return barrier.cut(
         sets.groupBy("set_key")
         .agg(
             F.min("doc_id").alias("doc_id"),
@@ -211,8 +212,8 @@ def _pack_reps(sets: DataFrame) -> DataFrame:
             F.size("toks").cast("bigint").alias("sz"),
             "group_n",
         )
-        .withColumn("bloom", F.expr(_BLOOM_EXPR))
-        .localCheckpoint(eager=True)
+        .withColumn("bloom", F.expr(_BLOOM_EXPR)),
+        "setsim.pack_reps",
     )
 
 
@@ -868,7 +869,7 @@ def q_containment_decon(documents: DataFrame) -> DataFrame:
     tagged = packed_sets(documents).withColumn(
         "side", F.col("doc_id") % 10 == 0
     )
-    reps = (
+    reps = barrier.cut(
         tagged.groupBy("side", "set_key")
         .agg(
             F.min("doc_id").alias("doc_id"),
@@ -883,8 +884,8 @@ def q_containment_decon(documents: DataFrame) -> DataFrame:
             F.size("toks").cast("bigint").alias("sz"),
             "group_n",
         )
-        .withColumn("bloom", F.expr(_BLOOM_EXPR))
-        .localCheckpoint(eager=True)
+        .withColumn("bloom", F.expr(_BLOOM_EXPR)),
+        "setsim.q_containment_decon",
     )
     return _containment_from_reps(
         reps.filter(F.col("side")).drop("side"),

@@ -497,10 +497,10 @@ def q_hll_rollup(orders: DataFrame) -> DataFrame:
     Scale: ONE data-sized pass builds the per-group registers; the
     rollup works on ≤ m·groups rows. The exact twin rides along per
     level for the accuracy statement."""
-    # (r20-opt note: a localCheckpoint on regs was measured SLOWER
-    # here — the build is one cheap agg over orders and only two
-    # references duplicate it; the barrier cost exceeds the re-scan.
-    # q_hll_intersect, with 12 references, keeps its checkpoint.)
+    # (a ``barrier.cut`` on regs was measured SLOWER here — the build
+    # is one cheap agg over orders and only two references duplicate
+    # it; the barrier cost exceeds the re-scan.
+    # q_hll_intersect, with 12 references, is left uncut too.)
     regs = hll_registers(orders, "o_orderpriority", "o_custkey")
     global_regs = (
         regs.groupBy("bucket")
@@ -537,7 +537,7 @@ def q_hll_intersect(orders: DataFrame) -> DataFrame:
     pair unions and 15 estimates all fold ≤ m-row frames. The exact
     twin is one distinct-pairs self-join at group granularity —
     present only for the oracle contract."""
-    # (r20-opt note: a localCheckpoint on regs — the final plan
+    # (a ``barrier.cut`` on regs — the final plan
     # re-evaluates the build per reference, 12 orders scans / 36
     # exchanges — was A/B-measured SLOWER at sf0.1 across 7 gated
     # pairs (med 1.93 vs 1.51 s): the build is one cheap partial agg
@@ -638,7 +638,7 @@ def q_hll_timeline(events: DataFrame) -> DataFrame:
     wall-clock date strings via date_trunc (tz-stable, the
     q_date_buckets convention)."""
     day = F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd")
-    # (r20-opt note: a regs_day localCheckpoint measured slower, as
+    # (a ``barrier.cut`` on regs_day measured slower, as
     # in q_hll_rollup — two references of a cheap build; left re-run.)
     regs_day = hll_registers(
         events.select(day.alias("period"), "user_id"), "period", "user_id"

@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from node_js_etl_processor_spark.functions import barrier
+
 #: sliding window width (candidate pairs per row after sorting)
 SNM_WINDOW = 5
 
@@ -89,32 +91,25 @@ def ascii_fold(col):
     return F.translate(col, FOLD_FROM, FOLD_TO)
 
 
-def global_rank(
-    df: DataFrame, sort_cols: "list[str]", materialize: bool = True
-) -> DataFrame:
+def global_rank(df: DataFrame, sort_cols: "list[str]") -> DataFrame:
     """Add ``rn`` = the row's 1-based position in the total
     (sort_cols) order, without a single-partition window over the
     corpus: range-repartition on the sort columns, rank locally per
     partition, and add broadcast cumulative offsets. The sort order
     must be total (include a tiebreaker column) for the rank to be
-    deterministic.
-
-    ``materialize`` (r20-opt, default on): eager-localCheckpoint the
-    locally-ranked frame — it is referenced by the offset aggregation
-    AND the final join (and q_snm_pairs references the rank output on
-    both self-join sides), so without it the range exchange + window
-    sort re-ran per reference (4 Windows / 9 Exchanges in
-    q_snm_pairs' final plan; measured 1.34 → 1.22 s there and
-    1.28 → 1.11 s in q_rfm_segments). The checkpoint holds the frame
-    the rank already shuffles, +2 ints. ``materialize=False`` keeps
-    the lazy single-plan form — the shape the plan-pin tests inspect
-    (a checkpoint truncates the plan at an RDD scan)."""
+    deterministic."""
     ranked = df.repartitionByRange(_RANK_PARTS, *sort_cols)
     with_pid = ranked.withColumn("pid", F.spark_partition_id())
     w_local = Window.partitionBy("pid").orderBy(*sort_cols)
+    # the locally-ranked frame is referenced by the offset aggregation
+    # AND the final join (and q_snm_pairs references the rank output on
+    # both self-join sides), so without the cut the range exchange +
+    # window sort re-ran per reference (4 Windows / 9 Exchanges in
+    # q_snm_pairs' final plan; measured 1.34 → 1.22 s there and
+    # 1.28 → 1.11 s in q_rfm_segments). It holds the frame the rank
+    # already shuffles, +2 ints.
     local = with_pid.withColumn("lrn", F.row_number().over(w_local))
-    if materialize:
-        local = local.localCheckpoint(eager=True)
+    local = barrier.cut(local, "snm.global_rank")
     counts = local.groupBy("pid").agg(F.count("*").alias("n"))
     w_off = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
     offsets = counts.withColumn(

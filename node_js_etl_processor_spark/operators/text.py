@@ -17,6 +17,8 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from node_js_etl_processor_spark.functions import barrier
+
 #: Tiny per-language stopword marker lists for the n-gram/stopword
 #: language-ID heuristic. Deliberately small + deterministic; real
 #: pipelines would swap in fastText-style models via mapInPandas.
@@ -1780,23 +1782,23 @@ def q_lm_bigram_perplexity(documents: DataFrame, buckets: int = 3) -> DataFrame:
         .agg(F.count("*").cast("bigint").alias("uc"))
     )
     total = F.sum("uc").over(Window.partitionBy()).cast("double")
-    # r20-opt: the unigram and bigram count tables are vocabulary-
-    # sized (the docstring's broadcastability argument) but were
-    # re-derived from the corpus at every reference — uniprob feeds
+    # the unigram and bigram count tables are vocabulary-sized (the
+    # docstring's broadcastability argument) but were re-derived from
+    # the corpus at every reference — uniprob feeds
     # both the bigram interpolation AND the first-token scoring, bcnt
     # feeds both the history fold and the probability join, so the
     # tokenize + explode chain ran 6x (6 documents scans / 30
-    # exchanges in the final plan). Checkpointing the two count
-    # tables cuts that to the 4 passes the math actually needs; the
+    # exchanges in the final plan). Cutting the two count tables
+    # brings that to the 4 passes the math actually needs; the
     # downstream joins keep their explicit broadcast hints (a
     # checkpointed RDD has no size statistics for the planner).
-    uniprob = uni.select(
-        "tok", (F.col("uc").cast("double") / total).alias("p_uni")
-    ).localCheckpoint(eager=True)
-    bcnt = (
-        big.groupBy("w1", "w2")
-        .agg(F.count("*").cast("bigint").alias("bc"))
-        .localCheckpoint(eager=True)
+    uniprob = barrier.cut(
+        uni.select("tok", (F.col("uc").cast("double") / total).alias("p_uni")),
+        "text.lm_unigram_probs",
+    )
+    bcnt = barrier.cut(
+        big.groupBy("w1", "w2").agg(F.count("*").cast("bigint").alias("bc")),
+        "text.lm_bigram_counts",
     )
     hist = bcnt.groupBy("w1").agg(F.sum("bc").cast("bigint").alias("hc"))
     # one nll per distinct bigram: λ·(bc/hc) + (1−λ)·p_uni(w2)
@@ -1892,16 +1894,16 @@ def q_tfidf(documents: DataFrame, k: int = 5) -> DataFrame:
         spread(documents)
         .select("doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("term"))
     )
-    # r20-opt: one tokenize+explode pass instead of three. tf is
-    # referenced by the df aggregation AND the scoring join, and
-    # n_docs re-derived the exploded frame a third time; the
-    # checkpointed (doc_id, term, tf) frame is the postings table the
-    # bm25 index stores, and n_docs = distinct doc_id over it is the
-    # same count (docs with >= 1 term) by construction.
-    tf = (
+    # one tokenize+explode pass instead of three. tf is referenced by
+    # the df aggregation AND the scoring join, and n_docs re-derived
+    # the exploded frame a third time; the cut (doc_id, term, tf)
+    # frame is the postings table the bm25 index stores, and n_docs =
+    # distinct doc_id over it is the same count (docs with >= 1 term)
+    # by construction.
+    tf = barrier.cut(
         toked.groupBy("doc_id", "term")
-        .agg(F.count("*").cast("bigint").alias("tf"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").cast("bigint").alias("tf")),
+        "text.q_tfidf_tf",
     )
     dft = tf.groupBy("term").agg(F.count("*").cast("bigint").alias("df"))
     n_docs = tf.select("doc_id").distinct().agg(

@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from node_js_etl_processor_spark.functions import barrier
+
 from .basket import MIN_SUPPORT, order_baskets, basket_pairs
 
 
@@ -71,12 +73,12 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     — the degree-orientation algorithm (module docstring). ``edges``
     must be duplicate-free with a < b; every id participates in the
     total order (degree, id), so orientation is deterministic."""
-    # localCheckpoint: the edge frame (corpus-sized basket build +
-    # pair explode + support agg upstream) feeds THREE consumers —
-    # both unionAll branches of the degree count and the orientation
-    # join — the repo's multi-consumer checkpoint discipline rather
-    # than relying on exchange reuse (r16 review)
-    edges = edges.localCheckpoint(eager=True)
+    # the edge frame (corpus-sized basket build + pair explode +
+    # support agg upstream) feeds THREE consumers — both unionAll
+    # branches of the degree count and the orientation join — the
+    # repo's multi-consumer cut discipline rather than relying on
+    # exchange reuse
+    edges = barrier.cut(edges, "triangles.edges")
     ends = edges.select(F.col("a").alias("v")).unionAll(
         edges.select(F.col("b").alias("v"))
     )
@@ -89,11 +91,14 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     a_first = (F.col("da") < F.col("db")) | (
         (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
     )
-    oriented = e.select(
-        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("src"),
-        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
-        F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("ddst"),
-    ).localCheckpoint(eager=True)
+    oriented = barrier.cut(
+        e.select(
+            F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("src"),
+            F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
+            F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("ddst"),
+        ),
+        "triangles.oriented",
+    )
     # wedges at each pivot: unordered pairs of out-neighbors, ordered
     # by the SAME (deg, id) total order so each wedge appears once and
     # the closing edge's orientation is known (lower tip -> higher tip)

@@ -1,4 +1,4 @@
-"""Ingest-time MinHash signature store + incremental delta dedup.
+"""Ingest-time LSH posting stores + incremental delta dedup.
 
 The batch near-dup family (operators/dedup.py) self-joins the whole
 corpus — correct for a one-shot sweep, but a production pipeline at
@@ -18,6 +18,9 @@ text of) the accepted corpus. This module is that incremental shape:
 - ``append_minhash_store`` adds an accepted batch's postings, closing
   the ingest loop.
 
+The exact-fingerprint and SimHash band stores follow the same
+write / append / delta shape.
+
 Cost at 100 TB: per crawl drop, O(|drop|) hashing + one broadcast
 join against O(corpus) postings (3 narrow columns, ~20 bytes/row ×
 bands) — vs the full self-join's O(corpus) re-hash of raw text. The
@@ -30,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from node_js_etl_processor_spark.functions import barrier
 from node_js_etl_processor_spark.operators.dedup import minhash_band_postings
 
 
@@ -224,8 +228,9 @@ def dedup_simhash_delta(
         simhash_signatures_numpy,
     )
 
-    sigs = simhash_signatures_numpy(new_docs, drop_tokenless=True).localCheckpoint(
-        eager=True
+    sigs = barrier.cut(
+        simhash_signatures_numpy(new_docs, drop_tokenless=True),
+        "sources.dedup_store.simhash_delta_sigs",
     )
     newb = simhash_band_postings_from_sigs(sigs)
     store = spark.read.parquet(path)
@@ -269,36 +274,3 @@ def dedup_simhash_delta(
     )
     return new_old.unionByName(new_new).distinct()
 
-
-# ------------------------------------------- minhash signature store
-
-
-def write_minhash_sigs(
-    documents: DataFrame, path: str, num_hashes: int = 32, shingle_n: int = 3
-) -> None:
-    """Persist full minhash signatures (doc_id, h0..h31 — 32 longs,
-    ~260 bytes/doc) next to the band postings: signature-space
-    verification (``operators.dedup.minhash_est_jaccard``) is what
-    lets an incremental probe VERIFY near-dup candidates without ever
-    reading the accepted corpus's text — the last text-read the delta
-    path still had."""
-    from node_js_etl_processor_spark.operators.dedup import minhash_signatures
-
-    minhash_signatures(documents, num_hashes, shingle_n).write.mode(
-        "overwrite"
-    ).parquet(path)
-
-
-def append_minhash_sigs(
-    documents: DataFrame, path: str, num_hashes: int = 32, shingle_n: int = 3
-) -> None:
-    """Append a SEEN batch's signatures. Note the near-dup ingest
-    contract appends every seen doc (accepted or rejected): the
-    keeper rule is 'drop if near-dup of anything seen earlier', which
-    keeps stream and batch decisions identical (see
-    operators.dedup.minhash_near_dup_keepers)."""
-    from node_js_etl_processor_spark.operators.dedup import minhash_signatures
-
-    minhash_signatures(documents, num_hashes, shingle_n).write.mode(
-        "append"
-    ).parquet(path)

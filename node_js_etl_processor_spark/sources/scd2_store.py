@@ -69,6 +69,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from node_js_etl_processor_spark.functions import barrier
 from node_js_etl_processor_spark.operators.relational import q_scd2
 from node_js_etl_processor_spark.streaming.markers import (
     _delete,
@@ -426,19 +427,19 @@ def scd2_apply_delta(
             (F.col("is_current") & F.col("_new_from").isNull()).alias("is_current"),
         )
     )
-    merged = (
+    # cut BEFORE the write: touched-bucket-sized by construction
+    # (|history| x |batch keys| / n_buckets), the same discipline as
+    # connected_components. (The manifest layout never overwrites what
+    # it reads, but a single evaluation also pins the bucket list
+    # collected below.)
+    merged = barrier.cut(
         touched.filter(~F.col("is_current"))
         .select(*HISTORY_COLS)
         .unionByName(closed_or_kept)
         .unionByName(new_rows)
         .unionByName(bystanders.select(*HISTORY_COLS))
-        .withColumn("bucket", _bucket("custkey", store_nb))
-        # materialize BEFORE the write: touched-bucket-sized by
-        # construction (|history| x |batch keys| / n_buckets), the
-        # same localCheckpoint discipline as connected_components.
-        # (The manifest layout never overwrites what it reads, but a
-        # single evaluation also pins the bucket list collected below.)
-        .localCheckpoint(eager=True)
+        .withColumn("bucket", _bucket("custkey", store_nb)),
+        "sources.scd2_store.apply_delta_merged",
     )
     data_dir = f"data_{tag}"
     merged.repartition("bucket").write.mode("overwrite").partitionBy(

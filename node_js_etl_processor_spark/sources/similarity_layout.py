@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from node_js_etl_processor_spark.functions import barrier
 from node_js_etl_processor_spark.operators.similarity import (
     _ivf_centroids,
     _pq_residual_codebooks,
@@ -292,11 +293,14 @@ def dedup_embedding_delta(
     from node_js_etl_processor_spark.functions.vector import cosine_similarity
 
     planes = _srp_hyperplanes(n_planes)
-    newsig = new_embs.select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("embedding"),
-        srp_signature(F.col("embedding"), planes).alias("sig"),
-    ).localCheckpoint(eager=True)
+    newsig = barrier.cut(
+        new_embs.select(
+            "vec_id",
+            F.col("embedding").cast("array<double>").alias("embedding"),
+            srp_signature(F.col("embedding"), planes).alias("sig"),
+        ),
+        "sources.similarity_layout.embedding_delta_sigs",
+    )
     sig_vals = [r["sig"] for r in newsig.select("sig").distinct().collect()]
     store = (
         spark.read.parquet(f"{path}/by_sig")

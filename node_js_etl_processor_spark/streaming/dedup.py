@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from ..functions import barrier
 from ..functions.timeutil import ensure_instant
 
 
@@ -153,7 +154,7 @@ def exact_dedup_applier(store_path: str, out_path: str, checkpoint: str):
             )
         else:
             survivors = dedup_exact_delta(spark, batch_df, store_path)
-        survivors = survivors.localCheckpoint(eager=True)
+        survivors = barrier.cut(survivors, "streaming.dedup.exact_survivors")
         stage_and_publish(out_path, tag, {"": (survivors, None)})
         fps = survivors.select(fingerprint(F.col("text")).alias("fp")).distinct()
         stage_and_publish(store_path, tag, {"": (fps, None)})
@@ -253,8 +254,10 @@ def near_dup_applier(
             return read_batch_output(spark, out_path, tag)
         recover_partial(store_dir, tag)
         recover_partial(out_path, tag)
-        batch_df = batch_df.localCheckpoint(eager=True)
-        sigs = minhash_signatures(batch_df, num_hashes).localCheckpoint(eager=True)
+        batch_df = barrier.cut(batch_df, "streaming.dedup.near_dup_batch")
+        sigs = barrier.cut(
+            minhash_signatures(batch_df, num_hashes), "streaming.dedup.near_dup_sigs"
+        )
         post = minhash_band_postings(batch_df, num_hashes, bands)
         sa = sigs.select(
             F.col("doc_id").alias("keep_id"),
@@ -303,11 +306,14 @@ def near_dup_applier(
                 .select("drop_id")
             )
             losers = losers.unionByName(new_old)
-        survivors = batch_df.join(
-            losers.distinct().withColumnRenamed("drop_id", "doc_id"),
-            "doc_id",
-            "left_anti",
-        ).localCheckpoint(eager=True)
+        survivors = barrier.cut(
+            batch_df.join(
+                losers.distinct().withColumnRenamed("drop_id", "doc_id"),
+                "doc_id",
+                "left_anti",
+            ),
+            "streaming.dedup.near_dup_survivors",
+        )
         stage_and_publish(out_path, tag, {"": (survivors, None)})
         # append the WHOLE batch (seen, not just kept) — see docstring
         stage_and_publish(
@@ -388,10 +394,11 @@ def simhash_applier(
             return read_batch_output(spark, out_path, tag)
         recover_partial(store_dir, tag)
         recover_partial(out_path, tag)
-        batch_df = batch_df.localCheckpoint(eager=True)
-        sigs = simhash_signatures_numpy(
-            batch_df, drop_tokenless=True
-        ).localCheckpoint(eager=True)
+        batch_df = barrier.cut(batch_df, "streaming.dedup.simhash_batch")
+        sigs = barrier.cut(
+            simhash_signatures_numpy(batch_df, drop_tokenless=True),
+            "streaming.dedup.simhash_sigs",
+        )
         post = simhash_band_postings_from_sigs(sigs)
         a, b = post.alias("a"), post.alias("b")
         new_new = (
@@ -426,9 +433,10 @@ def simhash_applier(
                 .select(F.col("new_id").alias("doc_id"))
             )
             losers = losers.unionByName(new_old)
-        survivors = batch_df.join(
-            losers.distinct(), "doc_id", "left_anti"
-        ).localCheckpoint(eager=True)
+        survivors = barrier.cut(
+            batch_df.join(losers.distinct(), "doc_id", "left_anti"),
+            "streaming.dedup.simhash_survivors",
+        )
         stage_and_publish(out_path, tag, {"": (survivors, None)})
         stage_and_publish(store_dir, tag, {"": (post, "band")})
         mark_batch_applied(store_dir, checkpoint, batch_id)
@@ -437,26 +445,6 @@ def simhash_applier(
         return survivors
 
     return _ingest
-
-
-def simhash_ingest_stream(
-    docs_stream: DataFrame,
-    store_dir: str,
-    out_path: str,
-    checkpoint: str,
-    max_hamming: int = 3,
-):
-    """SimHash near-dup ingest as a stream: see ``simhash_applier``
-    for the per-batch semantics. Returns the started query
-    (availableNow)."""
-    return (
-        docs_stream.writeStream.foreachBatch(
-            simhash_applier(store_dir, out_path, checkpoint, max_hamming)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def countmin_ingest_stream(
@@ -604,8 +592,9 @@ def embedding_applier(
             )
             .distinct()
         )
-        survivors = batch_df.join(losers, "vec_id", "left_anti").localCheckpoint(
-            eager=True
+        survivors = barrier.cut(
+            batch_df.join(losers, "vec_id", "left_anti"),
+            "streaming.dedup.embedding_survivors",
         )
         stage_and_publish(out_path, tag, {"": (survivors, None)})
         append_ann_layout(
@@ -708,7 +697,7 @@ def image_dedup_applier(store_path: str, out_path: str, checkpoint: str):
         batch_df = batch_df.groupBy("media_id").agg(
             F.max_by("payload", F.xxhash64("payload")).alias("payload")
         )
-        hashed = image_dhash(batch_df).localCheckpoint(eager=True)
+        hashed = barrier.cut(image_dhash(batch_df), "streaming.dedup.image_hashes")
         ok = hashed.filter(F.col("ok") == "true").select("media_id", "dhash")
         refused = hashed.filter(F.col("ok") != "true").select(
             "media_id", F.col("media_id").cast("string").alias("key")
@@ -733,10 +722,13 @@ def image_dedup_applier(store_path: str, out_path: str, checkpoint: str):
             .filter(F.col("_rn") == 1)
             .select("media_id", "dhash")
         )
-        survivors = batch_df.join(
-            keepers.select("media_id").unionByName(refused.select("media_id")),
-            "media_id",
-        ).localCheckpoint(eager=True)
+        survivors = barrier.cut(
+            batch_df.join(
+                keepers.select("media_id").unionByName(refused.select("media_id")),
+                "media_id",
+            ),
+            "streaming.dedup.image_survivors",
+        )
         stage_and_publish(out_path, tag, {"": (survivors, None)})
         new_keys = (
             keepers.select(

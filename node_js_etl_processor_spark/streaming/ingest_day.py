@@ -59,6 +59,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import barrier
+
 #: the multiplexed feed's column split. Media payloads ride the feed
 #: base64-encoded (``payload_b64`` — JSON drops cannot carry raw
 #: binary); the media lane decodes at ingest.
@@ -193,7 +195,7 @@ def ingest_day_applier(
     )
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.localCheckpoint(eager=True)
+        batch_df = barrier.cut(batch_df, "streaming.ingest_day.batch")
         docs = batch_df.filter(F.col("kind") == "doc").select(*DOC_COLS)
         cdc = batch_df.filter(F.col("kind") == "order").select(*ORDER_COLS)
 

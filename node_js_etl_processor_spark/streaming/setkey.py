@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import barrier
+
 
 def set_collapse_applier(store_path: str, out_path: str, checkpoint: str):
     """Per-batch set-key collapse as an idempotent applier (see the
@@ -69,14 +71,14 @@ def set_collapse_applier(store_path: str, out_path: str, checkpoint: str):
             seen = spark.read.parquet(store_path).select("set_key")
             keyed = keyed.join(seen, "set_key", "left_anti")
         w = Window.partitionBy("set_key").orderBy(F.col("doc_id").asc())
-        # localCheckpoint: the kept frame feeds BOTH publishes (docs
-        # out, keys to the store) — and the keys come from the column
-        # already computed, never a re-tokenization
-        kept = (
+        # the kept frame feeds BOTH publishes (docs out, keys to the
+        # store) — and the keys come from the column already computed,
+        # never a re-tokenization
+        kept = barrier.cut(
             keyed.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
-            .drop("_rn")
-            .localCheckpoint(eager=True)
+            .drop("_rn"),
+            "streaming.setkey.kept",
         )
         survivors = kept.drop("set_key")
         stage_and_publish(out_path, tag, {"": (survivors, None)})
@@ -90,21 +92,3 @@ def set_collapse_applier(store_path: str, out_path: str, checkpoint: str):
         return survivors
 
     return _ingest
-
-
-def set_collapse_ingest_stream(
-    docs_stream: DataFrame,
-    store_path: str,
-    out_path: str,
-    checkpoint: str,
-):
-    """``set_collapse_applier`` as an availableNow stream — the same
-    drain-the-source twin every refresh here uses."""
-    return (
-        docs_stream.writeStream.foreachBatch(
-            set_collapse_applier(store_path, out_path, checkpoint)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -36,6 +36,8 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
+from ..functions import barrier
+
 
 def sketch_merge_applier(
     store_path: str,
@@ -85,7 +87,7 @@ def sketch_merge_applier(
                 .groupBy(*merge_keys)
                 .agg(merge_agg())
             )
-        merged = sketch.localCheckpoint(eager=True)
+        merged = barrier.cut(sketch, "streaming.sketches.merged")
         merged.coalesce(1).write.mode("overwrite").parquet(
             posixpath.join(store_path, vname)
         )

@@ -59,6 +59,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions import barrier
 from ..operators.spans import SPAN_W, extents_from_positions, shingle_positions
 
 #: the append-log subdirectory of the leveled layout.
@@ -472,7 +473,9 @@ def novelty_gated_ingest_applier(
         recover_partial(store_path, tag)
         recover_partial(out_path, tag)
         # keep-one BEFORE scoring (see the docstring's twin rule)
-        batch_df = exact_twin_reps(batch_df).localCheckpoint(eager=True)
+        batch_df = barrier.cut(
+            exact_twin_reps(batch_df), "streaming.spanstore.twin_reps"
+        )
         # first drop scores against the empty frame read_span_store
         # returns for a fresh store: only WITHIN-drop duplication cuts
         stored = read_span_store(spark, store_path)
@@ -484,8 +487,9 @@ def novelty_gated_ingest_applier(
             )
             .select("doc_id")
         )
-        survivors = batch_df.join(cut, "doc_id", "left_anti").localCheckpoint(
-            eager=True
+        survivors = barrier.cut(
+            batch_df.join(cut, "doc_id", "left_anti"),
+            "streaming.spanstore.survivors",
         )
         stage_and_publish(out_path, tag, {"": (survivors, None)})
         stage_and_publish(

@@ -4911,12 +4911,11 @@ def test_bfs_hops_duckdb_parity_and_semantics(spark, sf_dir):
     }
 
 
-def test_bfs_early_exit_on_dead_frontier_matches_lazy_form(spark):
-    """r21 (VERDICT r20 item 5): when the frontier dies before k_hops,
-    the checkpointed path stops unrolling — output must equal the lazy
-    form's, which still unrolls every (empty) layer. Chain graph
-    a->b with seeds elsewhere dead immediately; seed d0 reaches only
-    its own edges."""
+def test_bfs_early_exit_on_dead_frontier_matches_lazy_form(spark, lazy_barriers):
+    """When the frontier dies before k_hops, the BFS stops unrolling —
+    with the per-hop cut in place or left out, the output must equal
+    the hand-computed reachable set. Chain graph a->b with seeds
+    elsewhere dead immediately; seed d0 reaches only its own edges."""
     from node_js_etl_processor_spark.operators.paths import bfs_hops_over_edges
 
     # d0.example -> x.example and nothing else: frontier empties at hop 2
@@ -4925,14 +4924,17 @@ def test_bfs_early_exit_on_dead_frontier_matches_lazy_form(spark):
     )
     eager = {
         (r["domain"], r["dist"], r["n_paths"])
-        for r in bfs_hops_over_edges(edges, 3, checkpoint_hops=True).collect()
+        for r in bfs_hops_over_edges(edges, 3).collect()
     }
-    lazy = {
-        (r["domain"], r["dist"], r["n_paths"])
-        for r in bfs_hops_over_edges(edges, 3, checkpoint_hops=False).collect()
-    }
+    with lazy_barriers("paths.bfs_hop"):
+        lazy_df = bfs_hops_over_edges(edges, 3)
+    lazy = {(r["domain"], r["dist"], r["n_paths"]) for r in lazy_df.collect()}
     assert eager == lazy
     assert ("x.example", 1, 1) in eager
+    # SEEDS = ("d0.example", "d7.example"), both at hop 0
+    assert eager == {
+        ("d0.example", 0, 1), ("d7.example", 0, 1), ("x.example", 1, 1),
+    }
 
 
 def test_equidepth_hist_duckdb_parity_and_semantics(spark, sf_dir):

@@ -586,19 +586,17 @@ def test_tfidf_broadcasts_df_table(spark, sf_dir):
     assert "SortMergeJoin" not in plan
 
 
-def test_fuzzy_match_shuffles_hashed_keys_not_names(spark, sf_dir):
+def test_fuzzy_match_shuffles_hashed_keys_not_names(spark, sf_dir, lazy_barriers):
     """r9: the hardened FastSS blocking must exchange on the
     fixed-width (klen, khash) pair — xxhash64 visible in the plan's
     partitioning — and the name column must NOT ride the blocking
     shuffle (it joins back after the DISTINCT pair set)."""
     from node_js_etl_processor_spark.operators import dedup
 
-    # materialize=False: the lazy one-plan form (r20-opt checkpoints
-    # the postings by default, truncating the plan at an RDD scan) —
-    # the r9 invariant is pinned on the full build plan
-    df = dedup.q_fuzzy_match(
-        load_table(spark, sf_dir, "customer"), materialize=False
-    )
+    # the postings cut left out: the r9 invariant is pinned on the
+    # full build plan (a cut truncates the plan at an RDD scan)
+    with lazy_barriers("dedup.q_fuzzy_match"):
+        df = dedup.q_fuzzy_match(load_table(spark, sf_dir, "customer"))
     plan = plan_text(df)
     assert "xxhash64" in plan
     exchanges = [
@@ -609,7 +607,7 @@ def test_fuzzy_match_shuffles_hashed_keys_not_names(spark, sf_dir):
     # when a blocking exchange does exist it must move khash, not names
     assert blocking or "BroadcastHashJoin" in plan, plan
     assert all("c_name" not in e for e in blocking), blocking
-    # the default (materialized) form must stay name-free in every
+    # the default (cut) form must stay name-free in every
     # exchange too — the checkpointed postings are (custkey, slen,
     # klen, khash) by construction
     plan_m = plan_text(dedup.q_fuzzy_match(load_table(spark, sf_dir, "customer")))
@@ -1015,7 +1013,7 @@ def test_itemset_pairs_support_filter_before_joins(spark, sf_dir):
     assert ">= 2" in plan  # the support filter node exists pre-join
 
 
-def test_snm_rank_never_single_partitions_the_corpus(spark, sf_dir):
+def test_snm_rank_never_single_partitions_the_corpus(spark, sf_dir, lazy_barriers):
     """q_snm_pairs (r16 candidate): the global rank is the
     range-repartition + local window + broadcast offsets rewrite —
     the only single-partition window in the plan is the ≤32-row
@@ -1029,28 +1027,26 @@ def test_snm_rank_never_single_partitions_the_corpus(spark, sf_dir):
     simple = plan_text(df, "simple")
     # the ranked subtree feeds BOTH join sides, so its ≤32-row offsets
     # window (the only single-partition stage) appears once per side
-    # (r20-opt: the locally-ranked frame is checkpointed, so the rank
-    # build itself — pinned below on the lazy form — runs once)
+    # (the locally-ranked frame is cut, so the rank build itself —
+    # pinned below on the lazy form — runs once)
     assert 1 <= plan.count("Arguments: SinglePartition") <= 2
     assert "BroadcastNestedLoopJoin" not in simple
     assert "CartesianProduct" not in simple
     # the rank build's shape, pinned on the un-truncated lazy form
-    # (materialize=False — a checkpoint cuts the plan at an RDD scan):
-    # range partitioning, exactly one single-partition window (the
-    # ≤32-row offsets frame), and a broadcast offsets join
+    # (the rank cut left out — a cut truncates the plan at an RDD
+    # scan): range partitioning, exactly one single-partition window
+    # (the ≤32-row offsets frame), and a broadcast offsets join
     from node_js_etl_processor_spark.operators.snm import global_rank
 
     keyed = load_table(spark, sf_dir, "customer").select(
         "c_custkey", F.lower(F.trim(F.col("c_name"))).alias("k")
     )
-    rank_plan = plan_text(
-        global_rank(keyed, ["k", "c_custkey"], materialize=False)
-    )
+    with lazy_barriers("snm.global_rank"):
+        ranked = global_rank(keyed, ["k", "c_custkey"])
+    rank_plan = plan_text(ranked)
     assert "rangepartitioning" in rank_plan  # the distributed rank
     assert rank_plan.count("Arguments: SinglePartition") == 1
-    assert "BroadcastHashJoin" in plan_text(
-        global_rank(keyed, ["k", "c_custkey"], materialize=False), "simple"
-    )
+    assert "BroadcastHashJoin" in plan_text(ranked, "simple")
 
 
 def test_doc_novelty_single_hash_subtree_three_exchanges(spark, sf_dir):
@@ -1213,9 +1209,9 @@ def test_triangles_orientation_keeps_joins_equi(spark, sf_dir):
     assert "SinglePartition" not in plan
 
 
-def test_bfs_hops_unrolled_equi_joins_only(spark, sf_dir):
+def test_bfs_hops_unrolled_equi_joins_only(spark, sf_dir, lazy_barriers):
     """q_bfs_hops (r17 declaration, re-pinned r19): the k-hop
-    recurrence (inspected via checkpoint_hops=False) is all
+    recurrence (inspected with the per-hop cut left out) is all
     equi-joins on dst/domain — no cartesian, no nested loop, no
     single-partition stage; frontier dedup aggregations are
     partial+final. The DEFAULT path eagerly checkpoints each hop, so
@@ -1236,7 +1232,9 @@ def test_bfs_hops_unrolled_equi_joins_only(spark, sf_dir):
     edges = link_graph_edges(docs).select(
         F.col("src_domain").alias("src"), F.col("dst_domain").alias("dst")
     )
-    plan = plan_text(bfs_hops_over_edges(edges, checkpoint_hops=False))
+    with lazy_barriers("paths.bfs_hop"):
+        lazy = bfs_hops_over_edges(edges)
+    plan = plan_text(lazy)
     for bad in ("CartesianProduct", "BroadcastNestedLoop"):
         assert bad not in plan
     assert "SinglePartition" not in plan
@@ -1246,14 +1244,13 @@ def test_bfs_hops_unrolled_equi_joins_only(spark, sf_dir):
     assert "Join" not in default_plan
     # and the two paths agree exactly
     got = sorted(tuple(r) for r in q_bfs_hops(docs).collect())
-    want = sorted(
-        tuple(r)
-        for r in bfs_hops_over_edges(edges, checkpoint_hops=False).collect()
-    )
+    want = sorted(tuple(r) for r in lazy.collect())
     assert got == want and got
 
 
-def test_equidepth_hist_distributed_rank_no_single_partition(spark, sf_dir):
+def test_equidepth_hist_distributed_rank_no_single_partition(
+    spark, sf_dir, lazy_barriers
+):
     """q_equidepth_hist (r18-scheduled declaration, pinned ahead):
     the distributed grouped rank — rangepartitioning for the rank,
     broadcast joins for the per-(partition, group) offsets, and NO
@@ -1266,11 +1263,10 @@ def test_equidepth_hist_distributed_rank_no_single_partition(spark, sf_dir):
     )
 
     # the rank build's shape, pinned on the un-truncated lazy form
-    # (r20-opt checkpoints the ranked frame by default, truncating
-    # the plan at an RDD scan)
-    df = q_equidepth_hist(
-        load_table(spark, sf_dir, "lineitem"), materialize=False
-    )
+    # (the ranked frame's cut left out — a cut truncates the plan at
+    # an RDD scan)
+    with lazy_barriers("histogram.q_equidepth_hist"):
+        df = q_equidepth_hist(load_table(spark, sf_dir, "lineitem"))
     plan = plan_text(df)
     simple = plan_text(df, "simple")
     assert "rangepartitioning" in plan
@@ -1278,7 +1274,7 @@ def test_equidepth_hist_distributed_rank_no_single_partition(spark, sf_dir):
     assert "BroadcastHashJoin" in simple
     for bad in ("SortMergeJoin", "CartesianProduct", "BroadcastNestedLoop"):
         assert bad not in simple
-    # the default (materialized) form keeps the same discipline
+    # the default (cut) form keeps the same discipline
     plan_m = plan_text(q_equidepth_hist(load_table(spark, sf_dir, "lineitem")))
     assert "SinglePartition" not in plan_m
     for bad in ("CartesianProduct", "BroadcastNestedLoop"):
