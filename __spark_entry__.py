@@ -11,7 +11,7 @@ All 147 queries carry a full DuckDB oracle — including the SRP-LSH /
 IVF similarity family (deterministic hyperplane/centroid constants are
 embedded as SQL literals, so the blocking is cross-checked, not just
 the scores), the mapInPandas multimodal kernel (byte-deterministic
-fake decode), and — since r3 — the minhash / simhash / clusters dedup
+fake decode), and the minhash / simhash / clusters dedup
 trio, declared in portable md5-derived hash forms the oracle rebuilds
 bit-for-bit (universal-LCG minhash permutations, 64 simhash vote sums,
 a recursive-CTE closure for components); xxhash64 variants remain as
@@ -303,7 +303,7 @@ def _srp_banded_sql(col: str, n_bands: int, band_planes: int) -> str:
     """Banded SRP signatures as a SQL list expression — one short
     signature per disjoint ``band_planes``-plane slice, same plane
     constants and same bit order (plane i → 1<<i within its band) as
-    similarity._banded_sigs, so the r8 recall-first blocking is
+    similarity._banded_sigs, so the recall-first blocking is
     cross-checked band for band."""
     from node_js_etl_processor_spark.operators.similarity import _srp_hyperplanes
 
@@ -515,9 +515,8 @@ def _simhash_sigs_cte() -> str:
             )"""
 
 
-# -- r10-declared oracles (pytest-verified in r9 via
-# tests/test_extensions.py, which now imports these constants so the
-# driver and the local gate compare against the SAME SQL text) --
+# -- oracles that tests/test_extensions.py also imports, so every
+# compare runs against the SAME SQL text --
 
 BPE_PAIRS_ORACLE = """
 WITH words AS (
@@ -602,10 +601,8 @@ GROUP BY src_domain, dst_domain
 """
 
 
-# -- r10-continuation declared oracles (operators + oracles built and
-# pytest-verified earlier in r10 via tests/test_extensions.py, which
-# imports these constants — driver and local gate compare the SAME
-# SQL text) --
+# -- more oracles shared with tests/test_extensions.py (every compare
+# runs against the SAME SQL text) --
 
 
 def _token_budget_oracle(n_merges: int = 8) -> str:
@@ -730,10 +727,8 @@ FROM ids WHERE media_id % 13 = 0
 """
 
 
-# -- late-r10 declared oracles (operators + oracles built and
-# pytest-verified earlier in the continuation via
-# tests/test_extensions.py, which imports these constants — driver
-# and local gate compare the SAME SQL) --
+# -- more oracles shared with tests/test_extensions.py (every compare
+# runs against the SAME SQL) --
 
 
 G711_ORACLE = """
@@ -943,7 +938,7 @@ FROM documents WHERE doc_id % 11 = 0
 # q_heavy_hitters: the Misra-Gries candidate path is an EXECUTION
 # strategy with an exact-verify pass, so the oracle is the plain
 # exact top-k — the sketch must be invisible in the result. The
-# WHERE mirrors the engine's r14 up-front key normalization (cast to
+# WHERE mirrors the engine's up-front key normalization (cast to
 # long, drop nulls) so both branches AND the oracle see one key set.
 HEAVY_HITTERS_ORACLE = """
 SELECT CAST(o_custkey AS BIGINT) AS o_custkey,
@@ -953,12 +948,12 @@ GROUP BY o_custkey
 ORDER BY cnt DESC, o_custkey ASC LIMIT 10
 """
 
-# q_heavy_hitters_skewed: the CERTIFIED Misra-Gries branch (the r13
-# verdict's item 3) — the skewed key derivation is one closed-form
-# CASE, and the oracle stays the plain exact top-k over it: whether
-# the engine took the certified sketch→broadcast-recount path (it
-# does on this derivation — asserted in tests via heavy_hitters_plan)
-# or the exact fallback must be invisible in the result.
+# q_heavy_hitters_skewed: the CERTIFIED Misra-Gries branch — the skewed key
+# derivation is one closed-form CASE, and the oracle stays the plain exact
+# top-k over it: whether the engine took the certified
+# sketch→broadcast-recount path (it does on this derivation — asserted in
+# tests via heavy_hitters_plan) or the exact fallback must be invisible in
+# the result.
 HEAVY_HITTERS_SKEWED_ORACLE = """
 SELECT CAST(CASE WHEN o_orderkey % 4 <> 0 THEN o_orderkey % 16
             ELSE o_orderkey END AS BIGINT) AS key,
@@ -1333,8 +1328,7 @@ FROM en GROUP BY l_returnflag
 """
 
 
-# -- final-r10 declared oracles (the four continuation candidates,
-# pytest-verified before declaration; tests import these constants) --
+# -- more oracles that tests import as constants --
 
 
 def _hll_rollup_oracle() -> str:
@@ -1510,7 +1504,7 @@ def _hll_timeline_oracle() -> str:
     events. The oracle recomputes the month level FROM SCRATCH while
     the Spark side (operators/sketch.py:q_hll_timeline) folds the
     STORED day registers with MAX — equality between the two is the
-    temporal rollup law, machine-checked by the driver."""
+    temporal rollup law, machine-checked by the oracle compare."""
     from node_js_etl_processor_spark.operators.sketch import (
         _HLL_EST_NUM,
         HLL_LC_THRESHOLD,
@@ -1779,7 +1773,7 @@ def oracle_sql() -> dict[str, str]:
         "q_heavy_hitters_skewed": HEAVY_HITTERS_SKEWED_ORACLE,
         "q_image_probe": IMAGE_PROBE_ORACLE,
         "q_kmv_distinct": KMV_ORACLE,
-        # r16 declarations: the staged DuckDB twins live next to their
+        # From here on the DuckDB twins live next to their
         # engine functions (module constants interpolating the same
         # defaults the queries run with).
         "q_kmv_difference": kmv.KMV_DIFFERENCE_ORACLE,
@@ -1788,13 +1782,8 @@ def oracle_sql() -> dict[str, str]:
         "q_attribution": attribution.ATTRIBUTION_ORACLE,
         "q_itemset_pairs": basket.ITEMSET_PAIRS_ORACLE,
         "q_span_extents": spans.SPAN_EXTENTS_ORACLE,
-        # r18 declarations — the LAST TWO ever (capacity policy):
-        # staged twins shipped with their modules in r16,
-        # registry-wired this round.
         "q_equidepth_hist": histogram.EQUIDEPTH_HIST_ORACLE,
         "q_gini_concentration": gini.GINI_CONCENTRATION_ORACLE,
-        # r17 declarations (same discipline — staged twins shipped
-        # with their modules in r16, registry-wired in r17).
         "q_doc_novelty": novelty.DOC_NOVELTY_ORACLE,
         "q_triangles": triangles.TRIANGLES_ORACLE,
         "q_robust_stats": robust.ROBUST_STATS_ORACLE,
@@ -3200,7 +3189,7 @@ def oracle_sql() -> dict[str, str]:
               md5(t3) AS redacted_fp
             FROM s3
         """,
-        # r8: the REAL WAV encode→decode roundtrip runs Spark-side
+        # the REAL WAV encode→decode roundtrip runs Spark-side
         # (synth_wav_media → audio_features_wav); a square wave's
         # samples are all ±amplitude, so the oracle recomputes every
         # feature closed-form from doc_id — decoder arithmetic,
@@ -3228,7 +3217,7 @@ def oracle_sql() -> dict[str, str]:
                         ELSE CAST(1000 + (doc_id % 20) * 500 AS BIGINT) END AS peak
             FROM documents
         """,
-        # r8: count-min sketch — the 4×64 grid rebuilt from the same
+        # count-min sketch — the 4×64 grid rebuilt from the same
         # md5-derived hashes, min-of-cells estimate replayed
         "q_countmin": """
             WITH rows_ AS (SELECT unnest(range(0, 4)) AS r),
@@ -3263,7 +3252,7 @@ def oracle_sql() -> dict[str, str]:
                    CAST(cms_est - exact_n AS BIGINT) AS overshoot
             FROM exact JOIN est USING (o_custkey)
         """,
-        # r8: 3-iteration weighted PageRank — edge weights, transition
+        # 3-iteration weighted PageRank — edge weights, transition
         # probabilities and every iteration unrolled in the same
         # float-op order ((1-0.85)/n + 0.85*inflow, inflow = Σ r·p)
         "q_pagerank": """
@@ -3320,7 +3309,7 @@ def oracle_sql() -> dict[str, str]:
                      ORDER BY round(r, 6) DESC, node ASC) AS BIGINT) AS rank
             FROM r3
         """,
-        # r8: per-source KL divergence — same tokenizer as the
+        # per-source KL divergence — same tokenizer as the
         # tfidf/bm25 oracles, same p_s·ln(p_s/p_c) op order
         "q_kl_divergence": r"""
             WITH toked AS (
@@ -3349,7 +3338,7 @@ def oracle_sql() -> dict[str, str]:
             CROSS JOIN tot
             GROUP BY st.source
         """,
-        # r8: bloom membership — same md5-derived bit positions, the
+        # bloom membership — same md5-derived bit positions, the
         # all-k-bits-set probe replayed via left join + count
         "q_bloom": """
             WITH hashes AS (SELECT unnest(range(0, 4)) AS i),
@@ -3381,7 +3370,7 @@ def oracle_sql() -> dict[str, str]:
                    maybe_present AND o_orderkey % 3 = 0 AS is_fp
             FROM verdicts
         """,
-        # r8: cohort retention — distinct-day activity, per-user min
+        # cohort retention — distinct-day activity, per-user min
         # cohort day, exact integer retention (n*10000 // size / 100)
         "q_retention": """
             WITH activity AS (
@@ -3411,7 +3400,7 @@ def oracle_sql() -> dict[str, str]:
                    (c.n_users * 10000 // s.cohort_size) / 100.0 AS retention_pct
             FROM counts c JOIN sizes s USING (cohort_day)
         """,
-        # r8: ordered funnel — each step's earliest time strictly
+        # ordered funnel — each step's earliest time strictly
         # after the user's previous-step time; exact integer
         # conversion arithmetic
         "q_funnel": """
@@ -3445,7 +3434,7 @@ def oracle_sql() -> dict[str, str]:
                    END AS conversion_pct
             FROM rows_
         """,
-        # r8: gap fill — per-type daily spine (generate_series) +
+        # gap fill — per-type daily spine (generate_series) +
         # zero-fill + IGNORE NULLS LOCF window, same rounded daily sums
         "q_gap_fill": """
             WITH daily AS (
@@ -3477,7 +3466,7 @@ def oracle_sql() -> dict[str, str]:
                    d.n IS NULL AS is_gap
             FROM spine s LEFT JOIN daily d USING (event_type, day)
         """,
-        # r8: SCD2 — lag change-compress, then version/lead windows
+        # SCD2 — lag change-compress, then version/lead windows
         # over the change rows; ties break on o_orderkey in BOTH
         # engines, both windows ordered by the raw timestamp
         "q_scd2": """
@@ -3502,7 +3491,7 @@ def oracle_sql() -> dict[str, str]:
             WINDOW w AS (PARTITION BY o_custkey
                          ORDER BY o_orderdate, o_orderkey)
         """,
-        # r8: FastSS fuzzy match — deletion-neighborhood keys replayed
+        # FastSS fuzzy match — deletion-neighborhood keys replayed
         # via range+substr, DISTINCT candidate pairs, levenshtein
         # verify in both engines
         "q_fuzzy_match": """
@@ -3526,7 +3515,7 @@ def oracle_sql() -> dict[str, str]:
             FROM cand
             WHERE levenshtein(name_a, name_b) <= 1
         """,
-        # r8: TF-IDF — same tokenizer as the bm25 oracle, smooth-idf
+        # TF-IDF — same tokenizer as the bm25 oracle, smooth-idf
         # formula replayed in the same op order, per-doc top-5 window
         "q_tfidf": r"""
             WITH toked AS (
@@ -3987,7 +3976,7 @@ def oracle_sql() -> dict[str, str]:
         # semantic decontamination: both sides' SRP blocking, the
         # cross-side candidate join, cosine verify and the per-train
         # argmax replayed from the same hyperplane constants
-        # r8: blocking is OR-ed LSH bands sized to the threshold
+        # blocking is OR-ed LSH bands sized to the threshold
         # (srp_band_count(0.30, 2, 0.95) = 7 bands of 2 planes);
         # multi-band duplicate candidates dedup through the argmax —
         # SELECT DISTINCT in scored mirrors row_number absorbing them

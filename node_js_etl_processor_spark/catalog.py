@@ -40,8 +40,6 @@ TABLES: tuple[str, ...] = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 #: resolved tables: (id(session), path) -> (session, stat stamp, frame).
 #: The entry holds its session, so the id in the key cannot be reused
@@ -78,7 +76,7 @@ def _resolve(spark: SparkSession, path: str, name: str) -> DataFrame:
         # long, convert with exact integer division — `div`, not `/`,
         # because float division on epoch-nanos loses precision beyond
         # 2^53) and as TIMESTAMP(MICROS) isAdjustedToUTC=false in others
-        # (r4+: reads as TIMESTAMP_NTZ — no conversion here; all epoch
+        # (reads as TIMESTAMP_NTZ — no conversion here; all epoch
         # math dispatches through functions/timeutil.py). The dtype gate
         # below keeps both shapes correct.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -120,7 +118,7 @@ def spread(df: DataFrame, min_per_core_rows: int = 0) -> DataFrame:
     except Exception:  # non-file plans (e.g. streaming) — leave as-is
         return df
     if 0 < n_files < target:
-        # r20-opt: a chained operator (synth → features media kernels,
+        # A chained operator (synth → features media kernels,
         # spread-inside-helper compositions) may ALREADY carry an
         # upstream spread — inputFiles() still reports the underlying
         # parquet file, so without this gate the SECOND spread
@@ -130,7 +128,7 @@ def spread(df: DataFrame, min_per_core_rows: int = 0) -> DataFrame:
         # lineage means parallelism is already repaired; spread is
         # perf-only, so skipping is always correctness-neutral.
         #
-        # r21 (VERDICT/ADVICE r20): the gate WALKS the logical plan
+        # The gate WALKS the logical plan
         # tree instead of substring-matching its toString — plan
         # rendering is not a stable API across Spark versions, and a
         # textual match could hit a different-target repartition. The
@@ -138,8 +136,8 @@ def spread(df: DataFrame, min_per_core_rows: int = 0) -> DataFrame:
         # STOPS at any node that establishes its own partitioning
         # (keyed repartition, aggregate, join, window, sort, dedup):
         # below such a node an old spread no longer governs the
-        # frame's parallelism, so it must not suppress a new one —
-        # the ADVICE's false-positive case.
+        # frame's parallelism, so it must not suppress a new one
+        # (a text match would give that false positive).
         if _lineage_has_spread(df, target):
             return df
         return df.repartition(target)

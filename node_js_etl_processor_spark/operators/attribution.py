@@ -1,5 +1,4 @@
-"""Last-touch conversion attribution — DECLARED in r16
-(built + pytest-oracle-verified in r15): for every purchase event, the most recent
+"""Last-touch conversion attribution: for every purchase event, the most recent
 click/view by the same user STRICTLY EARLIER IN TIME and within a
 7-day lookback, plus the touch count inside that lookback — the
 standard marketing-analytics credit assignment (last non-direct
@@ -7,18 +6,17 @@ click), and in pipeline terms the canonical "join each event to its
 most recent qualifying predecessor" pattern the as-of join cannot
 express when the predecessor must satisfy a predicate.
 
-Determinism contract: BOTH the last-touch and the touch count use
-RANGE frames on integer epoch microseconds (through
-``timeutil.epoch_us_fn``), so their candidate sets are identical —
-strictly earlier t_us; equal-timestamp peers are excluded from both
-by SQL-standard RANGE peer semantics (the in-round r15 review caught
-the original ROWS-frame last-touch admitting an equal-ts touch the
-count excluded). Among candidates the credited touch is the
-LEXICOGRAPHIC MAX of (t_us, event_id, event_type) — a deterministic
-total order even when several touches share the latest timestamp —
-computed as a struct MAX window aggregate, which both engines order
-field by field. The lookback gate nulls all three touch columns
-together, so ``gap_us`` is always strictly positive when present.
+Determinism contract: BOTH the last-touch and the touch count use RANGE
+frames on integer epoch microseconds (through ``timeutil.epoch_us_fn``), so
+their candidate sets are identical — strictly earlier t_us; equal-timestamp
+peers are excluded from both by SQL-standard RANGE peer semantics (a
+ROWS-frame last-touch would admit an equal-ts touch the count excludes).
+Among candidates the credited touch is the LEXICOGRAPHIC MAX of (t_us,
+event_id, event_type) — a deterministic total order even when several
+touches share the latest timestamp — computed as a struct MAX window
+aggregate, which both engines order field by field. The lookback gate nulls
+all three touch columns together, so ``gap_us`` is always strictly positive
+when present.
 
 Scale shape: ONE hashpartitioning(user_id) exchange feeds both RANGE
 windows; the purchase filter happens after the windows but prunes
@@ -42,7 +40,7 @@ TOUCH_TYPES = ("click", "view")
 
 
 def q_attribution(events: DataFrame) -> DataFrame:
-    """Declared query (r16): last-touch attribution of every
+    """Declared query: last-touch attribution of every
     purchase. Output one row per purchase:
     (purchase_event_id, user_id, purchase_us, touch_event_id,
     touch_type, gap_us, n_touches_7d) — the three touch columns are
@@ -100,11 +98,10 @@ def q_attribution(events: DataFrame) -> DataFrame:
     )
 
 
-#: the DuckDB twin — the struct MAX compares field by field
-#: ((t_us, event_id, event_type)), the same lexicographic order Spark
-#: applies to struct MAX. The lookback interpolates LOOKBACK_US (the
-#: r16 advice discipline) so the oracle can never drift from the
-#: engine default.
+#: the DuckDB twin — the struct MAX compares field by field ((t_us,
+#: event_id, event_type)), the same lexicographic order Spark applies to
+#: struct MAX. The lookback interpolates LOOKBACK_US so the oracle can never
+#: drift from the engine default.
 ATTRIBUTION_ORACLE = f"""
     WITH base AS (
       SELECT user_id, event_id, event_type, epoch_us(ts) AS t_us

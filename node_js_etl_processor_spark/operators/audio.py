@@ -272,18 +272,16 @@ def adpcm_decode_stream(codes: "object", pred: int = 0, idx: int = 0):
 
 
 def adpcm_encode_blocks(samples: "object", preds: "object") -> "object":
-    """Vectorized IMA encoder over a (B, K) matrix of per-block
-    samples (the samples AFTER each block's header sample) with
-    per-block initial predictors (step index 0, the WAV tag-0x11
-    block anchor). Blocks are independent state machines, so nibble
-    position i of ALL blocks advances in one numpy step — B·K scalar
-    Python iterations become K vector iterations (the r11 verdict's
-    ask; at a 500-row Arrow batch that is ~1000 lockstep lanes).
-    Bit-identical to ``adpcm_encode_stream`` by construction (same
-    published tables, same quantizer branch structure) — pinned
-    directly by tests/test_extensions.py::
-    test_adpcm_block_kernels_lockstep_vs_stream over random (B, K)
-    matrices. Returns a (B, K) uint8 code matrix."""
+    """Vectorized IMA encoder over a (B, K) matrix of per-block samples (the
+    samples AFTER each block's header sample) with per-block initial
+    predictors (step index 0, the WAV tag-0x11 block anchor). Blocks are
+    independent state machines, so nibble position i of ALL blocks advances
+    in one numpy step — B·K scalar Python iterations become K vector
+    iterations (at a 500-row Arrow batch that is ~1000 lockstep lanes).
+    Bit-identical to ``adpcm_encode_stream`` by construction (same published
+    tables, same quantizer branch structure) — pinned directly by
+    tests/test_extensions.py::test_adpcm_block_kernels_lockstep_vs_stream
+    over random (B, K) matrices. Returns a (B, K) uint8 code matrix."""
     import numpy as np
 
     x = np.asarray(samples, dtype=np.int64)
@@ -432,7 +430,7 @@ def encode_wav_adpcm(samples: "object", sample_rate: int) -> bytes:
     Blocks are independent (predictor = first sample, step index reset
     to 0 — the seekability property block formats exist for); the last
     block is zero-nibble padded and a ``fact`` chunk records the true
-    sample count for the decoder to truncate to. Since r12 the
+    sample count for the decoder to truncate to. The
     quantizer runs through the lockstep ``adpcm_encode_blocks`` kernel
     (this signal's blocks as the lanes)."""
     import numpy as np
@@ -590,10 +588,10 @@ def decode_wav_adpcm(payload: bytes) -> "tuple[object, int]":
     """Decode a WAV tag-0x11 mono IMA-ADPCM payload into ((n,) int16
     array, rate). Any other flavor raises DecodeUnavailable. The
     ``fact`` chunk (required by the spec for compressed formats)
-    truncates the zero-padded last block. Since r13 this runs the
+    truncates the zero-padded last block. This runs the
     payload's blocks as lanes through the lockstep
     ``adpcm_decode_blocks`` kernel (the inverse of the encode side's
-    r12 rewiring) — the per-sample Python loop only survives in
+    lockstep kernel) — the per-sample Python loop only survives in
     ``adpcm_decode_stream`` as the test pin."""
     preds, idxs, codes, counts, rate, n_total = _adpcm_parse_blocks(payload)
     dec = adpcm_decode_blocks(codes, preds, idxs)
@@ -833,7 +831,7 @@ def audio_adpcm_features(media: DataFrame) -> DataFrame:
 
 
 def q_audio_adpcm(documents: DataFrame) -> DataFrame:
-    """r11-candidate query: the full distributed IMA-ADPCM loop —
+    """Declared query: the full distributed IMA-ADPCM loop —
     ``synth_adpcm_media`` (real tag-0x11 block encode of square
     waves) → ``audio_adpcm_features`` (real block decode + exact
     integer stats). Unlike every other media oracle, the check cannot
@@ -853,7 +851,7 @@ def q_audio_adpcm(documents: DataFrame) -> DataFrame:
 
 
 def q_audio_g711(documents: DataFrame) -> DataFrame:
-    """r11-candidate query: the full distributed G.711 loop —
+    """Declared query: the full distributed G.711 loop —
     ``synth_g711_media`` (real μ-law/A-law companding of closed-form
     square waves) → ``audio_g711_features`` (real expansion + exact
     integer stats). The DuckDB oracle recomputes the companded
@@ -965,8 +963,8 @@ def probe_audio(payload: bytes) -> "tuple[str, str, int, int, int]":
     """Identify an audio payload WITHOUT fully decoding samples:
     returns (container, codec, rate, channels, n_samples). Dispatch
     covers every container/codec pair the engine decodes (WAV
-    PCM/μ-law/A-law/IMA-ADPCM, AU μ-law/A-law/PCM16, and — since
-    r13 — FLAC via its STREAMINFO block, ``operators/flac.py``);
+    PCM/μ-law/A-law/IMA-ADPCM, AU μ-law/A-law/PCM16, and
+    FLAC via its STREAMINFO block, ``operators/flac.py``);
     recognized-but-undecodable formats (OGG/MP3, and structurally
     invalid FLAC) and junk raise DecodeUnavailable — but with the
     distinction preserved by the distributed probe below, which
@@ -1020,8 +1018,8 @@ def synth_mixed_audio_media(documents: DataFrame) -> DataFrame:
     μ-law, WAV A-law, WAV IMA-ADPCM, AU μ-law, AU A-law, AU PCM16),
     all real encoders; every doc_id%11==0 row carries a TRUNCATED
     FLAC header — a recognized container that is structurally
-    undecodable (valid subset FLAC decodes via ``operators/flac.py``
-    since r13), so the probe's honest boundary (report the container,
+    undecodable (valid subset FLAC decodes via ``operators/flac.py``),
+    so the probe's honest boundary (report the container,
     refuse the decode) stays under the oracle gate."""
     import numpy as np
 
@@ -1031,8 +1029,8 @@ def synth_mixed_audio_media(documents: DataFrame) -> DataFrame:
         # whole-batch form so the ADPCM lane (v == 3) can run ONE
         # cross-signal lockstep encode — per-signal lockstep on a
         # single ~1-block lane is SLOWER than the old scalar loop
-        # (503 numpy steps over 1-lane arrays), which the r13 10x
-        # stress surfaced as a 5.2x probe ratio
+        # (503 numpy steps over 1-lane arrays), a 5.2x probe
+        # ratio on a 10x corpus
         mimes, payloads = [], []
         adpcm_sigs, adpcm_rates, adpcm_pos = [], [], []
         for did in doc_ids:
@@ -1083,7 +1081,7 @@ def audio_probe_features(media: DataFrame) -> DataFrame:
     """Distributed format dispatch: probe every payload's container/
     codec/geometry without decoding samples. Recognized-but-
     undecodable magics (OGG/MP3, plus structurally invalid FLAC —
-    valid subset FLAC probes fully since r13) surface as ok=false
+    valid subset FLAC probes fully) surface as ok=false
     WITH the container named — the triage a 100 TB audio lake runs
     before routing payloads to format-specific decode passes."""
     from .media_harness import media_features
@@ -1115,7 +1113,7 @@ def audio_probe_features(media: DataFrame) -> DataFrame:
 
 
 def q_audio_probe(documents: DataFrame) -> DataFrame:
-    """r11-candidate query: the audio format-dispatch loop —
+    """Declared query: the audio format-dispatch loop —
     ``synth_mixed_audio_media`` (all seven REAL container/codec
     pairs) → ``audio_probe_features`` (magic + header parsing, no
     sample decode). The oracle recomputes container/codec/rate/

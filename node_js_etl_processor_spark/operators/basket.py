@@ -1,11 +1,11 @@
-"""Market-basket co-occurrence — DECLARED in r16 (built + pytest-oracle-verified in r15): the candidate-pair pass of A-Priori (Agrawal & Srikant, VLDB
-1994, "Fast Algorithms for Mining Association Rules") over the
-orders/lineitem star — every unordered part pair co-ordered in at
-least ``min_support`` baskets, with the exact integer sufficient
-statistics (pair support, each part's basket count, total baskets)
-from which support/confidence/lift all derive. The SET-co-occurrence
-complement to the collocation miner (``colloc.py`` counts SEQUENTIAL
-token bigrams; this counts unordered co-membership).
+"""Market-basket co-occurrence: the candidate-pair pass of A-Priori (Agrawal
+& Srikant, VLDB 1994, "Fast Algorithms for Mining Association Rules") over
+the orders/lineitem star — every unordered part pair co-ordered in at least
+``min_support`` baskets, with the exact integer sufficient statistics (pair
+support, each part's basket count, total baskets) from which
+support/confidence/lift all derive. The SET-co-occurrence complement to the
+collocation miner (``colloc.py`` counts SEQUENTIAL token bigrams; this
+counts unordered co-membership).
 
 Determinism contract: baskets are the DISTINCT part sets per order,
 pairs are generated with a < b from the sorted basket array, and
@@ -51,7 +51,7 @@ def order_baskets(
     collect_set is bounded by basket size, never corpus-sized. NULL
     part keys are dropped EXPLICITLY (Spark's collect_set would drop
     them silently while DuckDB's list(DISTINCT) keeps a NULL member —
-    the r15 review's cross-engine null-drop class; the oracle carries
+    a cross-engine null-drop; the oracle carries
     the same WHERE). With ``max_basket`` set, baskets LARGER than the
     cap are dropped whole — the graceful-degradation lever for
     templated/mega-basket corpora where the pair explode would go
@@ -85,7 +85,7 @@ def q_itemset_pairs(
     min_support: int = MIN_SUPPORT,
     max_basket: "int | None" = None,
 ) -> DataFrame:
-    """Declared query (r16): co-ordered part pairs with support ≥
+    """Declared query: co-ordered part pairs with support ≥
     min_support and their exact counting statistics
     (part_a, part_b, n_both, n_a, n_b, n_baskets). ``max_basket``
     opts into the mega-basket cap (default exact); when capped, every
@@ -132,9 +132,8 @@ def q_itemset_pairs(
     )
 
 
-#: the DuckDB twin, registry-wired in r16 — the
-#: support threshold is interpolated from MIN_SUPPORT (r16 advice
-#: item) so the oracle can never drift from the engine default
+#: the DuckDB twin — the support threshold is interpolated from MIN_SUPPORT
+#: so the oracle can never drift from the engine default
 ITEMSET_PAIRS_ORACLE = f"""
     WITH b AS (
       SELECT l_orderkey, list_sort(list(DISTINCT l_partkey)) AS parts

@@ -25,8 +25,7 @@ WORD-FREQUENCY table (vocabulary-sized), never the corpus:
 
 Determinism: pair argmax ties break on (count DESC, a ASC, b ASC), so
 training is reproducible and the FIRST step (``bpe_top_pairs``) is
-fully SQL-expressible — a DuckDB-oracle-able declared query the
-moment the registry window rotates (r10 candidate).
+fully SQL-expressible — a DuckDB-oracle-able declared query.
 
 Symbols operate on Java string code units (the fixture corpus is
 BMP text); byte-level BPE (GPT-2 style) would swap the initial
@@ -144,7 +143,7 @@ def bpe_train(
     [(a, b, pair_freq)] in learned order — the artifact
     ``bpe_encode`` applies at inference.
 
-    Two execution paths behind one corpus-sized pass (r19): after
+    Two execution paths behind one corpus-sized pass: after
     ``word_frequencies`` the working set is the VOCABULARY table, and
     when it fits under ``driver_vocab_cap`` rows the merge loop runs
     on the collected dict — what production BPE trainers do, since
@@ -158,8 +157,7 @@ def bpe_train(
     are long enough that the per-character symbol state would blow
     the driver heap anyway (150k URL-shaped 500-char words pass a
     row-only gate but cost gigabytes of per-char Python objects plus
-    n_merges × O(total chars) interpreted passes — the r19 review's
-    finding), takes the distributed loop —
+    n_merges × O(total chars) interpreted passes), takes the distributed loop —
     per step one pair-count agg + one deterministic argmax (1-row
     ``first()``, the kmeans_train trainer discipline) + one
     ``aggregate``-fold merge, cut so folds never stack.
@@ -176,15 +174,15 @@ def bpe_train(
     symbols per emoji, verified empirically) while Python's
     ``list(word)`` yields one code-point symbol — so the gate also
     routes ANY corpus containing supplementary-plane characters to
-    the distributed loop (the r19 advice's conservative-gate fix;
+    the distributed loop (a conservative gate;
     ``astral_words`` rides the same statistics pass). The divergence
     itself is pinned in tests so the gate can't silently rot."""
     wf = barrier.cut(word_frequencies(documents, text_col), "bpe.word_frequencies")
     stats = wf.agg(
         F.count("*").alias("n"),
         F.coalesce(F.sum(F.length("word")), F.lit(0)).alias("chars"),
-        # supplementary-plane detection for the BMP routing gate (the
-        # r19 advice item): one regex scan per DISTINCT word, riding
+        # supplementary-plane detection for the BMP routing gate:
+        # one regex scan per DISTINCT word, riding
         # the same single pass as the size statistics
         F.coalesce(
             F.sum(
@@ -270,7 +268,7 @@ def bpe_encode(
     token arrays, so Spark never shuffles segmented text. mapInPandas,
     zero shuffles, the multimodal batch shape.
 
-    ``carry_cols`` (r10) names input columns to pass through the
+    ``carry_cols`` names input columns to pass through the
     kernel unchanged — consumers that need per-doc metadata next to
     the counts (``token_accounting``'s source/estimate columns) get
     it without a corpus-sized self-join back onto the input."""
@@ -380,10 +378,10 @@ TOKEN_BUDGET_MERGES = 8
 
 
 def q_token_budget(documents: DataFrame) -> DataFrame:
-    """r11-declaration candidate (built r10): train
+    """Declared query: train
     ``TOKEN_BUDGET_MERGES`` BPE merges on the corpus itself, encode
     the corpus, and report the per-source token budget vs the chars/4
-    heuristic. The composed form of the r10-declared ``q_bpe_pairs``
+    heuristic. The composed form of the declared ``q_bpe_pairs``
     first stage; its DuckDB oracle replays the FULL training unroll
     (delimited-string merge replay) plus the train==inference
     segmentation equivalence that is property-pinned in

@@ -1,8 +1,8 @@
-"""PMI collocations — DECLARED in r16 (built + pytest-oracle-verified in r15): pointwise-mutual-information bigram mining over the documents
-corpus (Church & Hanks, Computational Linguistics 1990, "Word
-Association Norms, Mutual Information, and Lexicography") — the
-standard corpus-linguistics pass a training-data pipeline runs to
-find multi-word expressions worth protecting from tokenizer splits.
+"""PMI collocations: pointwise-mutual-information bigram mining over the
+documents corpus (Church & Hanks, Computational Linguistics 1990, "Word
+Association Norms, Mutual Information, and Lexicography") — the standard
+corpus-linguistics pass a training-data pipeline runs to find multi-word
+expressions worth protecting from tokenizer splits.
 
 Semantics: tokens are the corpus-wide convention (lowercased,
 whitespace-split, empties dropped — the q_tfidf/BM25 tokenization);
@@ -54,8 +54,7 @@ def q_pmi_collocations(documents: DataFrame, min_count: int = MIN_COUNT) -> Data
     # the same multi-consumer fan-out class as basket.py's baskets;
     # without the cut the corpus tokenization re-runs per branch.
     # token_array is the span family's single tokenization definition
-    # (r19 consolidation — this module's _toks was a textual copy;
-    # the shared Column keeps q_pmi_collocations' bigram space
+    # (the shared Column keeps q_pmi_collocations' bigram space
     # aligned with the span/novelty/vocabulary lanes by construction)
     toks = barrier.cut(
         documents.select(token_array().alias("ts")), "colloc.tokens"
@@ -91,10 +90,8 @@ def q_pmi_collocations(documents: DataFrame, min_count: int = MIN_COUNT) -> Data
     )
 
 
-#: the DuckDB twin, registry-wired in r16 — the
-#: r15 tests run it through the same compare the driver uses. The
-#: min-count threshold is interpolated from MIN_COUNT (r16 advice
-#: item) so the oracle can never drift from the engine default.
+#: the DuckDB twin. The min-count threshold is interpolated from
+#: MIN_COUNT so the oracle can never drift from the engine default.
 PMI_COLLOCATIONS_ORACLE = rf"""
     WITH toks AS (
       SELECT list_filter(string_split_regex(lower(text), '\s+'),

@@ -1,5 +1,4 @@
-"""CUSUM change-point detection over per-user event streams —
-DECLARED in r17 (built + staged-oracle-verified in r16):
+"""CUSUM change-point detection over per-user event streams:
 Page's cumulative-sum control scheme (Page, Biometrika 1954,
 "Continuous Inspection Schemes") — the classic sequential detector
 for a sustained upward shift in a monitored statistic, here each
@@ -57,7 +56,7 @@ H_CENTS = 20_000
 def q_cusum_alarms(
     events: DataFrame, k_cents: int = K_CENTS, h_cents: int = H_CENTS
 ) -> DataFrame:
-    """Declared query (r17): one-sided upper CUSUM alarms per
+    """Declared query: one-sided upper CUSUM alarms per
     user over the value stream — (user_id, ts, event_id, x_cents,
     s_cents), exact integer arithmetic throughout (module docstring
     has the prefix-identity derivation)."""
@@ -85,7 +84,7 @@ def q_cusum_alarms(
     )
 
 
-#: the DuckDB twin, registry-wired in r17 — identical
+#: the DuckDB twin — identical
 #: prefix-sum / running-min identity over the identical total order;
 #: K and H interpolated from the module constants so engine and
 #: oracle can never drift.

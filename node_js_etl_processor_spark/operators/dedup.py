@@ -132,7 +132,7 @@ def minhash_signatures(
       touches 8 fixed bytes, so k×|shingle| string hashing collapses
       to |shingle| + k×8 bytes per shingle.
 
-    The r1 formulation (explode → one groupBy with k map-side-partial
+    The explode formulation (explode → one groupBy with k map-side-partial
     MINs) is equally scale-valid — one shuffle carrying k longs per
     doc — and wins when downstream wants the exploded postings anyway;
     this narrow form wins when signatures are the only output, which
@@ -383,7 +383,7 @@ def q_dedup_simhash(documents: DataFrame, max_hamming: int = 3) -> DataFrame:
     differentially checked against a DuckDB oracle rebuilding the same
     bit votes; ``portable=False`` (xxhash64) is the perf path.
 
-    Scale design — ALL pair expansion is keyed joins (r3): the
+    Scale design — ALL pair expansion is keyed joins: the
     signature frame is materialized ONCE (a ``barrier.cut`` — the batch
     stand-in for the ingest-time signature column the layout story
     assumes; 16 bytes/row, and it keeps the Arrow kernel from
@@ -412,7 +412,7 @@ def simhash_pairs(
     documents: DataFrame, max_hamming: int = 3, portable: bool = True
 ) -> DataFrame:
     """The q_dedup_simhash pair machinery with the hash family as a
-    parameter (r8 split so the incremental store — xxhash64 perf
+    parameter (so the incremental store — xxhash64 perf
     family — can be equivalence-tested against the identical batch
     form; the declared query keeps portable=True for its oracle)."""
     # numpy kernel: bit-for-bit equal to simhash_signatures (pinned in
@@ -656,18 +656,17 @@ def connected_components(
     and beyond", SoCC 2014) — the component id is the smallest doc_id
     in the component.
 
-    This is the iterative-algorithm tier of the engine (nothing in one
-    SQL pass computes transitive closure). Each distributed round
-    rewrites the EDGE SET itself — large-star hangs every node's
-    larger neighbors off its local minimum, small-star contracts the
-    smaller neighbors — so dense near-dup quasi-cliques collapse
-    toward stars in the first round and the per-round join input
-    SHRINKS as the graph contracts. Versus min-label propagation (the
-    r1 formulation), which joined the FULL original edge list every
-    round — O(|E|) per round on exactly the dense clusters dedup
-    graphs are made of — star contraction's per-round cost decays
-    with progress, and rounds are O(log n) worst-case rather than
-    O(diameter). A ``barrier.cut`` truncates lineage each round.
+    This is the iterative-algorithm tier of the engine (nothing in one SQL
+    pass computes transitive closure). Each distributed round rewrites the
+    EDGE SET itself — large-star hangs every node's larger neighbors off its
+    local minimum, small-star contracts the smaller neighbors — so dense
+    near-dup quasi-cliques collapse toward stars in the first round and the
+    per-round join input SHRINKS as the graph contracts. Versus min-label
+    propagation, which joins the FULL original edge list every round —
+    O(|E|) per round on exactly the dense clusters dedup graphs are made of
+    — star contraction's per-round cost decays with progress, and rounds are
+    O(log n) worst-case rather than O(diameter). A ``barrier.cut`` truncates
+    lineage each round.
 
     Hybrid finish: whenever the CURRENT edge set fits
     ``small_graph_threshold`` (checked before each round, using the
@@ -687,7 +686,7 @@ def connected_components(
     exactly the algorithm's fixpoint — each surviving edge then reads
     (doc, component-min). If ``max_iterations`` is exhausted first, a
     RuntimeError is raised rather than returning silently-wrong
-    partial labels (ADVICE r1).
+    partial labels.
 
     Input: edges(doc_a, doc_b); output: (doc_id, component_id) for
     every doc appearing in at least one edge.
@@ -799,16 +798,15 @@ def q_fuzzy_match(
 ) -> DataFrame:
     """Fuzzy entity matching via FastSS deletion-neighborhood blocking
     (Bocek et al., "Fast Similarity Search in Large Dictionaries",
-    2007) + exact Levenshtein verify (r8; r9-hardened) — the
+    2007) + exact Levenshtein verify — the
     entity-resolution tier of the dedup family: two strings within
     edit distance 1 always share a key in {s} ∪ {s minus one char},
     so candidates come from an equi-join on deletion keys — never an
     all-pairs distance scan — and the O(n²) verify runs only on
     colliding pairs.
 
-    r9 hardening (the r8 verdict's watch item — TPC-H-style
-    near-identical equal-length names are a near-worst case for
-    deletion blocking):
+    Hardening (TPC-H-style near-identical equal-length names are a
+    near-worst case for deletion blocking):
 
     - the join key is ``(length(key), xxhash64(key))`` — an (int,
       long) pair instead of an ~L-char string, so the blocking
@@ -870,8 +868,8 @@ def q_fuzzy_match(
     # cut the deletion-key postings once — the self-join references
     # the frame on both sides, so the L+1-way explode + xxhash64 chain
     # ran twice (measured 2.20 → 1.90 s solo median at sf0.1).
-    # Fixed-width ~20 B/posting at any scale (the r9 hardening's whole
-    # point).
+    # Fixed-width ~20 B/posting at any scale (the point of the
+    # (length, xxhash64) key).
     keyed = barrier.cut(keyed, "dedup.q_fuzzy_match")
     a, b = keyed.alias("a"), keyed.alias("b")
     cand = (

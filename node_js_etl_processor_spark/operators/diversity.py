@@ -1,5 +1,4 @@
-"""Lexical diversity / vocabulary concentration per source —
-DECLARED in r17 (built + staged-oracle-verified in r16):
+"""Lexical diversity / vocabulary concentration per source:
 the vocabulary-level dataset-card block that q_corpus_stats's
 doc-level totals cannot provide — Simpson's repeat rate (Simpson,
 Nature 1949, "Measurement of Diversity"; equivalently the Herfindahl
@@ -41,12 +40,11 @@ from .spans import token_array
 
 def vocab_counts(documents: DataFrame) -> DataFrame:
     """Per-(source, token) counts — the diversity family's sufficient
-    statistics frame, and exactly what the incremental vocabulary
-    store (sources/vocab_store.py) maintains as SUM-mergeable
-    partials. Tokenization is ``spans.token_array`` — the span
-    family's ONE shared definition (r16 advice: the local ``_toks``
-    copy here could silently desynchronize the vocab-store counts
-    from the span/tfidf tokenization)."""
+    statistics frame, and exactly what the incremental vocabulary store
+    (sources/vocab_store.py) maintains as SUM-mergeable partials.
+    Tokenization is ``spans.token_array`` — the span family's ONE shared
+    definition (a local copy here could silently desynchronize the
+    vocab-store counts from the span/tfidf tokenization)."""
     return (
         documents.select("source", F.explode(token_array()).alias("w"))
         .groupBy("source", "w")
@@ -79,14 +77,14 @@ def diversity_from_counts(counts: DataFrame) -> DataFrame:
 
 
 def q_simpson_diversity(documents: DataFrame) -> DataFrame:
-    """Declared query (r17): per-source vocabulary concentration
+    """Declared query: per-source vocabulary concentration
     — (source, n_tokens, n_types, simpson_num, n_hapax, yule_k);
     integers exact, yule_k one fixed-shape double expression (module
     docstring has the parity argument)."""
     return diversity_from_counts(vocab_counts(documents))
 
 
-#: the DuckDB twin, registry-wired in r17 — identical
+#: the DuckDB twin — identical
 #: tokenization, identical integer sufficient statistics, identical
 #: fixed-shape double for Yule's K. NOTE the K expression reuses
 #: Σc² = simpson_num + n EXACTLY as the engine does (simpson_num is

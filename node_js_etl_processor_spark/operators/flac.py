@@ -1,5 +1,4 @@
-"""FLAC subset codec + the distributed q_audio_flac family (r13 —
-closing the decide-or-document item carried since r10).
+"""FLAC subset codec + the distributed q_audio_flac family.
 
 Scope (the honest subset, stated once): MONO 16-bit fixed-blocksize
 streams with CONSTANT / VERBATIM / FIXED-predictor subframes (orders
@@ -49,8 +48,8 @@ _FIXED_COEFFS = ((), (1,), (2, -1), (3, -3, 1), (4, -6, 4, -1))
 
 def _crc_table(poly: int, width: int) -> "tuple[int, ...]":
     """Precomputed byte-indexed CRC table — the standard table-driven
-    form (identical values to the bit-serial loop it replaced; the r18
-    profile had the bit-serial CRCs at ~half of both encode and decode
+    form (identical values to a bit-serial loop; a profile had
+    bit-serial CRCs at ~half of both encode and decode
     time, and the table form is ~8x fewer Python ops per byte)."""
     top, mask = 1 << (width - 1), (1 << width) - 1
     table = []
@@ -700,7 +699,7 @@ def audio_flac_features(media: DataFrame) -> DataFrame:
 
 
 def q_audio_flac(documents: DataFrame) -> DataFrame:
-    """r13 declared query: the full distributed FLAC loop —
+    """Declared query: the full distributed FLAC loop —
     ``synth_flac_media`` (real subset encode: fixed predictors, Rice
     residuals, CRC chains, STREAMINFO md5) → ``audio_flac_features``
     (real decode with every integrity check enforced). FLAC is

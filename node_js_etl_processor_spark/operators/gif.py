@@ -1,6 +1,6 @@
 """GIF (LZW) codec on pure stdlib + numpy — the animated-frame path.
 
-After BMP (r6), PNG/WAV (r7) and baseline JPEG (r8), GIF is the last
+Beside BMP, PNG/WAV and baseline JPEG, GIF is the last
 container this environment can decode without media libraries: LZW is
 pure bit twiddling (public GIF89a specification layout). It matters
 here because GIF is the one ANIMATED format in reach — it gives the
@@ -200,14 +200,13 @@ def decode_gif_frames(payload: bytes) -> "tuple[list, list]":
     )
     if width == 0 or height == 0:
         raise DecodeUnavailable(f"corrupt GIF geometry ({width}x{height})")
-    # Allocation bomb guard (r10 continuation, found by adversarial
-    # fuzz): a 20-byte payload can declare a 35852x29309 logical
-    # screen, making the decoder allocate a ~3 GB canvas before any
-    # frame data is validated — an executor memory/time bomb, worse
-    # than a crash. GIF LZW emits at most ~16k output bytes per input
-    # byte (8/min_code_size codes per byte x 4095-byte dictionary
-    # strings), so a raster the payload cannot possibly fill is
-    # refused up front.
+    # Allocation bomb guard (found by adversarial fuzz): a 20-byte payload
+    # can declare a 35852x29309 logical screen, making the decoder allocate
+    # a ~3 GB canvas before any frame data is validated — an executor
+    # memory/time bomb, worse than a crash. GIF LZW emits at most ~16k
+    # output bytes per input byte (8/min_code_size codes per byte x
+    # 4095-byte dictionary strings), so a raster the payload cannot possibly
+    # fill is refused up front.
     if width * height > 16384 * len(payload):
         raise DecodeUnavailable(
             f"GIF logical screen {width}x{height} impossible for a "

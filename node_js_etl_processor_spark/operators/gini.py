@@ -1,6 +1,4 @@
-"""Per-source Gini concentration of document lengths — an
-r18-SCHEDULED declaration (built + staged-oracle-verified in r16;
-the capacity policy in __spark_entry__.py holds it for r18): the
+"""Per-source Gini concentration of document lengths: the
 classic inequality coefficient (Gini 1912; the rank-weighted form of
 Sen, On Economic Inequality 1973, eq. 2.8.1) applied to the corpus
 axis a data-mixing pipeline actually watches: how unequally a
@@ -45,7 +43,7 @@ from pyspark.sql import functions as F
 
 
 def q_gini_concentration(documents: DataFrame) -> DataFrame:
-    """r18-scheduled declaration: per-source size-concentration
+    """Declared query: per-source size-concentration
     statistics — (source, n, sum_x, sum_ix, gini); integers exact,
     gini one fixed-shape double expression (module docstring has the
     parity argument)."""
@@ -66,7 +64,7 @@ def q_gini_concentration(documents: DataFrame) -> DataFrame:
     n_d = F.col("n").cast("double")
     # sum_x = 0 (a source whose documents are ALL zero-length) would
     # divide by zero — an ANSI-mode runtime error in the driver's
-    # plain session, NaN in DuckDB (r18 property-test finding). The
+    # plain session, NaN in DuckDB (a property-test finding). The
     # coefficient is undefined there; both engines emit NULL.
     return agg.withColumn(
         "gini",
@@ -80,7 +78,7 @@ def q_gini_concentration(documents: DataFrame) -> DataFrame:
     )
 
 
-#: the DuckDB twin, staged until the r18 registry wiring (capacity policy) — identical
+#: the DuckDB twin — identical
 #: in-group rank, identical integer sufficient statistics, identical
 #: fixed-shape double for G.
 GINI_CONCENTRATION_ORACLE = """

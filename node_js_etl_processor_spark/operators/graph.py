@@ -183,7 +183,7 @@ def link_graph_edges(documents: DataFrame) -> DataFrame:
 
 
 def q_link_graph(documents: DataFrame) -> DataFrame:
-    """r10-candidate declared query (NOT in the r9 registry): the
+    """Declared query: the
     outlink/domain graph builder — the curation op that feeds domain-
     level quality signals (link spam, hub detection, domain PageRank
     via ``pagerank_until``). The orderBy lives ONLY in this declared
@@ -217,7 +217,7 @@ def pagerank_until(
     stats: dict | None = None,
     check_every: int = 3,
 ) -> DataFrame:
-    """Fixed-point weighted PageRank (r9) — the production-grade twin
+    """Fixed-point weighted PageRank — the production-grade twin
     of the oracle-grade unrolled ``pagerank``, with the same
     convergence discipline as ``dedup.connected_components`` (iterate
     with a per-round cut, STOP on a structural signal,
@@ -239,8 +239,8 @@ def pagerank_until(
 
     Each round is one keyed join + aggregation over O(V) cut rows;
     the scalar L1 aggregate (a driver action) runs only every
-    ``check_every`` rounds and on the final round (r10 — the per-round
-    action was pure overhead: PageRank deltas shrink geometrically, so
+    ``check_every`` rounds and on the final round (a per-round
+    action is pure overhead: PageRank deltas shrink geometrically, so
     checking at round k, k+1, k+2 almost never stops earlier than
     checking at k+3, while each skipped check saves a full rank-join
     action). ``check_every=1`` restores the per-round check; results
@@ -344,7 +344,7 @@ def q_pagerank(
     customer: DataFrame,
     supplier: DataFrame,
 ) -> DataFrame:
-    """Declared query (r8): 3-iteration weighted PageRank over the
+    """Declared query: 3-iteration weighted PageRank over the
     nation trade graph. Fully oracle-checked — the DuckDB SQL rebuilds
     the edge weights, the transition probabilities and all three
     iterations as unrolled CTEs in the same float-op order."""

@@ -1,4 +1,4 @@
-"""Misra-Gries heavy hitters (r13): exact top-k by frequency without
+"""Misra-Gries heavy hitters: exact top-k by frequency without
 a full-key-space shuffle — per-partition constant-memory summaries
 (Misra & Gries 1982; mergeability per Agarwal et al., "Mergeable
 Summaries", PODS 2012), a parameter-sized merge, a guarantee check on
@@ -112,15 +112,14 @@ def heavy_hitters_plan(
     not knowing the skew a priori. The driver-side collects are the
     k merged counters and one N scalar.
 
-    Key normalization happens ONCE, up front, for BOTH paths (r14,
-    the r13 advice item): the key is cast to long and nulls (original
-    OR produced by a failed cast) are filtered before either branch.
-    Previously the MG pass could never certify NULL or a
-    non-long-castable key — ``try_cast("long")`` nulls them and pandas
-    ``value_counts()`` drops nulls — while the uncertified fallback
-    grouped the RAW column, so the same data could answer differently
-    depending on which branch ran. Normalizing first restores the
-    'sketch is an execution strategy, never a semantics change'
+    Key normalization happens ONCE, up front, for BOTH paths: the key is
+    cast to long and nulls (original OR produced by a failed cast) are
+    filtered before either branch. Previously the MG pass could never
+    certify NULL or a non-long-castable key — ``try_cast("long")`` nulls
+    them and pandas ``value_counts()`` drops nulls — while the uncertified
+    fallback grouped the RAW column, so the same data could answer
+    differently depending on which branch ran. Normalizing first restores
+    the 'sketch is an execution strategy, never a semantics change'
     contract; the oracle carries the matching CAST + IS NOT NULL."""
     if k < 1:
         raise ValueError("heavy_hitters_topk needs k >= 1")
@@ -198,7 +197,7 @@ def skewed_order_keys(orders: DataFrame) -> DataFrame:
 
 
 def q_heavy_hitters_skewed(orders: DataFrame) -> DataFrame:
-    """r14 declared query (the r13 verdict's item 3): exact top-10
+    """Declared query: exact top-10
     over a GENUINELY SKEWED key so the Misra-Gries CERTIFIED branch —
     per-partition summaries with real evictions → parameter-sized
     merge → guarantee check PASSES → broadcast-filtered exact recount,
@@ -213,7 +212,7 @@ def q_heavy_hitters_skewed(orders: DataFrame) -> DataFrame:
 
 
 def q_heavy_hitters(orders: DataFrame) -> DataFrame:
-    """Declared query (r13): exact top-10 customers by order count via
+    """Declared query: exact top-10 customers by order count via
     the Misra-Gries path (per-partition O(capacity) summaries carrying
     their row counts → parameter-sized merge → guarantee check on the
     merged lower bounds → broadcast-filtered exact recount when skew

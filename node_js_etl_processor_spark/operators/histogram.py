@@ -1,6 +1,4 @@
-"""Equi-depth histograms per group — r18-SCHEDULED declaration
-(built + staged-oracle-verified in r16; the capacity policy in
-__spark_entry__.py holds it for r18): the classic database
+"""Equi-depth histograms per group: the classic database
 statistics structure (Piatetsky-Shapiro & Connell, SIGMOD 1984,
 "Accurate Estimation of the Number of Tuples Satisfying a
 Condition"; the variance-minimizing V-optimal/equi-depth line of
@@ -57,7 +55,7 @@ def q_equidepth_hist(
     n_buckets: int = N_BUCKETS,
     parts: int = _RANK_PARTS,
 ) -> DataFrame:
-    """r18-scheduled declaration: per-returnflag equi-depth histogram
+    """Declared query: per-returnflag equi-depth histogram
     of extended price — (l_returnflag, bucket, n, lo_cents, hi_cents),
     all BIGINT (module docstring has the NTILE-parity and
     distributed-rank arguments)."""
@@ -121,7 +119,7 @@ def q_equidepth_hist(
     )
 
 
-#: the DuckDB twin, staged until the r18 registry wiring (capacity policy) — the
+#: the DuckDB twin — the
 #: deliberately single-machine NTILE formulation over the identical
 #: total order, cross-checking the distributed rank+arithmetic
 #: rewrite bit-for-bit.

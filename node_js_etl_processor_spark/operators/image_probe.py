@@ -1,4 +1,4 @@
-"""Image-format dispatch (r14): headers-only triage across every
+"""Image-format dispatch: headers-only triage across every
 raster container the engine decodes — netpbm (P2/P3/P5/P6), BMP,
 PNG, JPEG, GIF, TIFF — plus recognized-but-refused flavors (WebP,
 interlaced PNG, progressive JPEG, compressed BMP/TIFF, P1/P4
@@ -15,7 +15,7 @@ consumers — the perceptual-hash dedup family in ``phash.py`` —
 operate on MIXED-format corpora instead of assuming one container.
 
 Parity note: the reference engine (reference server.js:1-301) has no
-media surface at all; this module extends the r10-r13 media family
+media surface at all; this module extends the media family
 (SURVEY.md §2b) with the dispatch tier the audio side already has.
 """
 
@@ -160,7 +160,7 @@ def _probe_jpeg(b: bytes) -> "tuple[str, str, int, int, int, int]":
             raise DecodeUnavailable("JPEG marker expected")
         # spec-legal fill bytes: any marker may be preceded by extra
         # 0xFF bytes (ITU T.81 B.1.1.2) — consume them before reading
-        # the marker id (r14 advice item; decode_jpeg applies the same
+        # the marker id (decode_jpeg applies the same
         # rule so probe and decoder keep one acceptance boundary)
         while pos + 1 < n and b[pos + 1] == 0xFF:
             pos += 1
@@ -368,7 +368,7 @@ def image_probe_features(media: DataFrame) -> DataFrame:
 
 
 def q_image_probe(documents: DataFrame) -> DataFrame:
-    """r14 declared query (the r13 verdict's item 2): the image
+    """Declared query: the image
     format-dispatch loop — ``synth_mixed_image_media`` (eight REAL
     container/flavor pairs + two recognized refusals) →
     ``image_probe_features`` (magic + header parse, no pixel decode).

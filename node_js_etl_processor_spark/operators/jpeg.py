@@ -1,7 +1,7 @@
 """Baseline-sequential JFIF (JPEG) codec on stdlib struct + numpy.
 
 Public-format implementation following the ITU-T T.81 structure —
-the last real codec gap after BMP (r6) and PNG/WAV (r7):
+the codec beside BMP and PNG/WAV:
 
 - **decoder** (``decode_jpeg``): generic baseline — marker parse
   (APPn/DQT/SOF0/DHT/SOS/DRI), canonical Huffman tables built from

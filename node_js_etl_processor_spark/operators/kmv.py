@@ -11,10 +11,10 @@ framework paper).
 
 Parity note: the reference (reference server.js:1-302) is a 302-line
 Node ETL service with no sketch surface at all; this module extends
-the engine's r10+ sketch family (SURVEY.md §2b) with the
+the engine's sketch family (SURVEY.md §2b) with the
 set-algebraic tier.
 
-Portability contract (the r3 minhash discipline): every hash is the
+Portability contract (the minhash discipline): every hash is the
 first 12 hex chars of md5 over the key's string form — 48 bits, so
 ``(n_entries · 2^48) div theta`` stays inside BIGINT for any
 plausible ``k`` (63·2^48 ≈ 1.8e16 ≪ 2^63) and BOTH engines evaluate
@@ -92,10 +92,10 @@ def kmv_sketch(df: DataFrame, grp_col: str, key_col: str, k: int = KMV_K) -> Dat
     """Per-group KMV sketch: the k smallest distinct 48-bit hashes of
     ``key_col`` within each ``grp_col`` group, ranked ascending.
 
-    NULL keys are dropped up front (the r14 heavy.py lesson applied
-    proactively): md5(NULL) is NULL, and a NULL hash would sort FIRST
-    in Spark's ascending window but LAST under DuckDB's default —
-    cardinality sketches count non-null keys, in both engines."""
+    NULL keys are dropped up front (as in heavy.py): md5(NULL) is NULL, and
+    a NULL hash would sort FIRST in Spark's ascending window but LAST under
+    DuckDB's default — cardinality sketches count non-null keys, in both
+    engines."""
     hashed = (
         df.select(F.col(grp_col).alias("g"), kmv_hash(F.col(key_col)).alias("h"))
         .filter(F.col("h").isNotNull())
@@ -148,7 +148,7 @@ def kmv_estimates(
     the plan does not rebuild the window subtrees."""
     th = kmv_theta(sketch, k) if theta is None else theta
     ent = kmv_entries(sketch, th) if entries is None else entries
-    # r16 (advice item): start from the theta frame and LEFT-join the
+    # Start from the theta frame and LEFT-join the
     # entry counts — a group whose retained-entry set is empty (the
     # degenerate k=1 saturated sketch, or the theta=0 corner the
     # greatest() guard anticipates) must still yield its row with
@@ -266,7 +266,7 @@ def q_kmv_distinct(orders: DataFrame) -> DataFrame:
 
 
 def q_kmv_difference(orders: DataFrame) -> DataFrame:
-    """DECLARED in r16 (built + pytest-oracle-verified in r15): theta
+    """Declared query: theta
     set-DIFFERENCE over the same customer sketches — |F \\ O| and
     |O \\ F| estimated by clamping both operand sketches to
     theta_u = min(theta_F, theta_O) and counting retained F-hashes
@@ -303,11 +303,11 @@ def kmv_set_difference(
     two (set_name, n_entries, theta, est_distinct) rows for A\\B and
     B\\A clamped to theta_u = min(theta_a, theta_b).
 
-    Raises if either group is ABSENT from the sketch frame (r16
-    review #3): silently treating a typo'd or not-yet-ingested group
-    as the empty set would emit plausible-looking rows asserting it
-    is a strict subset of the other. The check collects the ≤ 2
-    filtered theta rows — parameter-sized by construction."""
+    Raises if either group is ABSENT from the sketch frame: silently
+    treating a typo'd or not-yet-ingested group as the empty set would emit
+    plausible-looking rows asserting it is a strict subset of the other. The
+    check collects the ≤ 2 filtered theta rows — parameter-sized by
+    construction."""
     th = kmv_theta(sketch, k)
     present = {
         r["g"] for r in th.filter(F.col("g").isin(g_a, g_b)).collect()
@@ -370,8 +370,7 @@ def kmv_oracle_cte(tag: str, key_sql: str) -> str:
     )"""
 
 
-#: the DuckDB twin for q_kmv_difference, registry-wired in r16
-#: registry wiring — r15 tests run it through the driver's compare
+#: the DuckDB twin for q_kmv_difference
 KMV_DIFFERENCE_ORACLE = "WITH " + kmv_oracle_cte("c", "o_custkey") + """, thu AS (
       SELECT CAST(min(theta) AS BIGINT) AS theta FROM thc WHERE g IN ('F', 'O')
     ), fo AS (

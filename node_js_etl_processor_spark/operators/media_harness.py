@@ -1,7 +1,6 @@
-"""Shared chained-mapInPandas media harness (the r11/r12 verdicts'
-carried ask): every synth→decode→features family — WAV, G.711,
-IMA-ADPCM, mixed-audio probe, netpbm, TIFF, GIF frames, MJPEG-AVI
-frames — runs the same scaffold:
+"""Shared chained-mapInPandas media harness: every synth→decode→features
+family — WAV, G.711, IMA-ADPCM, mixed-audio probe, netpbm, TIFF, GIF frames,
+MJPEG-AVI frames — runs the same scaffold:
 
 1. a SYNTH kernel: Arrow-batched ``mapInPandas`` over ``doc_id``
    emitting MEDIA_SCHEMA rows whose payloads come from the REAL

@@ -75,7 +75,7 @@ def decode_image(payload: bytes) -> object:
     """Decode an image payload to an H×W×3 uint8 raster. Real for
     uncompressed 24-bit BMP (pure stdlib+numpy — see ``decode_bmp``),
     non-interlaced 8-bit RGB/RGBA PNG (stdlib zlib + unfilter — see
-    ``decode_png``), and baseline-sequential JFIF (r8 — stdlib
+    ``decode_png``), and baseline-sequential JFIF (stdlib
     Huffman + IDCT, ``operators.jpeg.decode_jpeg``); every other
     format needs Pillow/opencv (absent here)."""
     if payload is not None and payload[:2] == b"BM":
@@ -414,7 +414,7 @@ def resize_image(payload: bytes, width: int, height: int) -> bytes:
     """Real image resize: decode → nearest-neighbor over the pixel
     grid → re-encode in the SOURCE format. Works end-to-end for
     uncompressed 24-bit BMP, non-interlaced 8-bit RGB/RGBA PNG,
-    (r8) baseline JFIF and (r9) GIF — first composited frame, LZW
+    baseline JFIF and GIF — first composited frame, LZW
     re-encode — (stdlib struct/zlib/Huffman/LZW + numpy, no codec
     libraries needed); any other format raises DecodeUnavailable
     (Pillow/opencv absent)."""
@@ -550,7 +550,7 @@ def sample_frames(
 
 
 def sample_gif_frames(media: DataFrame, step: int = FRAME_STEP) -> DataFrame:
-    """REAL frame sampling (r9) — what ``sample_frames`` fakes with
+    """REAL frame sampling — what ``sample_frames`` fakes with
     byte strides, run against an actual animated container: the GIF
     decoder (``operators.gif.decode_gif_frames``) composites every
     frame, and every ``step``-th one is emitted with its true
@@ -818,7 +818,7 @@ def synth_wav_media(documents: DataFrame) -> DataFrame:
 
 
 def synth_gif_media(documents: DataFrame) -> DataFrame:
-    """Deterministic animated-GIF payloads derived per document (r9) —
+    """Deterministic animated-GIF payloads derived per document —
     the GIF twin of ``synth_wav_media``: each doc_id fixes a small
     animation (width 4 + doc_id%5, height 3 + doc_id%4, 1 + doc_id%3
     frames, frame f solid color ((did*37 + f*11)%256, (did*53 +
@@ -862,7 +862,7 @@ def synth_gif_media(documents: DataFrame) -> DataFrame:
 
 
 def q_gif_frames(documents: DataFrame) -> DataFrame:
-    """Declared query (added in r10): the full distributed GIF loop —
+    """Declared query: the full distributed GIF loop —
     ``synth_gif_media`` (real LZW encode, closed-form animations) →
     ``sample_gif_frames`` (real decode + compositing, every 2nd
     frame) — with every output column closed-form in doc_id, so a SQL
@@ -876,7 +876,7 @@ def q_gif_frames(documents: DataFrame) -> DataFrame:
 
 
 def q_audio_features(documents: DataFrame) -> DataFrame:
-    """Declared query (r8): the distributed WAV path under the oracle
+    """Declared query: the distributed WAV path under the oracle
     gate — synthesize deterministic PCM-WAV bytes per document
     (``synth_wav_media``), decode them back through the REAL
     ``decode_wav`` inside ``audio_features_wav``, and emit
@@ -895,13 +895,12 @@ def q_audio_features(documents: DataFrame) -> DataFrame:
 
 # ---------------------------------------------- stdlib MJPEG-AVI video path
 #
-# The video analogue of the WAV and GIF paths (r10 — the last stubbed
-# modality): an AVI is a RIFF container (same public layout family as
-# WAV) whose 'movi' list carries one baseline-JFIF payload per frame
-# in MJPEG form, fully walkable with struct and fully decodable by
-# reusing ``operators.jpeg.decode_jpeg`` per '00dc' chunk. Supported
-# flavor: MJPEG video streams ('00dc'/'00db' chunks holding baseline
-# JPEG); anything else — other codecs, truncated chunks, missing
+# The video analogue of the WAV and GIF paths: an AVI is a RIFF container
+# (same public layout family as WAV) whose 'movi' list carries one
+# baseline-JFIF payload per frame in MJPEG form, fully walkable with struct
+# and fully decodable by reusing ``operators.jpeg.decode_jpeg`` per '00dc'
+# chunk. Supported flavor: MJPEG video streams ('00dc'/'00db' chunks holding
+# baseline JPEG); anything else — other codecs, truncated chunks, missing
 # headers — raises DecodeUnavailable like every codec we lack.
 
 
@@ -1074,8 +1073,8 @@ def synth_video_media(documents: DataFrame) -> DataFrame:
 
 
 def sample_video_frames(media: DataFrame, step: int = FRAME_STEP) -> DataFrame:
-    """REAL video frame sampling (r10) — the last modality
-    ``sample_frames`` still faked with byte strides: walk each AVI
+    """REAL video frame sampling — what
+    ``sample_frames`` fakes with byte strides: walk each AVI
     payload (``decode_avi_frames``), keep every ``step``-th frame,
     emit its true geometry, the stream's frame duration and the
     raster digest (md5 over lowercase hex — the shared oracle-able
@@ -1122,7 +1121,7 @@ def sample_video_frames(media: DataFrame, step: int = FRAME_STEP) -> DataFrame:
 
 
 def q_video_frames(documents: DataFrame) -> DataFrame:
-    """r11-declaration candidate (built r10): the full distributed
+    """Declared query: the full distributed
     video loop — ``synth_video_media`` (real JPEG encode into a real
     AVI container) → ``sample_video_frames`` (real RIFF walk + JPEG
     decode, every 2nd frame) — with every output column closed-form

@@ -234,7 +234,7 @@ def netpbm_features(media: DataFrame) -> DataFrame:
 
 
 def q_netpbm_features(documents: DataFrame) -> DataFrame:
-    """r11-candidate query: the full distributed netpbm loop —
+    """Declared query: the full distributed netpbm loop —
     ``synth_netpbm_media`` (real encode of all four variants WITH
     header comments) → ``netpbm_features`` (real tokenizing decode +
     exact stats). The DuckDB oracle recomputes geometry, pixel sums

@@ -1,5 +1,4 @@
-"""Per-document duplication-coverage ("novelty") scoring —
-DECLARED in r17 (built + staged-oracle-verified in r16): for
+"""Per-document duplication-coverage ("novelty") scoring: for
 every document long enough to shingle, how much of it is covered by
 corpus-duplicated w-token runs — the document-level cut/down-weight
 signal Lee et al., ACL 2022 derive from ExactSubstr matches (§5:
@@ -18,19 +17,17 @@ once because the sweep-line merge already coalesced them). All
 BIGINT; the novelty ratio (1 − dup_extent_tokens / n_tokens) is left
 to the consumer, PMI-statistics style, so nothing floats.
 
-Scale shape: the batch path touches the hashed shingle frame exactly
-ONCE (the duplication window) — per-doc totals need no hashing at
-all, since a doc's shingle count is just greatest(|tokens| − w + 1,
-0), so they come straight off the token arrays (the r16 in-session
-review: the first cut re-ran the corpus-wide tokenize+md5 subtree
-for the totals branch). The corpus-sized frame is NOT checkpointed
-(the repo's checkpoint discipline is batch/parameter-sized frames
-only). The extent pipeline is the span family's two keyed exchanges;
-the final assembly is one keyed agg per side + a doc-keyed join.
-Composes with the streamed shingle-postings store
-(``streaming/spanstore.py``): pass its positions tree through
-``novelty_from_positions`` — there the totals re-scan is a plain
-parquet re-read — and the score is incremental too.
+Scale shape: the batch path touches the hashed shingle frame exactly ONCE
+(the duplication window) — per-doc totals need no hashing at all, since a
+doc's shingle count is just greatest(|tokens| − w + 1, 0), so they come
+straight off the token arrays (hashing them would re-run the corpus-wide
+tokenize+md5 subtree for the totals branch). The corpus-sized frame is NOT
+checkpointed (the repo's checkpoint discipline is batch/parameter-sized
+frames only). The extent pipeline is the span family's two keyed exchanges;
+the final assembly is one keyed agg per side + a doc-keyed join. Composes
+with the streamed shingle-postings store (``streaming/spanstore.py``): pass
+its positions tree through ``novelty_from_positions`` — there the totals
+re-scan is a plain parquet re-read — and the score is incremental too.
 """
 
 from __future__ import annotations
@@ -59,7 +56,7 @@ def _coverage(totals: DataFrame, sh: DataFrame, w: int) -> DataFrame:
 def _coverage_from_extents(
     totals: DataFrame, ext: DataFrame, w: int
 ) -> DataFrame:
-    """Assembly over an already-built extent frame — the r17 split
+    """Assembly over an already-built extent frame — the split
     that lets the drop scorer supply extents gated against the
     STORED corpus's counts while reusing the identical reduce."""
     dup = ext.groupBy("doc_id").agg(
@@ -86,8 +83,7 @@ def novelty_from_positions(sh: DataFrame, w: int = SPAN_W) -> DataFrame:
     """Coverage scores over ANY (doc_id, pos, h) shingle frame — the
     streamed postings store's read path (there the totals re-scan is
     a plain parquet re-read; the frame is deliberately NOT
-    checkpointed — the r16 third review's corpus-sized-state
-    argument)."""
+    checkpointed, because it is corpus-sized state)."""
     totals = sh.groupBy("doc_id").agg(
         F.count("*").cast("bigint").alias("n_shingles")
     )
@@ -97,7 +93,7 @@ def novelty_from_positions(sh: DataFrame, w: int = SPAN_W) -> DataFrame:
 def _drop_totals(drop_docs: DataFrame, w: int) -> DataFrame:
     """Per-doc shingle totals straight off the token arrays —
     greatest(|tokens| − w + 1, 0) summed per doc_id (re-ingested
-    duplicates sum, the r16 fifth-review rule). Used by the BATCH
+    duplicates sum). Used by the BATCH
     query only: the drop scorer reads its totals off its
     checkpointed shingle frame instead (one hash pass) — the two
     definitions agree because per-doc posting count ==
@@ -119,8 +115,7 @@ def _drop_totals(drop_docs: DataFrame, w: int) -> DataFrame:
 #: above this many drop shingle POSTINGS the store filter switches
 #: from a broadcast semi-join to a shuffle semi-join. Shingle digests
 #: are near-unique per position, so the distinct-digest frame scales
-#: with the drop's TOKEN COUNT, not with any bounded vocabulary (the
-#: r17 advice's correction of this module's earlier size claim); at
+#: with the drop's TOKEN COUNT, not with any bounded vocabulary; at
 #: ~16 bytes a digest row, 4M postings ≈ 64 MB — near Spark's
 #: practical broadcast comfort zone, so larger drops shuffle instead.
 BROADCAST_POSTING_CAP = 4_000_000
@@ -157,21 +152,19 @@ def novelty_of_drop(
     repeated-doc_id rule does (behavior pinned in tests).
 
     Scale shape: the store is touched by ONE semi-join pass — stored
-    postings are filtered to the drop's distinct digests and counted
-    per digest; no corpus-wide shuffle of the STORE's content beyond
-    that keyed filter, no corpus re-read of text. The digest frame is
-    NOT vocabulary-bounded: shingles are near-unique per position, so
-    it scales with the drop's token count (the r17 advice corrected
-    the earlier "batch-vocabulary-sized" claim here) — small drops
+    postings are filtered to the drop's distinct digests and counted per
+    digest; no corpus-wide shuffle of the STORE's content beyond that keyed
+    filter, no corpus re-read of text. The digest frame is NOT
+    vocabulary-bounded: shingles are near-unique per position, so it scales
+    with the drop's token count, not with the batch vocabulary — small drops
     broadcast it (store side stays shuffle-free), drops above
-    ``broadcast_posting_cap`` postings fall back to an ordinary
-    shuffle semi-join on ``h``, same rows either way. The cap is
-    decided from the checkpointed frame's row count (an upper bound
-    on distinct digests — no extra distinct pass). The drop-side work
-    is batch-sized, and the drop's tokenize+md5 shingle subtree runs
-    exactly ONCE (the frame is cut — batch-sized, so inside the
-    ``barrier.cut`` discipline — and feeds the digest filter,
-    the duplication gate AND the totals, the q_doc_novelty
+    ``broadcast_posting_cap`` postings fall back to an ordinary shuffle
+    semi-join on ``h``, same rows either way. The cap is decided from the
+    checkpointed frame's row count (an upper bound on distinct digests — no
+    extra distinct pass). The drop-side work is batch-sized, and the drop's
+    tokenize+md5 shingle subtree runs exactly ONCE (the frame is cut —
+    batch-sized, so inside the ``barrier.cut`` discipline — and feeds the
+    digest filter, the duplication gate AND the totals, the q_doc_novelty
     single-hash-subtree invariant on the read path)."""
     sh_d = barrier.cut(shingle_positions(drop_docs, w), "novelty.drop_shingles")
     drop_h = sh_d.select("h").distinct()
@@ -205,11 +198,11 @@ def novelty_of_drop(
 
 
 def q_doc_novelty(documents: DataFrame, w: int = SPAN_W) -> DataFrame:
-    """Declared query (r17): per-document duplication coverage
+    """Declared query: per-document duplication coverage
     (see the module docstring). Totals come straight off the token
     arrays — greatest(|tokens| − w + 1, 0) via ``_drop_totals``,
-    which also keeps the r16 fifth-review rule (repeated doc_ids sum
-    like the oracle's GROUP BY) — so the corpus-wide tokenize+md5
+    which also keeps the rule that repeated doc_ids sum
+    (like the oracle's GROUP BY) — so the corpus-wide tokenize+md5
     shingle subtree runs exactly once (the duplication branch), not
     twice."""
     return _coverage(
@@ -217,8 +210,8 @@ def q_doc_novelty(documents: DataFrame, w: int = SPAN_W) -> DataFrame:
     )
 
 
-#: the DuckDB twin, registry-wired in r17 — width
-#: interpolated from SPAN_W (the r16 advice discipline); rebuilds
+#: the DuckDB twin — width
+#: interpolated from SPAN_W; rebuilds
 #: shingles, the duplication gate, the sweep merge AND the coverage
 #: assembly, so the composition is checked end to end
 def doc_novelty_oracle(w: int = SPAN_W) -> str:
@@ -276,5 +269,5 @@ def doc_novelty_oracle(w: int = SPAN_W) -> str:
 """
 
 
-#: the default-width twin, registry-wired in r17
+#: the default-width twin
 DOC_NOVELTY_ORACLE = doc_novelty_oracle(SPAN_W)

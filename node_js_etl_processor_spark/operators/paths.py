@@ -1,6 +1,5 @@
 """Multi-source k-hop BFS with shortest-path counts over the domain
-link graph — DECLARED in r17 (built + staged-oracle-
-verified in r16): bounded breadth-first reachability (the Pregel/
+link graph: bounded breadth-first reachability (the Pregel/
 Pipelined-BFS pattern — Malewicz et al., SIGMOD 2010) from a fixed
 seed set, annotating every reached domain with its hop distance AND
 the number of distinct shortest paths from the seed set (the σ_s(v)
@@ -112,7 +111,7 @@ def bfs_hops_over_edges(edges: DataFrame, k_hops: int = K_HOPS) -> DataFrame:
 
 
 def q_bfs_hops(documents: DataFrame, k_hops: int = K_HOPS) -> DataFrame:
-    """Declared query (r17): (domain, dist, n_paths) for every
+    """Declared query: (domain, dist, n_paths) for every
     domain within k_hops of the seed set over the distinct link-graph
     edges — exact BIGINT shortest-path counts (module docstring has
     the BFS-DAG semantics)."""
@@ -142,7 +141,7 @@ def bfs_hops_from_store(spark, store_path: str, k_hops: int = K_HOPS) -> DataFra
     )
 
 
-#: the DuckDB twin, registry-wired in r17 — the edge
+#: the DuckDB twin — the edge
 #: CTE mirrors LINK_GRAPH_ORACLE (__spark_entry__.py) / the
 #: graph.py:140 builder: 3 deterministic hrefs per doc, escaped body,
 #: self-links dropped, then DISTINCT pairs; the BFS layers unroll to

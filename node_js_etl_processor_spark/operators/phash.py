@@ -1,4 +1,4 @@
-"""Perceptual-hash image near-dup (r13): difference hash (dHash) over
+"""Perceptual-hash image near-dup: difference hash (dHash) over
 REAL decoded rasters, and the declared q_image_dedup family.
 
 dHash (the standard perceptual-hash folklore construction, e.g.
@@ -84,7 +84,7 @@ def synth_phash_media(documents: DataFrame) -> DataFrame:
     (``q_image_neardup``) exists to find and plain equality grouping
     must NOT merge.
 
-    MIXED FORMATS (r14, the r13 verdict's item 2): each trio member
+    MIXED FORMATS: each trio member
     encodes its raster in a DIFFERENT lossless container —
     FORMATS[(g + member) % 5] over P5 netpbm, PNG rgb8, BMP bgr24,
     TIFF gray and GIF89a, rotating with the group — so the planted
@@ -159,7 +159,7 @@ def synth_phash_media(documents: DataFrame) -> DataFrame:
 
 def image_dhash(media: DataFrame) -> DataFrame:
     """Decode → resize → dHash in one Arrow pass, through the
-    ``image_probe.decode_raster`` format dispatch (r14) — netpbm,
+    ``image_probe.decode_raster`` format dispatch — netpbm,
     BMP, PNG, JPEG, GIF and TIFF payloads all hash; unsupported
     containers and corrupt rows isolate as ok=false."""
     from node_js_etl_processor_spark.operators.image_probe import decode_raster
@@ -226,7 +226,7 @@ def image_near_dup_pairs(
     Scale: the only exchanges are the (band, value)-keyed self-join —
     2-byte keys, never pixels — exactly the text-simhash shape.
 
-    ``key_cap`` (r14, the r13 verdict's item 5 — the ``q_fuzzy_match``
+    ``key_cap`` (the ``q_fuzzy_match``
     posting-cap discipline): opt-in; default None = exact. A REAL
     templated image corpus (logos, memes, watermarked stills) can put
     g images on ONE 16-bit band value and pay g² candidates at that
@@ -280,7 +280,7 @@ def image_near_dup_pairs(
         & (F.col("a.media_id") < F.col("b.media_id"))
     )
     if key_cap is None:
-        # first-shared-band rule (r18): emit each candidate pair at its
+        # first-shared-band rule: emit each candidate pair at its
         # FIRST shared band only — bands j < the joined band must
         # DIFFER — so every qualifying pair is generated exactly once.
         # This kills the post-verify distinct() exchange AND the 4x
@@ -307,7 +307,7 @@ def image_near_dup_pairs(
 
 
 def q_image_neardup(documents: DataFrame) -> DataFrame:
-    """r13 declared query: Hamming-tolerant image near-dup — the loop
+    """Declared query: Hamming-tolerant image near-dup — the loop
     ``synth_phash_media`` → ``image_dhash`` → ``image_near_dup_pairs``.
     The synth's trios plant BOTH cases: members 0/1 collide exactly
     (hamming 0) and member 2 sits at hamming ≤ 1 (one inverted source
@@ -333,7 +333,7 @@ def q_image_neardup(documents: DataFrame) -> DataFrame:
 
 
 def q_image_dedup(documents: DataFrame) -> DataFrame:
-    """r13 declared query: the full image near-dup loop —
+    """Declared query: the full image near-dup loop —
     ``synth_phash_media`` (real P5 encode of closed-form sawtooth
     rasters with planted brightness/contrast-shifted trios) →
     ``image_dhash`` (real decode + resize + dHash) →

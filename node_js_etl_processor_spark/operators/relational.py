@@ -809,7 +809,7 @@ def q_scalar_subquery(orders: DataFrame, customer: DataFrame) -> DataFrame:
 
 
 def q_scd2(orders: DataFrame) -> DataFrame:
-    """SCD Type-2 history build (r8) — the standard warehouse
+    """SCD Type-2 history build — the standard warehouse
     slowly-changing-dimension op (Kimball's type-2 versioning): each
     customer's order-status sequence, ordered by (o_orderdate,
     o_orderkey), is compressed into versioned validity ranges — a row

@@ -1,5 +1,4 @@
-"""RFM customer segmentation — DECLARED in r17 (built +
-staged-oracle-verified in r16): the classic recency / frequency /
+"""RFM customer segmentation: the classic recency / frequency /
 monetary quintile segmentation (Hughes, "Strategic Database
 Marketing", 1994 — the standard warehouse cohorting operator), over
 every customer with at least one order.
@@ -11,25 +10,23 @@ discipline) — and each quintile is assigned by the closed form
 ``seg = (5 · (rank − 1)) div n`` over the TOTAL order
 (metric, custkey), custkey breaking metric ties. No ntile(): its
 extra-row placement is engine-convention; the div form is TRUE
-integer division on both sides (Spark ``div``, DuckDB ``//`` —
-r16 review: ``floor(a/b)`` would be IEEE double division in both
+integer division on both sides (Spark ``div``, DuckDB ``//``;
+``floor(a/b)`` would be IEEE double division in both
 engines, exact only below 2^53). Segments run 0..4 ascending in the
 metric (recency 4 = most recent, frequency 4 = most orders,
 monetary 4 = highest spend).
 
-Scale shape: one keyed aggregation (orders → per-customer metrics),
-then ONE distributed global rank (r20 — previously three sequential
-ones) — the ``operators/snm.py`` range-repartition + local
-row_number + broadcast-offsets rewrite, the engine's only
-total-order pattern, reused — over the tag-union of the three
-(metric, custkey) streams, 3n rows of the customer-dimension-sized
-metric frame (never the orders fact). ``n`` is computed ONCE
-driver-side from the checkpointed metric frame; with tag leading
-the total order each tag block holds exactly n rows, so the
-per-metric rank is ``rn − tag·n`` with no per-tag recount. A
-custkey-keyed pivot agg folds the three segment columns back and
-joins the checkpointed metrics. No single-task window ever sees the
-whole frame.
+Scale shape: one keyed aggregation (orders → per-customer metrics), then ONE
+distributed global rank (not three sequential ones) — the
+``operators/snm.py`` range-repartition + local row_number +
+broadcast-offsets rewrite, the engine's only total-order pattern, reused —
+over the tag-union of the three (metric, custkey) streams, 3n rows of the
+customer-dimension-sized metric frame (never the orders fact). ``n`` is
+computed ONCE driver-side from the checkpointed metric frame; with tag
+leading the total order each tag block holds exactly n rows, so the
+per-metric rank is ``rn − tag·n`` with no per-tag recount. A custkey-keyed
+pivot agg folds the three segment columns back and joins the checkpointed
+metrics. No single-task window ever sees the whole frame.
 
 The DuckDB oracle is the deliberately single-machine form (three
 plain ROW_NUMBER windows + the same floor arithmetic), so the
@@ -62,11 +59,11 @@ def rfm_metrics(orders: DataFrame) -> DataFrame:
 
 
 def q_rfm_segments(orders: DataFrame) -> DataFrame:
-    """Declared query (r17; rank collapsed to ONE pass in r20):
+    """Declared query:
     (custkey, recency_days, n_orders, monetary_cents, r_seg, f_seg,
     m_seg) — see the module docstring.
 
-    The r19 verdict's scheduled experiment: instead of three
+    Instead of three
     sequential range-rank + checkpoint rounds (one per metric), the
     three (metric, custkey) streams are tag-unioned and range-ranked
     ONCE on the total order (tag, metric, custkey). Because every
@@ -75,7 +72,8 @@ def q_rfm_segments(orders: DataFrame) -> DataFrame:
     ``rn − tag·n`` — no per-tag re-count, no second sort. The three
     exchanges + three eager checkpoint jobs become one range
     exchange over 3n rows + one custkey-keyed pivot agg + the
-    metrics join-back (measured ~1.3× solo at sf0.1; BENCH.md r20).
+    metrics join-back (measured ~1.3× faster solo at sf0.1 than the
+    three-round form, on a 32-core host).
     Segment arithmetic is unchanged: ``(5·(rank−1)) div n`` in true
     integer division, segments 0..4 ascending, custkey tiebreak."""
     m = barrier.cut(rfm_metrics(orders), "rfm.metrics")
@@ -122,7 +120,7 @@ def q_rfm_segments(orders: DataFrame) -> DataFrame:
     )
 
 
-#: the DuckDB twin, registry-wired in r17 — the
+#: the DuckDB twin — the
 #: single-machine ROW_NUMBER form, cross-checking the distributed
 #: rank rewrite on all three metrics
 RFM_SEGMENTS_ORACLE = """

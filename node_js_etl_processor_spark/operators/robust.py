@@ -1,12 +1,11 @@
 """Exact per-group robust statistics (median / MAD) in pure integer
-arithmetic — DECLARED in r17 (built + staged-oracle-
-verified in r16): the robust location/scale pair (Hampel 1974; the
+arithmetic: the robust location/scale pair (Hampel 1974; the
 MAD as the robust sigma — Leys et al. 2013's outlier-detection
 standard) that q_stats_agg's moment statistics cannot provide, and
 that naive cross-engine implementations get WRONG: Spark
 ``percentile()`` and DuckDB ``quantile_cont`` both interpolate
 even-count medians in IEEE doubles, where a 1-ulp divergence flips a
-rounded digit (the repo's r4 money-average lesson).
+rounded digit (as with per-group money averages).
 
 The twice-median trick makes everything exact: for n values the
 DOUBLED median ``med2 = v[lo] + v[hi]`` with ``lo = (n+1) div 2`` and
@@ -18,9 +17,9 @@ doubled median of d is ``4·MAD`` — so the emitted columns
 the compare is bitwise; the consumer divides at the end, exactly the
 PMI/lift sufficient-statistics discipline.
 
-Scale shape (r16 third review — the first cut aggregated each median
-and joined back, which compiled to THREE group-keyed exchanges and a
-double-built window pipeline): the whole computation is now window
+Scale shape (aggregating each median and joining back would compile
+to THREE group-keyed exchanges and a double-built window pipeline):
+the whole computation is window
 expressions over ONE hashpartitioning(group) exchange — rank by
 (value, key), derive med2 as a windowed conditional sum over the
 group, compute d per-row in place, re-rank by (d, key) inside the
@@ -40,7 +39,7 @@ from pyspark.sql import functions as F
 
 
 def q_robust_stats(orders: DataFrame) -> DataFrame:
-    """Declared query (r17): per-priority robust price
+    """Declared query: per-priority robust price
     statistics — (o_orderpriority, n, med2_cents, mad4_cents), all
     BIGINT (module docstring has the doubling conventions)."""
     grp = "o_orderpriority"
@@ -84,7 +83,7 @@ def q_robust_stats(orders: DataFrame) -> DataFrame:
     )
 
 
-#: the DuckDB twin, registry-wired in r17 — identical
+#: the DuckDB twin — identical
 #: doubled-order-statistic arithmetic, NO quantile functions anywhere
 ROBUST_STATS_ORACLE = """
     WITH base AS (

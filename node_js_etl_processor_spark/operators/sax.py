@@ -1,5 +1,4 @@
-"""SAX symbolic aggregate approximation of event time series —
-DECLARED in r17 (built + staged-oracle-verified in r16):
+"""SAX symbolic aggregate approximation of event time series:
 the time-series-to-string discretization of Lin, Keogh, Lonardi &
 Chiu (DMKD 2003, "A Symbolic Representation of Time Series") that
 turns each user's event-value stream into a short alphabet word, so
@@ -13,7 +12,7 @@ classic pipeline is PAA (piecewise aggregate approximation — mean per
 fixed time frame) then z-normalized Gaussian-breakpoint binning. The
 z-normalization divides by a stddev whose parallel summation order is
 engine-dependent in IEEE doubles, so the breakpoint comparison could
-flip on a ulp (the repo's r4 money-average lesson). This
+flip on a ulp (as with per-group money averages). This
 implementation keeps the PAA step verbatim (hourly frames,
 ``date_trunc('hour', ts)``) but replaces the Gaussian breakpoints
 with EQUI-DEPTH rank quantization: NTILE(ALPHABET) over each user's
@@ -53,7 +52,7 @@ ALPHABET = 4
 
 
 def q_sax_symbols(events: DataFrame, alphabet: int = ALPHABET) -> DataFrame:
-    """Declared query (r17): per-user SAX words over hourly PAA
+    """Declared query: per-user SAX words over hourly PAA
     frames of ``value`` — (user_id, n_frames, sax_word); rank-based
     symbol assignment (module docstring has the exactness argument)."""
     frames = (
@@ -98,7 +97,7 @@ def q_sax_symbols(events: DataFrame, alphabet: int = ALPHABET) -> DataFrame:
     )
 
 
-#: the DuckDB twin, registry-wired in r17 — identical
+#: the DuckDB twin — identical
 #: hourly PAA, identical single-division mean, identical NTILE rank
 #: quantization (both engines give the first n_rows % n buckets the
 #: extra row), time-ordered string_agg.

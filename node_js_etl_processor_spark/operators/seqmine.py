@@ -1,5 +1,4 @@
-"""Sequential pattern mining over event streams — r17 declaration
-CANDIDATE (built + staged-oracle-verified in r16): frequent
+"""Sequential pattern mining over event streams: frequent
 CONTIGUOUS event-type trigrams per user (the length-3 specialization
 of GSP — Srikant & Agrawal, EDBT 1996, "Mining Sequential Patterns:
 Generalizations and Performance Improvements" — restricted to
@@ -38,7 +37,7 @@ MIN_SEQ_SUPPORT = 10
 def q_event_sequences(
     events: DataFrame, min_support: int = MIN_SEQ_SUPPORT
 ) -> DataFrame:
-    """Declared query (r17): frequent contiguous event-type
+    """Declared query: frequent contiguous event-type
     trigrams (see the module docstring)."""
     eus = epoch_us_fn(events)
     w = Window.partitionBy("user_id").orderBy(
@@ -72,8 +71,8 @@ def q_event_sequences(
     )
 
 
-#: the DuckDB twin, registry-wired in r17 — support
-#: interpolated from MIN_SEQ_SUPPORT (the r16 advice discipline)
+#: the DuckDB twin — support
+#: interpolated from MIN_SEQ_SUPPORT
 EVENT_SEQUENCES_ORACLE = f"""
     WITH base AS (
       SELECT user_id, event_id, event_type AS e1, epoch_us(ts) AS t_us

@@ -59,7 +59,7 @@ def q_sessionize(events: DataFrame, gap_minutes: int = GAP_MINUTES) -> DataFrame
 
 
 def q_funnel(events: DataFrame) -> DataFrame:
-    """Ordered conversion funnel (r8): view → click → purchase, each
+    """Ordered conversion funnel: view → click → purchase, each
     later step counted only when it happens STRICTLY AFTER the user's
     earliest completion of the previous step — the classic ordered
     funnel, not a mere event-type tally. Per step: users reaching it,

@@ -1,4 +1,4 @@
-"""Exact set-similarity self-join via prefix filtering (r14): all
+"""Exact set-similarity self-join via prefix filtering: all
 pairs of DISTINCT token sets with Jaccard ≥ t, WITHOUT the all-pairs
 scan — the AllPairs/PPJoin family (Bayardo, Ma & Srikant, "Scaling
 Up All Pairs Similarity Search", WWW 2007; Xiao, Wang, Lin & Yu,
@@ -32,7 +32,7 @@ EXACT one. Three scale disciplines compose here:
    1 + min(|x|−i, |y|−j) overlap, so candidates that cannot reach
    the required ⌈t·(|x|+|y|)/(1+t)⌉ die inside the join, before any
    shuffle of pair rows.
-3. **Bloom miss-count bound in the join (r16).** Each representative
+3. **Bloom miss-count bound in the join.** Each representative
    carries a 64-bit one-hash Bloom fingerprint of its digest set;
    ``bit_count(bloom_a & ~bloom_b)`` LOWER-bounds |A \\ B| (distinct
    uncovered bits witness distinct missing tokens), so the join
@@ -41,7 +41,7 @@ EXACT one. Three scale disciplines compose here:
    19/20 threshold it kills near-miss candidates where the budget is
    0–1 misses: measured 960k → 27.5k candidates (−97%) at sf0.1 with
    identical output.
-4. **Pigeonhole signature join at high thresholds (r19).** At the
+4. **Pigeonhole signature join at high thresholds.** At the
    declared t = 19/20 the candidate join itself is the bottleneck on
    hot-vocabulary corpora (the fixture has 31 distinct tokens, so
    token-equality posting lists are corpus-sized). A qualifying pair
@@ -64,7 +64,7 @@ EXACT one. Three scale disciplines compose here:
    and counting ``array_intersect`` inside whole-stage codegen — one
    row per candidate, never |x|·posting-list blowup, and long
    equality instead of string hashing in the hot loop (measured ~4×
-   on the sf0.1 sweep: 16 s → 3.8 s warm; the r16 bloom bound takes
+   on the sf0.1 sweep: 16 s → 3.8 s warm; the bloom bound takes
    the whole query 4.7 → ~2.3 s warm).
 
 All thresholds are exact rationals (t = t_num/t_den) and every
@@ -75,20 +75,17 @@ algorithm, intersecting the SAME digest space — compares bit-for-bit
 with no float rounding anywhere. The filtering's COMPLETENESS is
 therefore cross-checked against an engine that never prunes.
 
-Digest-collision fine print (the r14 in-round review's precision
-pass): a WITHIN-candidate collision is identical on both sides and
-cancels; the one structure that is NOT covered is a CROSS-token
-collision between a probe-only and a train-only token lifting a
-pair's digest-space intersection over the threshold while the
-token-space prefixes share nothing — there the engine (token-space
-candidates) and the oracle (digest-space brute force) could diverge.
-That needs two distinct ~10-char tokens agreeing on 60 bits of md5
-inside one candidate corpus: ~2⁻⁶⁰ per token pair, below the md5
-set-digest collision risk the collapse itself already accepts. Both
-operators' exactness claims are therefore 'exact in the 60-bit
-digest space, with token-space candidate generation whose
-completeness margin exceeds the digest space's own collision
-budget'.
+Digest-collision fine print: a WITHIN-candidate collision is identical on
+both sides and cancels; the one structure that is NOT covered is a
+CROSS-token collision between a probe-only and a train-only token lifting a
+pair's digest-space intersection over the threshold while the token-space
+prefixes share nothing — there the engine (token-space candidates) and the
+oracle (digest-space brute force) could diverge. That needs two distinct
+~10-char tokens agreeing on 60 bits of md5 inside one candidate corpus:
+~2⁻⁶⁰ per token pair, below the md5 set-digest collision risk the collapse
+itself already accepts. Both operators' exactness claims are therefore
+'exact in the 60-bit digest space, with token-space candidate generation
+whose completeness margin exceeds the digest space's own collision budget'.
 
 Parity note: the reference engine (reference server.js:1-301) has no
 similarity-join surface; this extends SURVEY.md §2b's dedup family.
@@ -124,7 +121,7 @@ def packed_sets(documents: DataFrame) -> DataFrame:
     whitespace split, empties dropped — the exact expression
     q_tfidf's oracle already pins), DISTINCT per document.
 
-    ZERO shuffles (r16 perf pass): the per-document distinct sorted
+    ZERO shuffles: the per-document distinct sorted
     token set is a pure row-local expression —
     ``array_sort(array_distinct(filter(split(...))))`` — so the whole
     stage is one narrow projection inside codegen. The previous form
@@ -141,12 +138,12 @@ def packed_sets(documents: DataFrame) -> DataFrame:
     engines. (Cross-engine byte-order agreement does NOT hold in
     general: Spark compares strings by UTF-16 code units, DuckDB by
     UTF-8 bytes, and the two orders diverge for supplementary-plane
-    code points — r14 advice item.)"""
+    code points.)"""
     return (
         documents.select(
             "doc_id",
             # token_array is the span family's single tokenization
-            # definition (r19 consolidation — this was a textual copy)
+            # definition
             F.array_sort(F.array_distinct(token_array())).alias("toks"),
         )
         .withColumn("set_key", F.md5(F.concat_ws("\n", F.col("toks"))))
@@ -154,8 +151,7 @@ def packed_sets(documents: DataFrame) -> DataFrame:
         # zero-token documents have no token SET: the old explode →
         # groupBy form dropped them structurally (explode of [] emits
         # no rows), and the containment contract + its oracle exclude
-        # them — keep the row-local form semantics IDENTICAL (r16
-        # review #1)
+        # them — keep the row-local form semantics IDENTICAL
         .filter(F.col("sz") > 0)
     )
 
@@ -171,7 +167,7 @@ def exact_set_reps(sets: DataFrame) -> DataFrame:
 
 
 #: 64-bit one-hash Bloom fingerprint of a digest array — bit
-#: ``h % 64`` per token. The LOSSLESS prune it supports (r16):
+#: ``h % 64`` per token. The LOSSLESS prune it supports:
 #: every bit set in A's bloom but absent from B's is a bit some
 #: token of A maps to that NO token of B does, and DISTINCT such
 #: bits witness DISTINCT missing tokens, so
@@ -193,7 +189,7 @@ def _pack_reps(sets: DataFrame) -> DataFrame:
     bloom 64-bit fingerprint, sz, group_n). The shared stage both the
     symmetric join and the containment decon build on.
 
-    ONE aggregation, no join-back (r19): within a ``set_key`` group
+    ONE aggregation, no join-back: within a ``set_key`` group
     every row carries the IDENTICAL sorted ``toks`` array (the key is
     its digest), so ``first(toks)`` is deterministic-by-value and the
     old groupBy + re-join against the sets frame collapsed into a
@@ -234,19 +230,17 @@ def _prefix_len(t_num: int, t_den: int, sz=None):
     ) + F.lit(1)
 
 
-#: per-set size ceiling for the pigeonhole signature path. Since the
-#: r20 rewrite, frames whose largest set exceeds ``_SIG_EXPR_MAX_SZ``
-#: enumerate via the hash-aggregated stream (``_signature_rows``) —
-#: no single-row array materialization and no per-(k, gid) rescan,
-#: so the r19 review's ~10 MB / ~10⁹-element-op per-row cliffs are
-#: gone from the large-set regime where they lived — and the cap
-#: now bounds the total
-#: SIGNATURE VOLUME a set fans out into the candidate join:
-#: Σ_{k∈K(s)} k ≈ O(s²·d²/(t_num·t_den)) rows per set, ~130k at the
-#: cap and t = 19/20. Beyond it the prefix path's O(s)-rows-per-set
-#: generation wins regardless of vocabulary shape, so the whole-frame
-#: routing keeps the cap (same risk class as the forced-broadcast
-#: rejection in _verify_candidates).
+#: per-set size ceiling for the pigeonhole signature path. Frames whose
+#: largest set exceeds ``_SIG_EXPR_MAX_SZ`` enumerate via the
+#: hash-aggregated stream (``_signature_rows``) — no single-row array
+#: materialization and no per-(k, gid) rescan, so the ~10 MB /
+#: ~10⁹-element-op per-row cliffs of a per-row enumeration are gone from the
+#: large-set regime where they lived — and the cap now bounds the total
+#: SIGNATURE VOLUME a set fans out into the candidate join: Σ_{k∈K(s)} k ≈
+#: O(s²·d²/(t_num·t_den)) rows per set, ~130k at the cap and t = 19/20.
+#: Beyond it the prefix path's O(s)-rows-per-set generation wins regardless
+#: of vocabulary shape, so the whole-frame routing keeps the cap (same risk
+#: class as the forced-broadcast rejection in _verify_candidates).
 PIGEONHOLE_MAX_SZ = 20_000
 
 
@@ -254,7 +248,7 @@ def _size_canonical():
     """Size-canonical orientation for the a/b-aliased self-joins:
     the index side a is the smaller set, ties by doc_id — shared by
     BOTH candidate generators so the lemma-side conventions cannot
-    drift (r19 review)."""
+    drift."""
     return (F.col("a.sz") < F.col("b.sz")) | (
         (F.col("a.sz") == F.col("b.sz"))
         & (F.col("a.doc_id") < F.col("b.doc_id"))
@@ -271,13 +265,13 @@ def _length_ok(t_num: int, t_den: int):
 
 
 def _bloom_ok(t_num: int, t_den: int):
-    """Bloom miss-count bound over the a/b aliases (r16, lossless —
+    """Bloom miss-count bound over the a/b aliases (lossless —
     see _BLOOM_EXPR): a qualifying pair needs overlap
     r = ⌈t·(sza+szb)/(t_num+t_den)⌉, i.e. at most sza − r misses on
     a's side (szb − r on b's); the 64-bit fingerprints LOWER-bound
     the misses with two long bit-ops per pair. One definition for
     both candidate paths — the arithmetic is completeness-critical
-    and must stay in lockstep (r19 review)."""
+    and must stay in lockstep."""
     ssum = F.col("a.sz") + F.col("b.sz")
     req_overlap = F.floor(
         (ssum * t_num + (t_num + t_den - 1)) / (t_num + t_den)
@@ -336,11 +330,10 @@ def _signature_rows_expr(
 ) -> DataFrame:
     """Projection-only signature enumeration — identical rows to
     ``_signature_rows`` (identity test-pinned), built as one flatten
-    expression per set with a per-(k, gid) ``filter`` scan. Zero
-    shuffles, so it wins on fixed cost when every set is small; the
-    per-set compute grows ~ s³ near the size cap (the r19 advice's
-    cliff), which is why ``_pigeonhole_candidates`` routes frames by
-    their largest set (``_SIG_EXPR_MAX_SZ``)."""
+    expression per set with a per-(k, gid) ``filter`` scan. Zero shuffles,
+    so it wins on fixed cost when every set is small; the per-set compute
+    grows ~ s³ near the size cap, which is why ``_pigeonhole_candidates``
+    routes frames by their largest set (``_SIG_EXPR_MAX_SZ``)."""
     sig_expr = f"""
       flatten(transform(
         sequence({lo_sql}, {hi_sql}),
@@ -371,7 +364,7 @@ def _signature_rows(
     identical group may hold no tokens at all on either side, and
     the equi-join must still see it agree (0 = 0).
 
-    r20 (the r19 advice item): group digests come from ONE
+    Group digests come from ONE
     hash-aggregated pass over the exploded (k, token-digest) stream —
     O(s·|k-range|) element operations per set, map-side combined
     before any shuffle since a set's tokens start in one row —
@@ -448,7 +441,7 @@ def _pigeonhole_candidates(
     max_sz: "int | None" = None,
 ) -> DataFrame:
     """Candidate pairs via the LOSSLESS pigeonhole signature join —
-    the r19 'LSH prefilter' for HIGH thresholds (the PartEnum /
+    an 'LSH prefilter' for HIGH thresholds (the PartEnum /
     partition-signature idea: Arasu, Ganti & Kaushik, "Efficient
     Exact Set-Similarity Joins", VLDB 2006, partition level; banded
     like LSH but deterministic, so completeness is a lemma, not a
@@ -470,22 +463,20 @@ def _pigeonhole_candidates(
     fixture has 31 distinct tokens — Σ df² candidate pairs), while
     group-XOR equality is selective exactly where Jaccard is not met.
 
-    Asymmetric probe/index roles keep the blow-up bounded: the probe
-    side keeps ONLY its own k(sz) rows (a qualifying pair must match
-    at k(min-side sz), and the probe is the min side under the
-    size-canonical order), while the index side emits one signature
-    row per group for EVERY k a smaller qualifying partner could
-    demand — k ∈ [k(⌈t·s⌉), k(s)], an integer range because k(·) is
-    nondecreasing. Per-set signature volume is Σ_{k∈range} k rows;
-    enumeration COMPUTE is O(s·|range|) element ops via the
-    ``_signature_rows`` hash-aggregated builder (r20 — the old
-    per-(k, gid) filter rescan paid an extra factor of s near the
-    cap) — economical for d/t_num ≤ 1/9, which is what the caller
-    gates on. False positives (XOR collisions, empty-group
-    agreements) are killed by the unchanged array-intersect verify;
-    the brute-force DuckDB oracle cross-checks completeness pair for
-    pair. The length filter and the bloom miss-count bound ride the
-    join condition exactly as on the prefix path."""
+    Asymmetric probe/index roles keep the blow-up bounded: the probe side
+    keeps ONLY its own k(sz) rows (a qualifying pair must match at
+    k(min-side sz), and the probe is the min side under the size-canonical
+    order), while the index side emits one signature row per group for EVERY
+    k a smaller qualifying partner could demand — k ∈ [k(⌈t·s⌉), k(s)], an
+    integer range because k(·) is nondecreasing. Per-set signature volume is
+    Σ_{k∈range} k rows; enumeration COMPUTE is O(s·|range|) element ops via
+    the ``_signature_rows`` hash-aggregated builder (a per-(k, gid) filter
+    rescan would pay an extra factor of s near the cap) — economical for
+    d/t_num ≤ 1/9, which is what the caller gates on. False positives (XOR
+    collisions, empty-group agreements) are killed by the unchanged
+    array-intersect verify; the brute-force DuckDB oracle cross-checks
+    completeness pair for pair. The length filter and the bloom miss-count
+    bound ride the join condition exactly as on the prefix path."""
     d = t_den - t_num
     lo_sql = f"((sz * {t_num} + {t_den - 1}) div {t_den}) * {d} div {t_num} + 1"
     hi_sql = f"sz * {d} div {t_num} + 1"
@@ -541,7 +532,7 @@ def setsim_join(
     candidate join → array-intersect verify).
 
     Candidate generation is gated on the threshold AND the corpus's
-    largest set (r19): at t ≥ 9/10 with max sz ≤ pigeonhole_max_sz
+    largest set: at t ≥ 9/10 with max sz ≤ pigeonhole_max_sz
     the pigeonhole signature join (``_pigeonhole_candidates``)
     replaces the rare-first prefix equi-join — same completeness
     guarantee, but candidates come from a 64-bit group-XOR key
@@ -594,9 +585,9 @@ def _prefix_candidates(
             )
         ),
     )
-    # r16 perf pass: the prefix frame carries each representative's
+    # The prefix frame carries each representative's
     # 64-bit bloom fingerprint (one long, projected straight through
-    # rtok — NOT an extra join; r16 review #4), so the lossless
+    # rtok — NOT an extra join), so the lossless
     # miss-count bound can ride the candidate join.
     prefix = ranked.filter(F.col("rank") <= _prefix_len(t_num, t_den)).select(
         "doc_id", "token", "rank", "sz", "group_n", "bloom"
@@ -652,7 +643,7 @@ def _verify_candidates(
     packed array back and count the intersection inside codegen — one
     row per candidate. NO forced broadcast: the rep frames are
     corpus-of-distinct-sets-sized, so AQE must stay free to pick
-    shuffle vs broadcast by measured size (r16 review #2 — a forced
+    shuffle vs broadcast by measured size (a forced
     broadcast would hit Spark's broadcast-table limit at the 100 TB
     design point). Duplicate candidates (a pair surviving via several
     prefix tokens) verify identically and collapse in the final
@@ -682,7 +673,7 @@ def _verify_candidates(
 
 
 def q_setsim_join(documents: DataFrame) -> DataFrame:
-    """r14 declared query: the exact set-similarity self-join at
+    """Declared query: the exact set-similarity self-join at
     Jaccard ≥ 19/20 — ``setsim_join`` over the documents fixture
     (exact-set collapse, then the prefix+positional-filtered join
     over distinct sets, array-intersect verify). The DuckDB oracle
@@ -767,8 +758,7 @@ def _containment_from_reps(
             ),
         )
     )
-    # bloom_p rides the projection from p_reps (no extra join — r16
-    # review #4)
+    # bloom_p rides the projection from p_reps (no extra join)
     p_prefix = p_tokens.filter(F.col("rank") <= _prefix_len(c_num, c_den)).select(
         F.col("doc_id").alias("probe_id"), "token", "sz", "bloom_p"
     )
@@ -776,12 +766,12 @@ def _containment_from_reps(
     # duplicates + countDistinct in the aggregate (5.3 s vs 6.9 s per
     # bench-shaped run at sf0.1) — the dedup shuffle pays for itself
     # by shrinking the array-intersect frame.
-    # Length filter IN the candidate join (r15: the asymmetric form of
+    # Length filter IN the candidate join (the asymmetric form of
     # the PPJoin length filter): |A∩B| ≤ |B|, so a train set with
     # sz_t·den < sz·num can never reach ⌈c·|A|⌉ overlap — lossless,
     # and it prunes a measured 42% of candidates at sf0.1 BEFORE the
     # distinct shuffle and the digest-array verify.
-    # Bloom miss-count bound (r16, lossless — see _BLOOM_EXPR), the
+    # Bloom miss-count bound (lossless — see _BLOOM_EXPR), the
     # asymmetric form: containment needs overlap ⌈c·|A|⌉, i.e. at
     # most |A| − ⌈c·|A|⌉ probe tokens may miss the train set, and
     # bit_count(bloom_p & ~bloom_t) lower-bounds the misses — two
@@ -849,7 +839,7 @@ def _containment_from_reps(
 
 
 def q_containment_decon(documents: DataFrame) -> DataFrame:
-    """r14 declared query: containment decontamination at c ≥ 19/20 —
+    """Declared query: containment decontamination at c ≥ 19/20 —
     ``containment_decon`` with the documents fixture split into an
     eval slice (doc_id % 10 == 0, the probes) and a training corpus
     (the rest). One row per probe representative, contaminated or
@@ -858,7 +848,7 @@ def q_containment_decon(documents: DataFrame) -> DataFrame:
     identically — the asymmetric prefix lemma's completeness is
     cross-checked probe for probe, and every output column is an
     integer (first_hit NULL on clean probes). The corpus tokenizes
-    once AND collapses once (r19): a single (side, set_key)
+    once AND collapses once: a single (side, set_key)
     aggregation packs BOTH sides' representatives in one keyed
     exchange and one checkpoint — collapsing per side is preserved
     exactly (a probe and a train document with identical token sets

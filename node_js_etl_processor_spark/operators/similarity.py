@@ -240,7 +240,7 @@ def q_dedup_embedding(embeddings: DataFrame, threshold: float = 0.30) -> DataFra
 def embedding_near_dup_keepers(
     embeddings: DataFrame, threshold: float = 0.30
 ) -> DataFrame:
-    """Batch near-dup KEEPER rule in embedding space (r9): a vector
+    """Batch near-dup KEEPER rule in embedding space: a vector
     survives iff no SRP-sig-blocked pair links it at cosine ≥
     threshold to a smaller-vec_id vector — regardless of that
     vector's own fate, exactly ``dedup.minhash_near_dup_keepers``'s
@@ -1216,8 +1216,8 @@ def q_ivfpq_rescore(embeddings: DataFrame, k: int = 10) -> DataFrame:
     shortlist only. Fully oracle-checked end to end (the SQL replays
     cells → residuals → codes → rounded-ADC ordering → LIMIT 3k →
     exact cosine), closing the one stage of the production ANN path
-    (``ivfpq_probe(..., rescore=R)``) that r6 left outside the
-    differential gate."""
+    (``ivfpq_probe(..., rescore=R)``) that would otherwise sit outside
+    the differential gate."""
     probe = _probe_vector(embeddings, 0)
     return ivfpq_rescore_topk(embeddings, probe, k=k, rescore=3, exclude_vec_id=0)
 
@@ -1264,7 +1264,7 @@ def q_ivfpq_topk(embeddings: DataFrame, k: int = 10) -> DataFrame:
     al. 2011 §V) under the oracle gate — coarse IVF cells prune the
     corpus to the probe's 2 nearest cells, then ADC scores the
     survivors from the PQ codes of their RESIDUALS
-    ``y − centroid(cell)`` (the published §V form; r6 shipped a
+    ``y − centroid(cell)`` (the published §V form, not a
     raw-vector variant) via the per-cell-constant decomposition of
     ``ivfpq_adc_topk``. Fully oracle-checked: the DuckDB SQL
     re-derives cell assignment, probe-cell choice, the residual
@@ -1291,8 +1291,8 @@ def embedding_pool(
     SUM columns (element_at per dimension), reassembled into an array
     after the agg: every partial-agg buffer is exactly dim doubles +
     a count, map-side combine applies, and no group ever materializes
-    its member vectors (r8 — the previous aggregate(collect_list)
-    form LOOKED like a fold but buffered O(group_size × dim) per
+    its member vectors (an aggregate(collect_list)
+    form LOOKS like a fold but buffers O(group_size × dim) per
     group, an OOM risk for skewed groups at scale; posexplode+avg
     would bound buffers too but costs a dim× row blowup through the
     shuffle). Returns (group, n, mean_emb array<double>)."""
@@ -1405,8 +1405,8 @@ def semantic_decontaminate(
     translated leakage; this tier catches vectors an embedding model
     maps near an eval item.
 
-    Blocking is LSH BANDING sized to the threshold (r8 — a single
-    exact 8-plane signature caught a pair at cosine 0.30 with
+    Blocking is LSH BANDING sized to the threshold (a single
+    exact 8-plane signature catches a pair at cosine 0.30 with
     probability (1 − acos(0.3)/π)^8 ≈ 1.6%, useless for a safety
     gate): ``srp_band_count`` picks b so that b OR-ed
     ``band_planes``-plane bands reach ``target_recall`` at the
@@ -1429,7 +1429,7 @@ def semantic_decontaminate(
     # spread: the banded candidate+verify chain is NARROW up to the
     # argmax (the eval side broadcasts), so a single-file train input
     # would run the whole cosine verify on one core (measured 14.3 s
-    # vs 2.6 s at sf0.1 — SCALE.md r8); structural no-op at scale
+    # vs 2.6 s at sf0.1); structural no-op at scale
     train = spread(train)
     n_bands = srp_band_count(threshold, band_planes, target_recall)
     planes = _srp_hyperplanes(n_bands * band_planes)
@@ -1474,7 +1474,7 @@ def semantic_decontaminate(
             6,
         ).alias("cosine"),
     ).filter(F.col("cosine") >= F.lit(threshold))
-    # r20-opt: the per-train argmax as ONE keyed aggregation instead of
+    # The per-train argmax as ONE keyed aggregation instead of
     # a row_number window — max of the (cosine, -eval_id) struct is
     # lexicographic, so it picks max cosine then min eval_id, exactly
     # the window's (cosine desc, eval_id asc) first row. The window

@@ -100,7 +100,7 @@ def countmin_estimate(
 
 
 def q_countmin(orders: DataFrame) -> DataFrame:
-    """Declared query (r8): Count-Min over the o_custkey stream —
+    """Declared query: Count-Min over the o_custkey stream —
     build the 4×64 grid, estimate every distinct key, and report the
     estimate against the exact count (the CM guarantee exact ≤ est is
     a tested invariant; the overshoot column makes collision behavior
@@ -184,7 +184,7 @@ def bloom_probe(
 
 
 def q_bloom(orders: DataFrame) -> DataFrame:
-    """Declared query (r8): Bloom-filter membership — build the
+    """Declared query: Bloom-filter membership — build the
     set-bit table over the o_orderkey % 3 != 0 slice (the 'accepted'
     set), probe EVERY order key, and report the filter's verdict next
     to true membership. The no-false-negative guarantee and the
@@ -205,7 +205,7 @@ def q_bloom(orders: DataFrame) -> DataFrame:
 
 def countmin_read_store(spark: SparkSession, store_path: str) -> DataFrame:
     """Resolve a ``countmin_ingest_stream`` store to its CURRENT grid
-    (r10 — the store is versioned: ``v_<tag>`` directories plus an
+    (the store is versioned: ``v_<tag>`` directories plus an
     atomically-switched ``_CURRENT`` pointer, which is what makes the
     merge loop exactly-once). Readers always resolve the pointer at
     read time; a missing pointer means no batch ever committed."""
@@ -343,7 +343,7 @@ def hll_estimate(regs: DataFrame, group_col: str) -> DataFrame:
 
 
 def q_hll_distinct(orders: DataFrame) -> DataFrame:
-    """r11-candidate query: distinct customers per order priority via
+    """Declared query: distinct customers per order priority via
     an ORACLE-CHECKABLE HyperLogLog (Flajolet et al., AofA 2007) —
     unlike ``q_approx_distinct`` (which validates Spark's built-in
     engine-specific HLL++ against a bound), every stage here is
@@ -460,7 +460,7 @@ def hdr_quantiles(sketch: DataFrame, group_col: str) -> DataFrame:
 
 
 def q_hdr_quantiles(lineitem: DataFrame) -> DataFrame:
-    """r11-candidate query: price quantiles per return flag via an
+    """Declared query: price quantiles per return flag via an
     ORACLE-CHECKABLE mergeable histogram — the quantile member of the
     deterministic-sketch family (countmin = counts, HLL =
     cardinality, HDR = order statistics). Prices become cents via
@@ -484,7 +484,7 @@ def q_hdr_quantiles(lineitem: DataFrame) -> DataFrame:
 
 
 def q_hll_rollup(orders: DataFrame) -> DataFrame:
-    """r11-candidate query: the ALGEBRAIC ROLLUP property of the HLL
+    """Declared query: the ALGEBRAIC ROLLUP property of the HLL
     register file as a query — per-priority sketches AND the global
     sketch, where the global registers are NOT a rescan but the
     cell-wise MAX of the per-priority register files (exactly how a
@@ -523,7 +523,7 @@ def q_hll_rollup(orders: DataFrame) -> DataFrame:
 
 
 def q_hll_intersect(orders: DataFrame) -> DataFrame:
-    """r11-candidate query: sketch SET ALGEBRA — estimated customer
+    """Declared query: sketch SET ALGEBRA — estimated customer
     overlap between every pair of order priorities by
     inclusion-exclusion over HLL register files: |A∩B| ≈ est(A) +
     est(B) − est(A∪B), where est(A∪B) comes from merging the two
@@ -624,7 +624,7 @@ def q_hll_intersect(orders: DataFrame) -> DataFrame:
 
 
 def q_hll_timeline(events: DataFrame) -> DataFrame:
-    """r11-candidate query: TIME-ROLLED cardinality — distinct users
+    """Declared query: TIME-ROLLED cardinality — distinct users
     per DAY via HLL register files, with the MONTH level computed by
     cell-wise MAX over the stored day registers (NOT a rescan: the
     operational pattern where per-day sketches persist and any

@@ -1,13 +1,12 @@
-"""Sorted-neighborhood dedup blocking — DECLARED in r16
-(built + pytest-oracle-verified in r15): the classic entity-resolution blocking method
-(Hernández & Stolfo, SIGMOD 1995, "The Merge/Purge Problem for Large
-Databases"): sort the corpus by a fuzzy key, slide a fixed window of
-w over the sorted order, and verify only window-local pairs — the
-THIRD blocking strategy in the dedup family, complementing the
-deletion-neighborhood generator (FastSS, ``dedup.q_fuzzy_match``)
-and the signature blockers (minhash/simhash): SNM trades recall
-guarantees for a hard candidate budget of n·w pairs, the right deal
-when the sort key clusters true duplicates.
+"""Sorted-neighborhood dedup blocking: the classic entity-resolution
+blocking method (Hernández & Stolfo, SIGMOD 1995, "The Merge/Purge Problem
+for Large Databases"): sort the corpus by a fuzzy key, slide a fixed window
+of w over the sorted order, and verify only window-local pairs — the THIRD
+blocking strategy in the dedup family, complementing the
+deletion-neighborhood generator (FastSS, ``dedup.q_fuzzy_match``) and the
+signature blockers (minhash/simhash): SNM trades recall guarantees for a
+hard candidate budget of n·w pairs, the right deal when the sort key
+clusters true duplicates.
 
 Verification is exact Levenshtein ≤ max_dist on the normalized key.
 Edit-distance UNITS differ across engines on non-ASCII text — Spark
@@ -52,7 +51,7 @@ _RANK_PARTS = 32
 
 
 def _ascii_fold_table() -> "tuple[str, str]":
-    """The NFKD transliteration table (r16 verdict hardening ask):
+    """The NFKD transliteration table (non-ASCII hardening):
     every Latin codepoint in U+00A0–U+024F / U+1E00–U+1EFF whose NFKD
     decomposition strips (combining marks removed) to exactly ONE
     ASCII character, plus the lone combining marks U+0300–U+036F
@@ -128,14 +127,14 @@ def q_snm_pairs(
     max_dist: int = SNM_MAX_DIST,
     transliterate: bool = False,
 ) -> DataFrame:
-    """Declared query (r16): sorted-neighborhood candidate pairs
+    """Declared query: sorted-neighborhood candidate pairs
     over customer names — rows (custkey_a, custkey_b, dist) for every
     pair within ``window`` positions of each other in the
     (lower(trim(c_name)), c_custkey) order whose normalized keys are
     within ``max_dist`` edits. custkey_a precedes custkey_b in the
     sort order, so each pair is emitted exactly once.
 
-    ``transliterate=True`` (r17, opt-in — the r16 verdict's
+    ``transliterate=True`` (opt-in — the
     non-ASCII hardening) runs the NFKD-derived ``ascii_fold`` before
     the ASCII-domain gate, so accented Latin names (José, Müller)
     enter the blocking instead of being refused; keys that still
@@ -176,19 +175,18 @@ def q_snm_pairs(
 
 
 def snm_pairs_oracle(transliterate: bool = False) -> str:
-    """The DuckDB twin — the deliberately single-machine formulation
-    (one global ROW_NUMBER + a rank-distance self-join),
-    cross-checking the distributed rank+offset rewrite. Window and
-    distance thresholds interpolate SNM_WINDOW / SNM_MAX_DIST (r16
-    advice item) so the oracle can never drift from the engine
-    defaults; ``transliterate=True`` interpolates the SAME
-    FOLD_FROM/FOLD_TO table the engine's ``ascii_fold`` applies
-    (translate() deletes unpaired from-chars in both engines), so
-    the fold is cross-checked bit-for-bit, not re-derived from the
-    oracle engine's own normalization. The DOUBLED lower —
-    lower(translate(lower(trim(..)))) — deliberately mirrors the
-    engine's post-fold re-lower (q_snm_pairs); simplify either side
-    alone and bit-parity breaks, so keep them symmetric."""
+    """The DuckDB twin — the deliberately single-machine formulation (one
+    global ROW_NUMBER + a rank-distance self-join), cross-checking the
+    distributed rank+offset rewrite. Window and distance thresholds
+    interpolate SNM_WINDOW / SNM_MAX_DIST so the oracle can never drift from
+    the engine defaults; ``transliterate=True`` interpolates the SAME
+    FOLD_FROM/FOLD_TO table the engine's ``ascii_fold`` applies (translate()
+    deletes unpaired from-chars in both engines), so the fold is
+    cross-checked bit-for-bit, not re-derived from the oracle engine's own
+    normalization. The DOUBLED lower — lower(translate(lower(trim(..)))) —
+    deliberately mirrors the engine's post-fold re-lower (q_snm_pairs);
+    simplify either side alone and bit-parity breaks, so keep them
+    symmetric."""
     key = "lower(trim(c_name))"
     if transliterate:
         key = f"lower(translate({key}, '{FOLD_FROM}', '{FOLD_TO}'))"
@@ -209,7 +207,6 @@ def snm_pairs_oracle(transliterate: bool = False) -> str:
 """
 
 
-#: the registered (default-path) twin — registry-wired in r16;
-#: byte-identical to the pre-r17 constant (transliterate stays
-#: opt-in, so the declared query's semantics are unchanged)
+#: the registered (default-path) twin (transliterate stays opt-in,
+#: so the declared query's semantics do not depend on it)
 SNM_PAIRS_ORACLE = snm_pairs_oracle()

@@ -1,4 +1,4 @@
-"""ExactSubstr-style duplicate-SPAN extraction (r16): find every
+"""ExactSubstr-style duplicate-SPAN extraction: find every
 maximal token-index extent of a document that is covered by w-token
 shingles occurring ≥ 2 times in the corpus — the span-level
 deduplication signal of Lee, Ippolito, Nystrom, Zhang, Eck,
@@ -70,13 +70,11 @@ SPAN_W = 25
 
 def token_array():
     """The corpus tokenization (lowercase, whitespace-split, empties
-    dropped) as ONE Column expression — the single definition the
-    span family, q_doc_novelty's totals branch AND the diversity /
+    dropped) as ONE Column expression — the single definition the span
+    family, q_doc_novelty's totals branch AND the diversity /
     vocabulary-store lane (operators/diversity.py) share, so a future
-    tokenization tweak cannot silently desynchronize the families
-    (r16 advice: diversity._toks was a textual copy of this
-    expression). Built lazily so importing the module needs no
-    active session."""
+    tokenization tweak cannot silently desynchronize the families. Built
+    lazily so importing the module needs no active session."""
     return F.filter(
         F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != ""
     )
@@ -97,8 +95,7 @@ def shingle_positions(documents: DataFrame, w: int = SPAN_W) -> DataFrame:
     newline-joined tokens (see the module docstring). The position
     range is guarded with ``if(size >= w, sequence(...), array())``
     because Spark's ``sequence(1, 0)`` auto-DECREMENTS into [1, 0]
-    instead of yielding an empty range (the r15 F.sequence lesson,
-    pinned in tests)."""
+    instead of yielding an empty range (pinned in tests)."""
     if w < 1:
         raise ValueError("shingle_positions needs w >= 1")
     ts = corpus_tokens(documents)
@@ -139,7 +136,7 @@ def extents_from_positions(sh: DataFrame, w: int = SPAN_W) -> DataFrame:
 
 def extents_from_dup_positions(dup: DataFrame, w: int = SPAN_W) -> DataFrame:
     """The sweep-line island merge over an ALREADY-GATED (doc_id,
-    pos) duplicated-position frame — the r17 split that lets the
+    pos) duplicated-position frame — the split that lets the
     drop-scoring read path (novelty.novelty_of_drop) supply its own
     duplication verdicts (stored-corpus counts + drop counts) and
     reuse the IDENTICAL merge, so batch and store-read extents can
@@ -174,7 +171,7 @@ def extents_from_dup_positions(dup: DataFrame, w: int = SPAN_W) -> DataFrame:
 
 
 def q_span_extents(documents: DataFrame) -> DataFrame:
-    """Declared query (r16): duplicated-span extents at w = SPAN_W
+    """Declared query: duplicated-span extents at w = SPAN_W
     over the documents corpus. The DuckDB oracle rebuilds the shingle
     hashes, the corpus-wide duplication gate and the sweep-line merge
     over identical integer positions — every output column BIGINT,
@@ -182,8 +179,8 @@ def q_span_extents(documents: DataFrame) -> DataFrame:
     return span_extents(documents)
 
 
-#: the DuckDB twin — width interpolated from SPAN_W (the r16 advice
-#: discipline) so the oracle can never drift from the engine default
+#: the DuckDB twin — width interpolated from SPAN_W so the oracle can never
+#: drift from the engine default
 SPAN_EXTENTS_ORACLE = rf"""
     WITH toks AS (
       SELECT doc_id,

@@ -246,7 +246,7 @@ def q_hypertable_rollup(events: DataFrame) -> DataFrame:
 
 
 def q_gap_fill(events: DataFrame) -> DataFrame:
-    """Time-series gap filling (r8) — the hypertable
+    """Time-series gap filling — the hypertable
     ``time_bucket_gapfill`` pattern: per event_type, a complete daily
     spine from that type's first to last active day, with empty days
     zero-filled for counts and last-observation-carried-forward for
@@ -305,7 +305,7 @@ def q_gap_fill(events: DataFrame) -> DataFrame:
 
 
 def q_retention(events: DataFrame) -> DataFrame:
-    """Daily cohort retention (r8) — the standard product-analytics
+    """Daily cohort retention — the standard product-analytics
     triangle: users grouped by FIRST-activity day, then for each
     (cohort_day, day_offset) the distinct users active again. The
     retention rate is emitted as exact integer arithmetic —

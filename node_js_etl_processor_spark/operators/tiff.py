@@ -316,7 +316,7 @@ def tiff_features(media: DataFrame) -> DataFrame:
 
 
 def q_tiff_features(documents: DataFrame) -> DataFrame:
-    """r11-candidate query: the full distributed TIFF loop —
+    """Declared query: the full distributed TIFF loop —
     ``synth_tiff_media`` (real encode: both byte orders, RGB and
     multi-strip gray) → ``tiff_features`` (real IFD walk + strip
     reassembly). The DuckDB oracle recomputes byte order, geometry,

@@ -1,5 +1,4 @@
-"""Per-group OLS trend via exact integer sufficient statistics —
-DECLARED in r17 (built + staged-oracle-verified in r16):
+"""Per-group OLS trend via exact integer sufficient statistics:
 simple linear regression of order value on order date, the
 monitoring pass a pipeline runs per segment ("is this source's
 quality/price/volume drifting, and how fast?"). The textbook
@@ -48,7 +47,7 @@ TREND_STAT_COLS = ("n", "sx", "sy", "sxx", "sxy")
 def trend_stats(orders: DataFrame) -> DataFrame:
     """Per-priority integer sufficient statistics (o_orderpriority,
     n, sx, sy, sxx, sxy) — the mergeable-partials half of the
-    regression (r17 store-lane split): partials from disjoint drops
+    regression (the store lane's half): partials from disjoint drops
     SUM to the corpus statistics exactly, so the streamed store's
     merge law is plain per-key addition."""
     base = orders.filter(
@@ -93,14 +92,14 @@ def trend_from_stats(stats: DataFrame) -> DataFrame:
 
 
 def q_ols_trend(orders: DataFrame) -> DataFrame:
-    """Declared query (r17): per-priority OLS of price-in-cents
+    """Declared query: per-priority OLS of price-in-cents
     on day-offset — (o_orderpriority, n, sx, sy, sxx, sxy,
     slope_cents_per_day); sums exact BIGINT, slope one fixed-shape
     double expression (module docstring has the parity argument)."""
     return trend_from_stats(trend_stats(orders))
 
 
-#: the DuckDB twin, registry-wired in r17 — identical
+#: the DuckDB twin — identical
 #: integer sufficient statistics, identical fixed-shape double slope.
 OLS_TREND_ORACLE = f"""
     WITH base AS (

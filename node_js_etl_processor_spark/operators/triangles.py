@@ -1,5 +1,4 @@
-"""Exact triangle counting over the co-purchase graph —
-DECLARED in r17 (built + staged-oracle-verified in r16): the
+"""Exact triangle counting over the co-purchase graph: the
 degree-ordered edge orientation algorithm (Schank & Wagner, WEA 2005,
 "Finding, Counting and Listing All Triangles in Large Graphs"; the
 MapReduce formulation is Suri & Vassilvitskii, WWW 2011's MR-B), the
@@ -56,7 +55,7 @@ def copurchase_edges(
     """Undirected (a, b) edges, a < b canonical: part pairs co-ordered
     in ≥ min_support baskets (the q_itemset_pairs support gate without
     the per-part statistics). ``max_basket`` passes through to the
-    mega-basket cap (r16 review: the |B|² graceful-degradation lever
+    mega-basket cap (the |B|² graceful-degradation lever
     must stay reachable from every consumer of the pair explode)."""
     baskets = order_baskets(lineitem, max_basket)
     return (
@@ -120,7 +119,7 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     tris = wedges.join(closing, ["t1", "t2"])
     # ONE evaluation of the wedge+closing join: the former 3-branch
     # unionAll duplicated the whole join subtree per corner in the
-    # physical plan (r20 plan audit — Union over three
+    # physical plan (Union over three
     # BroadcastHashJoin copies); exploding the corner array emits the
     # same 3 rows per triangle from a single join pass.
     corners = tris.select(
@@ -132,16 +131,15 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
 
 
 def q_triangles(lineitem: DataFrame) -> DataFrame:
-    """Declared query (r17): per-part triangle participation in
+    """Declared query: per-part triangle participation in
     the co-purchase graph. The oracle brute-forces the id-canonical
     3-way edge join with NO orientation — the rewrite's exactness is
     the thing checked."""
     return triangle_counts(copurchase_edges(lineitem))
 
 
-#: the DuckDB twin, registry-wired in r17 — support
-#: threshold interpolated from MIN_SUPPORT (the r16 advice
-#: discipline); deliberately the UNORIENTED brute-force 3-way join
+#: the DuckDB twin — support threshold interpolated from MIN_SUPPORT;
+#: deliberately the UNORIENTED brute-force 3-way join
 TRIANGLES_ORACLE = f"""
     WITH b AS (
       SELECT l_orderkey, list_sort(list(DISTINCT l_partkey)) AS parts

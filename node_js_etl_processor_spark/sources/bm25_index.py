@@ -11,7 +11,7 @@ mold of similarity_layout / dedup_store:
   term-hash bucket (a directory per raw term would explode the
   namespace at web vocab sizes); plus the per-term df table (same
   bucketing) and the corpus stats;
-- ``append_bm25_index`` (r9) ingests a NEW document batch
+- ``append_bm25_index`` ingests a NEW document batch
   incrementally — the maintenance story every other store here
   already had. df and stats are stored as MERGEABLE PARTIALS (the
   Count-Min/HLL trick applied to index statistics): an append writes
@@ -107,7 +107,7 @@ def append_bm25_index(
     regardless of index size — the same access pattern as
     append_minhash_store. Batch doc_ids must be new to the index.
 
-    The append goes through ``markers.stage_and_publish`` (r10): the
+    The append goes through ``markers.stage_and_publish``: the
     batch's rows land in ``<path>/_staging/<tag>`` first and are then
     renamed into the live tree under batch-tagged names, so a crashed
     append is recoverable instead of leaving half-published postings:
@@ -174,7 +174,7 @@ def bm25_from_index(
     )
     stats_raw = spark.read.parquet(f"{path}/stats")
     if "sum_dl" not in stats_raw.columns:
-        # layout guard (r10): pre-r9 indexes stored (n_docs, avgdl)
+        # layout guard: older indexes stored (n_docs, avgdl)
         # finals instead of mergeable (n_docs, sum_dl) partials; the
         # reader's SUMs cannot reconstruct avgdl from them
         raise ValueError(

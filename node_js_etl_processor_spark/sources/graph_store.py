@@ -171,7 +171,7 @@ def compact_edge_store(spark: SparkSession, path: str) -> "tuple[int, int]":
     append (single-writer — the ingest loop's ``compact_every`` slot
     satisfies this).
 
-    In-flight-publish guard (r19 — the r18 vocab/span-store
+    In-flight-publish guard (the vocab/span-store
     discipline): a batch whose ``stage_and_publish`` into this
     generation crashed BEFORE its applied marker has some of its
     ``<tag>-*`` files already renamed into the live tree. Folding

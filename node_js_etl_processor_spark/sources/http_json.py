@@ -5,25 +5,17 @@ The reference fans out parallel GETs to
 list, validates each response is a JSON array, and unions results;
 per-source failures are logged and swallowed (O2, server.js:56-58).
 
-Two engine paths:
+The engine path is ``fetch_universities_driver``: concurrent fetches
+on the driver via ThreadPoolExecutor, one task per country, then one
+``spark.createDataFrame(rows, schema)`` with an explicit schema (no
+inference). The reference's scale is thousands of rows, so the driver
+fan-out is enough. A failed source contributes zero rows and an entry
+in the failure list, never a job abort.
 
-- **small (driver-side)** — the reference's actual scale (thousands of
-  rows): concurrent fetches on the driver via ThreadPoolExecutor →
-  ``spark.createDataFrame(rows, schema)``. Explicit schema, no
-  inference.
-- **scale (partitioned fetch)** — a DataFrame of URLs distributed with
-  ``mapInPandas``: each executor task fetches its slice of URLs, so
-  ingest bandwidth scales with the cluster, not the driver NIC. Used
-  when the source list is itself a table (thousands of endpoints /
-  paginated shards).
-
-Both isolate per-source failures: a failed URL contributes zero rows
-and an entry in the failure log, never a job abort.
-
-The driver path also isolates malformed rows: ``normalize_raw_row``
-coerces each feed row to the raw schema before ``createDataFrame``, so
-one row with a string-valued ``domains`` or a number-valued ``name``
-can never fail the whole refresh.
+It also isolates malformed rows: ``normalize_raw_row`` coerces each
+feed row to the raw schema before ``createDataFrame``, so one row with
+a string-valued ``domains`` or a number-valued ``name`` can never fail
+the whole refresh.
 """
 
 from __future__ import annotations
@@ -31,7 +23,7 @@ from __future__ import annotations
 import json
 import logging
 import math
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 from concurrent.futures import ThreadPoolExecutor
 from decimal import Decimal
 from typing import Any
@@ -165,57 +157,3 @@ def fetch_universities_driver(
     cleaned = [normalize_raw_row(r) for r in rows if isinstance(r, dict)]
     return spark.createDataFrame(cleaned, UNIVERSITIES_RAW_SCHEMA), failed
 
-
-def fetch_json_partitioned(
-    spark: SparkSession,
-    urls: Sequence[str],
-    fetcher=None,
-    partitions: int | None = None,
-) -> DataFrame:
-    """Scale path: distribute URL fetches across executors.
-
-    Builds a single-column URL DataFrame, repartitions so each task owns
-    a slice, and fetches inside ``mapInPandas`` (Arrow-batched). Output
-    rows carry (url, ok, error, payload_json) — parsing into the typed
-    schema happens as a separate relational step so fetch and parse can
-    be retried/cached independently.
-    """
-    import pandas as pd
-
-    fetcher = fetcher or _http_get_json
-    n_part = partitions or min(len(urls), 64) or 1
-    url_df = spark.createDataFrame([(u,) for u in urls], "url string").repartition(n_part)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"url": [], "ok": [], "error": [], "payload_json": []}
-            for u in pdf["url"]:
-                out["url"].append(u)
-                try:
-                    body = fetcher(u)
-                    out["ok"].append(True)
-                    out["error"].append(None)
-                    out["payload_json"].append(json.dumps(body))
-                except Exception as exc:  # per-source isolation (O2)
-                    out["ok"].append(False)
-                    out["error"].append(str(exc))
-                    out["payload_json"].append(None)
-            yield pd.DataFrame(out)
-
-    return url_df.mapInPandas(
-        run, "url string, ok boolean, error string, payload_json string"
-    )
-
-
-def parse_universities_payloads(payloads: DataFrame) -> DataFrame:
-    """Relational parse step for the partitioned fetch: explode each
-    JSON-array payload into typed raw rows (from_json with explicit
-    schema — no inference)."""
-    from pyspark.sql import functions as F
-
-    arr = F.from_json(F.col("payload_json"), ArrayType(UNIVERSITIES_RAW_SCHEMA))
-    return (
-        payloads.filter(F.col("ok"))
-        .select(F.explode(arr).alias("r"))
-        .select("r.*")
-    )

@@ -19,10 +19,10 @@ store rather than full reload):
   the touched buckets get new data files;
 - ``scd2_cdc_stream`` (streaming/warehouse.py) is the foreachBatch twin.
 
-**Manifest-committed layout (r10)** — the store is a miniature
-transactional table, closing the crash window the r9 dynamic
-partition overwrite left open (a crash mid-overwrite left some
-buckets updated and some not, indistinguishably):
+**Manifest-committed layout** — the store is a miniature
+transactional table, closing the crash window a dynamic partition
+overwrite leaves open (a crash mid-overwrite leaves some buckets
+updated and some not, indistinguishably):
 
     <store>/data_<tag>/bucket=K/part-*.parquet  -- immutable batch output
     <store>/m_<tag>                             -- manifest FILE:

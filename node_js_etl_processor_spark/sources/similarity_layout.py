@@ -105,7 +105,7 @@ def append_ann_layout(
     pq_codebooks: list[list[list[float]]] | None = None,
     batch_tag: str | None = None,
 ) -> None:
-    """Ingest a NEW vector batch into an existing layout (r9): the
+    """Ingest a NEW vector batch into an existing layout: the
     same signature/residual-code projections appended into the same
     sig/cell directories — vectors are per-row facts (no statistics to
     merge, unlike the BM25 df table), so an append is two O(|batch|)
@@ -115,7 +115,7 @@ def append_ann_layout(
     must be new to the layout. write(old) + append(new) ==
     write(old ∪ new) is test-pinned for both probe families.
 
-    The append goes through ``markers.stage_and_publish`` (r10) so a
+    The append goes through ``markers.stage_and_publish`` so a
     crashed append never leaves half-published sig/cell rows:
     ``batch_tag`` is the ingest loop's (checkpoint, batch_id) tag
     (recovered per batch via ``recover_partial``); ad-hoc batch
@@ -277,7 +277,7 @@ def dedup_embedding_delta(
     """Incremental embedding near-dup: a new embedding batch probed
     against the materialized ``by_sig`` layout — the SRP twin of
     ``dedup_store.dedup_simhash_delta``, completing the incremental-
-    store family (r8). Returns (vec_a, vec_b, cosine, pair_type) with
+    store family. Returns (vec_a, vec_b, cosine, pair_type) with
     pair_type ∈ {'new-old', 'new-new'}; vec_a is the new vector in
     new-old rows, vec_a < vec_b within new-new.
 

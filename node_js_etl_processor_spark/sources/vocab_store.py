@@ -156,16 +156,16 @@ def compact_vocab_store(spark: SparkSession, path: str) -> "tuple[int, int]":
     (files_before, files_after); crash-safety and the single-writer
     rule are graph_store.compact_edge_store's argument verbatim.
 
-    Crashed-append hygiene first (r18 review, the spanstore finding
-    applied here): a batch that crashed mid-publish left ``tag-*``
-    files and a live ``_staging/<tag>/_PUBLISHING`` manifest under
-    the generation. Folding those rows into the new generation would
-    put them beyond ``recover_partial``'s reach — the re-delivered
-    batch would then publish them AGAIN and the sums double-count.
-    So: a staged tag WITHOUT its applied marker is a crashed partial
-    — purge it exactly the way the re-delivery would; a staged tag
-    WITH its marker is a completed batch whose ``cleanup_staging``
-    crashed — fold its rows, drop only the stale staging tree."""
+    Crashed-append hygiene first (as in the span store): a batch that
+    crashed mid-publish left ``tag-*`` files and a live
+    ``_staging/<tag>/_PUBLISHING`` manifest under the generation. Folding
+    those rows into the new generation would put them beyond
+    ``recover_partial``'s reach — the re-delivered batch would then publish
+    them AGAIN and the sums double-count. So: a staged tag WITHOUT its
+    applied marker is a crashed partial — purge it exactly the way the
+    re-delivery would; a staged tag WITH its marker is a completed batch
+    whose ``cleanup_staging`` crashed — fold its rows, drop only the stale
+    staging tree."""
     from node_js_etl_processor_spark.streaming.markers import (
         _exists,
         recover_partial,
@@ -174,7 +174,7 @@ def compact_vocab_store(spark: SparkSession, path: str) -> "tuple[int, int]":
     old_gen = _gen_dir(path)
     staging = posixpath.join(old_gen, "_staging")
     for tag, is_dir in _listdir(staging) if _exists(staging) else []:
-        # r19 (advice): require the _PUBLISHING manifest, mirroring
+        # Require the _PUBLISHING manifest, mirroring
         # the span/edge stores — a staging dir WITHOUT it is a
         # mid-stage crash whose files never reached the live tree, so
         # there is nothing to purge and the fold is already clean

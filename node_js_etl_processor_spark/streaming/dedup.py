@@ -109,7 +109,7 @@ def exact_dedup_applier(store_path: str, out_path: str, checkpoint: str):
     batches == q_dedup_docs keepers when arrival order matches doc_id
     order.
 
-    Exactly-once (r10): EVERY batch — bootstrap included — lands via
+    Exactly-once: EVERY batch — bootstrap included — lands via
     ``markers.stage_and_publish`` (batch-tagged renames into the live
     trees; the store root is never overwritten, so markers survive),
     and a re-delivery first purges any partially-published files of
@@ -172,7 +172,7 @@ def exact_dedup_ingest_stream(
     out_path: str,
     checkpoint: str,
 ):
-    """The ingest loop of ``sources/dedup_store.py`` as a STREAM (r8):
+    """The ingest loop of ``sources/dedup_store.py`` as a STREAM:
     see ``exact_dedup_applier`` for the per-batch semantics and the
     exactly-once protocol. Returns the started query (availableNow —
     the same drain-the-source twin as every refresh here). Batch
@@ -242,7 +242,7 @@ def near_dup_applier(
     def _ingest(batch_df: DataFrame, batch_id: int) -> "DataFrame | None":
         spark = batch_df.sparkSession
         tag = marker_id(checkpoint, batch_id)
-        # replay guard (r9; staged publish r10): re-appending a
+        # replay guard (with the staged publish): re-appending a
         # delivered batch's postings/sigs and re-emitting its
         # survivors would corrupt both stores, and a crashed attempt's
         # partial publish must be purged BEFORE the delta probe reads
@@ -336,7 +336,7 @@ def near_dup_ingest_stream(
     num_hashes: int = 32,
     bands: int = 8,
 ):
-    """Near-duplicate ingest as a stream (r8): see
+    """Near-duplicate ingest as a stream: see
     ``near_dup_applier`` for the per-batch semantics, keeper rule and
     exactly-once protocol. Returns the started query (availableNow)."""
     return (
@@ -357,7 +357,7 @@ def simhash_applier(
     checkpoint: str,
     max_hamming: int = 3,
 ):
-    """SimHash near-dup ingest applier (r13 — completes the streamed
+    """SimHash near-dup ingest applier (completes the streamed
     dedup trio for the composed ingest-day loop): per batch, the
     stored band postings are probed with the SAME 4x16-bit banding +
     Hamming verify as ``sources.dedup_store.dedup_simhash_delta``
@@ -453,7 +453,7 @@ def countmin_ingest_stream(
     store_path: str,
     checkpoint: str,
 ):
-    """Count-Min grid maintenance as a stream (r8): per micro-batch,
+    """Count-Min grid maintenance as a stream: per micro-batch,
     build the batch's d×w grid (one keyed agg) and MERGE it into the
     stored grid by cell-wise addition — the property the sketch exists
     for (Cormode & Muthukrishnan 2005: CM sketches of two streams sum
@@ -465,7 +465,7 @@ def countmin_ingest_stream(
     test-pinned: streamed grid == one-shot batch grid, cell for
     cell.
 
-    Exactly-once (r10 — the versioned-pointer protocol, closing the
+    Exactly-once (the versioned-pointer protocol, closing the
     merge-loop window the append loops' staged publish cannot): each
     batch writes the merged grid to a NEW ``v_<tag>`` directory and
     atomically repoints ``_CURRENT`` at it. A crash mid-write leaves
@@ -477,7 +477,7 @@ def countmin_ingest_stream(
     the general partition-rewriting merge (SCD2) still needs a
     transactional table format.
 
-    Since the r10 continuation the protocol body lives ONCE in
+    The protocol body lives ONCE in
     ``streaming/sketches.py::sketch_merge_ingest_stream`` (the loop
     generalized over sketch merge laws — this grid was the precedent
     and now delegates to it, so a future crash-window fix lands in
@@ -523,7 +523,7 @@ def embedding_applier(
     directories too, so retrieval probes see new vectors the moment
     their batch commits.
 
-    Exactly-once (r10 — full markers protocol): survivors and layout
+    Exactly-once (full markers protocol): survivors and layout
     rows publish via batch-tagged staged renames; a re-delivery first
     purges its own partial files (BEFORE the delta probe reads the
     store — a batch must never match its own partial rows) and a
@@ -559,7 +559,7 @@ def embedding_applier(
         recover_partial(store_dir, tag)
         recover_partial(out_path, tag)
         if batch_df.isEmpty():
-            # r14 (advice item): empty batches still run recovery and
+            # Empty batches still run recovery and
             # still COMMIT — publish empty survivors and mark applied,
             # like the sibling appliers. Short-circuiting before the
             # marker left the tier unmarked (reprocessed on every
@@ -617,7 +617,7 @@ def embedding_ingest_stream(
     n_planes: int = 8,
     n_cells: int = 8,
 ):
-    """Embedding near-dup ingest as a stream (r9): see
+    """Embedding near-dup ingest as a stream: see
     ``embedding_applier`` for the per-batch semantics, keeper rule and
     exactly-once protocol. Returns the started query (availableNow)."""
     return (
@@ -633,29 +633,26 @@ def embedding_ingest_stream(
 
 
 def image_dedup_applier(store_path: str, out_path: str, checkpoint: str):
-    """The MEDIA lane of the ingest day (r14, the r13 verdict's item
-    6): store-backed dHash perceptual image dedup — the exact-dedup
-    store shape (``exact_dedup_applier``) applied to the perceptual
-    key, so image dedup is INCREMENTAL and crash-pinned like every
-    other tier instead of a batch-only operator.
+    """The MEDIA lane of the ingest day: store-backed dHash perceptual image
+    dedup — the exact-dedup store shape (``exact_dedup_applier``) applied to
+    the perceptual key, so image dedup is INCREMENTAL and crash-pinned like
+    every other tier instead of a batch-only operator.
 
-    Per micro-batch of media rows (media_id, payload): hash every
-    payload through the decode_raster format dispatch
-    (``operators.phash.image_dhash`` — netpbm/BMP/PNG/JPEG/GIF/TIFF),
-    drop any image whose dHash is already in the store (or duplicated
-    within the batch — min-media_id keeper), pass decode-refused rows
-    through ONCE (an undecodable payload is not perceptually
-    dedupable — same ok=false isolation as the batch query — but a
-    re-landed refused row must not re-emit, so refused rows key the
-    store by IDENTITY: their media_id), publish the surviving MEDIA
-    ROWS to ``out_path`` and the new keys to the store. The store IS
-    the cross-batch dedup state — one (kind, key) schema holding both
-    the perceptual keys (kind='dhash') and the refused identities
-    (kind='refused'); 8–16-byte keys on disk, never pixels — the
-    q_image_dedup keeper rule ('drop if the perceptual key was
-    SEEN'), streamed, with the refused lane held to the same
-    exactly-once OUTPUT contract as the text tiers (the r14 in-round
-    code review caught the original pass-through re-emitting refused
+    Per micro-batch of media rows (media_id, payload): hash every payload
+    through the decode_raster format dispatch
+    (``operators.phash.image_dhash`` — netpbm/BMP/PNG/JPEG/GIF/TIFF), drop
+    any image whose dHash is already in the store (or duplicated within the
+    batch — min-media_id keeper), pass decode-refused rows through ONCE (an
+    undecodable payload is not perceptually dedupable — same ok=false
+    isolation as the batch query — but a re-landed refused row must not
+    re-emit, so refused rows key the store by IDENTITY: their media_id),
+    publish the surviving MEDIA ROWS to ``out_path`` and the new keys to the
+    store. The store IS the cross-batch dedup state — one (kind, key) schema
+    holding both the perceptual keys (kind='dhash') and the refused
+    identities (kind='refused'); 8–16-byte keys on disk, never pixels — the
+    q_image_dedup keeper rule ('drop if the perceptual key was SEEN'),
+    streamed, with the refused lane held to the same exactly-once OUTPUT
+    contract as the text tiers (a plain pass-through would re-emit refused
     rows on cross-batch re-delivery).
 
     Exactly-once: the full markers protocol (batch-tagged staged

@@ -59,7 +59,7 @@ def link_graph_applier(
         if batch_already_applied(store_path, checkpoint, batch_id):
             if cur:
                 cleanup_staging(posixpath.join(store_path, cur), tag)
-            # compaction slot before the replay return (r18 advice):
+            # compaction slot before the replay return:
             # a boundary landing on a re-delivered batch must not
             # defer the fold a full cycle
             if compact_every and (batch_id + 1) % compact_every == 0 and cur:

@@ -7,7 +7,7 @@ closed — the per-micro-batch foreachBatch loop. An append is three
 O(|batch|) writes that never read the store, and no cross-batch
 executor state exists: the index on disk IS the state.
 
-Replay safety (r10 — the full ``streaming.markers`` protocol): a
+Replay safety (the full ``streaming.markers`` protocol): a
 re-delivered (checkpoint, batch_id) whose marker exists is a no-op; a
 re-delivered BOOTSTRAP batch (store built, marker missing) re-runs
 the overwrite build instead of appending a copy of itself (bootstrap

@@ -8,7 +8,7 @@ of eight isolated streams.
 Feed contract: each micro-batch is one "drop" — a union-schema frame
 carrying crawl documents (``kind='doc'``: doc_id, text, lang, source,
 n_chars), warehouse CDC facts (``kind='order'``: o_orderkey,
-o_custkey, o_orderstatus, o_orderdate) and — since r14 — media blobs
+o_custkey, o_orderstatus, o_orderdate) and media blobs
 (``kind='image'``: media_id, payload_b64) side by side, the shape a
 multiplexed ingest topic delivers. Document drops must arrive in
 doc_id order, CDC drops in per-key (o_orderdate, o_orderkey) order
@@ -32,11 +32,11 @@ lookup — the stand-in for an embedding service) maintain the ANN
 layout + embedding near-dup tier, the media lane dedups images
 against the dHash postings store (``image_dedup_applier`` — the
 exact-dedup store shape on the perceptual key), the set-key lane
-(r16, ``streaming/setkey.py``) maintains the setsim family's
+(``streaming/setkey.py``) maintains the setsim family's
 template-collapse representative store off the raw doc feed, the
-shingle-postings lane (r16, ``streaming/spanstore.py``) keeps
-ExactSubstr span-extent reads current, the vocabulary lane (r16,
-``streaming/vocab.py``) keeps the lexical-diversity statistics
+shingle-postings lane (``streaming/spanstore.py``) keeps
+ExactSubstr span-extent reads current, the vocabulary lane
+(``streaming/vocab.py``) keeps the lexical-diversity statistics
 current — both also off the raw feed — and the CDC lane merges into
 the SCD2 dimension store.
 
@@ -82,23 +82,23 @@ def ingest_day_applier(
     ``embeddings``
     is the static (vec_id, embedding) lookup
     joined to the exact survivors' doc_ids (vec_id == doc_id in the
-    fixture corpus). The media lane (r14) is optional: omit
+    fixture corpus). The media lane is optional: omit
     img_store/img_out from ``paths`` to run a text+CDC-only day.
 
-    ``compact_every=N`` (r16 advice) folds the log-structured partial
+    ``compact_every=N`` folds the log-structured partial
     lanes every N batches (0 = never): it reaches the VOCABULARY lane
     — the highest-fan-out append path, O(batch vocabulary) partial
     files per batch across 64 buckets, which previously never
     compacted in the composed loop even though compact_vocab_store
     exists to cap exactly that file-listing growth — the EDGES
     lane, whose applier shares the generation-compaction slot, and
-    (r18) the SPAN-POSTINGS lane, whose corpus-sized store takes the
+    the SPAN-POSTINGS lane, whose corpus-sized store takes the
     leveled MINOR compaction (fold only the log into a sealed
     segment, never rewrite the corpus — streaming/spanstore.py)."""
-    # r16 (advice item): validate required store roots up front with a
-    # message naming what is missing — the kmv theta lane (r15) made a
-    # bare ``paths["kmv"]`` KeyError possible for callers holding a
-    # pre-r15 path dict. Only the media lane is optional.
+    # Validate required store roots up front with a message naming
+    # what is missing, rather than a bare ``paths["kmv"]`` KeyError
+    # for a path dict that lacks a lane. Only the media lane is
+    # optional.
     required = {
         "fp_store", "fp_out", "mh_store", "mh_out", "sh_store", "sh_out",
         "ann_store", "ann_out", "bm25", "edges", "hll", "hdr", "kmv",
@@ -146,7 +146,7 @@ def ingest_day_applier(
         merge_keys=("lang", "idx"),
         merge_agg=lambda: F.sum("cnt").cast("bigint").alias("cnt"),
     )
-    # r15: the theta-sketch tier — per-source distinct doc_ids as a
+    # The theta-sketch tier — per-source distinct doc_ids as a
     # packed KMV bottom-k store (streaming/theta.py: the generic merge
     # loop with the union-then-bottom-k law as a per-GROUP aggregate),
     # so the day's stores can answer SET-ALGEBRA cardinality questions
@@ -154,7 +154,7 @@ def ingest_day_applier(
     from .theta import kmv_merge_applier
 
     kmv = kmv_merge_applier(paths["kmv"], checkpoint, "source", "doc_id")
-    # r16: the set-key collapse tier — the setsim family's template
+    # The set-key collapse tier — the setsim family's template
     # collapse (exact_set_reps) maintained incrementally, a parallel
     # curation axis off the raw doc lane (a doc whose DISTINCT token
     # set was seen — reordered or re-whitespaced — is dropped)
@@ -163,7 +163,7 @@ def ingest_day_applier(
     setk = set_collapse_applier(
         paths["setkey_store"], paths["setkey_out"], checkpoint
     )
-    # r16: the shingle-postings tier — ExactSubstr span dedup made
+    # The shingle-postings tier — ExactSubstr span dedup made
     # incremental (tokenize once at ingest; extents are a read over
     # stored 8-byte digests, streaming/spanstore.py)
     from .spanstore import span_postings_applier
@@ -171,7 +171,7 @@ def ingest_day_applier(
     spanp = span_postings_applier(
         paths["spanstore"], checkpoint, compact_every=compact_every
     )
-    # r16: the vocabulary tier — per-(source, token) SUM-mergeable
+    # The vocabulary tier — per-(source, token) SUM-mergeable
     # count partials (sources/vocab_store.py), so lexical-diversity
     # statistics (diversity_from_store == batch q_simpson_diversity)
     # stay current without re-tokenizing the corpus; off the RAW doc
@@ -219,22 +219,22 @@ def ingest_day_applier(
         )
         emb(batch_embs, batch_id)
 
-        # set-key collapse tier (r16) — a parallel curation axis off
+        # set-key collapse tier — a parallel curation axis off
         # the RAW doc lane: it maintains the setsim template-collapse
         # representative store for the whole feed, independent of the
         # fingerprint chain's keeper decisions
         setk(docs, batch_id)
 
-        # shingle-postings tier (r16) — also off the RAW doc lane, so
+        # shingle-postings tier — also off the RAW doc lane, so
         # stored extents equal the batch q_span_extents over the
         # whole corpus
         spanp(docs, batch_id)
 
-        # vocabulary tier (r16) — raw doc lane; stored diversity
+        # vocabulary tier — raw doc lane; stored diversity
         # statistics equal batch q_simpson_diversity over the corpus
         voc(docs, batch_id)
 
-        # media lane (r14): perceptual dHash dedup against the
+        # media lane: perceptual dHash dedup against the
         # img_store postings tier — a parallel curation axis like the
         # embedding tier, placed BEFORE the derived stores so a crash
         # there exercises this tier's marker-hit read-back on

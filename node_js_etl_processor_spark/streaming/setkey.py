@@ -1,4 +1,4 @@
-"""Incremental exact SET-COLLAPSE dedup (r16): the twelfth ingest-day
+"""Incremental exact SET-COLLAPSE dedup: the twelfth ingest-day
 store tier — the ``exact_dedup_applier`` store shape keyed on the
 set-similarity family's SET KEY (md5 over the sorted DISTINCT token
 set, ``operators/setsim.py::packed_sets``) instead of the whole-text

@@ -1,15 +1,14 @@
 """Sketch-store maintenance streams: the versioned-pointer merge loop
 generalized over the deterministic-sketch family's merge laws.
 
-``countmin_ingest_stream`` (streaming/dedup.py, r8/r10) proved the
-shape: per micro-batch, build the batch's parameter-sized sketch, fold
-it into the stored one under the batch's merge law, publish the merged
-state as a NEW ``v_<tag>`` directory and atomically repoint
-``_CURRENT`` — exactly-once because a crash either leaves the old
-pointer live (re-delivery re-merges from it) or leaves the pointer
-already naming this batch's version (detected, just marked). This
-module extracts that protocol as ``sketch_merge_ingest_stream`` and
-instantiates it for the two r10-continuation sketches:
+``countmin_ingest_stream`` (streaming/dedup.py) set the shape: per
+micro-batch, build the batch's parameter-sized sketch, fold it into the
+stored one under the batch's merge law, publish the merged state as a NEW
+``v_<tag>`` directory and atomically repoint ``_CURRENT`` — exactly-once
+because a crash either leaves the old pointer live (re-delivery re-merges
+from it) or leaves the pointer already naming this batch's version
+(detected, just marked). This module extracts that protocol as
+``sketch_merge_ingest_stream`` and instantiates it for two more sketches:
 
 * **HLL registers** (operators/sketch.py::hll_registers) merge by
   cell-wise **MAX** — HLL's union law: the register file of a stream

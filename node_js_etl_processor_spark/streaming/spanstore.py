@@ -1,4 +1,4 @@
-"""Incremental shingle-postings store (r16): the thirteenth
+"""Incremental shingle-postings store: the thirteenth
 ingest-day tier — the ExactSubstr span family's shingling
 (``operators/spans.py``) maintained incrementally. Each micro-batch
 tokenizes its documents ONCE and appends their (doc_id, pos, h)
@@ -24,7 +24,7 @@ and a crashed publish is purged tag-first before recompute. The
 composed crash-matrix test pins streamed-store extents == the
 one-shot ``q_span_extents`` over the whole corpus.
 
-Leveled layout + minor compaction (r18): the store is CORPUS-sized,
+Leveled layout + minor compaction: the store is CORPUS-sized,
 so the fold-into-a-fresh-generation compaction the vocab/edge stores
 use (rewrite everything each time) is the wrong cost model here —
 postings never fold (every (doc_id, pos, h) row is unique), only the
@@ -110,7 +110,7 @@ def read_span_store(spark: SparkSession, store_path: str) -> DataFrame:
     the live append log (see the module docstring's leveled-layout
     contract). A fresh/never-written store reads as an EMPTY frame
     with the posting schema — the gated applier's bootstrap relies on
-    it. A store holding data files at its ROOT (the pre-r18 flat
+    it. A store holding data files at its ROOT (an older flat
     layout) raises instead of silently reading empty: the failure is
     a layout mismatch, not an empty corpus (the cusum_alarm_stream
     fail-loudly precedent)."""
@@ -153,7 +153,7 @@ def compact_span_store(
     O(data appended since the last compaction) — sealed segments are
     never read or rewritten. Single-writer: call between batches.
 
-    Major compaction (r19 — the r18 advice's unbounded-growth note):
+    Major compaction (bounds the growth of the sealed segments):
     minor-only compaction adds one sealed segment per run, so the
     manifest and the per-read parquet path list grow linearly with
     compaction count. When the store already holds ``max_segments``
@@ -194,7 +194,7 @@ def compact_span_store(
             _delete(posixpath.join(store_path, name))
     log_files = _live_log_files(store_path, folded)
     # Never fold a batch whose publish is in flight or crashed
-    # un-recovered (r18 review): a tag with a live _staging/<tag>/
+    # un-recovered: a tag with a live _staging/<tag>/
     # _PUBLISHING manifest can still be purged by recover_partial,
     # which deletes <tag>-* files from log/ only — sealing them into a
     # segment would put them beyond the purge, and the re-delivered
@@ -292,8 +292,8 @@ def span_postings_applier(
             stage_and_publish(store_path, tag, {_LOG: (sh, None)})
             mark_batch_applied(store_path, checkpoint, batch_id)
             cleanup_staging(store_path, tag)
-        # the compaction slot runs on marker-hit re-deliveries too
-        # (r18 advice): a replayed batch landing on a compaction
+        # the compaction slot runs on marker-hit re-deliveries too:
+        # a replayed batch landing on a compaction
         # boundary must not defer the fold a full cycle — compaction
         # is single-writer-safe here because the batch's marker is
         # committed either way
@@ -335,12 +335,11 @@ def read_span_extents(
 def read_doc_novelty(
     spark: SparkSession, store_path: str, w: int = SPAN_W
 ) -> DataFrame:
-    """Per-document duplication-coverage scores over the WHOLE
-    ingested corpus from the stored digests (r17 — the verdict's
-    store-read ask): ``novelty_from_positions`` over the postings
-    tree. Totals here are a plain parquet re-read (per-doc posting
-    counts), so nothing is ever re-tokenized; equality with the
-    batch ``q_doc_novelty`` over the union corpus is test-pinned."""
+    """Per-document duplication-coverage scores over the WHOLE ingested
+    corpus from the stored digests: ``novelty_from_positions`` over the
+    postings tree. Totals here are a plain parquet re-read (per-doc posting
+    counts), so nothing is ever re-tokenized; equality with the batch
+    ``q_doc_novelty`` over the union corpus is test-pinned."""
     from ..operators.novelty import novelty_from_positions
 
     return novelty_from_positions(read_span_store(spark, store_path), w)
@@ -353,7 +352,7 @@ def score_drop_novelty(
     w: int = SPAN_W,
 ) -> DataFrame:
     """Score a NEW drop's novelty against the stored corpus BEFORE
-    admitting it (r17): only the drop is tokenized; the store is
+    admitting it: only the drop is tokenized; the store is
     touched by one broadcast-semi-filtered counting pass (see
     ``novelty.novelty_of_drop``). Equals
     ``q_doc_novelty(corpus ∪ drop)`` restricted to the drop's
@@ -365,8 +364,8 @@ def score_drop_novelty(
 
 
 def exact_twin_reps(docs: DataFrame) -> DataFrame:
-    """Keep-one collapse for within-drop EXACT twins (the r17 advice
-    fix for the novelty gate): one representative per exact-content
+    """Keep-one collapse for within-drop EXACT twins (for the novelty
+    gate): one representative per exact-content
     fingerprint (min doc_id — q_dedup_docs' deterministic-keeper
     rule). Without it, two copies of never-seen content delivered in
     ONE drop cut each other — every position of each twin is
@@ -408,7 +407,7 @@ def novelty_gated_ingest_applier(
     w: int = SPAN_W,
     compact_every: int = 0,
 ):
-    """Novelty-GATED ingestion (r17): the end-to-end "score, then
+    """Novelty-GATED ingestion: the end-to-end "score, then
     admit" loop the drop scorer exists for — per micro-batch, score
     the drop's duplication coverage against the CURRENT postings
     store (``novelty.novelty_of_drop`` — only the drop is tokenized),
@@ -428,7 +427,7 @@ def novelty_gated_ingest_applier(
     lane documents — also ``novelty_of_drop``'s scoring
     precondition).
 
-    Within-drop EXACT twins take the keep-one rule (r17 advice): the
+    Within-drop EXACT twins take the keep-one rule: the
     drop is collapsed to one representative per exact-content
     fingerprint (``exact_twin_reps``) BEFORE scoring, so two copies
     of never-seen content no longer cut each other (which would admit
@@ -463,7 +462,7 @@ def novelty_gated_ingest_applier(
         if batch_already_applied(store_path, checkpoint, batch_id):
             cleanup_staging(store_path, tag)
             cleanup_staging(out_path, tag)
-            # compaction slot before the replay return (r18 advice):
+            # compaction slot before the replay return:
             # a boundary landing on a re-delivered batch must not
             # defer the fold a full cycle — single-writer-safe, the
             # marker is committed

@@ -109,12 +109,12 @@ CUSUM_ALARM_SCHEMA = StructType(
 )
 
 #: (s, last_us, last_eid): the running statistic PLUS the last-seen
-#: (ts_us, event_id) marker — r16 advice: the stream==batch
+#: (ts_us, event_id) marker — the stream==batch
 #: equivalence rests on events arriving in per-user time order
 #: ACROSS micro-batches (within-batch order is sorted explicitly),
 #: and a silent violation would corrupt the statistic, so the
-#: contract is tracked in state and enforced loudly. State schema v2
-#: (r17): resuming a checkpoint written by the v1 one-field schema
+#: contract is tracked in state and enforced loudly. State schema v2:
+#: resuming a checkpoint written by the v1 one-field schema
 #: fails Spark's state-store schema-compatibility check at startup —
 #: start a fresh checkpointLocation (the alarms already emitted are
 #: in the sink; the statistic rebuilds from the feed).
@@ -161,7 +161,7 @@ def _make_cusum_update(k_cents: int, h_cents: int):
         # feed contract (events arrive in per-user time order, the
         # ingest-day discipline) makes the fold order total
         pdf = pdf.sort_values(["ts_us", "event_id"])
-        # enforce the cross-batch half of that contract (r16 advice):
+        # enforce the cross-batch half of that contract:
         # a batch whose earliest event sorts at or before the carried
         # last-seen marker would fold out of order and silently
         # corrupt S — fail loudly instead. The LONG_MIN sentinel (not
@@ -214,14 +214,14 @@ def cusum_alarm_stream(events_stream: DataFrame, k_cents=None, h_cents=None) -> 
     time-ordered feed contract (each user's events arrive in time
     order across batches — the same contract every ingest lane
     documents; within a batch the fold sorts explicitly). The
-    cross-batch half is ENFORCED, not assumed (r16 advice): state
+    cross-batch half is ENFORCED, not assumed: state
     carries the last-seen (ts_us, event_id) marker per user, and a
     batch delivering an event at or before that marker raises
     instead of silently folding the statistic wrong. Checkpoint
     recovery replays from the rolled-back state version, so
     legitimate re-delivery never trips the guard.
 
-    UPGRADE NOTE (state schema v1 → v2, r17): adding the last-seen
+    UPGRADE NOTE (state schema v1 → v2): adding the last-seen
     marker grew the per-user state from one field to three, and
     Spark's state-store schema-compatibility check makes a v1
     checkpoint UNRESUMABLE — startup fails loudly at query start.

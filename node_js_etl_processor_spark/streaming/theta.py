@@ -1,4 +1,4 @@
-"""Incremental KMV / theta-sketch store (r15): maintain per-group
+"""Incremental KMV / theta-sketch store: maintain per-group
 bottom-k hash sets across micro-batches with the SAME generic
 versioned-pointer merge loop as the HLL/HDR/countmin stores
 (``streaming/sketches.py`` — replay guard → pointer self-check →

@@ -1,4 +1,4 @@
-"""Incremental OLS regression (r17): the trend family's store lane.
+"""Incremental OLS regression: the trend family's store lane.
 
 ``operators/trend.py`` split the per-priority regression into
 SUM-mergeable integer sufficient statistics (``trend_stats``) and a

@@ -35,7 +35,7 @@ def scd2_applier(
     per-key (o_orderdate, o_orderkey) order, the standard assumption
     for a change-data feed.
 
-    Exactly-once (r10 — the store's manifest commit does the heavy
+    Exactly-once (the store's manifest commit does the heavy
     lifting): a marker-hit re-delivery is a no-op; a crashed attempt's
     data/manifest are invisible until the pointer switch, so its
     re-delivery recomputes against the still-live old manifest and
@@ -43,9 +43,8 @@ def scd2_applier(
     THIS batch's manifest (``scd2_committed_tag``) means the merge
     committed — just mark. No bootstrap sentinel needed: an
     uncommitted bootstrap leaves the pointer absent, so the
-    re-delivery correctly re-bootstraps. This was the last loop with
-    a residual crash window (the r9 dynamic partition overwrite);
-    the manifest layout closes it."""
+    re-delivery correctly re-bootstraps. A dynamic partition overwrite
+    would leave a crash window; the manifest layout closes it."""
     from ..sources.scd2_store import (
         scd2_apply_delta,
         scd2_committed_tag,
@@ -69,7 +68,7 @@ def scd2_applier(
             mark_batch_applied(meta_path, checkpoint, batch_id)
             return
         if scd2_committed_tag(store_path) is None:
-            # a populated pre-r10 flat-layout store has bucket= dirs
+            # a populated older flat-layout store has bucket= dirs
             # but no manifest pointer: re-bootstrapping from this
             # batch would silently truncate the dimension's history
             from .markers import _listdir

@@ -68,7 +68,7 @@ def test_index_probe_prunes_and_reads_no_text(spark, sf_dir, tmp_path):
 
 
 def test_hybrid_search_from_stores_matches_exact_form(spark, sf_dir, tmp_path):
-    """r8: the claimed 100 TB retrieval shape, executed end to end —
+    """The claimed 100 TB retrieval shape, executed end to end —
     bm25_from_index ⊕ ivfpq_probe(rescore) fused through rrf_fuse,
     compared against the declared exact form q_hybrid_search on the
     same fixture. Sparse fidelity is EXACT (same bm25 per doc, pinned
@@ -112,7 +112,7 @@ def test_hybrid_search_from_stores_matches_exact_form(spark, sf_dir, tmp_path):
 
 
 def test_append_equals_rebuild_and_touches_nothing(spark, sf_dir, tmp_path):
-    """r9: write(old) + append(new) must score EXACTLY like a fresh
+    """Write(old) + append(new) must score EXACTLY like a fresh
     index over old ∪ new (df/stats partials merge in the reader), and
     the append must leave every pre-existing parquet file untouched
     (name AND mtime) — maintenance is O(|batch|), never a rewrite."""
@@ -164,7 +164,7 @@ def test_append_equals_rebuild_and_touches_nothing(spark, sf_dir, tmp_path):
 
 
 def test_bm25_index_stream_matches_batch(spark, sf_dir, tmp_path):
-    """r9: three streamed drops through bm25_index_stream must leave
+    """Three streamed drops through bm25_index_stream must leave
     an index scoring identically to the one-shot build (stream ==
     batch for the retrieval tier's ingest loop)."""
     from node_js_etl_processor_spark.streaming.indexing import bm25_index_stream
@@ -206,7 +206,7 @@ def test_bm25_index_stream_matches_batch(spark, sf_dir, tmp_path):
 def test_hybrid_from_incrementally_built_stores_equals_one_shot(
     spark, sf_dir, tmp_path
 ):
-    """r9: the end-to-end retrieval surface over stores built
+    """The end-to-end retrieval surface over stores built
     INCREMENTALLY (bm25 write+append, ANN layout write+append) must
     return exactly the result of the same probe over one-shot
     stores — the composition guarantee that makes the ingest loops
@@ -248,8 +248,8 @@ def test_hybrid_from_incrementally_built_stores_equals_one_shot(
 
 
 def test_reader_rejects_pre_partials_stats_layout(spark, sf_dir, tmp_path):
-    """r10 (r9 ADVICE): an index whose stats were written by the
-    pre-r9 layout — (n_docs, avgdl) finals instead of mergeable
+    """An index whose stats were written by the
+    older layout — (n_docs, avgdl) finals instead of mergeable
     (n_docs, sum_dl) partials — must fail with an actionable
     rebuild-the-index error, not an unresolved-column analysis
     exception."""
@@ -269,7 +269,7 @@ def test_reader_rejects_pre_partials_stats_layout(spark, sf_dir, tmp_path):
 
 
 def test_compaction_is_score_identical_and_folds_files(spark, sf_dir, tmp_path):
-    """r10: write + 2 appends -> compact must score identically to
+    """Write + 2 appends -> compact must score identically to
     the appended store AND to the on-the-fly ranker, with the file
     count reset (df/stats partials folded, postings coalesced)."""
     import os

@@ -127,7 +127,7 @@ def test_exact_delta_store_roundtrip(spark, sf_dir, tmp_path):
 
 
 def test_simhash_delta_equals_full_corpus_pairs(spark, sf_dir, tmp_path):
-    """r8: the simhash band store's delta probe must produce EXACTLY
+    """The simhash band store's delta probe must produce EXACTLY
     the batch form's verified pairs that touch the new batch — same
     numpy signature kernel, same 4x16-bit banding, same Hamming
     verify, so batch and incremental near-dup can never disagree."""

@@ -344,7 +344,7 @@ def test_spread_never_touches_rdd_and_passes_through_memory_frames(spark, sf_dir
 
 
 def test_spread_gate_walks_lineage_not_plan_strings(spark, sf_dir):
-    """The r21 double-spread gate (plan-tree walk, not toString
+    """The double-spread gate (plan-tree walk, not toString
     matching): a second spread over a still-governing same-target
     round-robin repartition is suppressed; a repartition buried below
     a partitioning-re-establishing node (aggregate) does NOT suppress,
@@ -778,45 +778,6 @@ def test_bmp_roundtrip_and_real_resize(spark):
     assert row["resized_md5"] == hashlib.md5(expect).hexdigest()
 
 
-def test_scale_stress_corpus_builder_invariants(spark):
-    """The 10x stress corpus builder (scripts/scale_stress.py) must
-    keep dup structure LINEAR in the multiplier: replica copies of
-    identical docs stay identical within a replica, nothing matches
-    across replicas, tags stay alphabetic (quality gates must still
-    pass — a digit tag empties the curation pipeline)."""
-    import re
-    import sys
-
-    sys.path.insert(0, "/root/repo")
-    from scripts.scale_stress import multiply_documents, multiply_embeddings
-
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma", "en", "s0", 16), (2, "alpha beta gamma", "en", "s0", 16)],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    out = {r["doc_id"]: r for r in multiply_documents(docs, 3).collect()}
-    assert len(out) == 6  # distinct ids across replicas
-    # within-replica: identical inputs stay identical
-    assert out[1]["text"] == out[2]["text"]
-    assert out[1_000_000_001]["text"] == out[1_000_000_002]["text"]
-    # across replicas: no token in common
-    toks0 = set(out[1]["text"].split())
-    toks1 = set(out[1_000_000_001]["text"].split())
-    assert toks0.isdisjoint(toks1)
-    # tags alphabetic only (gates would drop digit-bearing words)
-    assert all(re.fullmatch(r"[A-Za-z]+", t) for t in toks0 | toks1)
-    # n_chars recomputed against the tagged text
-    assert out[1]["n_chars"] == len(out[1]["text"])
-
-    emb = spark.createDataFrame(
-        [(0, [float(i) for i in range(64)])], "vec_id long, embedding array<double>"
-    )
-    rows = {r["vec_id"]: r["embedding"] for r in multiply_embeddings(emb, 3).collect()}
-    base = rows[0]
-    assert rows[1_000_000_000] == base[1:] + base[:1]  # rotation by replica
-    assert rows[2_000_000_000] == base[2:] + base[:2]
-
-
 def test_pq_encoding_and_adc_on_crafted_vectors(spark):
     """Pin the PQ kernels on a hand-built case: a vector assembled
     from one exact codeword per subspace must encode to exactly those
@@ -1102,8 +1063,8 @@ def test_normalize_url_rules(spark):
     got = keep.select(normalize_url(F.col("u")).alias("n")).head()["n"]
     assert got == "https://web.example.com/a?page=2", got
 
-    # r8: tracking param FIRST in a mixed query string — the strip
-    # must not leave an &-led remainder (the pre-r8 wrong output was
+    # tracking param FIRST in a mixed query string — the strip
+    # must not leave an &-led remainder (the wrong output would be
     # .../a&page=2, splitting otherwise-identical URLs)
     mixed = {
         "https://web.example.com/a?utm_x=1&page=2": "https://web.example.com/a?page=2",
@@ -1182,7 +1143,7 @@ def test_wav_roundtrip_features_and_refusal(spark):
 
 
 def test_lm_bigram_perplexity_single_token_doc(spark):
-    """Regression (r8): sequence(1, size-1) on a SINGLE-token doc is
+    """Regression: sequence(1, size-1) on a SINGLE-token doc is
     sequence(1, 0) = [1, 0] (Spark steps down when start > stop), and
     element_at(toks, 0) aborted the whole job. The when-guard must make
     such docs score on the unigram term only — avg_nll == -log(p_uni)
@@ -1205,7 +1166,7 @@ def test_lm_bigram_perplexity_single_token_doc(spark):
 
 
 def test_jpeg_roundtrip_subsample_restart_and_refusal(spark):
-    """r8: the stdlib baseline-JFIF path. encode→decode roundtrips
+    """The stdlib baseline-JFIF path. encode→decode roundtrips
     within quantization tolerance for 4:4:4, 4:2:0 and restart-marker
     streams at quant=1 (all sampling/restart decoder paths exercised);
     decode_image dispatches on the SOI signature; resize_image
@@ -1279,7 +1240,7 @@ def test_jpeg_roundtrip_subsample_restart_and_refusal(spark):
 
 
 def test_countmin_invariants_and_broadcast(spark, sf_dir):
-    """r8: the CM guarantee — estimate >= exact for EVERY key — plus
+    """The CM guarantee — estimate >= exact for EVERY key — plus
     real collision behavior at the 4x64 geometry (some overshoot
     must be visible on a 1000+-key stream) and the broadcast of the
     256-cell grid into the probe join."""
@@ -1303,7 +1264,7 @@ def test_countmin_invariants_and_broadcast(spark, sf_dir):
 
 
 def test_pagerank_distribution_sanity(spark, sf_dir):
-    """r8: 3-iteration PageRank over the trade graph — 25 nation
+    """3-iteration PageRank over the trade graph — 25 nation
     nodes, scores positive, total mass <= 1 (dangling mass dropped by
     the documented simple form) and >= the undamped floor, rank
     column consistent with the scores."""
@@ -1326,7 +1287,7 @@ def test_pagerank_distribution_sanity(spark, sf_dir):
 
 
 def test_jpeg_true_grayscale_single_component(spark):
-    """r8: the decoder's genuine 1-component scan path (our encoder
+    """The decoder's genuine 1-component scan path (our encoder
     always writes 3 components, so this hand-builds a grayscale
     baseline stream: 1-component SOF0/SOS around the same entropy
     machinery) — decoded luma must match the source plane within DCT
@@ -1374,7 +1335,7 @@ def test_jpeg_true_grayscale_single_component(spark):
 
 
 def test_bloom_invariants_and_broadcast(spark, sf_dir):
-    """r8: the Bloom guarantee — ZERO false negatives — plus a
+    """The Bloom guarantee — ZERO false negatives — plus a
     nonzero, rate-bounded false-positive band and the broadcast of
     the bit table into the probe join."""
     import contextlib
@@ -1401,7 +1362,7 @@ def test_bloom_invariants_and_broadcast(spark, sf_dir):
 
 
 def test_fuzzy_match_hashed_keys_exact_and_key_cap(spark):
-    """r9: the hardened FastSS blocking — (klen, xxhash64) join keys +
+    """The hardened FastSS blocking — (klen, xxhash64) join keys +
     post-DISTINCT name join — must be EXACT (equal to brute-force
     Levenshtein on a crafted fixture), and the opt-in key_cap must
     drop only pairs reachable solely through a hot non-discriminative
@@ -1446,7 +1407,7 @@ def test_fuzzy_match_hashed_keys_exact_and_key_cap(spark):
 
 
 def test_pagerank_until_fixed_equals_unrolled(spark):
-    """r9: pagerank_until in fixed-iteration mode (eps=0,
+    """pagerank_until in fixed-iteration mode (eps=0,
     require_convergence=False → exactly max_iter rounds) must equal
     the unrolled oracle-grade pagerank on a dangling-free graph
     (dangling redistribution is a no-op there: dmass == 0.0)."""
@@ -1472,7 +1433,7 @@ def test_pagerank_until_fixed_equals_unrolled(spark):
 
 
 def test_pagerank_until_converges_and_conserves_dangling_mass(spark):
-    """r9: (a) on a symmetric cycle the uniform vector is the fixed
+    """(a) on a symmetric cycle the uniform vector is the fixed
     point — convergence must stop well before max_iter; (b) with a
     dangling node the redistributed total rank must stay 1.0 (the
     leak the simple form tolerates), and the dangling sink must
@@ -1511,7 +1472,7 @@ def test_pagerank_until_converges_and_conserves_dangling_mass(spark):
 
 
 def test_gif_roundtrip_animated_interlace_and_refusal(spark):
-    """r9: GIF codec — exact encode→decode roundtrips (GIF is
+    """GIF codec — exact encode→decode roundtrips (GIF is
     lossless) across random geometries/palettes/frame counts, the
     interlaced row order, the 256-color palette edge, dispatch
     through decode_image/resize_image, and the refusal shapes
@@ -1594,7 +1555,7 @@ def test_gif_roundtrip_animated_interlace_and_refusal(spark):
 
 
 def test_gif_transparency_and_disposal(spark):
-    """r9: hand-assembled animation pins the compositing semantics:
+    """Hand-assembled animation pins the compositing semantics:
     transparent indices keep the previous canvas pixel, disposal=2
     restores the background region before the next frame, delays ride
     the graphic-control extension."""
@@ -1647,7 +1608,7 @@ def test_gif_transparency_and_disposal(spark):
 
 
 def test_gif_frame_sampling_real_frames(spark):
-    """r9: sample_gif_frames — every step-th REAL composited frame
+    """sample_gif_frames — every step-th REAL composited frame
     with true geometry/delay/raster digest; corrupt payloads isolate
     as ok=false rows."""
     import hashlib
@@ -1689,7 +1650,7 @@ def test_gif_frame_sampling_real_frames(spark):
 
 
 def test_synth_gif_media_chained_sampling(spark, sf_dir):
-    """r9: the full distributed GIF loop — synth_gif_media encodes a
+    """The full distributed GIF loop — synth_gif_media encodes a
     closed-form animation per doc inside the Arrow kernel,
     sample_gif_frames decodes and samples REAL composited frames —
     and every sampled frame's geometry/delay/digest must equal the
@@ -1765,7 +1726,7 @@ def _ref_bpe_train(word_freqs, n_merges, min_pair_freq=2):
 
 
 def test_bpe_train_matches_reference_and_encode_agrees(spark):
-    """r9: the DataFrame BPE trainer must learn EXACTLY the reference
+    """The DataFrame BPE trainer must learn EXACTLY the reference
     algorithm's merge list (same counts, same tie-breaks) and final
     symbol table; Arrow-batched inference (bpe_encode) must segment
     the same corpus identically to the trained vocabulary."""
@@ -1797,7 +1758,7 @@ def test_bpe_train_matches_reference_and_encode_agrees(spark):
     }
     assert got_vocab == ref_vocab
 
-    # r19: the vocabulary gate — driver_vocab_cap=0 forces the
+    # the vocabulary gate — driver_vocab_cap=0 forces the
     # DISTRIBUTED loop; both paths must learn bit-identical merges
     # and final symbol tables (the default path above took the
     # collected-dict trainer)
@@ -1808,7 +1769,7 @@ def test_bpe_train_matches_reference_and_encode_agrees(spark):
     } == got_vocab
 
     # and the CHARACTER cap trips the same fallback independently of
-    # the row cap (the r19 review's URL-vocabulary finding)
+    # the row cap (a URL-heavy vocabulary hits it)
     merges_c, _vocab_c = bpe_train(
         docs, n_merges=12, driver_vocab_char_cap=1
     )
@@ -1831,7 +1792,7 @@ def test_bpe_train_matches_reference_and_encode_agrees(spark):
 
 
 def test_bpe_astral_gate_routes_to_distributed(spark):
-    """r20 (the r19 advice item): outside the BMP the two trainer
+    """Outside the BMP the two trainer
     paths genuinely diverge — the distributed zero-width regex split
     breaks an astral code point into its two UTF-16 code units (which
     surface as replacement bytes in the UTF-8 symbol space) while the
@@ -1883,7 +1844,7 @@ def test_bpe_astral_gate_routes_to_distributed(spark):
 
 
 def test_bpe_apply_merge_greedy_overlap(spark):
-    """r9: the fold must resolve overlapping pairs leftmost —
+    """The fold must resolve overlapping pairs leftmost —
     'aaa' + (a,a) -> [aa, a, </w>], 'aaaa' -> [aa, aa, </w>] — the
     reference algorithm's non-overlapping replace semantics."""
     from node_js_etl_processor_spark.operators.bpe import (
@@ -1930,7 +1891,7 @@ def _duck_parity(spark_df, sql, sf_dir, tables=("documents",)):
     return len(rows)
 
 
-from __spark_entry__ import (  # single source of truth: the driver compares the same SQL
+from __spark_entry__ import (  # the registry compares the same SQL
     ADPCM_ORACLE,
     AUDIO_PROBE_ORACLE,
     BPE_PAIRS_ORACLE,
@@ -1954,8 +1915,8 @@ from __spark_entry__ import (  # single source of truth: the driver compares the
 
 
 def test_bpe_pairs_duckdb_oracle_parity(spark, sf_dir):
-    """r9: bpe_top_pairs vs its DuckDB oracle on the real fixture —
-    the r10-declaration dry run (same compare the driver does)."""
+    """bpe_top_pairs vs its DuckDB oracle on the real fixture —
+    the same compare the registry runs."""
     from node_js_etl_processor_spark.catalog import load_table
     from node_js_etl_processor_spark.operators.bpe import bpe_top_pairs
 
@@ -1965,7 +1926,7 @@ def test_bpe_pairs_duckdb_oracle_parity(spark, sf_dir):
 
 
 def test_gif_frames_duckdb_oracle_parity(spark, sf_dir):
-    """r9: q_gif_frames vs its DuckDB oracle — the real LZW
+    """q_gif_frames vs its DuckDB oracle — the real LZW
     encode→decode→composite→sample loop differentially checked
     against the doc_id closed form, including raster digests and
     corrupt-row isolation."""
@@ -1978,10 +1939,9 @@ def test_gif_frames_duckdb_oracle_parity(spark, sf_dir):
 
 
 def test_link_graph_duckdb_oracle_parity_and_domain_rank(spark, sf_dir):
-    """r9: q_link_graph vs its DuckDB oracle (page build + href regex
-    replayed, not just the closed form) — the r10-declaration dry run
-    — and the composed domain_pagerank signal: converges on the
-    20-domain graph with total rank ~1.0 (dangling mass
+    """q_link_graph vs its DuckDB oracle (page build + href regex replayed,
+    not just the closed form) — and the composed domain_pagerank signal:
+    converges on the 20-domain graph with total rank ~1.0 (dangling mass
     redistributed)."""
     from node_js_etl_processor_spark.catalog import load_table
     from node_js_etl_processor_spark.operators.graph import (
@@ -2005,10 +1965,10 @@ def test_link_graph_duckdb_oracle_parity_and_domain_rank(spark, sf_dir):
 
 
 def test_token_budget_duckdb_oracle_parity(spark, sf_dir):
-    """r10: q_token_budget (train 8 merges -> bpe_encode -> per-source
-    budget vs chars/4) vs the full-training-unroll DuckDB oracle —
-    DECLARED mid-r10 (oracle imported from __spark_entry__, the same
-    SQL the driver compares). The oracle replays training; the Spark
+    """q_token_budget (train 8 merges -> bpe_encode -> per-source
+    budget vs chars/4) vs the full-training-unroll DuckDB oracle
+    (imported from __spark_entry__, the same SQL the registry
+    compares). The oracle replays training; the Spark
     side runs REAL inference, so this differentially checks the
     train==inference equivalence end to end on the fixture corpus,
     on top of the segmentation property pinned in
@@ -2048,7 +2008,7 @@ def test_token_accounting_exact_on_known_corpus(spark):
 
 
 def test_avi_mjpeg_roundtrip_and_isolation():
-    """r10: the MJPEG-AVI codec — solid-gray frames roundtrip the
+    """The MJPEG-AVI codec — solid-gray frames roundtrip the
     quant=1 JPEG path EXACTLY through the full RIFF container (the
     property the video oracle rests on), non-solid frames decode to
     the right geometry (lossy but walkable), and every corrupt
@@ -2095,12 +2055,11 @@ def test_avi_mjpeg_roundtrip_and_isolation():
 
 
 def test_video_frames_duckdb_oracle_parity(spark, sf_dir):
-    """r10: q_video_frames vs its DuckDB oracle — DECLARED mid-r10
-    (oracle imported from __spark_entry__, the same SQL the driver
-    compares). The real JPEG-encode -> AVI-wrap -> RIFF-walk ->
-    JPEG-decode -> sample loop is differentially checked against the
-    doc_id closed form, including raster digests (exact despite the
-    lossy codec — solid-gray property) and corrupt-row isolation."""
+    """q_video_frames vs its DuckDB oracle (imported from __spark_entry__,
+    the same SQL the registry compares). The real JPEG-encode -> AVI-wrap ->
+    RIFF-walk -> JPEG-decode -> sample loop is differentially checked
+    against the doc_id closed form, including raster digests (exact despite
+    the lossy codec — solid-gray property) and corrupt-row isolation."""
     from node_js_etl_processor_spark.catalog import load_table
     from node_js_etl_processor_spark.operators.multimodal import q_video_frames
 
@@ -2109,7 +2068,7 @@ def test_video_frames_duckdb_oracle_parity(spark, sf_dir):
     assert n > 0
 
 
-# ---------------------------------------------------- G.711 audio (r11 cand)
+# ---------------------------------------------------- G.711 audio
 
 
 
@@ -2189,8 +2148,8 @@ def test_g711_codec_properties():
 
 
 def test_audio_g711_duckdb_oracle_parity(spark, sf_dir):
-    """r11 candidate dry run: q_audio_g711 vs the closed-form G.711
-    oracle (the driver's exact compare). Differentially verifies both
+    """Oracle parity: q_audio_g711 vs the closed-form G.711
+    oracle (the exact oracle compare). Differentially verifies both
     laws' segment/mantissa encode AND decode arithmetic, the square
     wave pos/neg sample split, and real-flavor rejection (a
     well-formed MS-ADPCM WAV must land in the ok=false lane)."""
@@ -2202,7 +2161,7 @@ def test_audio_g711_duckdb_oracle_parity(spark, sf_dir):
     assert n > 0
 
 
-# ------------------------------------------------- IMA ADPCM (r11 cand)
+# ------------------------------------------------- IMA ADPCM
 
 
 
@@ -2380,8 +2339,8 @@ def test_adpcm_wav_roundtrip_blocks_and_rejection():
 
 
 def test_heavy_hitters_duckdb_oracle_parity(spark, sf_dir):
-    """r13 declaration gate: q_heavy_hitters vs the plain exact top-k
-    SQL (the driver's exact compare). The Misra-Gries candidate path
+    """Oracle parity: q_heavy_hitters vs the plain exact top-k
+    SQL (the exact oracle compare). The Misra-Gries candidate path
     must be invisible in the result — candidates, the broadcast
     recount and the guarantee validation are execution strategy."""
     from node_js_etl_processor_spark.catalog import load_table
@@ -2441,7 +2400,7 @@ def test_heavy_hitters_mg_guarantee_and_fallback():
 
 
 def test_image_dedup_duckdb_oracle_parity(spark, sf_dir):
-    """r13 declaration gate: q_image_dedup vs the closed-form dHash
+    """Oracle parity: q_image_dedup vs the closed-form dHash
     replay (every bit recomputed from the sawtooth arithmetic in SQL,
     grouping replayed). Planted trios collide under brightness and
     amplitude shifts — the invariance claim is under the oracle."""
@@ -2454,8 +2413,8 @@ def test_image_dedup_duckdb_oracle_parity(spark, sf_dir):
 
 
 def test_image_neardup_duckdb_oracle_parity_and_planted_pairs(spark, sf_dir):
-    """r13 declaration gate: q_image_neardup vs the closed-form band
-    join + popcount replay (the driver's exact compare) — the
+    """Oracle parity: q_image_neardup vs the closed-form band
+    join + popcount replay (the exact oracle compare) — the
     pigeonhole completeness of the 4×16 banding is cross-checked, not
     assumed. The synth's planted Hamming-1 member (one inverted
     source pixel, sampled only by bit (7,7)) must appear in the pairs
@@ -2514,7 +2473,7 @@ def test_dhash_invariance_and_discrimination():
 
 
 def test_flac_roundtrip_is_lossless_and_md5_verified():
-    """FLAC subset codec (r13): encode→decode is bit-exact across the
+    """FLAC subset codec: encode→decode is bit-exact across the
     subframe forms the encoder chooses (constant blocks, random
     verbatim-ish noise, smooth fixed-predictor signals, single-sample
     and block-boundary lengths) — and the decoder PROVES losslessness
@@ -2562,8 +2521,8 @@ def test_flac_roundtrip_is_lossless_and_md5_verified():
 
 
 def test_audio_flac_duckdb_oracle_parity(spark, sf_dir):
-    """r13 declaration gate: q_audio_flac vs its closed-form DuckDB
-    oracle (the driver's exact compare). FLAC is lossless and the
+    """Oracle parity: q_audio_flac vs its closed-form DuckDB
+    oracle (the exact oracle compare). FLAC is lossless and the
     decoder md5-verifies each payload, so the oracle recomputes every
     statistic from the square-wave parameters directly — framing is
     pinned via n_frames, and the corrupt lane is a real G.711 WAV, so
@@ -2577,8 +2536,8 @@ def test_audio_flac_duckdb_oracle_parity(spark, sf_dir):
 
 
 def test_audio_adpcm_duckdb_oracle_parity(spark, sf_dir):
-    """r11 candidate dry run: q_audio_adpcm vs the recursive-CTE
-    state-machine replay (the driver's exact compare). This is the
+    """Oracle parity: q_audio_adpcm vs the recursive-CTE
+    state-machine replay (the exact oracle compare). This is the
     strongest oracle form in the suite: a STATEFUL codec checked by
     making an independent SQL engine execute the same published
     algorithm step by step, including block resets and fact-chunk
@@ -2592,14 +2551,14 @@ def test_audio_adpcm_duckdb_oracle_parity(spark, sf_dir):
     assert n > 0
 
 
-# --------------------------------------------- oracle-checkable HLL (r11 cand)
+# --------------------------------------------- oracle-checkable HLL
 
 
 
 
 def test_hll_distinct_duckdb_oracle_parity(spark, sf_dir):
-    """r11 candidate dry run: q_hll_distinct vs the full-replay
-    DuckDB oracle (the driver's exact compare) — registers, harmonic
+    """Oracle parity: q_hll_distinct vs the full-replay
+    DuckDB oracle (the exact oracle compare) — registers, harmonic
     sum, integer alpha correction and the exact twin all match
     bit-for-bit across engines, on the orders table."""
     from node_js_etl_processor_spark.catalog import load_table
@@ -2655,12 +2614,12 @@ def test_hll_merge_and_accuracy(spark, sf_dir):
         ), dict(r.asDict())
 
 
-# ------------------------------------- HDR quantile histogram (r11 cand)
+# ------------------------------------- HDR quantile histogram
 
 
 
 def test_hdr_quantiles_duckdb_oracle_parity(spark, sf_dir):
-    """r11 candidate dry run: q_hdr_quantiles vs the full-replay
+    """Oracle parity: q_hdr_quantiles vs the full-replay
     DuckDB oracle — bucket indexing, cumulative fold, integer-ceiling
     thresholds and lower-bound decode all match bit-for-bit."""
     from node_js_etl_processor_spark.catalog import load_table
@@ -2748,13 +2707,13 @@ def test_hdr_sketch_merge_and_error_bound(spark, sf_dir):
             assert exact <= lb + max(lb // 32, 1), (col, lb, exact)
 
 
-# ----------------------------------------------- HLL rollup (r11 cand)
+# ----------------------------------------------- HLL rollup
 
 
 
 
 def test_hll_rollup_duckdb_oracle_parity_and_law(spark, sf_dir):
-    """r11 candidate dry run: q_hll_rollup vs the two-level DuckDB
+    """Oracle parity: q_hll_rollup vs the two-level DuckDB
     replay, PLUS the rollup law asserted directly — the 'ALL' row's
     registers (recomputed from scratch by the oracle) must equal the
     cell-wise MAX of the per-priority register files (which is how
@@ -2787,13 +2746,13 @@ def test_hll_rollup_duckdb_oracle_parity_and_law(spark, sf_dir):
     assert rolled == direct
 
 
-# -------------------------------------------- HLL intersection (r11 cand)
+# -------------------------------------------- HLL intersection
 
 
 
 
 def test_hll_intersect_duckdb_oracle_parity_and_sanity(spark, sf_dir):
-    """r11 candidate dry run: q_hll_intersect vs the 15-entity DuckDB
+    """Oracle parity: q_hll_intersect vs the 15-entity DuckDB
     replay. Sanity beyond parity: union estimates dominate both sides
     (monotonicity of MAX-merged registers), and the
     inclusion-exclusion overlap tracks the exact overlap within the
@@ -2817,7 +2776,7 @@ def test_hll_intersect_duckdb_oracle_parity_and_sanity(spark, sf_dir):
         )
 
 
-# ------------------------------------------------- netpbm (r11 cand)
+# ------------------------------------------------- netpbm
 
 
 
@@ -2870,10 +2829,10 @@ def test_netpbm_codec_roundtrip_and_grammar():
 
 
 def test_netpbm_duckdb_oracle_parity(spark, sf_dir):
-    """r11 candidate dry run: q_netpbm_features vs the closed-form
+    """Oracle parity: q_netpbm_features vs the closed-form
     oracle — binary AND ascii encode/decode, comment grammar, exact
     pixel sums, decoded-raster digests and BMP rejection, the
-    driver's exact compare."""
+    exact oracle compare."""
     from node_js_etl_processor_spark.catalog import load_table
     from node_js_etl_processor_spark.operators.netpbm import q_netpbm_features
 
@@ -2882,7 +2841,7 @@ def test_netpbm_duckdb_oracle_parity(spark, sf_dir):
     assert n > 0
 
 
-# ---------------------------------------------- audio dispatch (r11 cand)
+# ---------------------------------------------- audio dispatch
 
 
 
@@ -2928,7 +2887,7 @@ def test_au_container_roundtrip_and_rejection():
 
 
 def test_audio_probe_duckdb_oracle_parity(spark, sf_dir):
-    """r11 candidate dry run: q_audio_probe vs the closed-form
+    """Oracle parity: q_audio_probe vs the closed-form
     dispatch oracle — all seven real container/codec pairs identified
     with correct geometry WITHOUT sample decode, and the FLAC lane
     lands as ok=false WITH the container recognized (the honest
@@ -2941,14 +2900,14 @@ def test_audio_probe_duckdb_oracle_parity(spark, sf_dir):
     assert n > 0
 
 
-# --------------------------------------------- HLL timeline (r12 decl)
-# HLL_TIMELINE_ORACLE moved to __spark_entry__.py on declaration
-# (r12) — imported above, single source of truth.
+# --------------------------------------------- HLL timeline
+# HLL_TIMELINE_ORACLE lives in __spark_entry__.py — imported above,
+# single source of truth.
 
 
 def test_hll_timeline_duckdb_oracle_parity_and_rollup_law(spark, sf_dir):
-    """DECLARED r12 (oracle imported from __spark_entry__, the same
-    SQL the driver runs): q_hll_timeline vs the two-level DuckDB
+    """Oracle parity (oracle imported from __spark_entry__, the same
+    SQL the registry runs): q_hll_timeline vs the two-level DuckDB
     replay over events (the oracle recomputes the month level from
     scratch; the Spark side folds stored day registers — equality IS
     the temporal rollup law). Plus: day and month rows both present,
@@ -2972,9 +2931,9 @@ def test_hll_timeline_duckdb_oracle_parity_and_rollup_law(spark, sf_dir):
     assert n == len(rows)
 
 
-# --------------------------------------------------- TIFF (r12 decl)
-# TIFF_ORACLE moved to __spark_entry__.py on declaration (r12) —
-# imported above, single source of truth.
+# --------------------------------------------------- TIFF
+# TIFF_ORACLE lives in __spark_entry__.py — imported above, single
+# source of truth.
 
 
 def test_tiff_codec_roundtrip_both_orders_and_strips():
@@ -3018,11 +2977,11 @@ def test_tiff_codec_roundtrip_both_orders_and_strips():
 
 
 def test_tiff_duckdb_oracle_parity(spark, sf_dir):
-    """DECLARED r12 (oracle imported from __spark_entry__, the same
-    SQL the driver runs): q_tiff_features vs the closed-form
+    """Oracle parity (oracle imported from __spark_entry__, the same
+    SQL the registry runs): q_tiff_features vs the closed-form
     oracle — both endiannesses, strip segmentation (ceil(h/2) strips
     on the gray variants), exact pixel sums, raster digests and
-    netpbm rejection, the driver's exact compare."""
+    netpbm rejection, the exact oracle compare."""
     from node_js_etl_processor_spark.catalog import load_table
     from node_js_etl_processor_spark.operators.tiff import q_tiff_features
 
@@ -3101,11 +3060,11 @@ def test_gif_allocation_bomb_refused():
     assert time.time() - t0 < 0.5
 
 
-# --------------------------------------------------------------- r14
+# ------------------------------------ heavy hitters, image probe, setsim
 
 
 def test_heavy_hitters_skewed_certified_oracle_parity(spark, sf_dir):
-    """r14 declaration gate (the r13 verdict's item 3): the Misra-
+    """Oracle parity: the Misra-
     Gries CERTIFIED path — per-partition summaries with real counter
     evictions, parameter-sized merge, guarantee check PASSES,
     broadcast-filtered exact recount — under the DuckDB oracle, not
@@ -3153,7 +3112,7 @@ def test_heavy_hitters_skewed_certified_oracle_parity(spark, sf_dir):
 
 
 def test_heavy_hitters_null_and_noncastable_keys_consistent(spark):
-    """r14 advice item: NULL (and non-long-castable) keys must be
+    """NULL (and non-long-castable) keys must be
     invisible in BOTH execution branches — previously the MG pass
     could never certify NULL while the fallback groupBy counted it as
     a group, making the sketch visible. Both branches now normalize
@@ -3183,7 +3142,7 @@ def test_heavy_hitters_null_and_noncastable_keys_consistent(spark):
 
 
 def test_image_probe_duckdb_oracle_parity(spark, sf_dir):
-    """r14 declaration gate (the r13 verdict's item 2): q_image_probe
+    """Oracle parity: q_image_probe
     vs the closed-form dispatch replay — container/flavor/geometry
     per lane, with the WebP and progressive-JPEG rows surfacing as
     ok=false WITH the container named."""
@@ -3269,7 +3228,7 @@ def test_probe_image_dispatch_and_refusals():
 
 
 def test_probe_and_decode_jpeg_skip_fill_bytes():
-    """r15 (the r14 advice item): spec-legal 0xFF fill bytes before a
+    """Spec-legal 0xFF fill bytes before a
     marker (ITU T.81 B.1.1.2) must be consumed by BOTH the headers-only
     probe and decode_jpeg — a padded real-world baseline JPEG probes
     and decodes identically to the unpadded encode; all-fill tails
@@ -3345,7 +3304,7 @@ def test_decode_raster_dispatch_cross_format_identity():
 
 
 def test_image_neardup_key_cap_graceful(spark):
-    """r14 (the r13 verdict's item 5): the dHash band join's hot-key
+    """The dHash band join's hot-key
     posting cap. Adversarial templated corpus — many images sharing
     ONE 16-bit band value (band 0) while differing elsewhere — would
     pay g^2 candidates at that key; with key_cap the hot key's
@@ -3385,7 +3344,7 @@ def test_image_neardup_key_cap_graceful(spark):
 
 
 def test_setsim_join_duckdb_oracle_parity(spark, sf_dir):
-    """r14 declaration gate: q_setsim_join (prefix-filtered exact
+    """Oracle parity: q_setsim_join (prefix-filtered exact
     Jaccard self-join) vs the BRUTE-FORCE token self-join oracle —
     the prefix-filtering completeness lemma is cross-checked against
     an algorithm that never prunes, with all-integer outputs so the
@@ -3438,7 +3397,7 @@ def test_setsim_join_handpinned_and_rare_first(spark):
 
 
 def test_packed_sets_drops_zero_token_docs(spark):
-    """r16 review #1: the row-local packed_sets must keep the old
+    """The row-local packed_sets must keep the old
     explode→groupBy semantics for zero-token documents — a
     whitespace-only doc has NO token set and must not surface as an
     sz=0 probe rep in containment_decon (the oracle builds probe sets
@@ -3467,7 +3426,7 @@ def test_packed_sets_drops_zero_token_docs(spark):
 
 
 def test_kmv_set_difference_raises_on_absent_group(spark):
-    """r16 review #3: differencing against a group absent from the
+    """Differencing against a group absent from the
     sketch frame raises loudly instead of emitting rows that assert
     the nonexistent set is a strict subset of the other."""
     import pytest as _pytest
@@ -3486,7 +3445,7 @@ def test_kmv_set_difference_raises_on_absent_group(spark):
 
 
 def test_setsim_pigeonhole_matches_prefix_path(spark):
-    """r19 pigeonhole signature join, completeness against the proven
+    """Pigeonhole signature join, completeness against the proven
     prefix path: both candidate generators are exact, so routing the
     SAME randomized near-dup corpus through each must produce
     identical verified output. The corpus is built adversarially for
@@ -3528,7 +3487,7 @@ def test_setsim_pigeonhole_matches_prefix_path(spark):
 
     for t_num, t_den in ((19, 20), (9, 10), (1, 1)):
         reps = _rep_sets(docs)
-        # r20: max_sz is a routing HINT between the two signature
+        # max_sz is a routing HINT between the two signature
         # builders (expression vs hash-aggregated) — force EACH route
         # end-to-end against the prefix path, so the aggregated
         # builder's completeness (empty-group reconstruction
@@ -3555,7 +3514,7 @@ def test_setsim_pigeonhole_matches_prefix_path(spark):
 
 
 def test_setsim_signature_builders_row_identity(spark):
-    """r20 (the r19 advice item): the hash-aggregated signature
+    """The hash-aggregated signature
     builder must emit EXACTLY the rows of the projection-only
     expression enumeration — empty groups (digest 0) included — for
     both the index-side k-range and the degenerate probe range,
@@ -3622,7 +3581,7 @@ def test_setsim_signature_builders_row_identity(spark):
 
 
 def test_setsim_bloom_bound_keeps_budget_boundary_pairs(spark):
-    """r16 bloom miss-count bound, losslessness at the budget
+    """Bloom miss-count bound, losslessness at the budget
     boundary: a strict-containment pair A ⊂ B with |B| = |A| + 1 at
     t = |A|/|B| sits EXACTLY at the miss budget (0 misses on A's
     side, 1 on B's) — the bound must keep it; and a pair one token
@@ -3651,7 +3610,7 @@ def test_setsim_bloom_bound_keeps_budget_boundary_pairs(spark):
 
 
 def test_containment_decon_duckdb_oracle_parity(spark, sf_dir):
-    """r14 declaration gate: q_containment_decon (asymmetric prefix-
+    """Oracle parity: q_containment_decon (asymmetric prefix-
     filtered containment) vs the brute-force probe×train token join —
     the asymmetric prefix lemma's completeness cross-checked probe
     for probe, clean probes included."""
@@ -3714,7 +3673,7 @@ def test_containment_decon_handpinned(spark):
 
 
 # ---------------------------------------------------------------------------
-# r15 declarations: KMV theta sketch, interval coverage, skyline
+# KMV theta sketch, interval coverage, skyline
 # ---------------------------------------------------------------------------
 
 
@@ -3835,7 +3794,7 @@ def test_kmv_small_sets_algebra_exact(spark):
 
 
 def test_kmv_estimates_empty_entry_group_yields_row(spark):
-    """r16 advice fix: kmv_estimates must yield a row for EVERY
+    """kmv_estimates must yield a row for EVERY
     sketched group, including one whose retained-entry set is empty —
     the degenerate k=1 saturated sketch retains nothing (the single
     hash IS theta, and entries are strictly below it), so the group
@@ -3993,14 +3952,13 @@ def test_skyline_tie_and_duplicate_semantics(spark):
 
 
 # ---------------------------------------------------------------------------
-# r16 declaration candidates, pre-verified in r15: kmv difference,
-# PMI collocations, last-touch attribution
+# kmv difference, PMI collocations, last-touch attribution
 # ---------------------------------------------------------------------------
 
 
 def test_kmv_difference_duckdb_parity(spark, sf_dir):
-    """r16 candidate gate: q_kmv_difference vs its staged oracle via
-    the driver's exact compare — theta set-difference rows rebuilt
+    """Oracle parity: q_kmv_difference vs its staged oracle via
+    the exact oracle compare — theta set-difference rows rebuilt
     bit-for-bit."""
     from node_js_etl_processor_spark.catalog import load_table
     from node_js_etl_processor_spark.operators.kmv import (
@@ -4045,7 +4003,7 @@ def test_kmv_difference_sanity(spark, sf_dir):
 
 
 def test_pmi_collocations_duckdb_parity_and_semantics(spark, sf_dir):
-    """r16 candidate gate: q_pmi_collocations vs its staged oracle;
+    """Oracle parity: q_pmi_collocations vs its staged oracle;
     plus the exact-integer gate semantics on a hand corpus — a bigram
     at independence (lift == 1) is EXCLUDED (strict >), a repeated
     collocation passes, and min_count prunes."""
@@ -4079,7 +4037,7 @@ def test_pmi_collocations_duckdb_parity_and_semantics(spark, sf_dir):
 
 
 def test_attribution_duckdb_parity_and_semantics(spark, sf_dir):
-    """r16 candidate gate: q_attribution vs its staged oracle; plus
+    """Oracle parity: q_attribution vs its staged oracle; plus
     hand-stream semantics — credit goes to the most recent touch,
     purchases and errors never receive credit, the 7-day lookback
     nulls stale touches, and n_touches_7d counts the range frame."""
@@ -4117,8 +4075,8 @@ def test_attribution_duckdb_parity_and_semantics(spark, sf_dir):
         (8, 30, sec(1), "purchase", 1.0, "{}"),
         # user 4: a touch at the SAME timestamp as the purchase is a
         # RANGE peer — excluded from both credit and count; the
-        # strictly earlier click gets the credit (the r15 review's
-        # equal-ts consistency fix)
+        # strictly earlier click gets the credit (equal-ts
+        # consistency)
         (9, 40, sec(0), "click", 1.0, "{}"),
         (10, 40, sec(5), "click", 1.0, "{}"),
         (11, 40, sec(5), "purchase", 1.0, "{}"),
@@ -4145,7 +4103,7 @@ def test_attribution_duckdb_parity_and_semantics(spark, sf_dir):
 
 
 def test_itemset_pairs_duckdb_parity_and_semantics(spark, sf_dir):
-    """r16 candidate gate: q_itemset_pairs vs its staged oracle; plus
+    """Oracle parity: q_itemset_pairs vs its staged oracle; plus
     hand-basket semantics — unordered pairs from distinct part sets,
     support threshold, exact per-part and total counts."""
     from node_js_etl_processor_spark.catalog import load_table
@@ -4181,7 +4139,7 @@ def test_itemset_pairs_duckdb_parity_and_semantics(spark, sf_dir):
 
 
 def test_snm_pairs_duckdb_parity_and_semantics(spark, sf_dir):
-    """r16 candidate gate: q_snm_pairs vs its staged oracle (the
+    """Oracle parity: q_snm_pairs vs its staged oracle (the
     distributed rank+offset rewrite vs a global ROW_NUMBER); plus
     global_rank correctness and hand semantics — window-local pairs
     only, each emitted once, Levenshtein-gated."""
@@ -4232,7 +4190,7 @@ def test_snm_pairs_duckdb_parity_and_semantics(spark, sf_dir):
 
 
 def test_span_extents_duckdb_parity(spark, sf_dir):
-    """r16 declaration gate: q_span_extents vs its DuckDB twin — the
+    """Oracle parity: q_span_extents vs its DuckDB twin — the
     shingle hashes, corpus-wide duplication gate and sweep-line merge
     rebuilt over identical integer positions, every column BIGINT."""
     from node_js_etl_processor_spark.catalog import load_table
@@ -4304,8 +4262,8 @@ def test_span_extents_hand_semantics(spark):
 
 def test_span_extents_short_doc_and_width_guard(spark):
     """w < 1 raises; an all-short corpus yields an EMPTY frame (the
-    r15 F.sequence auto-decrement lesson: sequence(1, 0) must never
-    reach slice())."""
+    F.sequence auto-decrement: sequence(1, 0) must never reach
+    slice())."""
     import pytest as _pytest
 
     from node_js_etl_processor_spark.operators.spans import (
@@ -4323,7 +4281,7 @@ def test_span_extents_short_doc_and_width_guard(spark):
 
 
 def test_snm_boundary_independence_on_declared_fixture(spark, sf_dir):
-    """r16 (VERDICT ask #3): the boundary-independence property,
+    """The boundary-independence property,
     promoted from hand rows to the DECLARED fixture — q_snm_pairs
     over the customer table must be invariant to the INPUT partition
     layout (1, 5 and 32 partitions), because the distributed global
@@ -4348,7 +4306,7 @@ def test_snm_boundary_independence_on_declared_fixture(spark, sf_dir):
 
 
 def test_snm_ascii_domain_and_window_guard(spark):
-    """The r15 second-review fixes pinned: non-ASCII keys are excluded
+    """Non-ASCII keys are excluded
     from BOTH engines with the same char-length == byte-length
     predicate (Spark and DuckDB disagree on edit-distance UNITS for
     multi-byte text — code points vs bytes), and window < 1 raises
@@ -4379,7 +4337,7 @@ def test_snm_ascii_domain_and_window_guard(spark):
 
 
 def test_snm_transliterate_fold_identity_and_parity(spark, sf_dir):
-    """r17 hardening (r16 verdict item 7): the opt-in NFKD
+    """Hardening: the opt-in NFKD
     transliteration pre-pass. (1) identity on the declared ASCII
     corpus — transliterate=True output equals the default path's, so
     opting in cannot change declared semantics on an ASCII feed;
@@ -4431,7 +4389,7 @@ def test_snm_transliterate_fold_identity_and_parity(spark, sf_dir):
 
 
 def test_triangles_duckdb_parity_and_semantics(spark, sf_dir):
-    """r17 candidate gate: q_triangles (degree-oriented triangle
+    """Oracle parity: q_triangles (degree-oriented triangle
     counting over the co-purchase graph) vs the deliberately
     UNORIENTED brute-force 3-way-join oracle; plus hand graphs — one
     triangle counted once at every corner, a star has none (the hub
@@ -4468,7 +4426,7 @@ def test_triangles_duckdb_parity_and_semantics(spark, sf_dir):
 
 
 def test_event_sequences_duckdb_parity_and_semantics(spark, sf_dir):
-    """r17 candidate gate: q_event_sequences vs its DuckDB twin; plus
+    """Oracle parity: q_event_sequences vs its DuckDB twin; plus
     hand sequences — contiguous trigrams only, (t_us, event_id) total
     order ties broken by event_id, n_users counts DISTINCT users."""
     from node_js_etl_processor_spark.catalog import load_table
@@ -4513,7 +4471,7 @@ def test_event_sequences_duckdb_parity_and_semantics(spark, sf_dir):
 
 
 def test_rfm_segments_duckdb_parity_and_semantics(spark, sf_dir):
-    """r17 candidate gate: q_rfm_segments vs the single-machine
+    """Oracle parity: q_rfm_segments vs the single-machine
     ROW_NUMBER oracle (the distributed global rank is what's
     checked); plus hand orders — quintiles run 0..4 ascending in
     each metric with custkey tiebreak, metrics are exact integers."""
@@ -4560,7 +4518,7 @@ def test_rfm_segments_duckdb_parity_and_semantics(spark, sf_dir):
 
 
 def test_doc_novelty_duckdb_parity_and_semantics(spark, sf_dir):
-    """r17 candidate gate: q_doc_novelty vs its DuckDB twin (the full
+    """Oracle parity: q_doc_novelty vs its DuckDB twin (the full
     shingle → duplication → sweep-merge → coverage composition); plus
     hand semantics at w=4 — a doc fully covered by a shared run
     reports full extent coverage, a clean doc reports zeros (and IS
@@ -4602,8 +4560,8 @@ def test_doc_novelty_duckdb_parity_and_semantics(spark, sf_dir):
     }
     # duplicate doc_id (re-ingested corpus): ONE row per doc_id with
     # the copies' shingle counts SUMMED — cross-checked against the
-    # oracle on the same in-memory frame (r16 fifth review: the
-    # single-hash totals rewrite briefly emitted one row per copy)
+    # oracle on the same in-memory frame (a single-hash totals form
+    # can emit one row per copy)
     import duckdb
     import pandas as pd
 
@@ -4626,7 +4584,7 @@ def test_doc_novelty_duckdb_parity_and_semantics(spark, sf_dir):
 
 
 def test_robust_stats_duckdb_parity_and_semantics(spark, sf_dir):
-    """r17 candidate gate: q_robust_stats vs its DuckDB twin (no
+    """Oracle parity: q_robust_stats vs its DuckDB twin (no
     quantile functions anywhere — doubled order statistics on both
     sides); plus hand groups — odd n (middle counted twice), even n
     (middle two summed), and the MAD against a by-hand computation."""
@@ -4669,9 +4627,9 @@ def test_robust_stats_duckdb_parity_and_semantics(spark, sf_dir):
         for r in q_robust_stats(hand).collect()
     }
     assert got == {"A": (3, 400, 400), "B": (4, 500, 400)}
-    # ...and the ORACLE drops the NULL too (r16 fifth review: the
-    # guard was pinned Spark-side only, so the oracle's WHERE could
-    # rot): run ROBUST_STATS_ORACLE on the same in-memory frame
+    # ...and the ORACLE drops the NULL too (a guard pinned only Spark-side
+    # would let the oracle's WHERE rot): run ROBUST_STATS_ORACLE on the same
+    # in-memory frame
     import duckdb
     import pandas as pd
 
@@ -4719,7 +4677,7 @@ def test_itemset_pairs_mega_basket_cap(spark):
 
 
 def test_sax_symbols_duckdb_parity_and_semantics(spark, sf_dir):
-    """r17 candidate gate: q_sax_symbols vs its DuckDB twin (hourly
+    """Oracle parity: q_sax_symbols vs its DuckDB twin (hourly
     PAA + rank-quantized alphabet); plus hand series — multi-event
     frames average into one PAA mean, symbols follow the rank order,
     the word follows TIME order, and mean ties break by frame."""
@@ -4761,7 +4719,7 @@ def test_sax_symbols_duckdb_parity_and_semantics(spark, sf_dir):
 
 
 def test_cusum_alarms_duckdb_parity_and_semantics(spark, sf_dir):
-    """r17 candidate gate: q_cusum_alarms vs its DuckDB twin (the
+    """Oracle parity: q_cusum_alarms vs its DuckDB twin (the
     prefix-sum / running-min identity); plus hand streams checked
     against the literal max(0, S+d) recursion — including a
     below-zero reset, the identity's load-bearing case."""
@@ -4803,7 +4761,7 @@ def test_cusum_alarms_duckdb_parity_and_semantics(spark, sf_dir):
 
 
 def test_ols_trend_duckdb_parity_and_semantics(spark, sf_dir):
-    """r17 candidate gate: q_ols_trend vs its DuckDB twin (integer
+    """Oracle parity: q_ols_trend vs its DuckDB twin (integer
     sufficient statistics + one fixed-shape double slope); plus a
     hand-perfect line (slope exactly 100 cents/day) and a degenerate
     single-day group (zero denominator -> NULL slope)."""
@@ -4845,7 +4803,7 @@ def test_ols_trend_duckdb_parity_and_semantics(spark, sf_dir):
 
 
 def test_simpson_diversity_duckdb_parity_and_semantics(spark, sf_dir):
-    """r17 candidate gate: q_simpson_diversity vs its DuckDB twin;
+    """Oracle parity: q_simpson_diversity vs its DuckDB twin;
     plus hand sources — repeat counts feed Simpson's numerator,
     hapax counting, and Yule's K as the exact rational 10^4·(Σc²−n)/n²
     (an all-hapax source has K = 0)."""
@@ -4880,7 +4838,7 @@ def test_simpson_diversity_duckdb_parity_and_semantics(spark, sf_dir):
 
 
 def test_bfs_hops_duckdb_parity_and_semantics(spark, sf_dir):
-    """r17 candidate gate: q_bfs_hops vs its DuckDB twin (unrolled
+    """Oracle parity: q_bfs_hops vs its DuckDB twin (unrolled
     BFS layers over the link-graph edge construction); plus a hand
     graph traced by the doc_id arithmetic — seeds at dist 0, a
     visited vertex never reappears at a larger dist, and path counts
@@ -4938,7 +4896,7 @@ def test_bfs_early_exit_on_dead_frontier_matches_lazy_form(spark, lazy_barriers)
 
 
 def test_equidepth_hist_duckdb_parity_and_semantics(spark, sf_dir):
-    """r17 candidate gate: q_equidepth_hist vs its DuckDB twin
+    """Oracle parity: q_equidepth_hist vs its DuckDB twin
     (SQL-standard NTILE over the identical total order); plus hand
     groups — exact equi-depth split with contiguous bounds, and an
     all-ties group split deterministically by the key tiebreak."""
@@ -4994,7 +4952,7 @@ def test_equidepth_hist_boundary_independence(spark, sf_dir):
 
 
 def test_gini_concentration_duckdb_parity_and_semantics(spark, sf_dir):
-    """r17 candidate gate: q_gini_concentration vs its DuckDB twin
+    """Oracle parity: q_gini_concentration vs its DuckDB twin
     (rank-weighted integer sufficient statistics); plus hand sources
     — a uniform source has G = 0, total concentration approaches
     (n-1)/n, and a hand-computed mixed case matches Sen's formula."""

@@ -1,4 +1,4 @@
-"""The log-structured edge store (r10): mergeable edge partials,
+"""The log-structured edge store: mergeable edge partials,
 generational compaction, the graph-tier ingest loop, and the stored
 PageRank composition — stream == batch through compactions and
 injected crashes."""
@@ -176,7 +176,7 @@ def test_ingest_stream_recovers_append_crash(
 ):
     """Crash between an append's publish and its marker: re-delivery
     purges the partial publish and republishes — edge counts land
-    exactly once (a replay under the r9 plain append would have
+    exactly once (a replay under a plain append would have
     doubled every pair the batch touched)."""
     from node_js_etl_processor_spark.streaming import graphs
 
@@ -222,7 +222,7 @@ def test_ingest_stream_recovers_append_crash(
 
 
 def test_bfs_hops_from_store_equals_batch(spark, sf_dir, tmp_path):
-    """The streamed edge store answers the r17-candidate BFS read
+    """The streamed edge store answers the BFS read
     identically to the batch operator over the same corpus — through
     an append AND a compaction (edge multiplicity differs between a
     partial log and a folded generation, which must be invisible to
@@ -253,7 +253,7 @@ def test_bfs_hops_from_store_equals_batch(spark, sf_dir, tmp_path):
 def test_edge_store_compaction_purges_inflight_publish(
     spark, sf_dir, tmp_path
 ):
-    """r19 guard (the r18 span/vocab-store discipline applied to the
+    """Guard (the span/vocab-store discipline applied to the
     edge store): a batch that crashed AFTER renaming its partials
     into the live generation but BEFORE its applied marker leaves a
     live _staging/<tag>/_PUBLISHING manifest inside that generation.

@@ -1,4 +1,4 @@
-"""The composed ingest-day scenario (r12 verdict ask #5): ONE
+"""The composed ingest-day scenario: ONE
 foreachBatch session runs three multiplexed crawl/CDC drops through
 fingerprint dedup → minhash near-dup → simhash near-dup → ANN layout →
 BM25 index → link-graph edge store → HLL/HDR sketch stores → SCD2 CDC,
@@ -34,8 +34,8 @@ def _null(name: str, typ: str):
 
 
 def _write_drop(docs, orders, media, dst: str, mtime: int) -> None:
-    """One multiplexed drop: doc rows + CDC rows + media rows (r14 —
-    payloads base64-encoded for the json wire) in one json file with
+    """One multiplexed drop: doc rows + CDC rows + media rows
+    (payloads base64-encoded for the json wire) in one json file with
     a controlled mtime (the file source orders batches by timestamp)."""
     feed = docs.select(
         F.lit("doc").alias("kind"),
@@ -92,8 +92,8 @@ def _rows(df) -> set:
 
 
 def test_ingest_day_missing_store_root_named_upfront(spark, tmp_path):
-    """r16 advice fix: a caller holding a pre-r15 path dict (no 'kmv'
-    root) gets a ValueError NAMING the missing store root at applier
+    """A caller holding a path dict without a 'kmv'
+    root gets a ValueError NAMING the missing store root at applier
     build time, not a bare KeyError mid-construction."""
     from node_js_etl_processor_spark.streaming.ingest_day import (
         ingest_day_applier,
@@ -152,7 +152,7 @@ def test_ingest_day_with_midchain_crash_equals_one_shot(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_orderdate"
     )
     embs = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # media lane feed (r14): the mixed-format perceptual-dedup synth
+    # media lane feed: the mixed-format perceptual-dedup synth
     # (planted cross-format trios + WebP refusals), media_id == doc_id
     media = (
         synth_phash_media(load_table(spark, sf_dir, "documents"))
@@ -239,7 +239,7 @@ def test_ingest_day_with_midchain_crash_equals_one_shot(
     mp_folds.setattr(graph_store, "compact_edge_store", count_ce)
 
     try:
-        # compact_every=2 (r16 advice): the composed loop must reach
+        # compact_every=2: the composed loop must reach
         # the vocab lane's compaction slot — previously never plumbed,
         # so the highest-fan-out partial log grew without bound
         q = ingest_day_stream(feed(), paths, ckpt, embs, compact_every=2)
@@ -285,7 +285,7 @@ def test_ingest_day_with_midchain_crash_equals_one_shot(
     assert _ids(spark.read.parquet(paths["ann_out"]), "vec_id") == _ids(
         embedding_near_dup_keepers(e_embs), "vec_id"
     )
-    # media lane (r14): streamed survivors == the one-shot perceptual
+    # media lane: streamed survivors == the one-shot perceptual
     # keepers (min-media_id per dHash group) + refused pass-throughs,
     # and the dHash store holds every ok key SEEN — arrival in
     # media_id order makes the stream decision-identical to the batch
@@ -365,7 +365,7 @@ def test_ingest_day_with_midchain_crash_equals_one_shot(
     assert _rows(read_sketch_store(spark, paths["hdr"])) == _rows(
         hdr_sketch(s_docs, "lang", "n_chars")
     )
-    # r15: the theta-sketch tier — streamed (g, h) store equals the
+    # the theta-sketch tier — streamed (g, h) store equals the
     # one-shot KMV sketch of the day's survivors, and the estimates
     # read path composes on top unchanged
     from node_js_etl_processor_spark.operators.kmv import (
@@ -384,7 +384,7 @@ def test_ingest_day_with_midchain_crash_equals_one_shot(
     assert _rows(kmv_estimates(read_kmv_sketch(spark, paths["kmv"]))) == _rows(
         kmv_estimates(want_sk)
     )
-    # r16: the set-key collapse tier — streamed survivors equal the
+    # the set-key collapse tier — streamed survivors equal the
     # one-shot template-collapse representatives (min doc_id per
     # DISTINCT token set; doc_id-ordered drops make the stream
     # decision-identical), and the store holds every distinct set_key
@@ -402,7 +402,7 @@ def test_ingest_day_with_midchain_crash_equals_one_shot(
     assert _rows(spark.read.parquet(paths["setkey_store"])) == _rows(
         sets_all.select("set_key").distinct()
     )
-    # r16: the shingle-postings tier — extents read from the streamed
+    # the shingle-postings tier — extents read from the streamed
     # store equal the one-shot span query over the whole corpus
     from node_js_etl_processor_spark.operators.spans import q_span_extents
     from node_js_etl_processor_spark.streaming.spanstore import (
@@ -411,7 +411,7 @@ def test_ingest_day_with_midchain_crash_equals_one_shot(
 
     got_sp = _rows(read_span_extents(spark, paths["spanstore"]))
     assert got_sp == _rows(q_span_extents(docs)) and len(got_sp) > 0
-    # r16: the vocabulary tier — diversity statistics read from the
+    # the vocabulary tier — diversity statistics read from the
     # streamed store equal the one-shot operator over the whole corpus
     # (raw doc lane, like the set-key and span tiers)
     from node_js_etl_processor_spark.operators.diversity import (

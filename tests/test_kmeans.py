@@ -301,7 +301,7 @@ def test_ivfpq_residual_recall_beats_raw_on_clustered(spark):
     """The recall consequence of §V, in the regime it targets: on
     CLUSTERED data (where a coarse quantizer actually removes
     variance — the 100 TB embedding-corpus case), trained residual ADC
-    must beat trained raw-vector ADC (the r6 variant) at recall@10
+    must beat trained raw-vector ADC at recall@10
     against the exact scan of the same probed cells. Deterministic:
     fixed-seed generator, fixed probes; measured 28/80 vs 22/80."""
     import numpy as np
@@ -359,7 +359,7 @@ def test_ivfpq_residual_recall_beats_raw_on_clustered(spark):
 
 
 def test_semantic_decontaminate_banded_recall(spark):
-    """r8 regression: the old single 8-plane-signature gate caught a
+    """Regression: a single 8-plane-signature gate catches a
     pair at cosine 0.30 with probability ~(1-acos(0.3)/pi)^8 = 1.6%.
     The banded gate (srp_band_count(0.30) = 7 OR-ed 2-plane bands)
     must catch planted pairs just ABOVE threshold at ~the designed

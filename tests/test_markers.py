@@ -1,8 +1,8 @@
-"""The r10 markers protocol: filesystem-agnostic replay guards,
+"""The markers protocol: filesystem-agnostic replay guards,
 bootstrap sentinels, and staged publish (crash-mid-append recovery).
 
-The r9 guard only covered crash-AFTER-commit re-delivery (marker
-short-circuit); these tests pin the two windows the r9 verdict named:
+A marker short-circuit alone covers only crash-AFTER-commit
+re-delivery; these tests pin the two other windows:
 a crash BETWEEN a batch's writes and its marker (append loops must
 recover, never double-count) and a crashed BOOTSTRAP batch (must
 re-run the overwrite path, not append a copy of itself). Crash
@@ -111,7 +111,7 @@ def _crash_once(monkeypatch, module, calls):
 def test_bm25_stream_recovers_crash_between_append_and_marker(
     spark, sf_dir, tmp_path, monkeypatch
 ):
-    """Kill-between-write-and-marker (r9 verdict ask #4): the batch's
+    """Kill-between-write-and-marker: the batch's
     postings/df/stats publish, the marker never lands, the restart
     re-delivers — the final index must equal the one-shot build
     (recover_partial purged the orphan publish; no double counts)."""
@@ -172,7 +172,7 @@ def test_bm25_stream_recovers_crash_between_append_and_marker(
 def test_bm25_stream_recovers_crashed_bootstrap(
     spark, sf_dir, tmp_path, monkeypatch
 ):
-    """ADVICE r9: a crash after the bootstrap build but before its
+    """A crash after the bootstrap build but before its
     marker must NOT make the re-delivered first batch take the append
     path against its own rows — the sentinel re-runs the overwrite."""
     from node_js_etl_processor_spark.sources.bm25_index import (
@@ -268,8 +268,8 @@ def test_exact_dedup_stream_recovers_crashed_bootstrap(
     spark, sf_dir, tmp_path, monkeypatch
 ):
     """The output-side half of the window: survivors must land in
-    out_path exactly once across the crash + re-delivery (the r9
-    plain append would have doubled them)."""
+    out_path exactly once across the crash + re-delivery (a plain
+    append would double them)."""
     from node_js_etl_processor_spark.streaming import dedup as sdedup
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -323,11 +323,11 @@ def _countmin_setup(spark, sf_dir, tmp_path):
 def test_countmin_stream_exactly_once_across_merge_crash(
     spark, sf_dir, tmp_path, monkeypatch, crash_point
 ):
-    """The versioned-pointer protocol (r10): a crash around the grid
+    """The versioned-pointer protocol: a crash around the grid
     merge — either after the new version is written but before the
     pointer switch, or after the switch but before the marker — must
-    leave the re-delivered batch merging exactly once (the r9 loop
-    would have lost the grid or double-counted every touched cell)."""
+    leave the re-delivered batch merging exactly once (a markerless
+    loop would lose the grid or double-count every touched cell)."""
     from node_js_etl_processor_spark.operators.sketch import (
         countmin_build,
         countmin_read_store,
@@ -383,7 +383,7 @@ def test_countmin_stream_exactly_once_across_merge_crash(
 def test_scd2_stream_exactly_once_across_merge_crash(
     spark, sf_dir, tmp_path, monkeypatch
 ):
-    """r10 manifest commit: a crash after a CDC batch's merge
+    """Manifest commit: a crash after a CDC batch's merge
     committed its pointer (or anywhere mid-merge) but before the
     marker must not mint phantom versions on re-delivery — the
     history equals the one-shot rebuild. This was the ONE loop the
@@ -443,7 +443,8 @@ def test_scd2_stream_exactly_once_across_merge_crash(
 def test_embedding_stream_recovers_crash_between_append_and_marker(
     spark, sf_dir, tmp_path, monkeypatch
 ):
-    """The ANN half of verdict ask #4 (completing the crash matrix):
+    """The ANN half of the kill-between-write-and-marker case
+    (completing the crash matrix):
     batch 2's survivors + layout rows publish, the marker never
     lands, the restart re-delivers — the recovery purge must run
     BEFORE the delta probe reads the store (a batch matching its own
@@ -536,7 +537,7 @@ def test_bm25_stream_end_to_end_over_file_uri_store(spark, sf_dir, tmp_path):
 def test_near_dup_stream_recovers_crashed_bootstrap(
     spark, sf_dir, tmp_path, monkeypatch
 ):
-    """Review fix (r10): the minhash loop's FIRST batch crashes after
+    """The minhash loop's FIRST batch crashes after
     its staged publish — recovery purges the files but leaves empty
     band= partition dirs, and store_has_data must not count those as
     a live store (it would wedge every restart into reading an empty
@@ -581,7 +582,7 @@ def test_near_dup_stream_recovers_crashed_bootstrap(
 
 
 def test_recover_all_partial_repairs_adhoc_crash(spark, sf_dir, tmp_path):
-    """Review fix (r10): an ad-hoc append's crash leaves a random-tag
+    """An ad-hoc append's crash leaves a random-tag
     staging tree nobody can name — recover_all_partial sweeps every
     staged tag, restoring the store to its pre-append state."""
     from node_js_etl_processor_spark.sources.bm25_index import (
@@ -632,7 +633,7 @@ def test_recover_all_partial_repairs_adhoc_crash(spark, sf_dir, tmp_path):
 
 
 def test_scd2_stream_refuses_legacy_flat_store(spark, sf_dir, tmp_path):
-    """Review fix (r10): a populated pre-r10 flat-layout store (bucket=
+    """A populated older flat-layout store (bucket=
     dirs, no manifest pointer) must make the CDC stream FAIL loudly
     instead of silently re-bootstrapping the dimension from one batch
     (which would truncate the stored history)."""
@@ -666,7 +667,7 @@ def test_scd2_stream_refuses_legacy_flat_store(spark, sf_dir, tmp_path):
 def test_sketch_streams_exactly_once_across_merge_crash(
     spark, sf_dir, tmp_path, monkeypatch, family, crash_point
 ):
-    """r10 continuation: the generic versioned-pointer merge loop
+    """The generic versioned-pointer merge loop
     (streaming/sketches.py — countmin's protocol generalized over
     merge laws) is exactly-once for BOTH new sketch families under
     both crash windows. After batch-1 commit + batch-2 crash +
@@ -827,7 +828,7 @@ def test_sketch_stream_estimates_match_batch_query(spark, sf_dir, tmp_path):
 
 
 def test_kmv_store_read_answers_difference_query(spark, sf_dir, tmp_path):
-    """r16 store-read equality pin (VERDICT ask #2): the theta
+    """Store-read equality pin: the theta
     set-DIFFERENCE computed over the STREAMED theta store — two
     micro-batches merged under the union-then-bottom-k law, read back
     through read_kmv_sketch — equals the batch q_kmv_difference over
@@ -928,7 +929,7 @@ def test_kmv_stream_saturation_transition(spark, tmp_path):
 def test_trend_stats_stream_exactly_once_matches_batch(
     spark, sf_dir, tmp_path, monkeypatch, crash_point
 ):
-    """r17: the OLS sufficient-statistics lane — the FIRST
+    """The OLS sufficient-statistics lane — the FIRST
     multi-column instantiation of the generic versioned-pointer merge
     loop — is exactly-once under both crash windows, and
     ols_from_store equals the one-shot q_ols_trend over the union

@@ -57,7 +57,7 @@ def test_oracle_match(spark, sf_dir, duck, name):
 
 
 def test_every_query_is_oracle_paired():
-    # since r3 the contract has no rows-only queries: anything declared
+    # the contract has no rows-only queries: anything declared
     # in queries() must carry a DuckDB oracle (and nothing dangles)
     assert set(QUERIES) == set(ORACLES)
 

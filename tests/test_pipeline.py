@@ -238,33 +238,8 @@ def test_malformed_feed_rows_do_not_fail_refresh(spark, tmp_path):
     assert by_name["List State U"]["domains"] == [None, "b.edu"]
 
 
-def test_partitioned_fetch_scale_path(spark):
-    """S1 scale path: executor-distributed fetch + relational parse."""
-    from node_js_etl_processor_spark.sources.http_json import (
-        fetch_json_partitioned,
-        parse_universities_payloads,
-    )
-
-    def url_fetcher(url):
-        if "bad" in url:
-            raise OSError("boom")
-        return FIXTURE_BY_COUNTRY["Costa Rica"]
-
-    payloads = fetch_json_partitioned(
-        spark, ["http://x/a", "http://x/bad", "http://x/c"], fetcher=url_fetcher
-    )
-    rows = payloads.collect()
-    assert sum(r["ok"] for r in rows) == 2
-    bad = next(r for r in rows if not r["ok"])
-    assert "boom" in bad["error"]
-
-    parsed = parse_universities_payloads(payloads)
-    assert parsed.count() == 2 * len(FIXTURE_BY_COUNTRY["Costa Rica"])
-    assert "state-province" in parsed.columns
-
-
 def test_every_module_imports_without_spark_session():
-    """r15 (caught live in the colloc candidate): a module-level
+    """A module-level
     Column literal requires an active SparkContext at import time
     under Spark 4's classic mode, so a consumer importing operators
     before building its session would crash. Every package module

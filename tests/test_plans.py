@@ -275,13 +275,13 @@ def test_no_declared_query_uses_nested_loop_or_cartesian(spark, sf_dir):
     # query must stay keyed.
     # queries whose only BroadcastNestedLoopJoin is a 1-row scalar
     # fan-out (corpus stats / N) — a broadcast of a parameter, not a
-    # pair scan (q_tfidf's n_docs cross join joined the set in r8).
-    # q_kmv_distinct (r15) joined: its theta-algebra crossJoins fan
+    # pair scan (q_tfidf's n_docs cross join is in the set).
+    # q_kmv_distinct joined: its theta-algebra crossJoins fan
     # the 1-row min-theta / entry-count aggregates across ≤ k-row
     # sketch frames — every BNLJ operand is parameter-sized by
     # construction (the sketch is localCheckpoint-ed at ≤ k rows per
     # group), pinned by test_kmv_query_materializes_sketch_once.
-    # r16 joiners, same 1-row-aggregate class: q_kmv_difference fans
+    # Same 1-row-aggregate class: q_kmv_difference fans
     # the min-theta / entry-count scalars across ≤ k-row frames (the
     # q_kmv_distinct argument verbatim); q_pmi_collocations crossJoins
     # the n_tokens and n_bigrams corpus totals (1 row each) onto the
@@ -415,14 +415,14 @@ def _generate_outer_flags(plan: str) -> list[bool]:
     ],
 )
 def test_no_inferred_generate_filter(spark, sf_dir, build):
-    """Guard for the r5 InferFiltersFromGenerate dodge (BENCH.md lesson
-    #6): plain `explode` lets Catalyst clone the generator's array
-    expression into a pushed-down `size(...) > 0` pre-filter BELOW the
-    tokenizing projection, re-tokenizing every document once per output
-    row (measured 3x on q_decontaminate). The fix is `explode_outer` +
-    isNotNull at text.py's explode sites; this test fails if any site
-    reverts to plain explode (outer=false in the optimized plan) or a
-    Spark upgrade re-infers the quadratic filter."""
+    """Guard for the InferFiltersFromGenerate dodge: plain `explode` lets
+    Catalyst clone the generator's array expression into a pushed-down
+    `size(...) > 0` pre-filter BELOW the tokenizing projection,
+    re-tokenizing every document once per output row (measured 3x on
+    q_decontaminate). The fix is `explode_outer` + isNotNull at text.py's
+    explode sites; this test fails if any site reverts to plain explode
+    (outer=false in the optimized plan) or a Spark upgrade re-infers the
+    quadratic filter."""
     df = build(spark, sf_dir)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     flags = _generate_outer_flags(plan)
@@ -474,7 +474,7 @@ def test_pq_encode_narrow_and_topk_no_global_sort(spark, sf_dir):
 
 
 def test_html_extract_and_url_dedup_plan_shape(spark, sf_dir):
-    """The r7 web-entry stages keep their promised shapes:
+    """The web-entry stages keep their promised shapes:
     q_html_extract is ONE narrow codegen'd projection (zero exchanges
     — it must run at scan bandwidth), and q_url_dedup has exactly the
     canonical-key groupBy exchange with map-side partial aggregation."""
@@ -505,7 +505,7 @@ def test_lm_bigram_broadcast_only_joins(spark, sf_dir):
 
 
 def test_lm_bigram_doc_broadcast_gated_by_input_size(spark, sf_dir, monkeypatch):
-    """r21 (VERDICT r20 item 3): the doc-keyed scoring join's
+    """The doc-keyed scoring join's
     broadcast hint is corpus-cardinality and must be BOUNDED — with
     the input-size ceiling forced to 0 the hint must disappear and the
     planner's keyed shuffle take over (no broadcast of big_doc; the
@@ -536,7 +536,7 @@ def test_ivfpq_rescore_single_encode_pass(spark, sf_dir):
 
 
 def test_embedding_pool_bounded_agg_buffers(spark, sf_dir):
-    """r8: embedding_pool must aggregate with dim scalar SUMs
+    """embedding_pool must aggregate with dim scalar SUMs
     (codegen HashAggregate + map-side partial_sum, buffers bounded at
     dim doubles per group) — never collect_list, whose per-group
     buffer is O(group_size x dim) and forces ObjectHashAggregate."""
@@ -552,7 +552,7 @@ def test_embedding_pool_bounded_agg_buffers(spark, sf_dir):
 
 
 def test_scd2_single_shuffle(spark, sf_dir):
-    """r8: both SCD2 windows share the o_custkey partitioning — one
+    """Both SCD2 windows share the o_custkey partitioning — one
     exchange; no join anywhere."""
     df = relational.q_scd2(load_table(spark, sf_dir, "orders"))
     plan = plan_text(df, "simple")
@@ -561,7 +561,7 @@ def test_scd2_single_shuffle(spark, sf_dir):
 
 
 def test_fuzzy_match_blocks_never_cartesian(spark, sf_dir):
-    """r8: FastSS candidates come from a key-equi join — a cartesian
+    """FastSS candidates come from a key-equi join — a cartesian
     or nested-loop pair scan is the regression this pins out."""
     from node_js_etl_processor_spark.operators import dedup
 
@@ -575,7 +575,7 @@ def test_fuzzy_match_blocks_never_cartesian(spark, sf_dir):
 
 
 def test_tfidf_broadcasts_df_table(spark, sf_dir):
-    """r8: the vocabulary-sized df/N sides broadcast into the scoring
+    """The vocabulary-sized df/N sides broadcast into the scoring
     join — a sort-merge join there means the corpus-sized tf frame
     shuffled on term for no reason."""
     from node_js_etl_processor_spark.operators import text
@@ -587,13 +587,13 @@ def test_tfidf_broadcasts_df_table(spark, sf_dir):
 
 
 def test_fuzzy_match_shuffles_hashed_keys_not_names(spark, sf_dir, lazy_barriers):
-    """r9: the hardened FastSS blocking must exchange on the
+    """The hardened FastSS blocking must exchange on the
     fixed-width (klen, khash) pair — xxhash64 visible in the plan's
     partitioning — and the name column must NOT ride the blocking
     shuffle (it joins back after the DISTINCT pair set)."""
     from node_js_etl_processor_spark.operators import dedup
 
-    # the postings cut left out: the r9 invariant is pinned on the
+    # the postings cut left out: the invariant is pinned on the
     # full build plan (a cut truncates the plan at an RDD scan)
     with lazy_barriers("dedup.q_fuzzy_match"):
         df = dedup.q_fuzzy_match(load_table(spark, sf_dir, "customer"))
@@ -619,7 +619,7 @@ def test_fuzzy_match_shuffles_hashed_keys_not_names(spark, sf_dir, lazy_barriers
 
 
 def test_link_graph_one_exchange_all_codegen(spark, sf_dir):
-    """r9: the link-graph build is codegen string/regexp work + ONE
+    """The link-graph build is codegen string/regexp work + ONE
     keyed aggregation exchange (the final orderBy adds a range
     partition, not a hash one) — no Python evaluation anywhere."""
     from node_js_etl_processor_spark.operators.graph import q_link_graph
@@ -633,7 +633,7 @@ def test_link_graph_one_exchange_all_codegen(spark, sf_dir):
 
 
 def test_bpe_pair_counts_two_keyed_exchanges(spark, sf_dir):
-    """r9: BPE first-step statistics = the word-frequency exchange +
+    """BPE first-step statistics = the word-frequency exchange +
     the pair exchange, nothing else; both HashAggregates get map-side
     partials and no Python touches the plan."""
     from node_js_etl_processor_spark.operators.bpe import bpe_top_pairs
@@ -646,7 +646,7 @@ def test_bpe_pair_counts_two_keyed_exchanges(spark, sf_dir):
 
 
 def test_token_accounting_one_exchange_after_arrow_kernel(spark, sf_dir):
-    """r10: token_accounting = the Arrow encode kernel feeding ONE
+    """token_accounting = the Arrow encode kernel feeding ONE
     source-keyed aggregation exchange with map-side partials — the
     per-doc metadata (source, estimate) rides THROUGH the kernel
     (carry_cols), so no corpus-sized self-join appears in the plan."""
@@ -662,7 +662,7 @@ def test_token_accounting_one_exchange_after_arrow_kernel(spark, sf_dir):
 
 
 def test_video_frames_zero_shuffles_before_sort(spark, sf_dir):
-    """r10: the chained video loop (synth -> RIFF walk + JPEG decode ->
+    """The chained video loop (synth -> RIFF walk + JPEG decode ->
     sample) is two mapInPandas passes with NO shuffle before the
     declared wrapper's presentation sort — blobs never move between
     executors, the 100 TB media-pass shape (the GIF pin's twin)."""
@@ -676,7 +676,7 @@ def test_video_frames_zero_shuffles_before_sort(spark, sf_dir):
 
 
 def test_hll_sketch_all_jvm_partial_aggregated(spark, sf_dir):
-    """r10: the oracle-checkable HLL is pure JVM column work — the
+    """The oracle-checkable HLL is pure JVM column work — the
     multiply-xorshift hash, rank arithmetic, register MAX and harmonic
     fold all stay inside codegen (no Python evaluation node), with
     map-side partial aggregation on both the register and the
@@ -696,7 +696,7 @@ def test_hll_sketch_all_jvm_partial_aggregated(spark, sf_dir):
 
 
 def test_audio_paths_zero_shuffles_before_sort(spark, sf_dir):
-    """r10: both compressed-audio loops (G.711 and IMA-ADPCM) are two
+    """Both compressed-audio loops (G.711 and IMA-ADPCM) are two
     chained mapInPandas passes with NO shuffle before the declared
     wrapper's presentation sort — payload bytes never move between
     executors, the same 100 TB media-pass shape pinned for the WAV,
@@ -715,7 +715,7 @@ def test_audio_paths_zero_shuffles_before_sort(spark, sf_dir):
 
 
 def test_hdr_sketch_one_data_sized_shuffle(spark, sf_dir):
-    """r10: the quantile histogram's only input-sized exchange is the
+    """The quantile histogram's only input-sized exchange is the
     partial-aggregated (group, idx) groupBy; the window fold and the
     final aggregation operate on bucket rows (≤ ~1.3k per group). No
     Python anywhere; the scan prunes to the two sketch columns."""
@@ -732,7 +732,7 @@ def test_hdr_sketch_one_data_sized_shuffle(spark, sf_dir):
 
 
 def test_image_dedup_single_key_exchange_no_payload_past_decode(spark, sf_dir):
-    """r13: the perceptual image dedup's only exchange is the 8-byte
+    """The perceptual image dedup's only exchange is the 8-byte
     dhash window partitioning — pixels and payloads never shuffle.
     The chained synth→decode passes are Arrow kernels (two
     MapInPandas lanes plus the ok/rejected split), and no join
@@ -750,7 +750,7 @@ def test_image_dedup_single_key_exchange_no_payload_past_decode(spark, sf_dir):
 
 
 def test_image_neardup_exact_path_no_distinct_aggregate(spark, sf_dir):
-    """r18: the first-shared-band rule — the exact (uncapped) band
+    """The first-shared-band rule — the exact (uncapped) band
     self-join generates each qualifying pair exactly once (earlier
     bands must differ), so the plan carries NO deduplicating
     aggregate at all; pixels still never shuffle (no exchange keyed
@@ -766,7 +766,7 @@ def test_image_neardup_exact_path_no_distinct_aggregate(spark, sf_dir):
 
 
 def test_heavy_hitters_certified_path_broadcasts_candidates(spark):
-    """r13: on data where the Misra-Gries guarantee certifies (skewed
+    """On data where the Misra-Gries guarantee certifies (skewed
     keys), the exact recount joins the base table against the
     BROADCAST candidate set — the full-key-space shuffle never
     happens; and the merged-summary frame the candidates come from is
@@ -797,13 +797,13 @@ def test_heavy_hitters_certified_path_broadcasts_candidates(spark):
 
 
 def test_setsim_join_plan_no_cartesian_and_filters_in_join(spark, sf_dir):
-    """r14 (re-pinned r19): the exact set-similarity join's scale
+    """The exact set-similarity join's scale
     claims — no CartesianProduct / BroadcastNestedLoopJoin anywhere
     (the candidate step is an equi-join, the verify step joins packed
     digest arrays by rep id), and the length + bloom filters ride the
     candidate join's condition (candidates die inside the join, not
     in a post-shuffle filter). At the declared 19/20 threshold the
-    r19 pigeonhole signature join generates candidates, so the df /
+    pigeonhole signature join generates candidates, so the df /
     rank machinery must be GONE from the plan — no Window node, no
     row_number, no per-token document-frequency aggregation; the
     prefilter replaced exchanges (df groupBy, join-back, per-doc rank
@@ -820,23 +820,23 @@ def test_setsim_join_plan_no_cartesian_and_filters_in_join(spark, sf_dir):
     # the two set sizes) inside its join condition
     joined = [l for l in plan.splitlines() if "Join" in l and "greatest" in l]
     assert joined, "length filter not in the join condition"
-    # r16: the bloom miss-count bound rides the SAME join condition
+    # the bloom miss-count bound rides the SAME join condition
     # (two long bit-ops per pair — candidates die inside the join)
     assert any("bit_count" in l for l in joined), (
         "bloom miss-count bound not in the candidate join condition"
     )
-    # r19 pigeonhole path: candidates come from the (k, gid, XOR)
+    # pigeonhole path: candidates come from the (k, gid, XOR)
     # signature equi-join — the prefix path's rank window and df agg
     # are structurally absent at t >= 9/10
     assert "Window" not in plan
     assert "row_number" not in plan
     assert q.count() > 0
 
-    # the still-live prefix path (t < 9/10) keeps its r14 scale
+    # the still-live prefix path (t < 9/10) keeps its scale
     # claims: the POSITIONAL filter (rank arithmetic) rides the
     # candidate join's condition, not a post-shuffle filter — output-
     # equality tests cannot catch this regressing because the filter
-    # is output-neutral (r19 review)
+    # is output-neutral
     from node_js_etl_processor_spark.operators.setsim import setsim_join
 
     plan_lo = plan_text(setsim_join(docs, 3, 5))
@@ -952,7 +952,7 @@ def test_kmv_query_materializes_sketch_once(spark, sf_dir):
 
 
 def test_attribution_single_keyed_exchange_no_joins(spark, sf_dir):
-    """q_attribution (r16 candidate): both window frames and the
+    """q_attribution: both window frames and the
     purchase filter ride ONE hashpartitioning(user_id) exchange — no
     join of any kind appears (the purchases x touches self-join
     formulation is rewritten away)."""
@@ -962,8 +962,7 @@ def test_attribution_single_keyed_exchange_no_joins(spark, sf_dir):
     )
 
     plan = plan_text(q_attribution(load_table(spark, sf_dir, "events")))
-    # membership + upper bound, not exact equality (r17 review note,
-    # applied to the r19-window rows): the invariant is "no EXTRA
+    # membership + upper bound, not exact equality: the invariant is "no EXTRA
     # exchange", and an exact count would fail on a harmless plan
     # improvement that removes the one keyed exchange
     assert plan.count("Arguments: hashpartitioning") <= 1
@@ -974,7 +973,7 @@ def test_attribution_single_keyed_exchange_no_joins(spark, sf_dir):
 
 
 def test_pmi_collocations_filter_before_joins(spark, sf_dir):
-    """q_pmi_collocations (r16 candidate): the min-count filter
+    """q_pmi_collocations: the min-count filter
     collapses the bigram frame BEFORE the unigram joins (the filter
     sits under the join in the plan), the corpus aggregations are
     partial+final, and the only non-equi joins are the two 1-row
@@ -997,7 +996,7 @@ def test_pmi_collocations_filter_before_joins(spark, sf_dir):
 
 
 def test_itemset_pairs_support_filter_before_joins(spark, sf_dir):
-    """q_itemset_pairs (r16 candidate): the min-support filter
+    """q_itemset_pairs: the min-support filter
     collapses the pair frame below the vocabulary joins, both corpus
     aggregations are partial+final, and the only non-equi join is the
     1-row n_baskets fan-out."""
@@ -1014,7 +1013,7 @@ def test_itemset_pairs_support_filter_before_joins(spark, sf_dir):
 
 
 def test_snm_rank_never_single_partitions_the_corpus(spark, sf_dir, lazy_barriers):
-    """q_snm_pairs (r16 candidate): the global rank is the
+    """q_snm_pairs: the global rank is the
     range-repartition + local window + broadcast offsets rewrite —
     the only single-partition window in the plan is the ≤32-row
     offsets frame, the offsets join is a broadcast, and neighbor
@@ -1050,10 +1049,9 @@ def test_snm_rank_never_single_partitions_the_corpus(spark, sf_dir, lazy_barrier
 
 
 def test_doc_novelty_single_hash_subtree_three_exchanges(spark, sf_dir):
-    """q_doc_novelty (r17 declaration): the corpus tokenize+md5
-    shingle subtree appears exactly ONCE (the r16 review invariant —
-    totals come off the token arrays, not a second hash pass), the
-    keyed exchanges are the span family's h + doc_id trio (duplication
+    """q_doc_novelty: the corpus tokenize+md5 shingle subtree appears
+    exactly ONCE (totals come off the token arrays, not a second hash pass),
+    the keyed exchanges are the span family's h + doc_id trio (duplication
     window, doc-keyed sweep/aggs, totals agg), and no cartesian or
     single-partition stage exists anywhere."""
     from node_js_etl_processor_spark.catalog import load_table
@@ -1070,7 +1068,7 @@ def test_doc_novelty_single_hash_subtree_three_exchanges(spark, sf_dir):
 
 
 def test_novelty_of_drop_broadcast_fallback_same_rows(spark, sf_dir):
-    """novelty_of_drop (r18 changed-code row — the r17 advice fix):
+    """novelty_of_drop:
     the drop's distinct-digest frame scales with drop TOKENS, not any
     vocabulary, so the store filter broadcasts only under
     ``broadcast_posting_cap`` and falls back to a shuffle semi-join
@@ -1095,7 +1093,7 @@ def test_novelty_of_drop_broadcast_fallback_same_rows(spark, sf_dir):
 
 
 def test_cusum_alarms_single_keyed_exchange_no_joins(spark, sf_dir):
-    """q_cusum_alarms (r17 declaration): the prefix-sum/running-min
+    """q_cusum_alarms: the prefix-sum/running-min
     identity rides ONE hashpartitioning(user_id) exchange — both
     windows share it — with no join of any kind and no global sort."""
     from node_js_etl_processor_spark.catalog import load_table
@@ -1110,9 +1108,8 @@ def test_cusum_alarms_single_keyed_exchange_no_joins(spark, sf_dir):
 
 
 def test_robust_stats_one_exchange_mapside_combined(spark, sf_dir):
-    """q_robust_stats (r17 declaration): the doubled-order-statistic
-    rewrite holds — ONE keyed exchange (the r16 in-round review took
-    it from two), partial+final aggregation on both passes, zero
+    """q_robust_stats: the doubled-order-statistic rewrite holds — ONE keyed
+    exchange (not two), partial+final aggregation on both passes, zero
     joins, zero single-partition stages."""
     from node_js_etl_processor_spark.catalog import load_table
     from node_js_etl_processor_spark.operators.robust import q_robust_stats
@@ -1126,7 +1123,7 @@ def test_robust_stats_one_exchange_mapside_combined(spark, sf_dir):
 
 
 def test_ols_trend_one_exchange_integer_sufficient_stats(spark, sf_dir):
-    """q_ols_trend (r17 declaration): per-group regression as
+    """q_ols_trend: per-group regression as
     map-side-combined integer sufficient statistics — one keyed
     exchange, partial+final HashAggregate, no joins."""
     from node_js_etl_processor_spark.catalog import load_table
@@ -1141,7 +1138,7 @@ def test_ols_trend_one_exchange_integer_sufficient_stats(spark, sf_dir):
 
 
 def test_simpson_diversity_two_aggregations_no_joins(spark, sf_dir):
-    """q_simpson_diversity (r17 declaration): exactly the two keyed
+    """q_simpson_diversity: exactly the two keyed
     map-side-combined aggregations the module docstring promises —
     (source, token) counts then the per-source vocabulary reduce —
     with no joins, no windows, no single-partition stages."""
@@ -1161,7 +1158,7 @@ def test_simpson_diversity_two_aggregations_no_joins(spark, sf_dir):
 
 
 def test_event_sequences_two_keyed_exchanges_no_joins(spark, sf_dir):
-    """q_event_sequences (r17 declaration): the per-user lead()
+    """q_event_sequences: the per-user lead()
     window and the trigram support rollup are the only two keyed
     exchanges; the two-level aggregation (per-user occurrence counts
     feeding the vocabulary-sized rollup) keeps everything
@@ -1180,7 +1177,7 @@ def test_event_sequences_two_keyed_exchanges_no_joins(spark, sf_dir):
 
 
 def test_sax_symbols_per_series_exchanges_no_joins(spark, sf_dir):
-    """q_sax_symbols (r17 declaration): symbolization is per-series
+    """q_sax_symbols: symbolization is per-series
     work — two user_id-keyed exchanges (the hourly bucket agg and the
     rank window), no joins, and no single-partition stage (the
     alphabet quantization is rank arithmetic, not a global sort)."""
@@ -1196,7 +1193,7 @@ def test_sax_symbols_per_series_exchanges_no_joins(spark, sf_dir):
 
 
 def test_triangles_orientation_keeps_joins_equi(spark, sf_dir):
-    """q_triangles (r17 declaration): the degree-orientation bound
+    """q_triangles: the degree-orientation bound
     only works if every join stays an EQUI join — no cartesian, no
     broadcast nested loop, no single-partition stage anywhere in the
     three-way closure."""
@@ -1210,13 +1207,13 @@ def test_triangles_orientation_keeps_joins_equi(spark, sf_dir):
 
 
 def test_bfs_hops_unrolled_equi_joins_only(spark, sf_dir, lazy_barriers):
-    """q_bfs_hops (r17 declaration, re-pinned r19): the k-hop
+    """q_bfs_hops: the k-hop
     recurrence (inspected with the per-hop cut left out) is all
     equi-joins on dst/domain — no cartesian, no nested loop, no
     single-partition stage; frontier dedup aggregations are
     partial+final. The DEFAULT path eagerly checkpoints each hop, so
     its final plan must carry NO join at all — every hop executed
-    exactly once inside its checkpoint job (the r19 fix for the
+    exactly once inside its checkpoint job (no
     union-of-layers re-evaluating earlier hops once per later layer,
     and for AQE flipping the frontier join strategy on unknown
     sizes)."""
@@ -1251,7 +1248,7 @@ def test_bfs_hops_unrolled_equi_joins_only(spark, sf_dir, lazy_barriers):
 def test_equidepth_hist_distributed_rank_no_single_partition(
     spark, sf_dir, lazy_barriers
 ):
-    """q_equidepth_hist (r18-scheduled declaration, pinned ahead):
+    """q_equidepth_hist:
     the distributed grouped rank — rangepartitioning for the rank,
     broadcast joins for the per-(partition, group) offsets, and NO
     single-partition stage anywhere (the first cut's ntile-over-
@@ -1284,9 +1281,8 @@ def test_equidepth_hist_distributed_rank_no_single_partition(
 
 
 def test_gini_concentration_one_group_keyed_exchange(spark, sf_dir):
-    """q_gini_concentration (r18-scheduled declaration, pinned
-    ahead): one source-keyed exchange carries the in-group rank
-    window and the aggregation — no joins, no single-partition
+    """q_gini_concentration: one source-keyed exchange carries the in-group
+    rank window and the aggregation — no joins, no single-partition
     stage."""
     from node_js_etl_processor_spark.catalog import load_table
     from node_js_etl_processor_spark.operators.gini import (

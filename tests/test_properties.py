@@ -407,13 +407,13 @@ def test_packing_preserves_tokens_and_cuts_on_budget(spark, docs):
 )
 @example(h=16, w=13, seed=21, subsample=False, restart=0)
 def test_jpeg_roundtrip_property(h, w, seed, subsample, restart):
-    """Property (r8, bound re-derived r19): for ANY raster geometry,
+    """Property: for ANY raster geometry,
     seed, sampling mode and restart interval, encode→decode is
     shape-preserving and faithful at quant=1 — 4:4:4 within ±3 per
     RGB channel; 4:2:0 within ±3 on the reconstructed LUMA (chroma
     is subsampled by design, but Y survives the 2×2 mean roundtrip).
 
-    Why ±3, not the ±2 claimed r8–r18 (the r18 verdict falsified ±2
+    Why ±3, not ±2 (a counterexample to ±2 sits
     at h=16, w=13, seed=21, 4:4:4 — max abs error 3 on 1 of 624
     samples; pinned below as a permanent @example): the roundtrip's
     error chain at quant=1 is
@@ -466,7 +466,7 @@ def test_jpeg_roundtrip_property(h, w, seed, subsample, restart):
     seed=st.integers(0, 2**31 - 1),
 )
 def test_wav_roundtrip_property(n, rate, stereo, seed):
-    """Property (r8): PCM-WAV encode→decode is BIT-exact for any
+    """Property: PCM-WAV encode→decode is BIT-exact for any
     length, rate and channel layout (int16 range inclusive of
     extremes)."""
     import numpy as np
@@ -494,7 +494,7 @@ def test_wav_roundtrip_property(n, rate, stereo, seed):
     seed=st.integers(0, 2**31 - 1),
 )
 def test_gif_roundtrip_property(h, w, ncolors, nframes, interlace, seed):
-    """Property (r9): for ANY geometry, palette size, frame count and
+    """Property: for ANY geometry, palette size, frame count and
     interlace mode, GIF encode→decode is BIT-exact (lossless format)
     with delays preserved — exercising every LZW code-width
     transition the palette size induces."""
@@ -526,7 +526,7 @@ def test_gif_roundtrip_property(h, w, ncolors, nframes, interlace, seed):
     mcs=st.sampled_from([3, 5, 8]),
 )
 def test_gif_lzw_roundtrip_property(data, mcs):
-    """Property (r9): the LZW coder pair is exact for any index
+    """Property: the LZW coder pair is exact for any index
     stream, including highly repetitive ones (dictionary growth +
     width bumps at every boundary the stream reaches)."""
     from node_js_etl_processor_spark.operators.gif import (
@@ -547,7 +547,7 @@ def test_gif_lzw_roundtrip_property(data, mcs):
     b=st.sampled_from(["a", "b", "c", "x", "</w>"]),
 )
 def test_bpe_fold_matches_reference_merge(spark, words, a, b):
-    """Property (r9): the JVM aggregate fold applying one BPE merge
+    """Property: the JVM aggregate fold applying one BPE merge
     equals the reference algorithm's greedy leftmost non-overlapping
     replace for ANY word set and pair — including pairs ending in the
     EOW marker and self-pairs (the overlap case)."""
@@ -586,7 +586,7 @@ def test_bpe_fold_matches_reference_merge(spark, words, a, b):
                   min_size=1, max_size=300),
 )
 def test_g711_matches_audioop_property(data):
-    """Differential property (r10 continuation): both G.711 laws,
+    """Differential property: both G.711 laws,
     both directions, equal CPython's audioop (the Sun reference) on
     ARBITRARY int16 sequences — hypothesis hunts the segment/mask
     boundaries the fixed-seed test might miss (clip values, ±0,
@@ -623,7 +623,7 @@ def test_g711_matches_audioop_property(data):
     rate=st.sampled_from([8000, 16000, 44100]),
 )
 def test_adpcm_wav_roundtrip_property(data, rate):
-    """Property (r10 continuation): for ANY int16 signal, the
+    """Property: for ANY int16 signal, the
     tag-0x11 WAV roundtrip decodes to exactly the per-block
     state-machine replay (predictor = first sample, index reset,
     fact-chunk truncation) — lengths straddle the 505-sample block
@@ -656,7 +656,7 @@ def test_adpcm_wav_roundtrip_property(data, rate):
                   min_size=1, max_size=200),
 )
 def test_hdr_bucket_bounds_property(vals):
-    """Property (r10 continuation): the log-linear bucket index is
+    """Property: the log-linear bucket index is
     monotone non-decreasing in the value, decodes to a lower bound
     lb ≤ v, and the bucket's relative width is ≤ 1/32 for v ≥ 64 —
     the guarantees q_hdr_quantiles' estimates inherit."""
@@ -746,7 +746,7 @@ _MAGIC_PREFIXES = [
     b"", b"RIFF", b"RIFF\x10\x00\x00\x00WAVE", b".snd", b"II\x2a\x00",
     b"MM\x00\x2a", b"P5\n", b"P6 ", b"BM", b"\x89PNG\r\n\x1a\n",
     b"GIF89a", b"fLaC",
-    # the r14 image-dispatch corners: bare SOI, SOI+APP0, SOI+SOF0,
+    # the image-dispatch corners: bare SOI, SOI+APP0, SOI+SOF0,
     # and a RIFF container that claims WebP
     b"\xff\xd8", b"\xff\xd8\xff\xe0", b"\xff\xd8\xff\xc0",
     b"RIFF\x24\x00\x00\x00WEBP",
@@ -833,11 +833,11 @@ def test_codec_decoders_survive_bit_flips_of_valid_payloads(kind, n_flips, seed)
 
 
 def test_image_probe_total_under_corruption_sweep():
-    """r14: deterministic every-byte corruption sweep over one REAL
+    """Deterministic every-byte corruption sweep over one REAL
     payload of each of the nine probeable container/flavor pairs
     (plus truncations) — probe_image and decode_raster must decode or
     raise DecodeUnavailable, never leak struct/index/value errors or
-    hang. The in-round adversarial fuzz ran 12.9k mutated/truncated/
+    hang. An adversarial fuzz ran 12.9k mutated/truncated/
     junk payloads with zero violations; this pins the sweep in CI at
     a bounded size."""
     import numpy as np
@@ -891,7 +891,7 @@ def test_image_probe_total_under_corruption_sweep():
 
 
 # ---------------------------------------------------------------------------
-# r15: interval-union and skyline properties vs pure-python models
+# interval-union and skyline properties vs pure-python models
 # ---------------------------------------------------------------------------
 
 
@@ -1180,7 +1180,7 @@ def test_sax_word_matches_rank_model(spark, frames):
 
 
 def test_snm_fold_table_is_the_nfkd_strip_contract():
-    """r17: the SNM transliteration table's load-bearing properties,
+    """The SNM transliteration table's load-bearing properties,
     checked directly against unicodedata (the table is the ONE
     artifact both engines interpolate, so its correctness IS the
     cross-engine parity argument): every mapped char NFKD-strips to
@@ -1223,7 +1223,7 @@ def test_snm_fold_table_is_the_nfkd_strip_contract():
 def test_novelty_of_drop_equals_union_batch_on_random_corpora(
     spark, corpus, drop
 ):
-    """Algebraic property (r17): on arbitrary generated corpora with
+    """Algebraic property: on arbitrary generated corpora with
     DISJOINT doc_ids (the documented ingest precondition),
     novelty_of_drop(drop, shingles(corpus)) must equal
     q_doc_novelty(corpus ∪ drop) restricted to the drop's doc_ids —
@@ -1275,7 +1275,7 @@ def test_novelty_of_drop_equals_union_batch_on_random_corpora(
 def test_span_island_merge_matches_reference_interval_union(
     spark, positions, w
 ):
-    """Algebraic property (r17): spans.extents_from_dup_positions —
+    """Algebraic property: spans.extents_from_dup_positions —
     now load-bearing for THREE queries (q_span_extents, q_doc_novelty
     and the drop scorer's gated extents) — must equal a straight
     single-machine interval-union reference on arbitrary duplicated
@@ -1335,7 +1335,7 @@ def test_span_island_merge_matches_reference_interval_union(
     )
 )
 def test_trend_stats_merge_associative_on_random_splits(spark, rows):
-    """Algebraic property (r17): the trend store lane's merge law —
+    """Algebraic property: the trend store lane's merge law —
     trend_stats over arbitrary disjoint splits, unioned and finished
     by trend_from_stats, must equal q_ols_trend over the whole frame
     bit-for-bit (BIGINT sums are associative; the slope is one
@@ -1390,7 +1390,7 @@ def test_trend_stats_merge_associative_on_random_splits(spark, rows):
 def test_novelty_gate_exact_twin_admission_is_batching_independent(
     spark, tmp_path_factory, multiplicities, batch_of
 ):
-    """r18 (the r17 advice's core complaint, property-pinned): with
+    """Property-pinned: with
     pairwise token-disjoint contents (so the gate can cut only through
     exact duplication), exactly ONE copy of every content is admitted
     NO MATTER how its copies are dealt across delivery batches — the
@@ -1462,7 +1462,7 @@ def test_novelty_gate_exact_twin_admission_is_batching_independent(
 def test_equidepth_hist_matches_reference_ntile_on_random_groups(
     spark, groups, n_buckets
 ):
-    """r18 declaration, property-pinned beyond the fixture parity: on
+    """Property-pinned beyond the fixture parity: on
     arbitrary integer multisets (ties included — the total order
     tie-breaks on the key columns), the distributed grouped-rank +
     NTILE arithmetic reproduces the SQL-standard NTILE reference
@@ -1518,7 +1518,7 @@ def test_equidepth_hist_matches_reference_ntile_on_random_groups(
     )
 )
 def test_gini_concentration_matches_reference_on_random_groups(spark, groups):
-    """r18 declaration, property-pinned beyond the fixture parity: the
+    """Property-pinned beyond the fixture parity: the
     rank-weighted integer sufficient statistics (n, sum_x, sum_ix)
     equal the direct Python computation over the sorted sizes on
     arbitrary non-negative integer multisets (ties broken by doc_id,
@@ -1555,7 +1555,7 @@ def test_gini_concentration_matches_reference_on_random_groups(spark, groups):
             assert gg == gini
         else:
             # all-zero sizes: the coefficient is undefined — both
-            # engines emit NULL (the r18 ANSI divide-by-zero finding)
+            # engines emit NULL (the ANSI divide-by-zero case)
             assert gg is None
 
 
@@ -1566,7 +1566,7 @@ def test_gini_concentration_matches_reference_on_random_groups(spark, groups):
     t=st.sampled_from([(9, 10), (19, 20)]),
 )
 def test_setsim_pigeonhole_matches_python_bruteforce(spark, base_sz, seed, t):
-    """Property (r19): the pigeonhole signature join vs a pure-Python
+    """Property: the pigeonhole signature join vs a pure-Python
     brute force — randomized corpora built as perturbations of a base
     set (exact twins, 1-out-1-in swaps, supersets, disjoint noise),
     so qualifying pairs, boundary pairs and the exact-twin collapse

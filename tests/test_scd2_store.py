@@ -1,7 +1,7 @@
 """Incremental SCD2: the stored dimension + CDC merge must equal the
 one-shot q_scd2 rebuild, touch only the buckets the batch keys hash
 to, and close the loop as a stream (the dedup-store trio applied to
-the warehouse tier — r9)."""
+the warehouse tier)."""
 
 from __future__ import annotations
 
@@ -162,7 +162,7 @@ def test_scd2_cdc_stream_matches_batch(spark, sf_dir, tmp_path):
 
 
 def test_scd2_time_travel_and_retention(spark, sf_dir, tmp_path):
-    """r10: the manifest layout doubles as a snapshot catalog —
+    """The manifest layout doubles as a snapshot catalog —
     retain_manifests keeps N commits readable as-of
     (read_scd2_store(at=...)), GC drops everything older, and a
     request for a dropped snapshot raises with the retained list."""
@@ -209,7 +209,7 @@ def test_scd2_time_travel_and_retention(spark, sf_dir, tmp_path):
 
 
 def test_orphan_manifest_never_shadows_snapshots(spark, sf_dir, tmp_path):
-    """Review fix (r10): a manifest written by a crashed commit (never
+    """A manifest written by a crashed commit (never
     pointed at) must not appear in the snapshot catalog, must not be
     readable as a snapshot, and must not displace a real predecessor
     from the retention window — the catalog walks the committed

@@ -226,11 +226,11 @@ def test_ivfpq_probe_recall_gate(spark, sf_dir, tmp_path):
 
 
 def test_ivfpq_probe_recall_trained_beats_seed(spark, sf_dir, tmp_path):
-    """r8: the end-to-end stored-code probe, with a layout written
+    """The end-to-end stored-code probe, with a layout written
     from TRAINED quantizers (kmeans_train coarse + ivfpq_train
-    residual codebooks — the production ingest path) — closing the
-    gap the r7 verdict named: the recall gate previously only ever
-    measured the seed regime the training machinery exists to escape.
+    residual codebooks — the production ingest path) — so the
+    recall gate measures more than the seed regime the training
+    machinery exists to escape.
     Gate: at matched knobs (default 2/8 cells, rescore=4), summed
     recall@10 over the same 8 probes must be >= the seed layout's,
     and the trained rescore form must clear the seed gate's floor.
@@ -286,7 +286,7 @@ def test_ivfpq_probe_recall_trained_beats_seed(spark, sf_dir, tmp_path):
 
 
 def test_embedding_delta_equals_batch_and_prunes_store(spark, sf_dir, tmp_path):
-    """r8: dedup_embedding_delta == q_dedup_embedding on the union,
+    """dedup_embedding_delta == q_dedup_embedding on the union,
     restricted to pairs touching the drop — and the layout scan is
     partition-pruned to the drop's sig directories with the drop side
     broadcast."""
@@ -323,8 +323,8 @@ def test_embedding_delta_equals_batch_and_prunes_store(spark, sf_dir, tmp_path):
 
 
 def test_ivfpq_probe_multiprobe_recall_curve(spark, sf_dir, tmp_path):
-    """r9: the multiprobe recall CURVE (the r8 verdict's missing #3 —
-    the knob previously had exactly one measured point). Recall@10
+    """The multiprobe recall CURVE (more than one measured point
+    for the knob). Recall@10
     vs n_probe_cells ∈ {1,2,4,8} on the production path: TRAINED
     quantizers → stored residual codes → ADC → exact rescore.
     Measured (8 probes × k=10 = 80 possible hits) — sf0.01 /
@@ -397,7 +397,7 @@ def test_ivfpq_probe_multiprobe_recall_curve(spark, sf_dir, tmp_path):
 
 
 def test_append_ann_layout_equals_rebuild(spark, sf_dir, tmp_path):
-    """r9: write(old) + append(new) must be probe-indistinguishable
+    """Write(old) + append(new) must be probe-indistinguishable
     from write(old ∪ new) — for the IVFADC stored-code probe AND the
     sig-blocked dedup-from-layout — and the append must leave every
     pre-existing parquet file untouched (appends never read or
@@ -446,7 +446,7 @@ def test_append_ann_layout_equals_rebuild(spark, sf_dir, tmp_path):
 
 
 def test_ann_compaction_probe_identical(spark, sf_dir, tmp_path):
-    """r10: append log -> compact_ann_layout must leave every probe
+    """Append log -> compact_ann_layout must leave every probe
     family bit-identical (rows are per-vector facts; compaction is a
     pure file fold) with fewer files."""
     import os

@@ -456,7 +456,7 @@ def test_url_frontier_stream_dedups_on_canonical_key(spark, tmp_path):
 
 
 def test_exact_dedup_ingest_stream_matches_batch(spark, sf_dir, tmp_path):
-    """r8: the fingerprint-store ingest loop as a stream — three
+    """The fingerprint-store ingest loop as a stream — three
     landed files processed as micro-batches must yield EXACTLY the
     batch q_dedup_docs keepers (arrival order == doc_id order, so
     first-arrival == min doc_id), cross-batch duplicates dropped via
@@ -506,7 +506,7 @@ def test_exact_dedup_ingest_stream_matches_batch(spark, sf_dir, tmp_path):
 
 
 def test_near_dup_ingest_stream_matches_batch(spark, sf_dir, tmp_path):
-    """r8: the minhash near-dup ingest stream — three doc_id-ordered
+    """The minhash near-dup ingest stream — three doc_id-ordered
     drops must keep EXACTLY the docs the batch signature-space rule
     keeps (minhash_near_dup_keepers: drop iff est-Jaccard >= θ to any
     smaller-doc_id doc), with candidate generation against the stored
@@ -549,7 +549,7 @@ def test_near_dup_ingest_stream_matches_batch(spark, sf_dir, tmp_path):
 
 
 def test_countmin_ingest_stream_merges_exactly(spark, sf_dir, tmp_path):
-    """r8: CM sketches of two streams sum to the sketch of their
+    """CM sketches of two streams sum to the sketch of their
     union EXACTLY — three streamed order drops must leave the stored
     grid cell-for-cell equal to the one-shot batch grid, and
     estimates from the streamed grid must equal batch estimates."""
@@ -606,7 +606,7 @@ def test_countmin_ingest_stream_merges_exactly(spark, sf_dir, tmp_path):
 
 
 def test_embedding_ingest_stream_matches_batch(spark, sf_dir, tmp_path):
-    """r9: the embedding near-dup ingest stream — three vec_id-ordered
+    """The embedding near-dup ingest stream — three vec_id-ordered
     drops must keep EXACTLY the vectors the batch keeper rule keeps
     (embedding_near_dup_keepers: drop iff a sig-blocked pair links it
     at cosine >= threshold to a smaller-vec_id vector), probing the
@@ -649,7 +649,7 @@ def test_embedding_ingest_stream_matches_batch(spark, sf_dir, tmp_path):
 
 
 def test_ingest_loops_skip_replayed_batches(spark, sf_dir, tmp_path):
-    """r9: the foreachBatch replay guard — a (checkpoint, batch_id)
+    """The foreachBatch replay guard — a (checkpoint, batch_id)
     whose marker already exists must be a NO-OP for the mutating
     ingest loops (re-delivery after a crash-post-commit is the
     at-least-once case the guard exists for), and new batch ids under
@@ -694,7 +694,7 @@ def test_ingest_loops_skip_replayed_batches(spark, sf_dir, tmp_path):
 
 
 def test_image_dedup_ingest_stream_matches_batch(spark, sf_dir, tmp_path):
-    """r14: the perceptual-image-dedup ingest loop as a stream (the
+    """The perceptual-image-dedup ingest loop as a stream (the
     ingest day's media lane standalone) — three media_id-ordered
     parquet drops of the mixed-format synth must keep EXACTLY the
     batch perceptual keepers (min-media_id per dHash group) plus the
@@ -765,7 +765,7 @@ def test_image_dedup_ingest_stream_matches_batch(spark, sf_dir, tmp_path):
     # exactly-once OUTPUT even for refused rows: the re-landed
     # media_id<30 slice contains refused rows (%11==0), which must
     # NOT re-emit (they key the store by identity) — so no media_id
-    # appears twice (the r14 in-round code-review fix)
+    # appears twice
     assert len(out_rows) == len(set(out_rows))
     store_df = spark.read.parquet(store)
     n_dhash = store_df.filter(F.col("kind") == "dhash").count()
@@ -862,7 +862,7 @@ def test_cusum_alarm_stream_matches_batch_and_carries_state(spark, sf_dir, tmp_p
 
 
 def test_cusum_alarm_stream_rejects_out_of_order_delivery(spark, tmp_path):
-    """r16 advice fix: the stream==batch equivalence rests on events
+    """The stream==batch equivalence rests on events
     arriving in per-user time order ACROSS micro-batches; a violation
     must fail loudly (the carried last-seen marker), not silently
     corrupt the running statistic."""
@@ -909,7 +909,7 @@ def test_cusum_alarm_stream_rejects_out_of_order_delivery(spark, tmp_path):
 
 
 def test_span_store_novelty_reads_equal_batch(spark, sf_dir, tmp_path):
-    """r17 (verdict item 4): the novelty read paths over the
+    """The novelty read paths over the
     shingle-postings store. (1) score_drop_novelty — a NEW drop
     scored against the stored corpus BEFORE ingest, only the drop
     tokenized — equals the batch q_doc_novelty over the union corpus
@@ -963,7 +963,7 @@ def test_span_store_novelty_reads_equal_batch(spark, sf_dir, tmp_path):
 def test_score_drop_novelty_redelivered_doc_scores_fully_covered(
     spark, sf_dir, tmp_path
 ):
-    """r17 in-round review pin: novelty_of_drop's equality with the
+    """novelty_of_drop's equality with the
     batch operator holds under the new-doc_ids ingest precondition;
     a doc_id that ALREADY has stored postings is scored from its
     drop-side rows only, and its stored twin's identical digests make
@@ -1002,7 +1002,7 @@ def test_score_drop_novelty_redelivered_doc_scores_fully_covered(
 def test_novelty_gated_ingest_matches_sequential_batch_through_crash(
     spark, sf_dir, tmp_path, monkeypatch, crash_point
 ):
-    """r17: the novelty-GATED ingestion loop — score each drop
+    """The novelty-GATED ingestion loop — score each drop
     against the admitted corpus's postings, cut docs over the
     duplicated-coverage threshold, append only survivors' postings.
     Pinned: (1) the streamed admitted set equals the sequential batch
@@ -1058,7 +1058,7 @@ def test_novelty_gated_ingest_matches_sequential_batch_through_crash(
             > F.lit(PCT) * F.col("n_tokens")
         ).select("doc_id")
 
-    # sequential batch simulation — keep-one collapse first (the r18
+    # sequential batch simulation — keep-one collapse first (the
     # twin rule), then the gate, exactly like the applier
     drop1r = exact_twin_reps(drop1)
     drop2r = exact_twin_reps(drop2)
@@ -1130,7 +1130,7 @@ def test_novelty_gated_ingest_matches_sequential_batch_through_crash(
 
 
 def test_novelty_gate_keeps_one_within_drop_twin(spark, tmp_path):
-    """r18 (the r17 advice fix): two copies of NEVER-SEEN content in
+    """Two copies of NEVER-SEEN content in
     one drop must not cut each other — exactly one survives the gate
     (the min-doc_id representative, q_dedup_docs' keeper rule), its
     postings enter the store, and a LATER re-delivery of the same
@@ -1166,7 +1166,7 @@ def test_novelty_gate_keeps_one_within_drop_twin(spark, tmp_path):
 def test_span_store_compaction_preserves_reads_and_caps_files(
     spark, sf_dir, tmp_path
 ):
-    """r18: the span store's leveled minor compaction — fold the live
+    """The span store's leveled minor compaction — fold the live
     append log into one sealed segment behind the manifest + pointer
     switch. Pins: (1) the read set is IDENTICAL (multiset) to the
     one-shot shingling before and after compaction, and after further
@@ -1222,8 +1222,8 @@ def test_span_store_compaction_preserves_reads_and_caps_files(
 
 
 def test_span_store_legacy_flat_layout_raises_not_empty(spark, tmp_path):
-    """r18 review pin: a store holding data files at its ROOT (the
-    pre-r18 flat layout) must raise, not read as an empty corpus —
+    """A store holding data files at its ROOT (an
+    older flat layout) must raise, not read as an empty corpus —
     silently scoring every drop as novel is the worst failure mode a
     dedup store can have. A genuinely fresh store still reads empty
     (the gated bootstrap contract)."""
@@ -1242,7 +1242,7 @@ def test_span_store_legacy_flat_layout_raises_not_empty(spark, tmp_path):
 
 
 def test_span_store_compaction_skips_inflight_publish(spark, sf_dir, tmp_path):
-    """r18 review pin (the real crash composition): a batch that
+    """Pin (the real crash composition): a batch that
     crashed AFTER renaming its log files but BEFORE its marker leaves
     a live _staging/<tag>/_PUBLISHING manifest; compaction must NOT
     seal those files into a segment — recover_partial purges <tag>-*
@@ -1321,7 +1321,7 @@ def test_span_store_compaction_skips_inflight_publish(spark, sf_dir, tmp_path):
 def test_span_store_compaction_crash_matrix(
     spark, sf_dir, tmp_path, monkeypatch, crash_point
 ):
-    """r18: the compaction's two crash windows converge. Before the
+    """The compaction's two crash windows converge. Before the
     pointer switch: the written segment + manifest are orphans nothing
     references — readers still see the full log; the retried
     compaction sweeps the orphans and completes. Inside the delete
@@ -1382,7 +1382,7 @@ def test_span_store_compaction_crash_matrix(
 def test_span_store_major_compaction_bounds_segments(
     spark, sf_dir, tmp_path
 ):
-    """r19 (the r18 advice's growth note): minor-only compaction adds
+    """Minor-only compaction adds
     a sealed segment per run, unbounded in compaction count. With
     ``max_segments`` reached, a run folds segments + log into ONE
     fresh segment: reads stay multiset-identical through the major
@@ -1442,7 +1442,7 @@ def test_span_store_major_compaction_bounds_segments(
 def test_span_store_replayed_batch_still_compacts_on_boundary(
     spark, sf_dir, tmp_path
 ):
-    """r19 (r18 advice): a marker-hit re-delivery that lands on a
+    """A marker-hit re-delivery that lands on a
     compact_every boundary must still run the fold — the old early
     return deferred it a full cycle. Replay batch 1 (boundary, with
     compact_every=2) after its marker committed: the log folds into a
@@ -1488,7 +1488,7 @@ def test_span_store_replayed_batch_still_compacts_on_boundary(
 def test_span_store_major_compaction_crash_matrix(
     spark, sf_dir, tmp_path, monkeypatch, crash_point
 ):
-    """r19: the MAJOR fold keeps the minor fold's commit protocol, so
+    """The MAJOR fold keeps the minor fold's commit protocol, so
     its three crash windows must converge the same way. Before the
     manifest write: the fresh segment is an orphan nothing names.
     Before the pointer switch: segment + manifest both orphans — the

@@ -1,4 +1,4 @@
-"""The log-structured vocabulary store (r16): SUM-mergeable
+"""The log-structured vocabulary store: SUM-mergeable
 per-(source, token) count partials, generational compaction, the
 diversity-tier ingest loop — stream == batch for both the raw counts
 and the derived lexical-diversity statistics."""
@@ -138,7 +138,7 @@ def test_ingest_stream_with_compaction_matches_batch(spark, sf_dir, tmp_path):
 def test_compaction_purges_crashed_append_no_double_count(
     spark, sf_dir, tmp_path
 ):
-    """r18 review (the spanstore finding applied here): a batch that
+    """As in the span store, a batch that
     crashed mid-publish (tag-* files renamed into the generation, NO
     applied marker) must be PURGED by compaction, not folded — folding
     would seal its rows beyond recover_partial's reach and the
