@@ -52,6 +52,26 @@ def q_dedup_docs(documents: DataFrame) -> DataFrame:
     )
 
 
+def exact_twin_reps(docs: DataFrame) -> DataFrame:
+    """Exact-twin collapse: of every group of rows with the same text
+    fingerprint keep the min-doc_id row (q_dedup_docs' keeper rule)
+    with all its columns. A ``row_number`` over the fingerprint, so
+    the result has exactly one row per fingerprint even when a doc_id
+    repeats. The one keeper of the exact-dedup applier's bootstrap
+    (streaming/dedup.py) and the novelty gate's within-drop twin rule
+    (streaming/spanstore.py).
+
+    Scale: one window over the 16-byte fingerprint, batch-sized."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(fingerprint(F.col("text"))).orderBy(F.col("doc_id"))
+    return (
+        docs.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
 # ----------------------------------------------------------- minhash + lsh
 
 

@@ -18,7 +18,7 @@ the grid bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: Grid geometry: 4 hash rows × 64 columns. ε ≈ e/w ≈ 4.2% of the
@@ -201,23 +201,6 @@ def q_bloom(orders: DataFrame) -> DataFrame:
         "maybe_present",
         (F.col("maybe_present") & (F.col("o_orderkey") % 3 == 0)).alias("is_fp"),
     )
-
-
-def countmin_read_store(spark: SparkSession, store_path: str) -> DataFrame:
-    """Resolve a ``countmin_ingest_stream`` store to its CURRENT grid
-    (the store is versioned: ``v_<tag>`` directories plus an
-    atomically-switched ``_CURRENT`` pointer, which is what makes the
-    merge loop exactly-once). Readers always resolve the pointer at
-    read time; a missing pointer means no batch ever committed."""
-    from ..streaming.sketches import read_sketch_store
-
-    try:
-        return read_sketch_store(spark, store_path)
-    except ValueError as e:
-        raise ValueError(
-            f"no committed Count-Min grid at {store_path!r} (missing "
-            "_CURRENT pointer) — run countmin_ingest_stream first"
-        ) from e
 
 
 # ------------------------------------------------------------- HyperLogLog

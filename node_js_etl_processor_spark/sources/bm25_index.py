@@ -219,9 +219,10 @@ def compact_bm25_index(spark: SparkSession, src: str, dst: str) -> None:
     caller repoints consumers (or swaps paths between ingest runs) —
     the right shape for the inverted index, whose probe paths are
     pinned to ``<path>/postings`` etc.; the generation-pointer form
-    the edge store uses (``sources/graph_store.py``) trades an extra
-    pointer resolution per probe for in-place compaction, which a
-    per-query-latency-sensitive index doesn't want.
+    the edge and vocabulary stores use (``sources/partials_store.py``)
+    trades an extra pointer resolution per probe for in-place
+    compaction, which a per-query-latency-sensitive index doesn't
+    want.
 
     Replay safety across the swap: compaction first purges any
     UNMARKED partial publish (``recover_all_partial`` — safe in the

@@ -277,7 +277,7 @@ def read_scd2_store(
             raise ValueError(
                 f"no committed SCD2 store at {path!r} (missing _CURRENT "
                 "manifest pointer) — bootstrap with write_scd2_store; "
-                "pre-r10 flat-layout stores must be rebuilt"
+                "older flat-layout stores must be rebuilt"
             )
         _seq, _nb, _parent, mapping = man
     paths = sorted(
@@ -331,7 +331,7 @@ def scd2_apply_delta(
     if man is None:
         raise ValueError(
             f"no committed SCD2 store at {path!r} — bootstrap with "
-            "write_scd2_store (pre-r10 flat-layout stores must be rebuilt)"
+            "write_scd2_store (older flat-layout stores must be rebuilt)"
         )
     seq, store_nb, _parent, mapping = man
     if n_buckets != store_nb:

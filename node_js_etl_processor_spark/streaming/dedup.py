@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 
 from ..functions import barrier
 from ..functions.timeutil import ensure_instant
+from .markers import start_ingest
 
 
 def dedup_events_stream(
@@ -118,7 +119,7 @@ def exact_dedup_applier(store_path: str, out_path: str, checkpoint: str):
     (in-batch-only) dedup for a crashed first batch."""
     from pyspark.sql import functions as F
 
-    from ..operators.dedup import fingerprint
+    from ..operators.dedup import exact_twin_reps, fingerprint
     from ..sources.dedup_store import dedup_exact_delta
     from .markers import (
         batch_already_applied,
@@ -143,15 +144,7 @@ def exact_dedup_applier(store_path: str, out_path: str, checkpoint: str):
         if not store_has_data(store_path):
             # first batch bootstraps the store from nothing: in-batch
             # dedup only, then the store is born from its survivors
-            from pyspark.sql.window import Window
-
-            w = Window.partitionBy("_fp").orderBy(F.col("doc_id").asc())
-            survivors = (
-                batch_df.withColumn("_fp", fingerprint(F.col("text")))
-                .withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_fp", "_rn")
-            )
+            survivors = exact_twin_reps(batch_df)
         else:
             survivors = dedup_exact_delta(spark, batch_df, store_path)
         survivors = barrier.cut(survivors, "streaming.dedup.exact_survivors")
@@ -178,13 +171,10 @@ def exact_dedup_ingest_stream(
     the same drain-the-source twin as every refresh here). Batch
     equivalence is test-pinned: streamed batches == q_dedup_docs
     keepers when arrival order matches doc_id order."""
-    return (
-        docs_stream.writeStream.foreachBatch(
-            exact_dedup_applier(store_path, out_path, checkpoint)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_ingest(
+        docs_stream,
+        exact_dedup_applier(store_path, out_path, checkpoint),
+        checkpoint,
     )
 
 
@@ -339,15 +329,12 @@ def near_dup_ingest_stream(
     """Near-duplicate ingest as a stream: see
     ``near_dup_applier`` for the per-batch semantics, keeper rule and
     exactly-once protocol. Returns the started query (availableNow)."""
-    return (
-        docs_stream.writeStream.foreachBatch(
-            near_dup_applier(
-                store_dir, out_path, checkpoint, threshold, num_hashes, bands
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_ingest(
+        docs_stream,
+        near_dup_applier(
+            store_dir, out_path, checkpoint, threshold, num_hashes, bands
+        ),
+        checkpoint,
     )
 
 
@@ -620,15 +607,12 @@ def embedding_ingest_stream(
     """Embedding near-dup ingest as a stream: see
     ``embedding_applier`` for the per-batch semantics, keeper rule and
     exactly-once protocol. Returns the started query (availableNow)."""
-    return (
-        embs_stream.writeStream.foreachBatch(
-            embedding_applier(
-                store_dir, out_path, checkpoint, threshold, n_planes, n_cells
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_ingest(
+        embs_stream,
+        embedding_applier(
+            store_dir, out_path, checkpoint, threshold, n_planes, n_cells
+        ),
+        checkpoint,
     )
 
 
@@ -758,11 +742,8 @@ def image_dedup_ingest_stream(
     equivalence is test-pinned: streamed survivors == the batch
     q_image_dedup keepers (+ ok=false pass-through rows) when arrival
     order matches media_id order."""
-    return (
-        media_stream.writeStream.foreachBatch(
-            image_dedup_applier(store_path, out_path, checkpoint)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_ingest(
+        media_stream,
+        image_dedup_applier(store_path, out_path, checkpoint),
+        checkpoint,
     )

@@ -34,6 +34,7 @@ from .markers import (
     marker_id,
     record_bootstrap,
     recover_partial,
+    start_ingest,
     store_has_data,
 )
 
@@ -77,9 +78,8 @@ def bm25_index_stream(
     ``bm25_applier`` for the per-batch semantics and the exactly-once
     protocol. availableNow trigger — the same drain-the-source twin
     as every ingest loop here. Returns the started query."""
-    return (
-        docs_stream.writeStream.foreachBatch(bm25_applier(index_path, checkpoint))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_ingest(
+        docs_stream,
+        bm25_applier(index_path, checkpoint),
+        checkpoint,
     )

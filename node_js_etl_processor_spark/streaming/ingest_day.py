@@ -1,9 +1,9 @@
 """The composed "ingest day": ONE foreachBatch session running a
 multiplexed crawl-drop feed through EVERY store tier the engine
 maintains — the end-to-end composition the individual ingest loops
-(streaming/dedup.py, indexing.py, graphs.py, sketches.py,
-warehouse.py) were built for, exercised as a single pipeline instead
-of eight isolated streams.
+(streaming/dedup.py, indexing.py, sketches.py, warehouse.py and the
+partials-store applier, sources/partials_store.py) were built for,
+exercised as a single pipeline instead of eight isolated streams.
 
 Feed contract: each micro-batch is one "drop" — a union-schema frame
 carrying crawl documents (``kind='doc'``: doc_id, text, lang, source,
@@ -36,7 +36,7 @@ exact-dedup store shape on the perceptual key), the set-key lane
 template-collapse representative store off the raw doc feed, the
 shingle-postings lane (``streaming/spanstore.py``) keeps
 ExactSubstr span-extent reads current, the vocabulary lane
-(``streaming/vocab.py``) keeps the lexical-diversity statistics
+(``sources/vocab_store.py``) keeps the lexical-diversity statistics
 current — both also off the raw feed — and the CDC lane merges into
 the SCD2 dimension store.
 
@@ -60,6 +60,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import barrier
+from .markers import start_ingest
 
 #: the multiplexed feed's column split. Media payloads ride the feed
 #: base64-encoded (``payload_b64`` — JSON drops cannot carry raw
@@ -86,12 +87,11 @@ def ingest_day_applier(
     img_store/img_out from ``paths`` to run a text+CDC-only day.
 
     ``compact_every=N`` folds the log-structured partial
-    lanes every N batches (0 = never): it reaches the VOCABULARY lane
-    — the highest-fan-out append path, O(batch vocabulary) partial
-    files per batch across 64 buckets, which previously never
-    compacted in the composed loop even though compact_vocab_store
-    exists to cap exactly that file-listing growth — the EDGES
-    lane, whose applier shares the generation-compaction slot, and
+    lanes every N batches (0 = never): it reaches the VOCABULARY and
+    EDGES lanes, whose shared ``partials_applier`` folds the partial
+    log into a fresh generation (``compact_partials`` — the vocabulary
+    lane is the highest-fan-out append path, O(batch vocabulary)
+    partial files per batch across 64 buckets), and
     the SPAN-POSTINGS lane, whose corpus-sized store takes the
     leveled MINOR compaction (fold only the log into a sealed
     segment, never rewrite the corpus — streaming/spanstore.py)."""
@@ -109,9 +109,7 @@ def ingest_day_applier(
         raise ValueError(
             "ingest_day_applier: paths is missing required store "
             f"root(s) {missing} — every non-media tier needs its root "
-            "(the 'kmv' theta lane is required since r15, the 'vocab' "
-            "diversity lane since r16; only img_store/img_out are "
-            "optional)"
+            "(only img_store/img_out are optional)"
         )
     from ..operators.sketch import hdr_sketch, hll_registers
     from .dedup import (
@@ -121,7 +119,9 @@ def ingest_day_applier(
         near_dup_applier,
         simhash_applier,
     )
-    from .graphs import link_graph_applier
+    from ..sources.graph_store import EDGES
+    from ..sources.partials_store import partials_applier
+    from ..sources.vocab_store import VOCAB
     from .indexing import bm25_applier
     from .sketches import sketch_merge_applier
     from .warehouse import scd2_applier
@@ -131,7 +131,7 @@ def ingest_day_applier(
     sim = simhash_applier(paths["sh_store"], paths["sh_out"], checkpoint)
     emb = embedding_applier(paths["ann_store"], paths["ann_out"], checkpoint)
     bm25 = bm25_applier(paths["bm25"], checkpoint)
-    edges = link_graph_applier(paths["edges"], checkpoint, compact_every)
+    edges = partials_applier(EDGES, paths["edges"], checkpoint, compact_every)
     hll = sketch_merge_applier(
         paths["hll"],
         checkpoint,
@@ -177,9 +177,7 @@ def ingest_day_applier(
     # stay current without re-tokenizing the corpus; off the RAW doc
     # lane like the set-key and span tiers, so the stored statistics
     # cover the whole feed
-    from .vocab import vocab_applier
-
-    voc = vocab_applier(paths["vocab"], checkpoint, compact_every)
+    voc = partials_applier(VOCAB, paths["vocab"], checkpoint, compact_every)
     scd2 = scd2_applier(paths["scd2"], checkpoint)
     img_keys = {"img_store", "img_out"} & set(paths)
     if len(img_keys) == 1:
@@ -273,11 +271,8 @@ def ingest_day_stream(
     """The composed ingest day as ONE started stream (availableNow):
     see ``ingest_day_applier`` for the tier graph, the exactly-once
     composition argument and the ``compact_every`` lane plumbing."""
-    return (
-        feed_stream.writeStream.foreachBatch(
-            ingest_day_applier(paths, checkpoint, embeddings, compact_every)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_ingest(
+        feed_stream,
+        ingest_day_applier(paths, checkpoint, embeddings, compact_every),
+        checkpoint,
     )

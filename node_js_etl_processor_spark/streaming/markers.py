@@ -73,6 +73,19 @@ def marker_id(checkpoint: str, batch_id: int) -> str:
     return f"{sid}_{batch_id}"
 
 
+def start_ingest(stream, applier, checkpoint: str):
+    """Run ``applier(batch_df, batch_id)`` over ``stream`` under
+    foreachBatch — the one trigger policy every ingest loop shares:
+    availableNow (drain what has landed, then stop) against the
+    loop's ``checkpoint``. Returns the started query."""
+    return (
+        stream.writeStream.foreachBatch(applier)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 # ---------------------------------------------------------------------------
 # filesystem shim: os for scheme-less paths, Hadoop FileSystem for URIs
 # ---------------------------------------------------------------------------

@@ -36,6 +36,7 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from ..functions import barrier
+from .markers import start_ingest
 
 
 def sketch_merge_applier(
@@ -109,22 +110,20 @@ def sketch_merge_ingest_stream(
     ``sketch_merge_applier`` for the per-batch protocol (replay guard
     → pointer self-check → merge → new version dir → atomic pointer
     switch → marker → GC). Returns the started query (availableNow)."""
-    return (
-        items_stream.writeStream.foreachBatch(
-            sketch_merge_applier(
-                store_path, checkpoint, build_batch, merge_keys, merge_agg
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_ingest(
+        items_stream,
+        sketch_merge_applier(
+            store_path, checkpoint, build_batch, merge_keys, merge_agg
+        ),
+        checkpoint,
     )
 
 
 def read_sketch_store(spark: SparkSession, store_path: str) -> DataFrame:
-    """Resolve a sketch store to its CURRENT committed state (the
-    shared reader: countmin_read_store's pointer resolution, reused
-    by the HLL and HDR stores)."""
+    """Resolve a sketch store (countmin, HLL, HDR, KMV, OLS) to its
+    CURRENT committed state: the ``v_<tag>`` directory the atomically
+    switched ``_CURRENT`` pointer names. A missing pointer means no
+    batch ever committed."""
     from .markers import current_version
 
     cur = current_version(store_path)

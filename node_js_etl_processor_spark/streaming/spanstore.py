@@ -61,6 +61,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions import barrier
 from ..operators.spans import SPAN_W, extents_from_positions, shingle_positions
+from .markers import start_ingest
 
 #: the append-log subdirectory of the leveled layout.
 _LOG = "log"
@@ -131,7 +132,7 @@ def read_span_store(spark: SparkSession, store_path: str) -> DataFrame:
         if legacy:
             raise ValueError(
                 f"span store at {store_path!r} holds root-level data "
-                f"files ({legacy[:3]}…) — the pre-r18 FLAT layout. "
+                f"files ({legacy[:3]}…) — an older FLAT layout. "
                 "Re-ingest under the leveled layout (log/ + sealed "
                 "segments); reading it as empty would silently score "
                 "every drop as novel."
@@ -312,13 +313,10 @@ def span_postings_ingest_stream(
     compact_every: int = 0,
 ):
     """``span_postings_applier`` as an availableNow stream."""
-    return (
-        docs_stream.writeStream.foreachBatch(
-            span_postings_applier(store_path, checkpoint, w, compact_every)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_ingest(
+        docs_stream,
+        span_postings_applier(store_path, checkpoint, w, compact_every),
+        checkpoint,
     )
 
 
@@ -361,42 +359,6 @@ def score_drop_novelty(
     from ..operators.novelty import novelty_of_drop
 
     return novelty_of_drop(drop_docs, read_span_store(spark, store_path), w)
-
-
-def exact_twin_reps(docs: DataFrame) -> DataFrame:
-    """Keep-one collapse for within-drop EXACT twins (for the novelty
-    gate): one representative per exact-content
-    fingerprint (min doc_id — q_dedup_docs' deterministic-keeper
-    rule). Without it, two copies of never-seen content delivered in
-    ONE drop cut each other — every position of each twin is
-    duplicated by the other's identical digests — so NO copy of the
-    content survives, and the admitted corpus depends on delivery
-    batching (the same two docs split across two drops admit the
-    first). Collapsing twins BEFORE scoring removes the mutual kill:
-    the representative is scored with its twins' digests absent (so
-    genuinely novel content survives) and the non-representatives are
-    dropped as exact duplicates of an admitted doc — the keep-one
-    verdict a dedup gate owes them.
-
-    The keeper rule (group by ``text.fingerprint``, keep min doc_id)
-    is written out here, in ``dedup.q_dedup_docs`` and in the
-    exact-dedup applier's bootstrap; the gate's sequential-simulation
-    equality test pins their agreement. Sharing one helper among the
-    three is an open consolidation.
-
-    Scale: one window over the 16-byte content fingerprint, batch-
-    sized (the drop, never the store)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from ..operators.text import fingerprint
-
-    w_fp = Window.partitionBy(fingerprint(F.col("text")))
-    return (
-        docs.withColumn("_rep", F.min("doc_id").over(w_fp))
-        .filter(F.col("doc_id") == F.col("_rep"))
-        .drop("_rep")
-    )
 
 
 def novelty_gated_ingest_applier(
@@ -443,6 +405,7 @@ def novelty_gated_ingest_applier(
     load-bearing here: re-scoring against a store that already
     contained the crashed attempt's postings would see every drop
     position duplicated and wrongly cut the whole batch."""
+    from ..operators.dedup import exact_twin_reps
     from ..operators.novelty import novelty_of_drop
     from .markers import (
         batch_already_applied,
@@ -514,13 +477,10 @@ def novelty_gated_ingest_stream(
     compact_every: int = 0,
 ):
     """``novelty_gated_ingest_applier`` as an availableNow stream."""
-    return (
-        docs_stream.writeStream.foreachBatch(
-            novelty_gated_ingest_applier(
-                store_path, out_path, checkpoint, max_dup_pct, w, compact_every
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_ingest(
+        docs_stream,
+        novelty_gated_ingest_applier(
+            store_path, out_path, checkpoint, max_dup_pct, w, compact_every
+        ),
+        checkpoint,
     )

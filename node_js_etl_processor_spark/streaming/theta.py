@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.kmv import KMV_K, kmv_bottom_k, kmv_sketch
+from .markers import start_ingest
 
 
 def _pack(sketch: DataFrame) -> DataFrame:
@@ -85,15 +86,10 @@ def kmv_ingest_stream(
 ):
     """Incremental per-group KMV sketches as a stream (availableNow):
     see the module docstring for the merge-law argument."""
-    from .sketches import sketch_merge_ingest_stream
-
-    return sketch_merge_ingest_stream(
+    return start_ingest(
         items_stream,
-        store_path,
+        kmv_merge_applier(store_path, checkpoint, group_col, key_col, k),
         checkpoint,
-        build_batch=lambda b: _pack(kmv_sketch(b, group_col, key_col, k)),
-        merge_keys=("g",),
-        merge_agg=lambda: _merge_hs(k),
     )
 
 

@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from .markers import start_ingest
+
 
 def scd2_applier(
     store_path: str,
@@ -78,7 +80,7 @@ def scd2_applier(
                 for name, is_dir in _listdir(store_path)
             ):
                 raise ValueError(
-                    f"SCD2 store at {store_path!r} uses the pre-r10 "
+                    f"SCD2 store at {store_path!r} uses an older "
                     "flat layout (bucket= dirs, no _CURRENT manifest); "
                     "rebuild it with write_scd2_store before resuming "
                     "the CDC stream — bootstrapping from this batch "
@@ -110,11 +112,8 @@ def scd2_cdc_stream(
     ``scd2_applier`` for the per-batch semantics and the exactly-once
     protocol. availableNow trigger — the same drain-the-source twin
     as every ingest loop here. Returns the started query."""
-    return (
-        facts_stream.writeStream.foreachBatch(
-            scd2_applier(store_path, checkpoint, n_buckets)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_ingest(
+        facts_stream,
+        scd2_applier(store_path, checkpoint, n_buckets),
+        checkpoint,
     )

@@ -121,8 +121,8 @@ def main(argv: "list[str] | None" = None) -> int:
         os.path.join(os.path.dirname(entry_mod.SMOKE_SF_DIR), "sf0.01")
     ]
     # Plain session: no engine tuning, so ANSI-mode / parquet-nanos
-    # behavior matches a default Spark install.
-    spark = SparkSession.builder.master("local[32]").getOrCreate()
+    # behavior matches a default Spark install; one task slot per core.
+    spark = SparkSession.builder.master("local[*]").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     queries = entry_mod.queries()

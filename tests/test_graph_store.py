@@ -16,12 +16,15 @@ from node_js_etl_processor_spark.operators.graph import (
     link_graph_edges,
 )
 from node_js_etl_processor_spark.sources.graph_store import (
-    append_edge_store,
-    compact_edge_store,
+    EDGES,
     domain_outlinks,
     domain_pagerank_from_store,
     read_edge_graph,
-    write_edge_store,
+)
+from node_js_etl_processor_spark.sources.partials_store import (
+    append_partials,
+    compact_partials,
+    write_partials,
 )
 
 
@@ -40,15 +43,15 @@ def test_write_append_compact_equals_one_shot(spark, sf_dir, tmp_path):
     new = docs.filter("doc_id % 3 = 0")
     store = str(tmp_path / "edges")
 
-    write_edge_store(old, store)
-    append_edge_store(new, store)
+    write_partials(EDGES, old, store)
+    append_partials(EDGES, new, store)
     want = _edges_set(link_graph_edges(docs))
     assert _edges_set(read_edge_graph(spark, store)) == want
 
     n_parquet_before = sum(
         1 for _r, _d, fs in os.walk(store) for f in fs if f.endswith(".parquet")
     )
-    before, after = compact_edge_store(spark, store)
+    before, after = compact_partials(spark, EDGES, store)
     assert after < before  # the log really folded
     assert _edges_set(read_edge_graph(spark, store)) == want
     n_parquet_after = sum(
@@ -58,7 +61,7 @@ def test_write_append_compact_equals_one_shot(spark, sf_dir, tmp_path):
 
     # further appends after compaction keep aggregating correctly —
     # iterate the UNION of expected pairs so a dropped pair fails
-    append_edge_store(new, store)
+    append_partials(EDGES, new, store)
     got = {
         (s, d): n for s, d, n in _edges_set(read_edge_graph(spark, store))
     }
@@ -77,7 +80,7 @@ def test_domain_outlinks_prunes_to_one_bucket(spark, sf_dir, tmp_path):
     outlinks of exactly that domain."""
     docs = load_table(spark, sf_dir, "documents")
     store = str(tmp_path / "edges")
-    write_edge_store(docs, store)
+    write_partials(EDGES, docs, store)
 
     got = domain_outlinks(spark, store, "d1.example")
     rows = got.collect()
@@ -111,10 +114,11 @@ def test_ingest_stream_with_compaction_matches_batch(spark, sf_dir, tmp_path):
     ACTUALLY fire mid-stream (generation changes, file count stays
     bounded), the final graph must equal the one-shot build, and the
     stored PageRank must rank-match the batch composition."""
-    from node_js_etl_processor_spark.sources.graph_store import _gen_dir
-    from node_js_etl_processor_spark.streaming.graphs import (
-        link_graph_ingest_stream,
+    from node_js_etl_processor_spark.sources.partials_store import (
+        _gen_dir,
+        partials_applier,
     )
+    from node_js_etl_processor_spark.streaming.markers import start_ingest
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     src = tmp_path / "landing"
@@ -133,13 +137,12 @@ def test_ingest_stream_with_compaction_matches_batch(spark, sf_dir, tmp_path):
             shutil.copy(f, flat / f"{i}-{f.name}")
 
     schema = "doc_id long, text string"
-    q = link_graph_ingest_stream(
+    q = start_ingest(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .json(str(flat)),
-        store,
+        partials_applier(EDGES, store, str(tmp_path / "ck"), compact_every=2),
         str(tmp_path / "ck"),
-        compact_every=2,
     )
     q.awaitTermination(180)
 
@@ -148,7 +151,7 @@ def test_ingest_stream_with_compaction_matches_batch(spark, sf_dir, tmp_path):
     # compaction really ran: batch 1 folded generations, so the live
     # generation is NOT the bootstrap generation, and the live file
     # count is bounded by O(buckets) + the post-fold appends
-    gen = _gen_dir(store)
+    gen = _gen_dir(EDGES, store)
     assert "gen_" in gen
     from node_js_etl_processor_spark.streaming.markers import _walk_files
 
@@ -178,7 +181,8 @@ def test_ingest_stream_recovers_append_crash(
     purges the partial publish and republishes — edge counts land
     exactly once (a replay under a plain append would have
     doubled every pair the batch touched)."""
-    from node_js_etl_processor_spark.streaming import graphs
+    from node_js_etl_processor_spark.sources import partials_store
+    from node_js_etl_processor_spark.streaming.markers import start_ingest
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     src = tmp_path / "landing"
@@ -188,9 +192,10 @@ def test_ingest_stream_recovers_append_crash(
     docs.filter("doc_id >= 250").coalesce(1).write.json(str(src / "b2"))
     schema = "doc_id long, text string"
 
-    q = graphs.link_graph_ingest_stream(
+    q = start_ingest(
         spark.readStream.schema(schema).json(str(src / "b1")),
-        store, str(tmp_path / "ck1"),
+        partials_store.partials_applier(EDGES, store, str(tmp_path / "ck1")),
+        str(tmp_path / "ck1"),
     )
     q.awaitTermination(120)
 
@@ -200,19 +205,21 @@ def test_ingest_stream_recovers_append_crash(
         calls.append(a)
         raise RuntimeError("injected crash before marker")
 
-    monkeypatch.setattr(graphs, "mark_batch_applied", boom)
-    q = graphs.link_graph_ingest_stream(
+    monkeypatch.setattr(partials_store, "mark_batch_applied", boom)
+    q = start_ingest(
         spark.readStream.schema(schema).json(str(src / "b2")),
-        store, str(tmp_path / "ck2"),
+        partials_store.partials_applier(EDGES, store, str(tmp_path / "ck2")),
+        str(tmp_path / "ck2"),
     )
     with pytest.raises(Exception):
         q.awaitTermination(120)
     assert calls
     monkeypatch.undo()
 
-    q = graphs.link_graph_ingest_stream(
+    q = start_ingest(
         spark.readStream.schema(schema).json(str(src / "b2")),
-        store, str(tmp_path / "ck2"),
+        partials_store.partials_applier(EDGES, store, str(tmp_path / "ck2")),
+        str(tmp_path / "ck2"),
     )
     q.awaitTermination(120)
 
@@ -234,8 +241,8 @@ def test_bfs_hops_from_store_equals_batch(spark, sf_dir, tmp_path):
 
     docs = load_table(spark, sf_dir, "documents")
     store = str(tmp_path / "edges")
-    write_edge_store(docs.filter("doc_id % 3 != 0"), store)
-    append_edge_store(docs.filter("doc_id % 3 = 0"), store)
+    write_partials(EDGES, docs.filter("doc_id % 3 != 0"), store)
+    append_partials(EDGES, docs.filter("doc_id % 3 = 0"), store)
 
     want = sorted(tuple(r) for r in q_bfs_hops(docs).collect())
     got = sorted(
@@ -243,7 +250,7 @@ def test_bfs_hops_from_store_equals_batch(spark, sf_dir, tmp_path):
     )
     assert got == want and len(want) > 0
 
-    compact_edge_store(spark, store)
+    compact_partials(spark, EDGES, store)
     got2 = sorted(
         tuple(r) for r in bfs_hops_from_store(spark, store).collect()
     )
@@ -268,28 +275,30 @@ def test_edge_store_compaction_purges_inflight_publish(
     cannot sit unfolded forever."""
     import posixpath
 
-    from node_js_etl_processor_spark.sources import graph_store
-    from node_js_etl_processor_spark.streaming import graphs, markers
+    from node_js_etl_processor_spark.sources import partials_store
+    from node_js_etl_processor_spark.streaming import markers
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     a_docs = docs.filter("doc_id % 2 = 0")
     b_docs = docs.filter("doc_id % 2 = 1")
     store, ckpt = str(tmp_path / "edges"), str(tmp_path / "ckpt")
-    apply_batch = graphs.link_graph_applier(store, ckpt)
+    apply_batch = partials_store.partials_applier(EDGES, store, ckpt)
     apply_batch(a_docs, 0)
 
     # batch 1 crashes between its last rename and its marker
     tag = markers.marker_id(ckpt, 1)
     gen_path = posixpath.join(store, markers.current_version(store))
     markers.stage_and_publish(
-        gen_path, tag, {"": (graph_store._batch_partials(b_docs), "bucket")}
+        gen_path,
+        tag,
+        {"": (partials_store._batch_partials(EDGES, b_docs), "bucket")},
     )
     # the partial rows ARE in the live generation pre-compaction
     assert _edges_set(read_edge_graph(spark, store)) == _edges_set(
         link_graph_edges(docs)
     )
 
-    before, _after = compact_edge_store(spark, store)
+    before, _after = compact_partials(spark, EDGES, store)
     # the unmarked batch's rows were purged, not folded
     want_a = _edges_set(link_graph_edges(a_docs))
     assert _edges_set(read_edge_graph(spark, store)) == want_a
@@ -298,7 +307,7 @@ def test_edge_store_compaction_purges_inflight_publish(
     apply_batch(b_docs, 1)
     want_all = _edges_set(link_graph_edges(docs))
     assert _edges_set(read_edge_graph(spark, store)) == want_all
-    compact_edge_store(spark, store)
+    compact_partials(spark, EDGES, store)
     assert _edges_set(read_edge_graph(spark, store)) == want_all
 
     # marked-but-staging-left twin: a COMPLETED batch whose
@@ -309,10 +318,12 @@ def test_edge_store_compaction_purges_inflight_publish(
     tag2 = markers.marker_id(ckpt, 2)
     gen_path2 = posixpath.join(store, markers.current_version(store))
     markers.stage_and_publish(
-        gen_path2, tag2, {"": (graph_store._batch_partials(c_docs), "bucket")}
+        gen_path2,
+        tag2,
+        {"": (partials_store._batch_partials(EDGES, c_docs), "bucket")},
     )
     markers.mark_batch_applied(store, ckpt, 2)
-    compact_edge_store(spark, store)
+    compact_partials(spark, EDGES, store)
     got = {(s, d): n for s, d, n in _edges_set(read_edge_graph(spark, store))}
     base = {(s, d): n for s, d, n in want_all}
     extra = {(s, d): n for s, d, n in _edges_set(link_graph_edges(c_docs))}

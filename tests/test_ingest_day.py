@@ -218,25 +218,18 @@ def test_ingest_day_with_midchain_crash_equals_one_shot(
     # applies batch 1 fresh on restart and folds there
     from _pytest.monkeypatch import MonkeyPatch
 
-    from node_js_etl_processor_spark.sources import graph_store, vocab_store
+    from node_js_etl_processor_spark.sources import partials_store
 
     folds = {"vocab": 0, "edges": 0}
-    real_cv, real_ce = (
-        vocab_store.compact_vocab_store,
-        graph_store.compact_edge_store,
-    )
+    lanes = {paths["vocab"]: "vocab", paths["edges"]: "edges"}
+    real_compact = partials_store.compact_partials
 
-    def count_cv(spark_, path_):
-        folds["vocab"] += 1
-        return real_cv(spark_, path_)
-
-    def count_ce(spark_, path_):
-        folds["edges"] += 1
-        return real_ce(spark_, path_)
+    def count_compact(spark_, spec_, path_):
+        folds[lanes[path_]] += 1
+        return real_compact(spark_, spec_, path_)
 
     mp_folds = MonkeyPatch()
-    mp_folds.setattr(vocab_store, "compact_vocab_store", count_cv)
-    mp_folds.setattr(graph_store, "compact_edge_store", count_ce)
+    mp_folds.setattr(partials_store, "compact_partials", count_compact)
 
     try:
         # compact_every=2: the composed loop must reach

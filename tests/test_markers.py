@@ -328,11 +328,9 @@ def test_countmin_stream_exactly_once_across_merge_crash(
     pointer switch, or after the switch but before the marker — must
     leave the re-delivered batch merging exactly once (a markerless
     loop would lose the grid or double-count every touched cell)."""
-    from node_js_etl_processor_spark.operators.sketch import (
-        countmin_build,
-        countmin_read_store,
-    )
+    from node_js_etl_processor_spark.operators.sketch import countmin_build
     from node_js_etl_processor_spark.streaming.dedup import countmin_ingest_stream
+    from node_js_etl_processor_spark.streaming.sketches import read_sketch_store
 
     orders, src = _countmin_setup(spark, sf_dir, tmp_path)
     store = str(tmp_path / "cms")
@@ -371,7 +369,7 @@ def test_countmin_stream_exactly_once_across_merge_crash(
 
     streamed = {
         (r["row"], r["col"]): r["c"]
-        for r in countmin_read_store(spark, store).collect()
+        for r in read_sketch_store(spark, store).collect()
     }
     batch = {
         (r["row"], r["col"]): r["c"]

@@ -557,9 +557,9 @@ def test_countmin_ingest_stream_merges_exactly(spark, sf_dir, tmp_path):
     from node_js_etl_processor_spark.operators.sketch import (
         countmin_build,
         countmin_estimate,
-        countmin_read_store,
     )
     from node_js_etl_processor_spark.streaming.dedup import countmin_ingest_stream
+    from node_js_etl_processor_spark.streaming.sketches import read_sketch_store
 
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     src = tmp_path / "landing"
@@ -582,7 +582,7 @@ def test_countmin_ingest_stream_merges_exactly(spark, sf_dir, tmp_path):
 
     streamed = {
         (r["row"], r["col"]): r["c"]
-        for r in countmin_read_store(spark, store).collect()
+        for r in read_sketch_store(spark, store).collect()
     }
     batch = {
         (r["row"], r["col"]): r["c"] for r in countmin_build(orders, "o_custkey").collect()
@@ -593,7 +593,7 @@ def test_countmin_ingest_stream_merges_exactly(spark, sf_dir, tmp_path):
     got = {
         r["o_custkey"]: r["cms_est"]
         for r in countmin_estimate(
-            probes, countmin_read_store(spark, store), "o_custkey"
+            probes, read_sketch_store(spark, store), "o_custkey"
         ).collect()
     }
     want = {
@@ -1016,6 +1016,7 @@ def test_novelty_gated_ingest_matches_sequential_batch_through_crash(
     the whole batch as fully duplicated); (4) the gate actually cuts
     (both within-drop and cross-drop)."""
     from node_js_etl_processor_spark.catalog import load_table
+    from node_js_etl_processor_spark.operators.dedup import exact_twin_reps
     from node_js_etl_processor_spark.operators.novelty import (
         novelty_of_drop,
         q_doc_novelty,
@@ -1023,7 +1024,6 @@ def test_novelty_gated_ingest_matches_sequential_batch_through_crash(
     from node_js_etl_processor_spark.operators.spans import shingle_positions
     from node_js_etl_processor_spark.streaming import markers
     from node_js_etl_processor_spark.streaming.spanstore import (
-        exact_twin_reps,
         novelty_gated_ingest_stream,
         read_span_store,
     )

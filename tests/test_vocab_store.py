@@ -13,13 +13,16 @@ from node_js_etl_processor_spark.operators.diversity import (
     q_simpson_diversity,
     vocab_counts,
 )
+from node_js_etl_processor_spark.sources.partials_store import (
+    append_partials,
+    compact_partials,
+    write_partials,
+)
 from node_js_etl_processor_spark.sources.vocab_store import (
-    append_vocab_store,
-    compact_vocab_store,
+    VOCAB,
     diversity_from_store,
     read_vocab_counts,
     token_counts_probe,
-    write_vocab_store,
 )
 
 
@@ -43,15 +46,15 @@ def test_write_append_compact_equals_one_shot(spark, sf_dir, tmp_path):
     new = docs.filter("doc_id % 3 = 0")
     store = str(tmp_path / "vocab")
 
-    write_vocab_store(old, store)
-    append_vocab_store(new, store)
+    write_partials(VOCAB, old, store)
+    append_partials(VOCAB, new, store)
     assert _counts_set(read_vocab_counts(spark, store)) == _counts_set(
         vocab_counts(docs)
     )
     want_div = _rows(q_simpson_diversity(docs))
     assert _rows(diversity_from_store(spark, store)) == want_div
 
-    before, after = compact_vocab_store(spark, store)
+    before, after = compact_partials(spark, VOCAB, store)
     assert after < before  # the log really folded
     assert _rows(diversity_from_store(spark, store)) == want_div
 
@@ -62,7 +65,7 @@ def test_token_probe_prunes_to_one_bucket(spark, sf_dir, tmp_path):
     per-source counts of exactly that token."""
     docs = load_table(spark, sf_dir, "documents")
     store = str(tmp_path / "vocab")
-    write_vocab_store(docs, store)
+    write_partials(VOCAB, docs, store)
 
     token = vocab_counts(docs).orderBy(F.desc("c")).first()["w"]
     got = token_counts_probe(spark, store, token)
@@ -96,9 +99,10 @@ def test_ingest_stream_with_compaction_matches_batch(spark, sf_dir, tmp_path):
     the one-shot build over the union corpus."""
     import shutil
 
-    from node_js_etl_processor_spark.streaming.vocab import (
-        vocab_ingest_stream,
+    from node_js_etl_processor_spark.sources.partials_store import (
+        partials_applier,
     )
+    from node_js_etl_processor_spark.streaming.markers import start_ingest
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
@@ -117,13 +121,12 @@ def test_ingest_stream_with_compaction_matches_batch(spark, sf_dir, tmp_path):
             shutil.copy(f, flat / f"{i}-{f.name}")
 
     schema = "doc_id long, text string, source string"
-    q = vocab_ingest_stream(
+    q = start_ingest(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .json(str(flat)),
-        store,
+        partials_applier(VOCAB, store, str(tmp_path / "ck"), compact_every=2),
         str(tmp_path / "ck"),
-        compact_every=2,
     )
     q.awaitTermination(180)
 
@@ -148,18 +151,18 @@ def test_compaction_purges_crashed_append_no_double_count(
     staging tree is dropped."""
     import posixpath
 
-    from node_js_etl_processor_spark.sources.vocab_store import (
+    from node_js_etl_processor_spark.sources.partials_store import (
         _batch_partials,
         _gen_dir,
+        partials_applier,
     )
     from node_js_etl_processor_spark.streaming import markers
-    from node_js_etl_processor_spark.streaming.vocab import vocab_applier
 
     docs = load_table(spark, sf_dir, "documents")
     base = docs.filter("doc_id % 3 = 0")
     crashed = docs.filter("doc_id % 3 = 1")
     store, ckpt = str(tmp_path / "vstore"), str(tmp_path / "vckpt")
-    apply = vocab_applier(store, ckpt, compact_every=0)
+    apply = partials_applier(VOCAB, store, ckpt, compact_every=0)
     apply(base, 0)
     want_base = _counts_set(vocab_counts(base))
     assert _counts_set(read_vocab_counts(spark, store)) == want_base
@@ -167,12 +170,12 @@ def test_compaction_purges_crashed_append_no_double_count(
     # batch 1 crashes after its renames, before its marker: publish
     # via stage_and_publish into the live generation, skip the marker
     tag = markers.marker_id(ckpt, 1)
-    gen = _gen_dir(store)
+    gen = _gen_dir(VOCAB, store)
     markers.stage_and_publish(
-        gen, tag, {"": (_batch_partials(crashed), "bucket")}
+        gen, tag, {"": (_batch_partials(VOCAB, crashed), "bucket")}
     )
 
-    compact_vocab_store(spark, store)
+    compact_partials(spark, VOCAB, store)
     # the crashed partial is gone, not folded
     assert _counts_set(read_vocab_counts(spark, store)) == want_base
 
@@ -185,13 +188,13 @@ def test_compaction_purges_crashed_append_no_double_count(
     # cleanup crashed — compaction folds its rows and drops the tree
     extra = docs.filter("doc_id % 3 = 2")
     tag2 = markers.marker_id(ckpt, 2)
-    gen2 = _gen_dir(store)
+    gen2 = _gen_dir(VOCAB, store)
     markers.stage_and_publish(
-        gen2, tag2, {"": (_batch_partials(extra), "bucket")}
+        gen2, tag2, {"": (_batch_partials(VOCAB, extra), "bucket")}
     )
     markers.mark_batch_applied(store, ckpt, 2)
-    compact_vocab_store(spark, store)
+    compact_partials(spark, VOCAB, store)
     want_full = _counts_set(vocab_counts(docs))
     assert _counts_set(read_vocab_counts(spark, store)) == want_full
-    staging = posixpath.join(_gen_dir(store), "_staging")
+    staging = posixpath.join(_gen_dir(VOCAB, store), "_staging")
     assert not markers._exists(posixpath.join(staging, tag2))
