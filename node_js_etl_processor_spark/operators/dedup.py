@@ -52,24 +52,41 @@ def q_dedup_docs(documents: DataFrame) -> DataFrame:
     )
 
 
-def exact_twin_reps(docs: DataFrame) -> DataFrame:
-    """Exact-twin collapse: of every group of rows with the same text
-    fingerprint keep the min-doc_id row (q_dedup_docs' keeper rule)
-    with all its columns. A ``row_number`` over the fingerprint, so
-    the result has exactly one row per fingerprint even when a doc_id
-    repeats. The one keeper of the exact-dedup applier's bootstrap
-    (streaming/dedup.py) and the novelty gate's within-drop twin rule
-    (streaming/spanstore.py).
+def first_per_key(
+    rows: DataFrame,
+    key: str,
+    order: str = "doc_id",
+    seen: DataFrame | None = None,
+) -> DataFrame:
+    """The keeper rule of every exact-key dedup: of each group of
+    rows with the same ``key`` column keep the min-``order`` row with
+    all its columns — a ``row_number``, so exactly one row per key
+    even when ``order`` repeats. ``seen`` (a frame holding the
+    ``key`` column of keys already kept, e.g. a dedup store) first
+    drops every row whose key it holds: one left_anti on the key, so
+    the probe shuffles keys, never rows of the store.
 
-    Scale: one window over the 16-byte fingerprint, batch-sized."""
+    Scale: one window over the key, batch-sized."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(fingerprint(F.col("text"))).orderBy(F.col("doc_id"))
+    if seen is not None:
+        rows = rows.join(seen.select(key), key, "left_anti")
+    w = Window.partitionBy(key).orderBy(F.col(order))
     return (
-        docs.withColumn("_rn", F.row_number().over(w))
+        rows.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
+
+
+def exact_twin_reps(docs: DataFrame) -> DataFrame:
+    """Exact-twin collapse: of every group of rows with the same text
+    fingerprint keep the min-doc_id row (q_dedup_docs' keeper rule)
+    with all its columns — ``first_per_key`` over the fingerprint.
+    The novelty gate's within-drop twin rule
+    (streaming/spanstore.py)."""
+    keyed = docs.withColumn("_fp", fingerprint(F.col("text")))
+    return first_per_key(keyed, "_fp").drop("_fp")
 
 
 # ----------------------------------------------------------- minhash + lsh

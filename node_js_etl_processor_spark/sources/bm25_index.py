@@ -79,27 +79,27 @@ def _batch_layout(documents: DataFrame):
     return postings, df, stats
 
 
-def _write_batch(documents: DataFrame, path: str, mode: str) -> None:
+def _batch_parts(documents: DataFrame) -> dict:
+    """``_batch_layout`` as the ``markers.write_parts`` layout every
+    writer of the index shares: the batch build, the ad-hoc append
+    and the ingest loop's staged publish."""
     postings, df, stats = _batch_layout(documents)
-    postings.repartition("term_bucket").write.mode(mode).partitionBy(
-        "term_bucket"
-    ).parquet(f"{path}/postings")
-    df.repartition("term_bucket").write.mode(mode).partitionBy(
-        "term_bucket"
-    ).parquet(f"{path}/df")
-    stats.write.mode(mode).parquet(f"{path}/stats")
+    return {
+        "postings": (postings, "term_bucket"),
+        "df": (df, "term_bucket"),
+        "stats": (stats, None),
+    }
 
 
 def write_bm25_index(documents: DataFrame, path: str) -> None:
-    """Build and persist the postings/df/stats layout under ``path``;
-    ``repartition`` before ``partitionBy`` keeps files at
-    O(buckets)."""
-    _write_batch(documents, path, "overwrite")
+    """Build and persist the postings/df/stats layout under ``path``
+    (overwrite)."""
+    from ..streaming.markers import write_parts
+
+    write_parts(path, _batch_parts(documents))
 
 
-def append_bm25_index(
-    documents: DataFrame, path: str, batch_tag: str | None = None
-) -> None:
+def append_bm25_index(documents: DataFrame, path: str) -> None:
     """Ingest a new batch into an existing index: three appends —
     postings rows, per-term df partials, one stats partial row.
     Nothing existing is read or rewritten (df/stats are mergeable
@@ -107,33 +107,21 @@ def append_bm25_index(
     regardless of index size — the same access pattern as
     append_minhash_store. Batch doc_ids must be new to the index.
 
-    The append goes through ``markers.stage_and_publish``: the
-    batch's rows land in ``<path>/_staging/<tag>`` first and are then
-    renamed into the live tree under batch-tagged names, so a crashed
-    append is recoverable instead of leaving half-published postings:
-    ingest loops pass their deterministic (checkpoint, batch_id)
-    ``batch_tag`` and call ``recover_partial`` on re-delivery; ad-hoc
-    batch callers get a random tag (staging cleaned on success) and
-    repair a crash with ``markers.recover_all_partial`` — the staging
-    tree left behind records the tag the dead process knew."""
+    The append goes through ``markers.stage_and_publish`` under a
+    random tag: the batch's rows land in ``<path>/_staging/<tag>``
+    first and are then renamed into the live tree under batch-tagged
+    names, so a crashed append is recoverable instead of leaving
+    half-published postings — ``markers.recover_all_partial`` repairs
+    it from the staging tree the dead process left behind. The ingest
+    loop (``streaming/indexing.py``) publishes the same parts under
+    its deterministic (checkpoint, batch_id) tag instead."""
     import uuid
 
     from ..streaming.markers import cleanup_staging, stage_and_publish
 
-    ad_hoc = batch_tag is None
-    tag = batch_tag or uuid.uuid4().hex[:12]
-    postings, df, stats = _batch_layout(documents)
-    stage_and_publish(
-        path,
-        tag,
-        {
-            "postings": (postings, "term_bucket"),
-            "df": (df, "term_bucket"),
-            "stats": (stats, None),
-        },
-    )
-    if ad_hoc:
-        cleanup_staging(path, tag)
+    tag = uuid.uuid4().hex[:12]
+    stage_and_publish(path, tag, _batch_parts(documents))
+    cleanup_staging(path, tag)
 
 
 def bm25_from_index(

@@ -154,21 +154,14 @@ def dedup_exact_delta(
     keeper rule). Returns the surviving rows of ``new_docs``; append
     their fingerprints via ``append_fingerprint_store`` to close the
     loop."""
-    from pyspark.sql.window import Window
-
-    from node_js_etl_processor_spark.operators.dedup import fingerprint
-
-    store = spark.read.parquet(path)
-    fresh = (
-        new_docs.withColumn("_fp", fingerprint(F.col("text")))
-        .join(store.withColumnRenamed("fp", "_fp"), "_fp", "left_anti")
+    from node_js_etl_processor_spark.operators.dedup import (
+        fingerprint,
+        first_per_key,
     )
-    w = Window.partitionBy("_fp").orderBy(F.col("doc_id").asc())
-    return (
-        fresh.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_fp", "_rn")
-    )
+
+    keyed = new_docs.withColumn("_fp", fingerprint(F.col("text")))
+    seen = spark.read.parquet(path).withColumnRenamed("fp", "_fp")
+    return first_per_key(keyed, "_fp", seen=seen).drop("_fp")
 
 
 # ------------------------------------------------- simhash band store

@@ -169,7 +169,8 @@ def compact_partials(
 ) -> "tuple[int, int]":
     """Fold every stored partial into one aggregated file set in a
     FRESH generation, then atomically switch the pointer. Returns
-    (files_before, files_after). Crash-safe by the versioned-pointer
+    (files_before, files_after); a generation with no batch-tagged
+    file is returned as is. Crash-safe by the versioned-pointer
     argument: the old generation is live until the switch, and stale
     generations are GC'd on the commit. Single-writer: must not run
     concurrently with an append (the applier's ``compact_every`` slot
@@ -199,17 +200,18 @@ def compact_partials(
             and not _exists(posixpath.join(path, "_batches", tag))
         ):
             recover_partial(old_gen, tag)
+    files = _walk_files(old_gen)
+    if all(name.startswith("part-") for _, name in files):
+        # no batch-tagged (<tag>-*) file: the generation is one file
+        # set already — a bootstrap, or the fold a replayed batch's
+        # first delivery made — so there is nothing to fold
+        return len(files), len(files)
     folded = _aggregate(spec, spark.read.parquet(old_gen)).withColumn(
         "bucket", spec.bucket()
     )
-    before = _count_files(old_gen)
     new = f"gen_{uuid.uuid4().hex[:12]}"
     _write_generation(folded, path, new)
-    return before, _count_files(posixpath.join(path, new))
-
-
-def _count_files(gen_path: str) -> int:
-    return len(_walk_files(gen_path))
+    return len(files), len(_walk_files(posixpath.join(path, new)))
 
 
 def _gc_generations(path: str, keep: str) -> None:
@@ -241,7 +243,9 @@ def partials_applier(
     of this loop exist. The slot counts ``batch_id + 1`` so it also
     fires under the one-batch-per-checkpoint pattern (batch_id always
     0), and replays and empty batches reach it too, so a boundary
-    landing on either does not defer the fold a full cycle."""
+    landing on either does not defer the fold a full cycle; a replay
+    whose first delivery already folded finds no batch-tagged file
+    and leaves the generation as it is."""
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
         tag = marker_id(checkpoint, batch_id)

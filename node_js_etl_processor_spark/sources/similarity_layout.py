@@ -53,6 +53,31 @@ from node_js_etl_processor_spark.operators.similarity import (
 )
 
 
+def _ann_parts(
+    embeddings: DataFrame,
+    n_planes: int,
+    n_cells: int,
+    centroids: list[list[float]] | None,
+    pq_codebooks: list[list[list[float]]] | None,
+) -> dict:
+    """Both layouts of one embedding batch as a ``markers.write_parts``
+    layout — the one projection the batch build, the ad-hoc append
+    and the ingest loop's staged publish share. by_cell carries the
+    PQ codes too — the IVFADC layout (Jégou et al. 2011 §V): coarse
+    cell for pruning, 4-bit RESIDUAL codes (y − centroid(cell), the
+    published §V form — pass trained ``pq_codebooks`` from
+    ``ivfpq_train`` in production) for scoring. Both quantizations
+    are one fused narrow projection at ingest; an ADC probe then
+    reads (vec_id, codes) from the matching cell directories only and
+    never deserializes the embedding column."""
+    planes = _srp_hyperplanes(n_planes)
+    sigged = embeddings.withColumn("sig", srp_signature(F.col("embedding"), planes))
+    celled = ivfpq_encode(
+        embeddings, n_cells, centroids=centroids, codebooks=pq_codebooks
+    )
+    return {"by_sig": (sigged, "sig"), "by_cell": (celled, "cell")}
+
+
 def write_ann_layout(
     embeddings: DataFrame,
     path: str,
@@ -61,7 +86,7 @@ def write_ann_layout(
     centroids: list[list[float]] | None = None,
     pq_codebooks: list[list[list[float]]] | None = None,
 ) -> None:
-    """Materialize both similarity layouts under ``path``.
+    """Materialize both similarity layouts under ``path`` (overwrite).
 
     ``centroids`` takes a trained coarse quantizer
     (``operators.similarity.kmeans_train`` output) for the by_cell
@@ -69,30 +94,11 @@ def write_ann_layout(
     the default for reproducible fixtures. Probes must use the SAME
     centroids (``ivf_probe(..., centroids=...)``), or cell choice and
     layout disagree.
-
-    ``repartition(key)`` before ``partitionBy(key)`` keeps the write to
-    one file per directory per shuffle partition instead of one file
-    per (input-partition × key) — at scale the difference between
-    O(dirs) and O(tasks × dirs) small files.
     """
-    planes = _srp_hyperplanes(n_planes)
-    sigged = embeddings.withColumn("sig", srp_signature(F.col("embedding"), planes))
-    sigged.repartition("sig").write.mode("overwrite").partitionBy("sig").parquet(
-        f"{path}/by_sig"
-    )
-    # by_cell carries the PQ codes too — the IVFADC layout (Jégou et
-    # al. 2011 §V): coarse cell for pruning, 4-bit RESIDUAL codes
-    # (y − centroid(cell), the published §V form — pass trained
-    # ``pq_codebooks`` from ``ivfpq_train`` in production) for
-    # scoring. Both quantizations are one fused narrow projection at
-    # ingest; an ADC probe then reads (vec_id, codes) from the
-    # matching cell directories only and never deserializes the
-    # embedding column.
-    celled = ivfpq_encode(
-        embeddings, n_cells, centroids=centroids, codebooks=pq_codebooks
-    )
-    celled.repartition("cell").write.mode("overwrite").partitionBy("cell").parquet(
-        f"{path}/by_cell"
+    from ..streaming.markers import write_parts
+
+    write_parts(
+        path, _ann_parts(embeddings, n_planes, n_cells, centroids, pq_codebooks)
     )
 
 
@@ -103,7 +109,6 @@ def append_ann_layout(
     n_cells: int = 8,
     centroids: list[list[float]] | None = None,
     pq_codebooks: list[list[list[float]]] | None = None,
-    batch_tag: str | None = None,
 ) -> None:
     """Ingest a NEW vector batch into an existing layout: the
     same signature/residual-code projections appended into the same
@@ -115,30 +120,20 @@ def append_ann_layout(
     must be new to the layout. write(old) + append(new) ==
     write(old ∪ new) is test-pinned for both probe families.
 
-    The append goes through ``markers.stage_and_publish`` so a
-    crashed append never leaves half-published sig/cell rows:
-    ``batch_tag`` is the ingest loop's (checkpoint, batch_id) tag
-    (recovered per batch via ``recover_partial``); ad-hoc batch
-    callers get a random one and repair a crash with
-    ``markers.recover_all_partial``."""
+    The append goes through ``markers.stage_and_publish`` under a
+    random tag, so a crashed append never leaves half-published
+    sig/cell rows: ``markers.recover_all_partial`` repairs it. The
+    ingest loop (``streaming.dedup.embedding_applier``) publishes the
+    same parts under its (checkpoint, batch_id) tag instead."""
     import uuid
 
     from ..streaming.markers import cleanup_staging, stage_and_publish
 
-    ad_hoc = batch_tag is None
-    tag = batch_tag or uuid.uuid4().hex[:12]
-    planes = _srp_hyperplanes(n_planes)
-    sigged = embeddings.withColumn("sig", srp_signature(F.col("embedding"), planes))
-    celled = ivfpq_encode(
-        embeddings, n_cells, centroids=centroids, codebooks=pq_codebooks
-    )
+    tag = uuid.uuid4().hex[:12]
     stage_and_publish(
-        path,
-        tag,
-        {"by_sig": (sigged, "sig"), "by_cell": (celled, "cell")},
+        path, tag, _ann_parts(embeddings, n_planes, n_cells, centroids, pq_codebooks)
     )
-    if ad_hoc:
-        cleanup_staging(path, tag)
+    cleanup_staging(path, tag)
 
 
 def ann_probe(

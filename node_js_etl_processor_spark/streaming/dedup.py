@@ -90,73 +90,44 @@ def url_frontier_stream(
 def exact_dedup_applier(store_path: str, out_path: str, checkpoint: str):
     """The per-batch body of ``exact_dedup_ingest_stream`` as a
     reusable applier callable — idempotent per (checkpoint, batch_id)
-    via the markers protocol, so the composed ingest-day loop
+    via ``markers.staged_applier``, so the composed ingest-day loop
     (``streaming/ingest_day.py``) can run it alongside the other
     store tiers inside ONE foreachBatch.
 
-    Per micro-batch, ``dedup_exact_delta`` drops every doc whose text
-    fingerprint is already in the store (or duplicated within the
-    batch — min-doc_id keeper), appends the survivors to ``out_path``
-    and their fingerprints to the store. The store IS the cross-batch
-    dedup state: unbounded-corpus-sized on DISK (16 bytes/doc in
-    parquet), not in executor memory — the shape a plain
+    Per micro-batch, every doc whose text fingerprint is already in
+    the store is dropped, and of the rest one doc per fingerprint is
+    kept (min doc_id — ``first_per_key``); the survivors go to
+    ``out_path`` and their fingerprints to the store. The store IS the
+    cross-batch dedup state: unbounded-corpus-sized on DISK (16
+    bytes/doc in parquet), not in executor memory — the shape a plain
     ``dropDuplicates`` stream cannot reach, because exact corpus dedup
     must never forget (no watermark can bound it). foreachBatch is
     the right tool precisely because each batch needs a BATCH join
     against an existing table plus two idempotent appends.
 
-    Returns the started query (availableNow — the same trigger twin
-    as every refresh here). Batch equivalence is test-pinned: streamed
-    batches == q_dedup_docs keepers when arrival order matches doc_id
-    order.
-
-    Exactly-once: EVERY batch — bootstrap included — lands via
-    ``markers.stage_and_publish`` (batch-tagged renames into the live
-    trees; the store root is never overwritten, so markers survive),
-    and a re-delivery first purges any partially-published files of
-    its own tag (``recover_partial``) before recomputing — the
-    store-missing test then correctly re-selects the bootstrap
-    (in-batch-only) dedup for a crashed first batch."""
+    Batch equivalence is test-pinned: streamed batches ==
+    q_dedup_docs keepers when arrival order matches doc_id order.
+    EVERY batch — bootstrap included — lands via the staged publish
+    (the store root is never overwritten, so markers survive), and a
+    re-delivery first purges its own partially-published files, so
+    the store-missing test correctly re-selects the in-batch-only
+    dedup for a crashed first batch."""
     from pyspark.sql import functions as F
 
-    from ..operators.dedup import exact_twin_reps, fingerprint
-    from ..sources.dedup_store import dedup_exact_delta
-    from .markers import (
-        batch_already_applied,
-        cleanup_staging,
-        mark_batch_applied,
-        marker_id,
-        read_batch_output,
-        recover_partial,
-        stage_and_publish,
-        store_has_data,
-    )
+    from ..operators.dedup import fingerprint, first_per_key
+    from .markers import staged_applier, store_has_data
 
-    def _ingest(batch_df: DataFrame, batch_id: int) -> "DataFrame | None":
-        spark = batch_df.sparkSession
-        tag = marker_id(checkpoint, batch_id)
-        if batch_already_applied(store_path, checkpoint, batch_id):
-            cleanup_staging(store_path, tag)  # crash-after-mark GC
-            cleanup_staging(out_path, tag)
-            return read_batch_output(spark, out_path, tag)
-        recover_partial(store_path, tag)
-        recover_partial(out_path, tag)
-        if not store_has_data(store_path):
-            # first batch bootstraps the store from nothing: in-batch
-            # dedup only, then the store is born from its survivors
-            survivors = exact_twin_reps(batch_df)
-        else:
-            survivors = dedup_exact_delta(spark, batch_df, store_path)
-        survivors = barrier.cut(survivors, "streaming.dedup.exact_survivors")
-        stage_and_publish(out_path, tag, {"": (survivors, None)})
-        fps = survivors.select(fingerprint(F.col("text")).alias("fp")).distinct()
-        stage_and_publish(store_path, tag, {"": (fps, None)})
-        mark_batch_applied(store_path, checkpoint, batch_id)
-        cleanup_staging(store_path, tag)
-        cleanup_staging(out_path, tag)
-        return survivors
+    def step(batch_df: DataFrame):
+        keyed = batch_df.withColumn("fp", fingerprint(F.col("text")))
+        seen = None
+        if store_has_data(store_path):
+            seen = batch_df.sparkSession.read.parquet(store_path)
+        kept = barrier.cut(
+            first_per_key(keyed, "fp", seen=seen), "streaming.dedup.exact_survivors"
+        )
+        return kept.drop("fp"), {"": (kept.select("fp"), None)}
 
-    return _ingest
+    return staged_applier(store_path, checkpoint, step, out_path)
 
 
 def exact_dedup_ingest_stream(
@@ -214,36 +185,15 @@ def near_dup_applier(
         minhash_est_jaccard,
         minhash_signatures,
     )
-
-    from .markers import (
-        batch_already_applied,
-        cleanup_staging,
-        mark_batch_applied,
-        marker_id,
-        read_batch_output,
-        recover_partial,
-        stage_and_publish,
-        store_has_data,
-    )
+    from .markers import staged_applier, store_has_data
 
     post_path = os.path.join(store_dir, "postings")
     sigs_path = os.path.join(store_dir, "sigs")
 
-    def _ingest(batch_df: DataFrame, batch_id: int) -> "DataFrame | None":
+    # the staged applier runs this only after recovering the batch's
+    # own partial publish, so the delta probe never matches it
+    def step(batch_df: DataFrame):
         spark = batch_df.sparkSession
-        tag = marker_id(checkpoint, batch_id)
-        # replay guard (with the staged publish): re-appending a
-        # delivered batch's postings/sigs and re-emitting its
-        # survivors would corrupt both stores, and a crashed attempt's
-        # partial publish must be purged BEFORE the delta probe reads
-        # the store, or the batch would match its own partial rows
-        # (flipping keeper decisions)
-        if batch_already_applied(store_dir, checkpoint, batch_id):
-            cleanup_staging(store_dir, tag)
-            cleanup_staging(out_path, tag)
-            return read_batch_output(spark, out_path, tag)
-        recover_partial(store_dir, tag)
-        recover_partial(out_path, tag)
         batch_df = barrier.cut(batch_df, "streaming.dedup.near_dup_batch")
         sigs = barrier.cut(
             minhash_signatures(batch_df, num_hashes), "streaming.dedup.near_dup_sigs"
@@ -304,17 +254,10 @@ def near_dup_applier(
             ),
             "streaming.dedup.near_dup_survivors",
         )
-        stage_and_publish(out_path, tag, {"": (survivors, None)})
         # append the WHOLE batch (seen, not just kept) — see docstring
-        stage_and_publish(
-            store_dir, tag, {"postings": (post, "band"), "sigs": (sigs, None)}
-        )
-        mark_batch_applied(store_dir, checkpoint, batch_id)
-        cleanup_staging(store_dir, tag)
-        cleanup_staging(out_path, tag)
-        return survivors
+        return survivors, {"postings": (post, "band"), "sigs": (sigs, None)}
 
-    return _ingest
+    return staged_applier(store_dir, checkpoint, step, out_path)
 
 
 def near_dup_ingest_stream(
@@ -361,26 +304,10 @@ def simhash_applier(
         simhash_band_postings_from_sigs,
         simhash_signatures_numpy,
     )
-    from .markers import (
-        batch_already_applied,
-        cleanup_staging,
-        mark_batch_applied,
-        marker_id,
-        read_batch_output,
-        recover_partial,
-        stage_and_publish,
-        store_has_data,
-    )
+    from .markers import staged_applier, store_has_data
 
-    def _ingest(batch_df: DataFrame, batch_id: int) -> "DataFrame | None":
+    def step(batch_df: DataFrame):
         spark = batch_df.sparkSession
-        tag = marker_id(checkpoint, batch_id)
-        if batch_already_applied(store_dir, checkpoint, batch_id):
-            cleanup_staging(store_dir, tag)
-            cleanup_staging(out_path, tag)
-            return read_batch_output(spark, out_path, tag)
-        recover_partial(store_dir, tag)
-        recover_partial(out_path, tag)
         batch_df = barrier.cut(batch_df, "streaming.dedup.simhash_batch")
         sigs = barrier.cut(
             simhash_signatures_numpy(batch_df, drop_tokenless=True),
@@ -424,14 +351,9 @@ def simhash_applier(
             batch_df.join(losers.distinct(), "doc_id", "left_anti"),
             "streaming.dedup.simhash_survivors",
         )
-        stage_and_publish(out_path, tag, {"": (survivors, None)})
-        stage_and_publish(store_dir, tag, {"": (post, "band")})
-        mark_batch_applied(store_dir, checkpoint, batch_id)
-        cleanup_staging(store_dir, tag)
-        cleanup_staging(out_path, tag)
-        return survivors
+        return survivors, {"": (post, "band")}
 
-    return _ingest
+    return staged_applier(store_dir, checkpoint, step, out_path)
 
 
 def countmin_ingest_stream(
@@ -510,89 +432,46 @@ def embedding_applier(
     directories too, so retrieval probes see new vectors the moment
     their batch commits.
 
-    Exactly-once (full markers protocol): survivors and layout
-    rows publish via batch-tagged staged renames; a re-delivery first
-    purges its own partial files (BEFORE the delta probe reads the
-    store — a batch must never match its own partial rows) and a
-    re-delivered bootstrap re-runs the overwrite build (sentinel)."""
+    Exactly-once (``markers.staged_applier``): survivors and layout
+    rows publish via batch-tagged staged renames — the first batch
+    too, into the empty layout, with ``embedding_near_dup_keepers``
+    as its in-batch keeper rule; a re-delivery first purges its own
+    partial files (BEFORE the delta probe reads the store — a batch
+    must never match its own partial rows). The layout rows come from
+    ``similarity_layout._ann_parts``, the projection
+    ``write_ann_layout`` and ``append_ann_layout`` use."""
     from pyspark.sql import functions as F
 
     from ..operators.similarity import embedding_near_dup_keepers
-    from ..sources.similarity_layout import (
-        append_ann_layout,
-        dedup_embedding_delta,
-        write_ann_layout,
-    )
-    from .markers import (
-        batch_already_applied,
-        bootstrap_pending,
-        cleanup_staging,
-        mark_batch_applied,
-        marker_id,
-        read_batch_output,
-        record_bootstrap,
-        recover_partial,
-        stage_and_publish,
-        store_has_data,
-    )
+    from ..sources.similarity_layout import _ann_parts, dedup_embedding_delta
+    from .markers import staged_applier, store_has_data
 
-    def _ingest(batch_df: DataFrame, batch_id: int) -> "DataFrame | None":
-        spark = batch_df.sparkSession
-        tag = marker_id(checkpoint, batch_id)
-        if batch_already_applied(store_dir, checkpoint, batch_id):
-            cleanup_staging(store_dir, tag)
-            cleanup_staging(out_path, tag)
-            return read_batch_output(spark, out_path, tag)
-        recover_partial(store_dir, tag)
-        recover_partial(out_path, tag)
-        if batch_df.isEmpty():
-            # Empty batches still run recovery and
-            # still COMMIT — publish empty survivors and mark applied,
-            # like the sibling appliers. Short-circuiting before the
-            # marker left the tier unmarked (reprocessed on every
-            # redelivery) and skipped recovery of a crashed earlier
-            # non-empty attempt's staged partials for this tag.
-            stage_and_publish(out_path, tag, {"": (batch_df, None)})
-            mark_batch_applied(store_dir, checkpoint, batch_id)
-            cleanup_staging(out_path, tag)
-            return batch_df
-        if not store_has_data(store_dir, "by_sig") or bootstrap_pending(
-            store_dir, checkpoint, batch_id
-        ):
-            record_bootstrap(store_dir, checkpoint, batch_id)
+    def step(batch_df: DataFrame):
+        if not store_has_data(store_dir, "by_sig"):
             survivors = embedding_near_dup_keepers(batch_df, threshold)
-            stage_and_publish(out_path, tag, {"": (survivors, None)})
-            write_ann_layout(batch_df, store_dir, n_planes=n_planes, n_cells=n_cells)
-            mark_batch_applied(store_dir, checkpoint, batch_id)
-            cleanup_staging(out_path, tag)
-            return
-        pairs = dedup_embedding_delta(
-            spark, batch_df, store_dir, threshold=threshold, n_planes=n_planes
-        )
-        losers = (
-            pairs.filter(F.col("pair_type") == "new-old")
-            .select(F.col("vec_a").alias("vec_id"))
-            .unionByName(
-                pairs.filter(F.col("pair_type") == "new-new").select(
-                    F.col("vec_b").alias("vec_id")
-                )
+        else:
+            pairs = dedup_embedding_delta(
+                batch_df.sparkSession,
+                batch_df,
+                store_dir,
+                threshold=threshold,
+                n_planes=n_planes,
             )
-            .distinct()
-        )
-        survivors = barrier.cut(
-            batch_df.join(losers, "vec_id", "left_anti"),
-            "streaming.dedup.embedding_survivors",
-        )
-        stage_and_publish(out_path, tag, {"": (survivors, None)})
-        append_ann_layout(
-            batch_df, store_dir, n_planes=n_planes, n_cells=n_cells, batch_tag=tag
-        )
-        mark_batch_applied(store_dir, checkpoint, batch_id)
-        cleanup_staging(store_dir, tag)
-        cleanup_staging(out_path, tag)
-        return survivors
+            losers = (
+                pairs.filter(F.col("pair_type") == "new-old")
+                .select(F.col("vec_a").alias("vec_id"))
+                .unionByName(
+                    pairs.filter(F.col("pair_type") == "new-new").select(
+                        F.col("vec_b").alias("vec_id")
+                    )
+                )
+                .distinct()
+            )
+            survivors = batch_df.join(losers, "vec_id", "left_anti")
+        survivors = barrier.cut(survivors, "streaming.dedup.embedding_survivors")
+        return survivors, _ann_parts(batch_df, n_planes, n_cells, None, None)
 
-    return _ingest
+    return staged_applier(store_dir, checkpoint, step, out_path)
 
 
 def embedding_ingest_stream(
@@ -639,34 +518,17 @@ def image_dedup_applier(store_path: str, out_path: str, checkpoint: str):
     contract as the text tiers (a plain pass-through would re-emit refused
     rows on cross-batch re-delivery).
 
-    Exactly-once: the full markers protocol (batch-tagged staged
+    Exactly-once: ``markers.staged_applier`` (batch-tagged staged
     renames, partial recovery BEFORE the store probe, marker-hit
     read-back of published survivors) — identical to the text tiers,
     which is what lets the composed ingest-day loop chain it."""
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
+    from ..operators.dedup import first_per_key
     from ..operators.phash import image_dhash
-    from .markers import (
-        batch_already_applied,
-        cleanup_staging,
-        mark_batch_applied,
-        marker_id,
-        read_batch_output,
-        recover_partial,
-        stage_and_publish,
-        store_has_data,
-    )
+    from .markers import staged_applier, store_has_data
 
-    def _ingest(batch_df: DataFrame, batch_id: int) -> "DataFrame | None":
-        spark = batch_df.sparkSession
-        tag = marker_id(checkpoint, batch_id)
-        if batch_already_applied(store_path, checkpoint, batch_id):
-            cleanup_staging(store_path, tag)
-            cleanup_staging(out_path, tag)
-            return read_batch_output(spark, out_path, tag)
-        recover_partial(store_path, tag)
-        recover_partial(out_path, tag)
+    def step(batch_df: DataFrame):
         # identity dedup FIRST: an at-least-once source can repeat a
         # media_id inside one drop; without this both lanes would
         # double-emit through the final media_id join (the keeper
@@ -683,26 +545,18 @@ def image_dedup_applier(store_path: str, out_path: str, checkpoint: str):
         refused = hashed.filter(F.col("ok") != "true").select(
             "media_id", F.col("media_id").cast("string").alias("key")
         )
+        seen_dhash = None
         if store_has_data(store_path):
-            seen = spark.read.parquet(store_path)
-            ok = ok.join(
-                seen.filter(F.col("kind") == "dhash").select(
-                    F.col("key").alias("dhash")
-                ),
-                "dhash",
-                "left_anti",
+            seen = batch_df.sparkSession.read.parquet(store_path)
+            seen_dhash = seen.filter(F.col("kind") == "dhash").select(
+                F.col("key").alias("dhash")
             )
             refused = refused.join(
                 seen.filter(F.col("kind") == "refused").select("key"),
                 "key",
                 "left_anti",
             )
-        w = Window.partitionBy("dhash").orderBy(F.col("media_id").asc())
-        keepers = (
-            ok.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("media_id", "dhash")
-        )
+        keepers = first_per_key(ok, "dhash", "media_id", seen=seen_dhash)
         survivors = barrier.cut(
             batch_df.join(
                 keepers.select("media_id").unionByName(refused.select("media_id")),
@@ -710,23 +564,12 @@ def image_dedup_applier(store_path: str, out_path: str, checkpoint: str):
             ),
             "streaming.dedup.image_survivors",
         )
-        stage_and_publish(out_path, tag, {"": (survivors, None)})
-        new_keys = (
-            keepers.select(
-                F.lit("dhash").alias("kind"), F.col("dhash").alias("key")
-            )
-            .distinct()
-            .unionByName(
-                refused.select(F.lit("refused").alias("kind"), "key")
-            )
-        )
-        stage_and_publish(store_path, tag, {"": (new_keys, None)})
-        mark_batch_applied(store_path, checkpoint, batch_id)
-        cleanup_staging(store_path, tag)
-        cleanup_staging(out_path, tag)
-        return survivors
+        new_keys = keepers.select(
+            F.lit("dhash").alias("kind"), F.col("dhash").alias("key")
+        ).unionByName(refused.select(F.lit("refused").alias("kind"), "key"))
+        return survivors, {"": (new_keys, None)}
 
-    return _ingest
+    return staged_applier(store_path, checkpoint, step, out_path)
 
 
 def image_dedup_ingest_stream(

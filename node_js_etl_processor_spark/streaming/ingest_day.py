@@ -47,9 +47,10 @@ before others — re-delivers the batch and each tier either no-ops
 adds over the individual loops: a tier whose marker is hit cannot
 recompute its survivors (its store now contains the batch's own rows,
 which would flip every keeper decision), so the dedup appliers return
-the batch's PUBLISHED survivors (``markers.read_batch_output`` — the
-batch-tagged files in the live output tree), which is exactly what the
-original run handed downstream. tests/test_ingest_day.py pins the
+the batch's PUBLISHED survivors (the batch-tagged files in the live
+output tree — an empty frame when it published none; the one applier,
+``markers.staged_applier``, reads them back), which is exactly what
+the original run handed downstream. tests/test_ingest_day.py pins the
 whole composition — including a mid-chain injected crash — against
 the one-shot batch rebuild of every store.
 """
@@ -201,14 +202,8 @@ def ingest_day_applier(
         # individually idempotent, and a marker-hit tier returns its
         # published survivors so the chain survives re-delivery
         s_exact = exact(docs, batch_id)
-        if s_exact is None:
-            s_exact = docs.limit(0)
         s_near = near(s_exact, batch_id)
-        if s_near is None:
-            s_near = s_exact.limit(0)
         s_sim = sim(s_near, batch_id)
-        if s_sim is None:
-            s_sim = s_near.limit(0)
 
         # embedding tier off the exact survivors (near/sim text dedup
         # and embedding near-dup are parallel curation axes)

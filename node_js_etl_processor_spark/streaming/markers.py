@@ -20,36 +20,36 @@ SparkSession, the same client Spark's own writers use):
    no-op. Underscore-prefixed paths are invisible to Spark's file
    index, so markers never pollute reads, and partition-scoped
    overwrites (SCD2's dynamic mode) never touch them.
-2. **Bootstrap sentinel** — the first batch of a loop builds the
-   store from nothing (an overwrite); a crash after that build but
-   before the marker would make the re-delivered batch take the
-   append/merge path against a store that already holds its own
-   rows. ``record_bootstrap`` (called BEFORE the first write) pins
-   the bootstrap (checkpoint, batch_id); ``bootstrap_pending`` tells
-   the re-delivered batch to re-run the bootstrap overwrite instead.
-3. **Staged publish** — for append-style stores (BM25 postings/df/
-   stats, ANN by_sig/by_cell, dedup postings/sigs/fingerprints,
-   survivor outputs), ``stage_and_publish`` writes the batch's rows
-   under ``<root>/_staging/<tag>/``, records a target-directory
-   manifest, then renames every staged file into the live tree under
-   a batch-tagged name (``<tag>-<seq>-…``). ``recover_partial`` —
-   called by the loop whenever the marker is MISSING — deletes any
-   ``<tag>-*`` files a crashed earlier attempt already renamed (the
-   manifest bounds the listing to the touched directories), so the
-   re-delivery recomputes against a store provably free of its own
-   partial work, then re-publishes. Re-delivery therefore completes
-   or no-ops; it never double-counts.
-
-4. **Versioned pointer** — for store rewrites, each batch writes its
+2. **Staged publish** — for append-style stores (BM25 postings/df/
+   stats, ANN by_sig/by_cell, dedup postings/sigs/fingerprints, span
+   postings, survivor outputs), ``stage_and_publish`` writes the
+   batch's rows under ``<root>/_staging/<tag>/``, records a
+   target-directory manifest, then renames every staged file into the
+   live tree under a batch-tagged name (``<tag>-<seq>-…``).
+   ``recover_partial`` — called whenever the marker is MISSING —
+   deletes any ``<tag>-*`` files a crashed earlier attempt already
+   renamed (the manifest bounds the listing to the touched
+   directories), so the re-delivery recomputes against a store
+   provably free of its own partial work, then re-publishes. A first
+   batch is no exception: it publishes into the empty store the same
+   way, so a crashed bootstrap recovers like any append. The nine
+   staged-append tiers run this protocol through ONE body,
+   ``staged_applier``; each tier supplies only the step that turns a
+   batch into its survivors and its store parts.
+3. **Versioned pointer** — for store rewrites, each batch writes its
    output to a fresh batch-tagged location and atomically switches
    the ``_CURRENT`` pointer; the predecessor is never destroyed
    before its successor is live, and a pointer already naming the
    batch's own version tells the re-delivery the merge committed.
-   The Count-Min loop points at whole ``v_<tag>`` grid directories
+   The sketch loops point at whole ``v_<tag>`` grid directories
    (parameter-sized store — a full copy per batch is the merge
-   cost); the SCD2 store points at a bucket→directory MANIFEST file
+   cost); the edge and vocabulary stores point at a generation of
+   SUM-mergeable partials (``sources/partials_store.py``); the SCD2
+   store points at a bucket→directory MANIFEST file
    (``sources/scd2_store.py``), so only touched buckets get new
-   files — a miniature transactional table.
+   files — a miniature transactional table. These loops keep their
+   own appliers: they commit by a pointer switch, not a staged
+   append.
 
 Together these close the crash window for EVERY ingest loop: a
 re-delivered batch completes, no-ops, or recovers — it never
@@ -231,29 +231,6 @@ def mark_batch_applied(store_path: str, checkpoint: str, batch_id: int) -> None:
     _mkdirs(_marker_path(store_path, checkpoint, batch_id))
 
 
-# ---------------------------------------------------------------------------
-# guard 2: bootstrap sentinel
-# ---------------------------------------------------------------------------
-
-
-def _sentinel_path(store_path: str, checkpoint: str, batch_id: int) -> str:
-    return _marker_path(store_path, checkpoint, batch_id) + ".bootstrap"
-
-
-def record_bootstrap(store_path: str, checkpoint: str, batch_id: int) -> None:
-    """Pin (checkpoint, batch_id) as the loop's bootstrap batch — call
-    BEFORE the bootstrap write, so a crash between the write and the
-    applied marker is recoverable as a bootstrap re-run."""
-    _mkdirs(_sentinel_path(store_path, checkpoint, batch_id))
-
-
-def bootstrap_pending(store_path: str, checkpoint: str, batch_id: int) -> bool:
-    """True iff this (checkpoint, batch_id) started a bootstrap that
-    never reached its applied marker: the re-delivered batch must take
-    the OVERWRITE path even though the store now holds data."""
-    return _exists(_sentinel_path(store_path, checkpoint, batch_id))
-
-
 def _has_any_file(path: str) -> bool:
     """At least one non-metadata FILE anywhere under ``path`` (early
     exit on the first hit, so the listing cost is one or two dirs in
@@ -273,17 +250,16 @@ def _has_any_file(path: str) -> bool:
 
 def store_has_data(store_path: str, probe: str | None = None) -> bool:
     """Whether the store holds PUBLISHED data (bootstrap-vs-append
-    test). ``probe`` names the layout subpath that only a completed
-    bootstrap creates (e.g. ``postings``). Counts actual data FILES
-    (recursively, early-exit) — markers/sentinels/staging and the
-    empty partition dirs a recovery purge leaves behind never flip
-    the answer."""
+    test). ``probe`` names the layout subpath to look under (e.g.
+    ``postings``). Counts actual data FILES (recursively, early-exit)
+    — markers, staging and the empty partition dirs a recovery purge
+    leaves behind never flip the answer."""
     root = posixpath.join(store_path, probe) if probe is not None else store_path
     return _has_any_file(root)
 
 
 # ---------------------------------------------------------------------------
-# guard 3: staged publish
+# guard 2: staged publish
 # ---------------------------------------------------------------------------
 
 
@@ -295,6 +271,23 @@ def _manifest_path(root: str, tag: str) -> str:
     return posixpath.join(_staging_root(root, tag), "_PUBLISHING")
 
 
+def write_parts(root: str, parts: dict[str, tuple]) -> None:
+    """Overwrite each layout part under ``root``: ``parts`` maps a
+    subpath (``""`` for ``root`` itself) to ``(df, partition_col)``,
+    and ``partition_col`` of None writes flat. ``repartition`` before
+    ``partitionBy`` keeps the write at one file per directory per
+    shuffle partition. The batch builds (``write_bm25_index``,
+    ``write_ann_layout``) and the staging step of
+    ``stage_and_publish`` share it."""
+    for sub, (df, part_col) in parts.items():
+        writer = (df.repartition(part_col) if part_col else df).write.mode(
+            "overwrite"
+        )
+        if part_col:
+            writer = writer.partitionBy(part_col)
+        writer.parquet(posixpath.join(root, sub) if sub else root)
+
+
 def stage_and_publish(
     root: str,
     tag: str,
@@ -303,32 +296,25 @@ def stage_and_publish(
     """Exactly-once-able append of one batch into an append-style
     store.
 
-    ``parts`` maps a layout subpath (``""`` for the root itself) to
-    ``(df, partition_col)`` — ``partition_col`` of None writes flat.
-    Protocol: write every part under ``<root>/_staging/<tag>/``
-    (overwrite — a re-staged attempt replaces its predecessor), write
-    the manifest of target directories, then rename each staged data
-    file to ``<root>/<sub>/<partition dirs>/<tag>-<seq>-<name>``.
-    The manifest doubles as the in-publish flag: ``recover_partial``
-    uses its presence + contents to purge a crashed attempt's
+    ``parts`` is a ``write_parts`` layout. Protocol: write every part
+    under ``<root>/_staging/<tag>/`` (overwrite — a re-staged attempt
+    replaces its predecessor), write the manifest of target
+    directories, then rename each staged data file to
+    ``<root>/<sub>/<partition dirs>/<tag>-<seq>-<name>``. The manifest
+    doubles as the in-publish flag: ``recover_partial`` uses its
+    presence + contents to purge a crashed attempt's
     partially-renamed files without listing the whole store.
 
     Callers re-delivering a batch MUST call ``recover_partial`` first
     (before recomputing anything that reads the store) and
-    ``cleanup_staging`` after their applied marker."""
+    ``cleanup_staging`` after their applied marker — ``staged_applier``
+    does both for the staged-append ingest loops."""
     staging = _staging_root(root, tag)
-    for sub, (df, part_col) in parts.items():
-        dst = posixpath.join(staging, sub) if sub else posixpath.join(staging, "root")
-        writer = (df.repartition(part_col) if part_col else df).write.mode(
-            "overwrite"
-        )
-        if part_col:
-            writer = writer.partitionBy(part_col)
-        writer.parquet(dst)
+    write_parts(staging, {sub or "root": part for sub, part in parts.items()})
     # manifest: every live directory the renames will touch
     targets: list[tuple[str, str, str]] = []  # (staged_abs, live_dir, name)
     for sub in parts:
-        sdir = posixpath.join(staging, sub) if sub else posixpath.join(staging, "root")
+        sdir = posixpath.join(staging, sub or "root")
         live_base = posixpath.join(root, sub) if sub else root
         for rel, name in _walk_files(sdir):
             live_dir = posixpath.join(live_base, rel) if rel else live_base
@@ -368,32 +354,89 @@ def cleanup_staging(root: str, tag: str) -> None:
     _delete(_staging_root(root, tag))
 
 
-def read_batch_output(spark, root: str, tag: str):
+def read_batch_output(spark, root: str, tag: str, schema):
     """Read back exactly the files batch ``tag`` published at the
-    ROOT of an output directory (the ``""`` subpath of
-    ``stage_and_publish`` — the survivor outputs of the dedup ingest
-    loops). This is what lets a COMPOSED ingest loop re-deliver a
-    batch whose early tiers already committed: the tier's survivors
-    cannot be recomputed (the store now contains the batch's own
-    rows, which would flip every keeper decision), but they are
-    sitting in the live tree under their batch-tagged names. Returns
-    None when the batch published no files (empty survivors)."""
+    ROOT of an output directory (the survivor outputs of the dedup
+    ingest loops). This is what lets a COMPOSED ingest loop re-deliver
+    a batch whose early tiers already committed: the tier's survivors
+    cannot be recomputed (the store now contains the batch's own rows,
+    which would flip every keeper decision), but they are sitting in
+    the live tree under their batch-tagged names. A batch that
+    published nothing reads as an empty frame of ``schema``."""
     files = [
         posixpath.join(root, name)
         for name, is_dir in _listdir(root)
         if not is_dir and name.startswith(f"{tag}-") and name.endswith(".parquet")
     ]
     if not files:
-        return None
+        return spark.createDataFrame([], schema)
     return spark.read.parquet(*files)
+
+
+def staged_applier(
+    store: str,
+    checkpoint: str,
+    step,
+    out: str | None = None,
+    compact=None,
+    compact_every: int = 0,
+):
+    """The one exactly-once foreachBatch body of the staged-append
+    stores. ``step(batch_df)`` returns ``(survivors, parts)``: the
+    batch's surviving rows and the store's ``stage_and_publish``
+    parts. A tier with an ``out`` root publishes its survivors there;
+    a tier without one passes its whole batch through. Per
+    (checkpoint, batch_id):
+
+    - marker hit → drop the stale staging of both roots, return the
+      survivors the first delivery published (``read_batch_output``);
+    - otherwise → ``recover_partial`` on both roots, and only then
+      ``step`` (a delta probe reads the store and must never see its
+      own batch's partial rows); publish the survivors, then the
+      parts; mark; then drop the staging of both roots — after the
+      marker, because the staged manifest is what a crash recovery
+      needs. An empty batch skips ``step`` and both publishes: it
+      recovers, marks and returns itself.
+
+    ``compact(spark, store)`` runs when ``(batch_id + 1)`` is a
+    multiple of ``compact_every`` (0 = never), after the marker — the
+    single-writer slot — and on replays too, so a boundary that lands
+    on a re-delivery does not defer the fold a full cycle."""
+    roots = [store] if out is None else [store, out]
+
+    def _ingest(batch_df, batch_id: int):
+        spark = batch_df.sparkSession
+        tag = marker_id(checkpoint, batch_id)
+        survivors = batch_df
+        if batch_already_applied(store, checkpoint, batch_id):
+            for root in roots:
+                cleanup_staging(root, tag)
+            if out is not None:
+                survivors = read_batch_output(spark, out, tag, batch_df.schema)
+        else:
+            for root in roots:
+                recover_partial(root, tag)
+            if not batch_df.isEmpty():
+                survivors, parts = step(batch_df)
+                if out is not None:
+                    stage_and_publish(out, tag, {"": (survivors, None)})
+                stage_and_publish(store, tag, parts)
+            mark_batch_applied(store, checkpoint, batch_id)
+            for root in roots:
+                cleanup_staging(root, tag)
+        if compact_every and (batch_id + 1) % compact_every == 0:
+            compact(spark, store)
+        return survivors
+
+    return _ingest
 
 
 def recover_all_partial(root: str) -> "list[str]":
     """Recover EVERY tag with a staging tree under ``root`` — the
     repair sweep for crashed AD-HOC appends (``append_bm25_index`` /
-    ``append_ann_layout`` called without a ``batch_tag``), whose
-    random uuid tag died with the crashed process and so can't be
-    passed to ``recover_partial`` by hand. Single-writer only: run it
+    ``append_ann_layout``), whose random uuid tag died with the
+    crashed process and so can't be passed to ``recover_partial`` by
+    hand. Single-writer only: run it
     while no append is in flight, since an in-flight batch's staging
     looks identical to a crashed one. The ingest loops don't need
     this — their tags are deterministic in (checkpoint, batch_id) and

@@ -11,15 +11,15 @@ INCREMENTAL: a day's drops maintain the representative set without
 ever re-tokenizing the corpus.
 
 Store layout: one parquet tree of 16-byte ``set_key`` rows (the seen
-distinct sets), append-only through the markers protocol — every
-batch lands via ``stage_and_publish`` (batch-tagged renames), a
-marker hit replays the batch's PUBLISHED survivors, and a crashed
-publish is purged tag-first (``recover_partial``) before recompute —
-the exactly-once contract every other tier carries, pinned by the
-composed crash-matrix test (tests/test_ingest_day.py).
+distinct sets), append-only through ``markers.staged_applier`` —
+every batch lands via batch-tagged staged renames, a marker hit
+replays the batch's PUBLISHED survivors, and a crashed publish is
+purged tag-first before recompute — the exactly-once contract every
+other tier carries, pinned by the composed crash-matrix test
+(tests/test_ingest_day.py).
 
 Keeper rule: min-doc_id per set_key (in-batch), drop-if-seen
-(cross-batch) — with doc_id-ordered drops this equals the one-shot
+(cross-batch) — ``first_per_key`` with the store as its seen keys — with doc_id-ordered drops this equals the one-shot
 ``exact_set_reps`` representatives over the concatenated history
 (stream == batch pinned in tests).
 """
@@ -27,7 +27,6 @@ Keeper rule: min-doc_id per set_key (in-batch), drop-if-seen
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..functions import barrier
 
@@ -37,58 +36,26 @@ def set_collapse_applier(store_path: str, out_path: str, checkpoint: str):
     module docstring). Returns the batch's surviving documents (or
     the published survivors on a marker hit), like the other dedup
     appliers, so a composed loop can chain it."""
+    from ..operators.dedup import first_per_key
     from ..operators.setsim import packed_sets
-    from .markers import (
-        batch_already_applied,
-        cleanup_staging,
-        mark_batch_applied,
-        marker_id,
-        read_batch_output,
-        recover_partial,
-        stage_and_publish,
-        store_has_data,
-    )
+    from .markers import staged_applier, store_has_data
 
-    def _ingest(batch_df: DataFrame, batch_id: int) -> "DataFrame | None":
-        from pyspark.sql.window import Window
-
-        spark = batch_df.sparkSession
-        tag = marker_id(checkpoint, batch_id)
-        if batch_already_applied(store_path, checkpoint, batch_id):
-            cleanup_staging(store_path, tag)
-            cleanup_staging(out_path, tag)
-            return read_batch_output(spark, out_path, tag)
-        recover_partial(store_path, tag)
-        recover_partial(out_path, tag)
+    def step(batch_df: DataFrame):
         keyed = batch_df.join(
             packed_sets(batch_df).select("doc_id", "set_key"), "doc_id"
         )
+        # left_anti on the 16-byte key: the probe shuffles digests,
+        # never text, and the store side is never broadcast (it is
+        # corpus-sized over the stream's lifetime)
+        seen = None
         if store_has_data(store_path):
-            # left_anti on the 16-byte key — the dedup_exact_delta
-            # shape: the probe shuffles digests, never text, and the
-            # store side is never broadcast (it is corpus-sized over
-            # the stream's lifetime)
-            seen = spark.read.parquet(store_path).select("set_key")
-            keyed = keyed.join(seen, "set_key", "left_anti")
-        w = Window.partitionBy("set_key").orderBy(F.col("doc_id").asc())
+            seen = batch_df.sparkSession.read.parquet(store_path)
         # the kept frame feeds BOTH publishes (docs out, keys to the
         # store) — and the keys come from the column already computed,
-        # never a re-tokenization
+        # never a re-tokenization; one row per set_key by construction
         kept = barrier.cut(
-            keyed.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn"),
-            "streaming.setkey.kept",
+            first_per_key(keyed, "set_key", seen=seen), "streaming.setkey.kept"
         )
-        survivors = kept.drop("set_key")
-        stage_and_publish(out_path, tag, {"": (survivors, None)})
-        # kept is unique per set_key by construction (row_number()==1
-        # over the set_key window) — no distinct needed
-        keys = kept.select("set_key")
-        stage_and_publish(store_path, tag, {"": (keys, None)})
-        mark_batch_applied(store_path, checkpoint, batch_id)
-        cleanup_staging(store_path, tag)
-        cleanup_staging(out_path, tag)
-        return survivors
+        return kept.drop("set_key"), {"": (kept.select("set_key"), None)}
 
-    return _ingest
+    return staged_applier(store_path, checkpoint, step, out_path)

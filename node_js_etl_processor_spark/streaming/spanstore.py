@@ -18,8 +18,8 @@ all positions, not a per-batch verdict. The store row is 24 bytes
 the read-side duplication gate is the same one-exchange COUNT window
 the batch query runs.
 
-Exactly-once: pure append — every batch lands via
-``stage_and_publish`` (batch-tagged renames), a marker hit no-ops,
+Exactly-once: pure append through ``markers.staged_applier`` — every
+batch lands via batch-tagged staged renames, a marker hit no-ops,
 and a crashed publish is purged tag-first before recompute. The
 composed crash-matrix test pins streamed-store extents == the
 one-shot ``q_span_extents`` over the whole corpus.
@@ -274,35 +274,15 @@ def span_postings_applier(
     (see the module docstring). ``compact_every=N`` runs the minor
     compaction every N batches (0 = never) — AFTER the batch's marker,
     in the single-writer slot, like every other store's loop."""
-    from .markers import (
-        batch_already_applied,
-        cleanup_staging,
-        mark_batch_applied,
-        marker_id,
-        recover_partial,
-        stage_and_publish,
+    from .markers import staged_applier
+
+    return staged_applier(
+        store_path,
+        checkpoint,
+        lambda batch: (batch, {_LOG: (shingle_positions(batch, w), None)}),
+        compact=compact_span_store,
+        compact_every=compact_every,
     )
-
-    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        tag = marker_id(checkpoint, batch_id)
-        if batch_already_applied(store_path, checkpoint, batch_id):
-            cleanup_staging(store_path, tag)
-        else:
-            recover_partial(store_path, tag)
-            sh = shingle_positions(batch_df, w)
-            stage_and_publish(store_path, tag, {_LOG: (sh, None)})
-            mark_batch_applied(store_path, checkpoint, batch_id)
-            cleanup_staging(store_path, tag)
-        # the compaction slot runs on marker-hit re-deliveries too:
-        # a replayed batch landing on a compaction
-        # boundary must not defer the fold a full cycle — compaction
-        # is single-writer-safe here because the batch's marker is
-        # committed either way
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            compact_span_store(batch_df.sparkSession, store_path)
-        return None
-
-    return _ingest
 
 
 def span_postings_ingest_stream(
@@ -398,49 +378,26 @@ def novelty_gated_ingest_applier(
     dropped as exact duplicates of an admitted doc. NEAR-duplication
     within a drop still cuts through the gate itself, as before.
 
-    Exactly-once: the exact_dedup_applier protocol verbatim — marker
-    hit returns the batch's PUBLISHED survivors
-    (``read_batch_output``); a re-delivery purges this tag's partial
-    publishes FIRST (``recover_partial`` on both roots), which is
-    load-bearing here: re-scoring against a store that already
-    contained the crashed attempt's postings would see every drop
-    position duplicated and wrongly cut the whole batch."""
+    Exactly-once: ``markers.staged_applier``, like the exact-dedup
+    tier — a marker hit returns the batch's PUBLISHED survivors; a
+    re-delivery purges this tag's partial publishes on both roots
+    FIRST, which is load-bearing here: re-scoring against a store
+    that already contained the crashed attempt's postings would see
+    every drop position duplicated and wrongly cut the whole batch."""
+    from pyspark.sql import functions as F
+
     from ..operators.dedup import exact_twin_reps
     from ..operators.novelty import novelty_of_drop
-    from .markers import (
-        batch_already_applied,
-        cleanup_staging,
-        mark_batch_applied,
-        marker_id,
-        read_batch_output,
-        recover_partial,
-        stage_and_publish,
-    )
+    from .markers import staged_applier
 
-    def _ingest(batch_df: DataFrame, batch_id: int):
-        from pyspark.sql import functions as F
-
-        spark = batch_df.sparkSession
-        tag = marker_id(checkpoint, batch_id)
-        if batch_already_applied(store_path, checkpoint, batch_id):
-            cleanup_staging(store_path, tag)
-            cleanup_staging(out_path, tag)
-            # compaction slot before the replay return:
-            # a boundary landing on a re-delivered batch must not
-            # defer the fold a full cycle — single-writer-safe, the
-            # marker is committed
-            if compact_every and (batch_id + 1) % compact_every == 0:
-                compact_span_store(spark, store_path)
-            return read_batch_output(spark, out_path, tag)
-        recover_partial(store_path, tag)
-        recover_partial(out_path, tag)
+    def step(batch_df: DataFrame):
         # keep-one BEFORE scoring (see the docstring's twin rule)
         batch_df = barrier.cut(
             exact_twin_reps(batch_df), "streaming.spanstore.twin_reps"
         )
         # first drop scores against the empty frame read_span_store
         # returns for a fresh store: only WITHIN-drop duplication cuts
-        stored = read_span_store(spark, store_path)
+        stored = read_span_store(batch_df.sparkSession, store_path)
         cut = (
             novelty_of_drop(batch_df, stored, w)
             .filter(
@@ -453,18 +410,16 @@ def novelty_gated_ingest_applier(
             batch_df.join(cut, "doc_id", "left_anti"),
             "streaming.spanstore.survivors",
         )
-        stage_and_publish(out_path, tag, {"": (survivors, None)})
-        stage_and_publish(
-            store_path, tag, {_LOG: (shingle_positions(survivors, w), None)}
-        )
-        mark_batch_applied(store_path, checkpoint, batch_id)
-        cleanup_staging(store_path, tag)
-        cleanup_staging(out_path, tag)
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            compact_span_store(spark, store_path)
-        return survivors
+        return survivors, {_LOG: (shingle_positions(survivors, w), None)}
 
-    return _ingest
+    return staged_applier(
+        store_path,
+        checkpoint,
+        step,
+        out_path,
+        compact=compact_span_store,
+        compact_every=compact_every,
+    )
 
 
 def novelty_gated_ingest_stream(

@@ -43,9 +43,8 @@ def scd2_applier(
     re-delivery recomputes against the still-live old manifest and
     rewrites the same batch-tagged dir; and a pointer already naming
     THIS batch's manifest (``scd2_committed_tag``) means the merge
-    committed — just mark. No bootstrap sentinel needed: an
-    uncommitted bootstrap leaves the pointer absent, so the
-    re-delivery correctly re-bootstraps. A dynamic partition overwrite
+    committed — just mark. An uncommitted bootstrap leaves the
+    pointer absent, so the re-delivery correctly re-bootstraps. A dynamic partition overwrite
     would leave a crash window; the manifest layout closes it."""
     from ..sources.scd2_store import (
         scd2_apply_delta,

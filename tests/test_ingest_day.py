@@ -136,7 +136,7 @@ def test_ingest_day_with_midchain_crash_equals_one_shot(
         ann_probe,
         write_ann_layout,
     )
-    from node_js_etl_processor_spark.streaming import indexing
+    from node_js_etl_processor_spark.streaming import markers
     from node_js_etl_processor_spark.streaming.ingest_day import ingest_day_stream
     from node_js_etl_processor_spark.streaming.sketches import read_sketch_store
 
@@ -200,22 +200,25 @@ def test_ingest_day_with_midchain_crash_equals_one_shot(
     # ---- run with a crash injected in drop 2's BM25 tier: the batch's
     # earlier tiers (dedup chain + ANN) commit, BM25 publishes but dies
     # before its marker, the later tiers never run this delivery
-    real_mark = indexing.mark_batch_applied
+    real_mark = markers.mark_batch_applied
     crashes: list = []
 
     def boom(path, checkpoint, batch_id):
-        if batch_id == 1:
+        # every staged-append tier marks through markers; only the
+        # bm25 store's marker crashes, so the dedup chain commits first
+        if batch_id == 1 and path == paths["bm25"]:
             crashes.append(batch_id)
             raise RuntimeError("injected crash in bm25 tier, drop 2")
         return real_mark(path, checkpoint, batch_id)
 
-    monkeypatch.setattr(indexing, "mark_batch_applied", boom)
+    monkeypatch.setattr(markers, "mark_batch_applied", boom)
     # count compactions across BOTH runs with a SEPARATE MonkeyPatch
     # instance (the bm25 crash's monkeypatch.undo() must not remove
     # the counters): the vocab lane compacts at batch 1 of the first
     # run (its tier commits before the bm25 crash; the marker-hit
-    # replay returns early, so that is its only fold), the edges tier
-    # applies batch 1 fresh on restart and folds there
+    # replay reaches compact_partials, which returns early because the
+    # generation holds no batch-tagged file, so that is its only fold),
+    # the edges tier applies batch 1 fresh on restart and folds there
     from _pytest.monkeypatch import MonkeyPatch
 
     from node_js_etl_processor_spark.sources import partials_store

@@ -1,11 +1,11 @@
-"""The markers protocol: filesystem-agnostic replay guards,
-bootstrap sentinels, and staged publish (crash-mid-append recovery).
+"""The markers protocol: filesystem-agnostic replay guards and
+staged publish (crash-mid-append recovery).
 
 A marker short-circuit alone covers only crash-AFTER-commit
 re-delivery; these tests pin the two other windows:
 a crash BETWEEN a batch's writes and its marker (append loops must
 recover, never double-count) and a crashed BOOTSTRAP batch (must
-re-run the overwrite path, not append a copy of itself). Crash
+land exactly once, not append a copy of itself). Crash
 injection = monkeypatching ``mark_batch_applied`` to raise, so the
 foreachBatch commit genuinely never happens and the restart genuinely
 re-delivers through the real checkpoint machinery.
@@ -30,7 +30,7 @@ def _roots(tmp_path):
 
 @pytest.mark.parametrize("kind", ["plain", "file_uri"])
 def test_marker_and_sentinel_roundtrip_any_filesystem(spark, tmp_path, kind):
-    """Markers, bootstrap sentinels and store_has_data must behave
+    """Markers and store_has_data must behave
     identically for scheme-less paths (os fast path) and URI store
     paths (Hadoop FileSystem API — exercised via file:, the same code
     path s3a:/hdfs: URIs take)."""
@@ -42,10 +42,6 @@ def test_marker_and_sentinel_roundtrip_any_filesystem(spark, tmp_path, kind):
     assert markers.batch_already_applied(root, ckpt, 0)
     assert not markers.batch_already_applied(root, ckpt, 1)
     assert not markers.batch_already_applied(root, ckpt + "x", 0)
-
-    assert not markers.bootstrap_pending(root, ckpt, 1)
-    markers.record_bootstrap(root, ckpt, 1)
-    assert markers.bootstrap_pending(root, ckpt, 1)
 
     # metadata never counts as store data
     assert not markers.store_has_data(root)
@@ -137,7 +133,7 @@ def test_bm25_stream_recovers_crash_between_append_and_marker(
     q.awaitTermination(120)
 
     calls: list = []
-    _crash_once(monkeypatch, indexing, calls)
+    _crash_once(monkeypatch, markers, calls)
     q = indexing.bm25_index_stream(
         spark.readStream.schema(schema).json(str(src / "b2")),
         idx,
@@ -172,9 +168,10 @@ def test_bm25_stream_recovers_crash_between_append_and_marker(
 def test_bm25_stream_recovers_crashed_bootstrap(
     spark, sf_dir, tmp_path, monkeypatch
 ):
-    """A crash after the bootstrap build but before its
-    marker must NOT make the re-delivered first batch take the append
-    path against its own rows — the sentinel re-runs the overwrite."""
+    """A crash after the bootstrap publish but before its
+    marker must NOT leave the re-delivered first batch appending on
+    top of its own rows — it publishes into the empty store like any
+    append, so recover_partial purges the crashed attempt first."""
     from node_js_etl_processor_spark.sources.bm25_index import (
         bm25_from_index,
         write_bm25_index,
@@ -191,7 +188,7 @@ def test_bm25_stream_recovers_crashed_bootstrap(
     schema = "doc_id long, text string"
 
     calls: list = []
-    _crash_once(monkeypatch, indexing, calls)
+    _crash_once(monkeypatch, markers, calls)
     q = indexing.bm25_index_stream(
         spark.readStream.schema(schema).json(str(src / "b1")), idx, ckpt
     )
@@ -222,9 +219,9 @@ def test_bm25_stream_recovers_crashed_bootstrap(
 def test_scd2_stream_recovers_crashed_bootstrap(
     spark, sf_dir, tmp_path, monkeypatch
 ):
-    """The SCD2 twin of the bootstrap sentinel: a re-delivered first
-    CDC batch re-runs the full build (overwrite) instead of merging
-    against its own history and minting phantom versions."""
+    """The SCD2 twin of the crashed-bootstrap case: a re-delivered
+    first CDC batch re-runs the full build instead of merging against
+    its own history and minting phantom versions."""
     from node_js_etl_processor_spark.operators.relational import q_scd2
     from node_js_etl_processor_spark.sources.scd2_store import read_scd2_store
     from node_js_etl_processor_spark.streaming import warehouse
@@ -493,7 +490,7 @@ def test_embedding_stream_recovers_crash_between_append_and_marker(
 
 
 def test_bm25_stream_end_to_end_over_file_uri_store(spark, sf_dir, tmp_path):
-    """The whole ingest loop — markers, sentinel, staged publish —
+    """The whole ingest loop — markers, staged publish, recovery —
     against a ``file:`` URI store path, driving the Hadoop FileSystem
     code path end to end (the same one hdfs:/s3a: stores take)."""
     from node_js_etl_processor_spark.sources.bm25_index import (
@@ -987,3 +984,89 @@ def test_trend_stats_stream_exactly_once_matches_batch(
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
     assert got.count() > 0
+
+
+#: the nine staged-append tiers that share ``markers.staged_applier``
+STAGED_TIERS = (
+    "exact", "near_dup", "simhash", "embedding", "image", "setkey",
+    "span_postings", "novelty", "bm25",
+)
+
+
+def _staged_tier(spark, sf_dir, tmp_path, tier):
+    """(applier, batch, id column, roots) for one staged-append tier
+    over a small slice of the sf0.001 fixture."""
+    from node_js_etl_processor_spark.streaming import dedup as sdedup
+    from node_js_etl_processor_spark.streaming import spanstore
+    from node_js_etl_processor_spark.streaming.indexing import bm25_applier
+    from node_js_etl_processor_spark.streaming.setkey import (
+        set_collapse_applier,
+    )
+
+    store, out, ckpt = (str(tmp_path / n) for n in ("store", "out", "ckpt"))
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "text", "lang", "source", "n_chars"
+    ).filter("doc_id < 40")
+    with_out = {
+        "exact": sdedup.exact_dedup_applier,
+        "near_dup": sdedup.near_dup_applier,
+        "simhash": sdedup.simhash_applier,
+        "setkey": set_collapse_applier,
+        "novelty": spanstore.novelty_gated_ingest_applier,
+    }
+    if tier in with_out:
+        return with_out[tier](store, out, ckpt), docs, "doc_id", (store, out)
+    if tier == "span_postings":
+        apply = spanstore.span_postings_applier(store, ckpt)
+        return apply, docs, "doc_id", (store,)
+    if tier == "bm25":
+        return bm25_applier(store, ckpt), docs, "doc_id", (store,)
+    if tier == "embedding":
+        embs = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", "embedding"
+        ).filter("vec_id < 40")
+        apply = sdedup.embedding_applier(store, out, ckpt)
+        return apply, embs, "vec_id", (store, out)
+    from node_js_etl_processor_spark.operators.phash import synth_phash_media
+
+    media = synth_phash_media(docs).select("media_id", "payload")
+    apply = sdedup.image_dedup_applier(store, out, ckpt)
+    return apply, media, "media_id", (store, out)
+
+
+def _tree(roots):
+    """Every file and directory under the roots, with file sizes."""
+    got = set()
+    for root in roots:
+        for d, dirs, files in os.walk(root):
+            got |= {(os.path.relpath(os.path.join(d, n), root), -1) for n in dirs}
+            got |= {
+                (os.path.relpath(os.path.join(d, n), root),
+                 os.path.getsize(os.path.join(d, n)))
+                for n in files
+            }
+    return got
+
+
+@pytest.mark.parametrize("tier", STAGED_TIERS)
+def test_staged_applier_contract(spark, sf_dir, tmp_path, tier):
+    """One exactly-once rule for every staged-append tier: an empty
+    batch is marked and returns an empty frame; the bootstrap batch
+    (the first non-empty one, into an empty store) returns its
+    survivors; a replay of the marked batch returns the same
+    survivors and changes nothing in the store or the output."""
+    apply, batch, key, roots = _staged_tier(spark, sf_dir, tmp_path, tier)
+    store, ckpt = roots[0], str(tmp_path / "ckpt")
+
+    empty = apply(batch.limit(0), 0)
+    assert empty is not None and empty.count() == 0
+    assert markers.batch_already_applied(store, ckpt, 0)
+
+    first = apply(batch, 1)
+    want = sorted(r[key] for r in first.select(key).collect())
+    assert want, "the bootstrap batch returned no survivors"
+    before = _tree(roots)
+
+    again = apply(batch, 1)
+    assert sorted(r[key] for r in again.select(key).collect()) == want
+    assert _tree(roots) == before

@@ -198,3 +198,31 @@ def test_compaction_purges_crashed_append_no_double_count(
     assert _counts_set(read_vocab_counts(spark, store)) == want_full
     staging = posixpath.join(_gen_dir(VOCAB, store), "_staging")
     assert not markers._exists(posixpath.join(staging, tag2))
+
+
+def test_replay_on_compaction_boundary_does_not_refold(
+    spark, sf_dir, tmp_path
+):
+    """A re-delivered batch whose marker is set and whose batch_id
+    lands on a ``compact_every`` boundary reaches the compaction slot
+    again, but its first delivery already folded the log: the replay
+    must leave the generation pointer (and so every file) as it is,
+    not rewrite the whole generation for nothing."""
+    from node_js_etl_processor_spark.sources.partials_store import (
+        partials_applier,
+    )
+    from node_js_etl_processor_spark.streaming import markers
+
+    docs = load_table(spark, sf_dir, "documents").limit(60)
+    store, ckpt = str(tmp_path / "vstore"), str(tmp_path / "vckpt")
+    apply = partials_applier(VOCAB, store, ckpt, compact_every=2)
+    apply(docs.filter("doc_id % 2 = 0"), 0)
+    apply(docs.filter("doc_id % 2 = 1"), 1)  # appends, then folds
+    folded = markers.current_version(store)
+    assert folded is not None and folded != f"gen_{markers.marker_id(ckpt, 0)}"
+
+    apply(docs.filter("doc_id % 2 = 1"), 1)  # the replay
+    assert markers.current_version(store) == folded
+    assert _counts_set(read_vocab_counts(spark, store)) == _counts_set(
+        vocab_counts(docs)
+    )
