@@ -246,11 +246,24 @@ def minhash_band_postings(
     """(band, bucket, doc_id) LSH postings — the exploded band-bucket
     keys of ``minhash_signatures``. This is the unit both the
     full-corpus self-join (``minhash_candidates``) and the incremental
-    delta path (``sources.dedup_store``) consume; at ingest it is ALSO
-    what a signature store persists, so a crawl drop never re-hashes
-    the accepted corpus."""
-    rows_per_band = num_hashes // bands
+    delta probe (``sources.dedup_store.dedup_minhash_delta``) consume;
+    at ingest it is ALSO what the near-dup store persists, so a crawl
+    drop never re-hashes the accepted corpus."""
     sig = minhash_signatures(documents, num_hashes, shingle_n, portable=portable)
+    return minhash_band_postings_from_sigs(sig, num_hashes, bands, portable)
+
+
+def minhash_band_postings_from_sigs(
+    sig: DataFrame,
+    num_hashes: int = 32,
+    bands: int = 8,
+    portable: bool = False,
+) -> DataFrame:
+    """The banding step of ``minhash_band_postings`` over a
+    (doc_id, h0..h{num_hashes-1}) signature frame, for a caller that
+    already holds the signatures (the near-dup ingest applier keeps
+    them for verification, so the batch is hashed once)."""
+    rows_per_band = num_hashes // bands
 
     def _bucket(b: int) -> Column:
         joined = F.concat_ws(
@@ -802,8 +815,9 @@ def simhash_band_postings_from_sigs(sigs: DataFrame) -> DataFrame:
     within Hamming distance 3 shares ≥1 unchanged band, pigeonhole).
     The same banding expression q_dedup_simhash applies to distinct
     sigs inline; factored here so the incremental store
-    (sources/dedup_store.py) persists candidates in exactly the batch
-    form's shape."""
+    (``streaming.dedup.simhash_applier``, probed by
+    ``sources.dedup_store.dedup_simhash_delta``) persists candidates
+    in exactly the batch form's shape."""
     return sigs.select(
         "doc_id",
         "sig",

@@ -104,8 +104,8 @@ def append_bm25_index(documents: DataFrame, path: str) -> None:
     postings rows, per-term df partials, one stats partial row.
     Nothing existing is read or rewritten (df/stats are mergeable
     partials the readers SUM), so index maintenance is O(|batch|)
-    regardless of index size — the same access pattern as
-    append_minhash_store. Batch doc_ids must be new to the index.
+    regardless of index size — the same access pattern as the
+    near-dup stores' appends. Batch doc_ids must be new to the index.
 
     The append goes through ``markers.stage_and_publish`` under a
     random tag: the batch's rows land in ``<path>/_staging/<tag>``

@@ -87,6 +87,19 @@ def url_frontier_stream(
     )
 
 
+def _losers(pairs: DataFrame, kind: str = "doc") -> DataFrame:
+    """The batch rows a delta probe's verified pairs drop, as one
+    ``<kind>_id`` column: the new side of a new-old pair, the larger
+    id of a new-new pair (its smaller-id batch mate is kept)."""
+    from pyspark.sql import functions as F
+
+    return pairs.select(
+        F.when(F.col("pair_type") == "new-old", F.col(f"{kind}_a"))
+        .otherwise(F.col(f"{kind}_b"))
+        .alias(f"{kind}_id")
+    ).distinct()
+
+
 def exact_dedup_applier(store_path: str, out_path: str, checkpoint: str):
     """The per-batch body of ``exact_dedup_ingest_stream`` as a
     reusable applier callable — idempotent per (checkpoint, batch_id)
@@ -136,7 +149,7 @@ def exact_dedup_ingest_stream(
     out_path: str,
     checkpoint: str,
 ):
-    """The ingest loop of ``sources/dedup_store.py`` as a STREAM:
+    """Exact-dedup ingest as a STREAM:
     see ``exact_dedup_applier`` for the per-batch semantics and the
     exactly-once protocol. Returns the started query (availableNow —
     the same drain-the-source twin as every refresh here). Batch
@@ -159,10 +172,11 @@ def near_dup_applier(
 ):
     """The per-batch body of ``near_dup_ingest_stream`` as a reusable
     applier (for the composed ingest-day loop) — the minhash twin of
-    ``exact_dedup_ingest_stream``: per micro-batch, LSH candidates
-    against the stored band postings (``dedup_minhash_delta`` — only
-    the batch is hashed) are VERIFIED in signature space (estimated
-    Jaccard = agreeing-minhash fraction against the stored
+    ``exact_dedup_ingest_stream``: per micro-batch, the batch is
+    hashed once, its band postings are probed against the stored ones
+    (``sources.dedup_store.dedup_minhash_delta``) and the candidates
+    are VERIFIED in signature space (estimated Jaccard =
+    agreeing-minhash fraction against the batch's and the stored
     signatures, Broder 1997), so the accepted corpus's text is never
     read — not even for verification. Docs with an est-Jaccard ≥
     threshold link to anything seen earlier (or to a smaller-doc_id
@@ -181,77 +195,46 @@ def near_dup_applier(
     from pyspark.sql import functions as F
 
     from ..operators.dedup import (
-        minhash_band_postings,
+        minhash_band_postings_from_sigs,
         minhash_est_jaccard,
         minhash_signatures,
     )
+    from ..sources.dedup_store import dedup_minhash_delta
     from .markers import staged_applier, store_has_data
 
     post_path = os.path.join(store_dir, "postings")
     sigs_path = os.path.join(store_dir, "sigs")
 
+    def side(frame: DataFrame, name: str, *keep: str) -> DataFrame:
+        return frame.select(
+            F.col("doc_id").alias(f"doc_{name}"),
+            *keep,
+            *[F.col(f"h{i}").alias(f"{name}_h{i}") for i in range(num_hashes)],
+        )
+
     # the staged applier runs this only after recovering the batch's
     # own partial publish, so the delta probe never matches it
     def step(batch_df: DataFrame):
-        spark = batch_df.sparkSession
         batch_df = barrier.cut(batch_df, "streaming.dedup.near_dup_batch")
         sigs = barrier.cut(
             minhash_signatures(batch_df, num_hashes), "streaming.dedup.near_dup_sigs"
         )
-        post = minhash_band_postings(batch_df, num_hashes, bands)
-        sa = sigs.select(
-            F.col("doc_id").alias("keep_id"),
-            *[F.col(f"h{i}").alias(f"a_h{i}") for i in range(num_hashes)],
-        )
-        sb = sigs.select(
-            F.col("doc_id").alias("drop_id"),
-            *[F.col(f"h{i}").alias(f"b_h{i}") for i in range(num_hashes)],
-        )
-        a, b = post.alias("a"), post.alias("b")
-        new_new = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
+        post = minhash_band_postings_from_sigs(sigs, num_hashes, bands)
+        # doc_b is a batch doc in new-new pairs and a stored one in new-old
+        b_sigs = sigs.withColumn("pair_type", F.lit("new-new"))
+        if store_has_data(sigs_path):
+            stored = batch_df.sparkSession.read.parquet(sigs_path)
+            b_sigs = b_sigs.unionByName(
+                stored.withColumn("pair_type", F.lit("new-old"))
             )
-            .select(
-                F.col("a.doc_id").alias("keep_id"),
-                F.col("b.doc_id").alias("drop_id"),
-            )
-            .distinct()
-            .join(sa, "keep_id")
-            .join(sb, "drop_id")
+        verified = (
+            dedup_minhash_delta(post, post_path)
+            .join(side(sigs, "a"), "doc_a")
+            .join(side(b_sigs, "b", "pair_type"), ["doc_b", "pair_type"])
             .filter(minhash_est_jaccard("a_", "b_", num_hashes) >= threshold)
-            .select("drop_id")
         )
-        losers = new_new
-        if store_has_data(store_dir, "postings"):
-            store_post = spark.read.parquet(post_path)
-            store_sigs = spark.read.parquet(sigs_path).select(
-                F.col("doc_id").alias("keep_id"),
-                *[F.col(f"h{i}").alias(f"a_h{i}") for i in range(num_hashes)],
-            )
-            new_old = (
-                store_post.join(
-                    F.broadcast(post.withColumnRenamed("doc_id", "drop_id")),
-                    ["band", "bucket"],
-                )
-                .filter(F.col("doc_id") != F.col("drop_id"))
-                .select(F.col("doc_id").alias("keep_id"), "drop_id")
-                .distinct()
-                .join(store_sigs, "keep_id")
-                .join(sb, "drop_id")
-                .filter(minhash_est_jaccard("a_", "b_", num_hashes) >= threshold)
-                .select("drop_id")
-            )
-            losers = losers.unionByName(new_old)
         survivors = barrier.cut(
-            batch_df.join(
-                losers.distinct().withColumnRenamed("drop_id", "doc_id"),
-                "doc_id",
-                "left_anti",
-            ),
+            batch_df.join(_losers(verified), "doc_id", "left_anti"),
             "streaming.dedup.near_dup_survivors",
         )
         # append the WHOLE batch (seen, not just kept) — see docstring
@@ -288,67 +271,33 @@ def simhash_applier(
     max_hamming: int = 3,
 ):
     """SimHash near-dup ingest applier (completes the streamed
-    dedup trio for the composed ingest-day loop): per batch, the
-    stored band postings are probed with the SAME 4x16-bit banding +
-    Hamming verify as ``sources.dedup_store.dedup_simhash_delta``
-    (only the batch is hashed — the numpy signature kernel runs once;
-    the store side never re-reads text), a doc is dropped if a
-    verified pair links it to anything seen earlier or to a
-    smaller-doc_id batch mate, survivors land in ``out_path`` and the
-    WHOLE batch's postings append (seen, not just kept — the minhash
-    loop's contract). Exactly-once via the same staged-publish +
-    marker protocol as ``near_dup_applier``."""
-    from pyspark.sql import functions as F
-
+    dedup trio for the composed ingest-day loop): per batch, the numpy
+    signature kernel runs once, and the batch's 4x16-bit band postings
+    are probed against the stored ones with the Hamming verify fused
+    in (``sources.dedup_store.dedup_simhash_delta`` — the store side
+    never re-reads text); a doc is dropped if a verified pair links it
+    to anything seen earlier or to a smaller-doc_id batch mate,
+    survivors land in ``out_path`` and the WHOLE batch's postings
+    append (seen, not just kept — the minhash loop's contract).
+    Exactly-once via the same staged-publish + marker protocol as
+    ``near_dup_applier``."""
     from ..operators.dedup import (
         simhash_band_postings_from_sigs,
         simhash_signatures_numpy,
     )
-    from .markers import staged_applier, store_has_data
+    from ..sources.dedup_store import dedup_simhash_delta
+    from .markers import staged_applier
 
     def step(batch_df: DataFrame):
-        spark = batch_df.sparkSession
         batch_df = barrier.cut(batch_df, "streaming.dedup.simhash_batch")
         sigs = barrier.cut(
             simhash_signatures_numpy(batch_df, drop_tokenless=True),
             "streaming.dedup.simhash_sigs",
         )
         post = simhash_band_postings_from_sigs(sigs)
-        a, b = post.alias("a"), post.alias("b")
-        new_new = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.chunk") == F.col("b.chunk"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .filter(
-                F.bit_count(F.col("a.sig").bitwiseXOR(F.col("b.sig")))
-                <= max_hamming
-            )
-            .select(F.col("b.doc_id").alias("doc_id"))
-        )
-        losers = new_new
-        if store_has_data(store_dir):
-            store = spark.read.parquet(store_dir)
-            new_old = (
-                store.join(
-                    F.broadcast(
-                        post.withColumnRenamed("doc_id", "new_id")
-                        .withColumnRenamed("sig", "new_sig")
-                    ),
-                    ["band", "chunk"],
-                )
-                .filter(F.col("new_id") != F.col("doc_id"))
-                .filter(
-                    F.bit_count(F.col("new_sig").bitwiseXOR(F.col("sig")))
-                    <= max_hamming
-                )
-                .select(F.col("new_id").alias("doc_id"))
-            )
-            losers = losers.unionByName(new_old)
+        pairs = dedup_simhash_delta(post, store_dir, max_hamming)
         survivors = barrier.cut(
-            batch_df.join(losers.distinct(), "doc_id", "left_anti"),
+            batch_df.join(_losers(pairs), "doc_id", "left_anti"),
             "streaming.dedup.simhash_survivors",
         )
         return survivors, {"": (post, "band")}
@@ -440,8 +389,6 @@ def embedding_applier(
     must never match its own partial rows). The layout rows come from
     ``similarity_layout._ann_parts``, the projection
     ``write_ann_layout`` and ``append_ann_layout`` use."""
-    from pyspark.sql import functions as F
-
     from ..operators.similarity import embedding_near_dup_keepers
     from ..sources.similarity_layout import _ann_parts, dedup_embedding_delta
     from .markers import staged_applier, store_has_data
@@ -457,17 +404,7 @@ def embedding_applier(
                 threshold=threshold,
                 n_planes=n_planes,
             )
-            losers = (
-                pairs.filter(F.col("pair_type") == "new-old")
-                .select(F.col("vec_a").alias("vec_id"))
-                .unionByName(
-                    pairs.filter(F.col("pair_type") == "new-new").select(
-                        F.col("vec_b").alias("vec_id")
-                    )
-                )
-                .distinct()
-            )
-            survivors = batch_df.join(losers, "vec_id", "left_anti")
+            survivors = batch_df.join(_losers(pairs, "vec"), "vec_id", "left_anti")
         survivors = barrier.cut(survivors, "streaming.dedup.embedding_survivors")
         return survivors, _ann_parts(batch_df, n_planes, n_cells, None, None)
 
