@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from node_js_etl_processor_spark.catalog import load_table
+from node_js_etl_processor_spark.functions.literals import double_digits
 from node_js_etl_processor_spark.operators import (
     attribution,
     basket,
@@ -272,8 +273,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def _sql_arr(vec: list[float]) -> str:
-    """Render a vector as a DuckDB DOUBLE[] literal."""
-    return "[" + ",".join(repr(float(x)) for x in vec) + "]"
+    """Render a vector as a DuckDB DOUBLE[] literal, with the exact
+    double digits the Spark side's SQL-text constants use."""
+    return "[" + ",".join(double_digits(x) for x in vec) + "]"
 
 
 def _srp_sig_sql(col: str) -> str:

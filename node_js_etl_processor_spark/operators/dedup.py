@@ -210,30 +210,20 @@ def minhash_signatures(
                 .bitwiseAND(F.lit(0x7FFFFFFF)),
             ).alias("hs"),
         )
-        # factory closures, NOT default-arg lambdas: F.transform
-        # dispatches on the lambda's positional arity, so a default
-        # parameter would silently turn it into the (element, index)
-        # two-arg form and bind the array index instead of the constant
-        def _perm(a: int, b: int):
-            return lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(P31)
-
         mins = [
-            F.array_min(F.transform(F.col("hs"), _perm(a, b))).alias(f"h{seed}")
+            f"array_min(transform(hs, x -> ({a} * x + {b}) % {P31})) AS h{seed}"
             for seed, (a, b) in enumerate(minhash_lcg_consts(num_hashes))
         ]
     else:
         hs = sh.select(
             "doc_id", F.transform(F.col("sh"), lambda s: F.xxhash64(s)).alias("hs")
         )
-
-        def _rehash(seed: int):
-            return lambda h: F.xxhash64(h, F.lit(seed))
-
         mins = [
-            F.array_min(F.transform(F.col("hs"), _rehash(seed))).alias(f"h{seed}")
+            f"array_min(transform(hs, x -> xxhash64(x, {seed}))) AS h{seed}"
             for seed in range(num_hashes)
         ]
-    return hs.select("doc_id", *mins)
+    # the k min-passes as SQL text: one JVM call for all k columns
+    return hs.selectExpr("doc_id", *mins)
 
 
 def minhash_band_postings(
@@ -261,30 +251,21 @@ def minhash_band_postings_from_sigs(
 ) -> DataFrame:
     """The banding step of ``minhash_band_postings`` over a
     (doc_id, h0..h{num_hashes-1}) signature frame, for a caller that
-    already holds the signatures (the near-dup ingest applier keeps
-    them for verification, so the batch is hashed once)."""
+    already holds the signatures (the near-dup ingest applier and
+    ``minhash_near_dup_keepers`` keep them for verification, so the
+    batch is hashed once)."""
     rows_per_band = num_hashes // bands
+    hash_fn = "md5" if portable else "xxhash64"
 
-    def _bucket(b: int) -> Column:
-        joined = F.concat_ws(
-            ",",
-            *[
-                F.col(f"h{i}").cast("string")
-                for i in range(b * rows_per_band, (b + 1) * rows_per_band)
-            ],
-        )
-        return F.md5(joined) if portable else F.xxhash64(joined)
+    def _bucket(b: int) -> str:
+        rows = range(b * rows_per_band, (b + 1) * rows_per_band)
+        joined = ", ".join(f"CAST(h{i} AS STRING)" for i in rows)
+        return f"{hash_fn}(concat_ws(',', {joined}))"
 
-    band_structs = F.array(
-        *[
-            F.struct(F.lit(b).alias("band"), _bucket(b).alias("bucket"))
-            for b in range(bands)
-        ]
-    )
-    return sig.select("doc_id", F.explode(band_structs).alias("bb")).select(
-        F.col("bb.band").alias("band"),
-        F.col("bb.bucket").alias("bucket"),
-        "doc_id",
+    # all band structs as one SQL text: one JVM call, not one per hash
+    structs = ", ".join(f"struct({b} AS band, {_bucket(b)} AS bucket)" for b in range(bands))
+    return sig.selectExpr("doc_id", f"explode(array({structs})) AS bb").selectExpr(
+        "bb.band AS band", "bb.bucket AS bucket", "doc_id"
     )
 
 
@@ -395,26 +376,22 @@ def simhash_signatures(documents: DataFrame, text_col: str = "text") -> DataFram
             "ht"
         ),
     )
-    def _vote(i: int):
-        return lambda acc, h: acc + F.when(
-            F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1
-        ).otherwise(-1)
-
-    with_votes = hashed.select(
-        "doc_id",
-        F.array(
-            *[F.aggregate(F.col("ht"), F.lit(0), _vote(i)) for i in range(64)]
-        ).alias("votes"),
+    # the 64 votes and the 64-bit assembly as SQL text: one JVM call each
+    # (in the fold, x is the running vote and y a token hash)
+    votes = ", ".join(
+        f"aggregate(ht, 0, (x, y) -> x + CASE WHEN (shiftright(y, {i}) & 1) = 1"
+        " THEN 1 ELSE -1 END)"
+        for i in range(64)
     )
-    sig = F.lit(0).cast("bigint")
-    for i in range(64):
-        sig = sig.bitwiseOR(
-            F.shiftleft(
-                F.when(F.col("votes")[i] > 0, F.lit(1)).otherwise(F.lit(0)).cast("bigint"),
-                i,
-            )
-        )
-    return with_votes.select("doc_id", sig.alias("sig"))
+    bits = " | ".join(
+        ["CAST(0 AS BIGINT)"]
+        + [
+            f"shiftleft(CAST(CASE WHEN votes[{i}] > 0 THEN 1 ELSE 0 END AS BIGINT), {i})"
+            for i in range(64)
+        ]
+    )
+    with_votes = hashed.selectExpr("doc_id", f"array({votes}) AS votes")
+    return with_votes.selectExpr("doc_id", f"{bits} AS sig")
 
 
 def q_dedup_simhash(documents: DataFrame, max_hamming: int = 3) -> DataFrame:
@@ -996,14 +973,15 @@ def minhash_near_dup_keepers(
     testable end to end. Token-less docs (no signatures) pass
     through, mirroring minhash_signatures' exclusion.
 
-    Scale: candidates from the band-bucket self-join (never
-    all-pairs), signature re-join per side (32 longs/row), anti-join
-    to drop losers."""
+    Scale: the signatures are cut once and banded from the cut (the
+    text is hashed once), candidates from the band-bucket self-join
+    (never all-pairs), signature re-join per side (32 longs/row),
+    anti-join to drop losers."""
     sigs = barrier.cut(
         minhash_signatures(documents, num_hashes, shingle_n),
         "dedup.minhash_near_dup_keepers",
     )
-    post = minhash_band_postings(documents, num_hashes, bands, shingle_n)
+    post = minhash_band_postings_from_sigs(sigs, num_hashes, bands)
     a, b = post.alias("a"), post.alias("b")
     cand = (
         a.join(

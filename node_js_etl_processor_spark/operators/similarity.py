@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from node_js_etl_processor_spark.functions import literals
 from node_js_etl_processor_spark.functions.vector import cosine_similarity, dot, l2_norm
 
 DIM = 64
@@ -54,7 +55,7 @@ def brute_force_topk(
     codegen'd projection; top-k is TakeOrderedAndProject (per-partition
     heaps, no global sort shuffle).
     """
-    p = F.array(*[F.lit(float(x)) for x in probe])
+    p = literals.lit([float(x) for x in probe])
     scored = embeddings.select(
         "vec_id",
         "label",
@@ -101,12 +102,12 @@ def srp_signature(embedding: Column, planes: list[list[float]]) -> Column:
     than n_planes separate dot trees OR-ed together — same bits
     (``acc*2 + bit`` over the REVERSED plane list ≡ ``bit_i << i``),
     but one expression tree, so per-run analysis doesn't re-walk the
-    literal matrix once per plane (see ivf_assign's note).
+    literal matrix once per plane (see ivf_assign's note). The matrix
+    is one SQL-text constant (``literals.lit``): one JVM call to build
+    where one ``F.lit`` per element took 3.7k.
     """
     emb = embedding.cast("array<double>")
-    plane_arr = F.array(
-        *[F.array(*[F.lit(float(v)) for v in p]) for p in reversed(planes)]
-    )
+    plane_arr = literals.lit([[float(v) for v in p] for p in reversed(planes)])
     bits = F.transform(
         plane_arr,
         lambda p: F.when(dot(emb, p) >= 0, F.lit(1)).otherwise(F.lit(0)).cast("bigint"),
@@ -136,7 +137,7 @@ def score_topk(
     """Exact cosine scoring + top-k over a candidate frame: literal
     probe array (constant-folded), codegen'd projection,
     TakeOrderedAndProject — shared tail of every similarity query."""
-    p = F.array(*[F.lit(float(x)) for x in probe])
+    p = literals.lit([float(x) for x in probe])
     if exclude_vec_id is not None:
         cand = cand.filter(F.col("vec_id") != exclude_vec_id)
     # label is passed through when present, not required — layouts
@@ -443,8 +444,10 @@ def _kmeans_partials_numpy(
         .mapInPandas(partials, schema=out_schema)
         .groupBy("cell")
         .agg(
-            F.sum("n_vectors").alias("n_vectors"),
-            *[F.sum(f"s{d}").alias(f"s{d}") for d in range(dim)],
+            *[
+                F.expr(f"sum({c}) AS {c}")
+                for c in ["n_vectors"] + [f"s{d}" for d in range(dim)]
+            ]
         )
     )
 
@@ -484,14 +487,18 @@ def kmeans_step(
     # the old-centroid lookup appears ONCE in the plan (one element_at
     # on one 8×64 literal array) — an earlier form nested that literal
     # once PER DIMENSION and the 64× re-inlined constant tree cost
-    # ~5 s of analysis/codegen per run (the data itself is k rows here)
-    cent_arr = F.array(*[F.array(*[F.lit(float(v)) for v in c]) for c in cents])
-    means = F.array(
-        *[
-            F.col(f"s{d}").cast("double")
-            / (F.col("n_vectors").cast("double") * F.lit(float(KMEANS_QUANT)))
+    # ~5 s of analysis/codegen per run (the data itself is k rows here).
+    # The array and the 64 means are each one SQL text: one JVM call to
+    # build instead of one per element
+    cent_arr = literals.lit([[float(v) for v in c] for c in cents])
+    quant = literals.sql(float(KMEANS_QUANT))
+    means = F.expr(
+        "array("
+        + ", ".join(
+            f"CAST(s{d} AS DOUBLE) / (CAST(n_vectors AS DOUBLE) * {quant})"
             for d in range(len(cents[0]))
-        ]
+        )
+        + ")"
     )
     # left fold, acc + diff² in dimension order: the exact float-op
     # sequence of the previous chained form and of the DuckDB oracle
@@ -642,12 +649,13 @@ def ivf_assign(
     declared-query form); pass ``kmeans_train`` output for a trained
     quantizer.
 
-    One narrow projection — greatest-of-k dot products against literal
-    centroid arrays, all codegen. At 100 TB the assignment is computed
-    once at ingest and the table is partitioned/clustered BY cell, so a
-    probe reads only its cell's files (partition pruning), ~1/k of the
-    data — sources/similarity_layout.py materializes that layout and
-    its probe readers are plan-tested for pruning.
+    One narrow projection — greatest-of-k dot products against one k×DIM
+    centroid matrix, built as one SQL-text constant (``literals.lit``).
+    At 100 TB the assignment is computed once at ingest and the table is
+    partitioned/clustered BY cell, so a probe reads only its cell's
+    files (partition pruning), ~1/k of the data —
+    sources/similarity_layout.py materializes that layout and its probe
+    readers are plan-tested for pruning.
     """
     from node_js_etl_processor_spark.catalog import spread
 
@@ -660,8 +668,9 @@ def ivf_assign(
     # literal matrix, not k separate dot trees: per-run ANALYSIS of k
     # duplicated 64-literal expression trees measured 1.6× slower than
     # the single-tree form (same arithmetic, same fold order, identical
-    # assignments — the kmeans-tail literal-re-inlining lesson again)
-    cent_arr = F.array(*[F.array(*[F.lit(float(v)) for v in c]) for c in cents])
+    # assignments — the kmeans-tail literal-re-inlining lesson again).
+    # The matrix is SQL text: one JVM call to build, not one per element
+    cent_arr = literals.lit([[float(v) for v in c] for c in cents])
     scores = F.transform(
         cent_arr, lambda c: dot(emb, c) / (l2_norm(emb) + F.lit(1e-12))
     )
@@ -788,9 +797,10 @@ def _pq_sub_dists(sub: Column, cb: list[list[float]]) -> Column:
     argmin-equivalent form d'_j = dot(sub, c_j)·(-2) + ||c_j||² (the
     row's own ||sub||² is constant across j and cannot change the
     argmin, so it is dropped). ONE transform over a single k×sub_dim
-    literal matrix — the ivf_assign single-tree discipline."""
-    cb_arr = F.array(*[F.array(*[F.lit(float(v)) for v in c]) for c in cb])
-    cc_arr = F.array(*[F.lit(float(sum(v * v for v in c))) for c in cb])
+    literal matrix — the ivf_assign single-tree discipline — built,
+    like the norms, as one SQL-text constant."""
+    cb_arr = literals.lit([[float(v) for v in c] for c in cb])
+    cc_arr = literals.lit([float(sum(v * v for v in c)) for c in cb])
     return F.transform(
         F.sequence(F.lit(0), F.lit(len(cb) - 1)),
         lambda j: dot(sub, F.element_at(cb_arr, j + 1)) * F.lit(-2.0)
@@ -914,9 +924,7 @@ def _pq_encode_jvm(
     n_sub, sub_dim = _pq_cb_geometry(cbs)
     emb = F.col("embedding").cast("array<double>")
     if residual_centroids is not None:
-        cent_arr = F.array(
-            *[F.array(*[F.lit(float(v)) for v in c]) for c in residual_centroids]
-        )
+        cent_arr = literals.lit([[float(v) for v in c] for c in residual_centroids])
         emb = F.zip_with(
             emb, F.element_at(cent_arr, F.col("cell") + 1), lambda a, b: a - b
         )
@@ -984,8 +992,8 @@ def pq_adc_score(
     """The ADC score expression for a ``codes`` array column:
     Σ_s lut[s][code_s] with lut[s][j] = <probe_s, c_sj> computed
     driver-side (8×16 doubles — parameters, not data) and embedded as
-    literal arrays; a left-associated chain the oracle replays in the
-    same order. Shared by ``pq_adc_topk`` (inline encode) and the
+    SQL-text literal arrays; a left-associated chain the oracle replays
+    in the same order. Shared by ``pq_adc_topk`` (inline encode) and the
     layout probe (stored codes — the scan never touches embeddings)."""
     cbs = codebooks if codebooks is not None else _pq_codebooks()
     _, sub_dim = _pq_cb_geometry(cbs)
@@ -999,14 +1007,10 @@ def pq_adc_score(
                 acc += a * b
             lut.append(acc)
         luts.append(lut)
-    adc = F.element_at(
-        F.array(*[F.lit(v) for v in luts[0]]), F.element_at(codes, 1) + 1
-    )
+    adc = F.element_at(literals.lit(luts[0]), F.element_at(codes, 1) + 1)
     for s in range(1, len(luts)):
-        adc = adc + F.element_at(
-            F.array(*[F.lit(v) for v in luts[s]]),
-            F.element_at(codes, s + 1) + 1,
-        )
+        lut = literals.lit(luts[s])
+        adc = adc + F.element_at(lut, F.element_at(codes, s + 1) + 1)
     return adc
 
 
@@ -1118,7 +1122,7 @@ def ivfpq_cell_const(
         for a, b in zip(probe, c):
             acc += a * b
         consts.append(acc)
-    return F.element_at(F.array(*[F.lit(v) for v in consts]), F.col("cell") + 1)
+    return F.element_at(literals.lit(consts), F.col("cell") + 1)
 
 
 def ivfpq_adc_topk(
@@ -1240,7 +1244,7 @@ def ivfpq_train(
     + parameter-sized collects); subsample at scale like any
     quantizer training."""
     cents = centroids if centroids is not None else _ivf_centroids(n_cells)
-    cent_arr = F.array(*[F.array(*[F.lit(float(v)) for v in c]) for c in cents])
+    cent_arr = literals.lit([[float(v) for v in c] for c in cents])
     resid = ivf_assign(embeddings, n_cells, centroids=cents).select(
         "vec_id",
         F.zip_with(
@@ -1296,21 +1300,16 @@ def embedding_pool(
     group, an OOM risk for skewed groups at scale; posexplode+avg
     would bound buffers too but costs a dim× row blowup through the
     shuffle). Returns (group, n, mean_emb array<double>)."""
-    emb = F.col("embedding").cast("array<double>")
+    # each column as SQL text: one JVM call per aggregate, not four
     grouped = embeddings.groupBy(group_col).agg(
         F.count("*").cast("bigint").alias("n"),
         *[
-            F.sum(F.element_at(emb, i + 1)).alias(f"_s{i}")
+            F.expr(f"sum(element_at(CAST(embedding AS ARRAY<DOUBLE>), {i + 1})) AS _s{i}")
             for i in range(dim)
         ],
     )
-    return grouped.select(
-        group_col,
-        "n",
-        F.array(
-            *[F.col(f"_s{i}") / F.col("n").cast("double") for i in range(dim)]
-        ).alias("mean_emb"),
-    )
+    mean = ", ".join(f"_s{i} / CAST(n AS DOUBLE)" for i in range(dim))
+    return grouped.select(group_col, "n", F.expr(f"array({mean}) AS mean_emb"))
 
 
 def q_embedding_pool(embeddings: DataFrame) -> DataFrame:
@@ -1366,7 +1365,7 @@ def srp_band_count(
     return max(1, min(max_bands, b))
 
 
-def _banded_sigs_from_full(full: Column, n_bands: int, band_planes: int) -> Column:
+def _banded_sigs_from_full(full: str, n_bands: int, band_planes: int) -> Column:
     """Array of (band, bsig) structs derived from ONE full
     ``n_bands × band_planes``-plane signature by bit slicing: plane i
     carries weight 1<<i in ``srp_signature``, so band k's short sig is
@@ -1374,22 +1373,16 @@ def _banded_sigs_from_full(full: Column, n_bands: int, band_planes: int) -> Colu
     values to signing each plane slice separately, but the plan walks
     the plane-literal matrix ONCE instead of once per band (7 separate
     2×64-literal aggregate trees per side measured seconds of
-    analysis/codegen per run at sf0.1). ``full`` MUST be a bound
-    column reference (the eval-cost contract of shingles_from_tokens),
-    or each band re-evaluates the full signature."""
+    analysis/codegen per run at sf0.1). ``full`` MUST name a bound
+    column (the eval-cost contract of shingles_from_tokens), or each
+    band re-evaluates the full signature. Built as one SQL text."""
     mask = (1 << band_planes) - 1
-    return F.array(
-        *[
-            F.struct(
-                F.lit(k).cast("int").alias("band"),
-                F.shiftright(full, k * band_planes)
-                .bitwiseAND(F.lit(mask))
-                .cast("bigint")
-                .alias("bsig"),
-            )
-            for k in range(n_bands)
-        ]
+    structs = ", ".join(
+        f"struct(CAST({k} AS INT) AS band,"
+        f" CAST(shiftright({full}, {k * band_planes}) & {mask} AS BIGINT) AS bsig)"
+        for k in range(n_bands)
     )
+    return F.expr(f"array({structs})")
 
 
 def semantic_decontaminate(
@@ -1443,7 +1436,7 @@ def semantic_decontaminate(
             "vec_id",
             "embedding",
             F.explode(
-                _banded_sigs_from_full(F.col("_full"), n_bands, band_planes)
+                _banded_sigs_from_full("_full", n_bands, band_planes)
             ).alias("bs"),
         )
         .select("vec_id", "embedding", "bs.band", "bs.bsig")
@@ -1458,7 +1451,7 @@ def semantic_decontaminate(
             "eval_id",
             "eval_emb",
             F.explode(
-                _banded_sigs_from_full(F.col("_full"), n_bands, band_planes)
+                _banded_sigs_from_full("_full", n_bands, band_planes)
             ).alias("bs"),
         )
         .select("eval_id", "eval_emb", "bs.band", "bs.bsig")

@@ -29,14 +29,23 @@ CMS_DEPTH = 4
 CMS_WIDTH = 64
 
 
-def _cms_col(key: Column, row: int, width: int) -> Column:
-    """Column index of ``key`` in hash row ``row``: low 32 bits of
-    md5(row || '|' || key) mod width — engine-neutral (DuckDB:
-    ('0x' || substr(md5(...), 9, 8))::UBIGINT % width)."""
-    hx = F.md5(F.concat(F.lit(str(row)), F.lit("|"), key))
-    return F.pmod(
-        F.conv(F.substring(hx, 9, 8), 16, 10).cast("bigint"), F.lit(width)
-    ).cast("bigint")
+def _md5_slot(salt: str, key_col: str, n: int) -> str:
+    """SQL text of the slot of ``key_col`` under hash ``salt``: low 32
+    bits of md5(salt || '|' || key) mod n — engine-neutral (DuckDB:
+    ('0x' || substr(md5(...), 9, 8))::UBIGINT % n). The count-min
+    columns (salt = row number) and the Bloom bits (salt = 'b<i>')."""
+    hx = f"md5(concat('{salt}', '|', CAST({key_col} AS STRING)))"
+    return f"CAST(pmod(CAST(conv(substring({hx}, 9, 8), 16, 10) AS BIGINT), {n}) AS BIGINT)"
+
+
+def _cms_cells(key_col: str, depth: int, width: int) -> Column:
+    """The ``depth`` (row, col) counter cells of each key, exploded as
+    ``cell`` — one SQL text, so one JVM call to build."""
+    cells = ", ".join(
+        f"struct(CAST({r} AS INT) AS row, {_md5_slot(str(r), key_col, width)} AS col)"
+        for r in range(depth)
+    )
+    return F.expr(f"explode(array({cells})) AS cell")
 
 
 def countmin_build(
@@ -48,20 +57,7 @@ def countmin_build(
     """Build the (row, col, c) counter grid: one explode to d rows per
     item, ONE keyed aggregation with map-side partials. The output is
     d×w rows regardless of stream size — the mergeable summary."""
-    key = F.col(key_col).cast("string")
-    cells = items.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(r).cast("int").alias("row"),
-                        _cms_col(key, r, width).alias("col"),
-                    )
-                    for r in range(depth)
-                ]
-            )
-        ).alias("cell")
-    ).select("cell.row", "cell.col")
+    cells = items.select(_cms_cells(key_col, depth, width)).select("cell.row", "cell.col")
     return cells.groupBy("row", "col").agg(
         F.count("*").cast("bigint").alias("c")
     )
@@ -77,21 +73,9 @@ def countmin_estimate(
     """Point estimates for ``probes``: min over the d probed cells.
     The counter grid is d×w rows — broadcast; the probe never rescans
     the stream."""
-    key = F.col(key_col).cast("string")
-    probed = probes.select(
-        key_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(r).cast("int").alias("row"),
-                        _cms_col(key, r, width).alias("col"),
-                    )
-                    for r in range(depth)
-                ]
-            )
-        ).alias("cell"),
-    ).select(key_col, "cell.row", "cell.col")
+    probed = probes.select(key_col, _cms_cells(key_col, depth, width)).select(
+        key_col, "cell.row", "cell.col"
+    )
     return (
         probed.join(F.broadcast(counters), ["row", "col"])
         .groupBy(key_col)
@@ -129,13 +113,11 @@ BLOOM_K = 4
 BLOOM_M = 131072
 
 
-def _bloom_bit(key: Column, i: int, m: int) -> Column:
-    """Bit position of hash ``i`` — same md5-derived family as the
-    count-min columns (DuckDB-replayable)."""
-    hx = F.md5(F.concat(F.lit(f"b{i}"), F.lit("|"), key))
-    return F.pmod(
-        F.conv(F.substring(hx, 9, 8), 16, 10).cast("bigint"), F.lit(m)
-    ).cast("bigint")
+def _bloom_bits(key_col: str, k: int, m: int) -> Column:
+    """The ``k`` bit positions of each key, exploded as ``bit`` — same
+    md5-derived family as the count-min columns (DuckDB-replayable)."""
+    bits = ", ".join(_md5_slot(f"b{i}", key_col, m) for i in range(k))
+    return F.expr(f"explode(array({bits})) AS bit")
 
 
 def bloom_build(
@@ -146,15 +128,7 @@ def bloom_build(
     same positions OR into an m-bit array; row form keeps the store
     joinable and the oracle trivial). Merges across batches by UNION
     DISTINCT — the Bloom property."""
-    key = F.col(key_col).cast("string")
-    return (
-        items.select(
-            F.explode(
-                F.array(*[_bloom_bit(key, i, m) for i in range(k)])
-            ).alias("bit")
-        )
-        .distinct()
-    )
+    return items.select(_bloom_bits(key_col, k, m)).distinct()
 
 
 def bloom_probe(
@@ -168,13 +142,7 @@ def bloom_probe(
     false negatives ever (the Bloom guarantee — test-pinned); false
     positives at the designed rate. The bit table joins broadcast
     (≤ m rows of one bigint)."""
-    key = F.col(key_col).cast("string")
-    pb = probes.select(
-        key_col,
-        F.explode(
-            F.array(*[_bloom_bit(key, i, m) for i in range(k)])
-        ).alias("bit"),
-    )
+    pb = probes.select(key_col, _bloom_bits(key_col, k, m))
     hits = (
         pb.join(F.broadcast(bits.withColumn("_set", F.lit(1))), "bit", "left")
         .groupBy(key_col)

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from node_js_etl_processor_spark.functions import barrier
+from node_js_etl_processor_spark.functions import barrier, literals
 
 #: Tiny per-language stopword marker lists for the n-gram/stopword
 #: language-ID heuristic. Deliberately small + deterministic; real
@@ -1292,49 +1292,35 @@ def bm25_scores_narrow(
     from node_js_etl_processor_spark.catalog import spread
 
     qterms = [t.lower() for t in query_terms]
-
-    def _eq(qv: str):
-        # single-arg closure: a 2-arg lambda would be read as the
-        # (element, index) filter variant and compare token to index
-        return lambda t: t == F.lit(qv)
-
+    terms = range(len(qterms))
     toked = spread(documents).select(
         "doc_id", tokens(F.lower(F.col("text"))).alias("toks")
     )
-    counted = toked.select(
+    # the per-term columns as SQL text: one JVM call per column
+    counted = toked.selectExpr(
         "doc_id",
-        F.size("toks").cast("bigint").alias("dl"),
+        "CAST(size(toks) AS BIGINT) AS dl",
         *[
-            F.size(F.filter(F.col("toks"), _eq(q))).cast("bigint").alias(f"tf_{i}")
+            f"CAST(size(filter(toks, x -> x = {literals.sql(q)})) AS BIGINT) AS tf_{i}"
             for i, q in enumerate(qterms)
         ],
     )
     stats = counted.agg(
         F.count("*").alias("n_docs"),
         F.avg("dl").alias("avgdl"),
-        *[
-            F.sum((F.col(f"tf_{i}") > 0).cast("bigint")).alias(f"df_{i}")
-            for i in range(len(qterms))
-        ],
+        *[F.expr(f"sum(CAST(tf_{i} > 0 AS BIGINT)) AS df_{i}") for i in terms],
     )
-    per_term = [
-        (
-            F.log(
-                (F.col("n_docs") - F.col(f"df_{i}") + 0.5) / (F.col(f"df_{i}") + 0.5)
-                + 1.0
-            )
-            * (F.col(f"tf_{i}") * (k1 + 1))
-            / (F.col(f"tf_{i}") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl")))
-        )
-        for i in range(len(qterms))
-    ]
-    total = per_term[0]
-    for t in per_term[1:]:
-        total = total + t
+    k1_1, one_b, k1_s, b_s = (literals.sql(float(v)) for v in (k1 + 1, 1 - b, k1, b))
+    total = " + ".join(
+        f"(ln((n_docs - df_{i} + 0.5D) / (df_{i} + 0.5D) + 1.0D) * (tf_{i} * {k1_1})"
+        f" / (tf_{i} + (dl * {b_s} / avgdl + {one_b}) * {k1_s}))"
+        for i in terms
+    )
+    tf_max = ", ".join(f"tf_{i}" for i in terms)
     return (
         counted.crossJoin(F.broadcast(stats))
-        .filter(F.greatest(*[F.col(f"tf_{i}") for i in range(len(qterms))]) > 0)
-        .select("doc_id", F.round(total, 4).alias("bm25"))
+        .filter(f"greatest({tf_max}) > 0")
+        .selectExpr("doc_id", f"round({total}, 4) AS bm25")
     )
 
 

@@ -13,6 +13,15 @@ same plan survives a 1000x scale-up:
   as long as it is not too small.
 - Session timezone pinned to UTC so timestamp semantics are stable and
   match the DuckDB oracle (naive timestamps interpreted as UTC).
+- PySpark's per-call origin capture off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+  every Column and DataFrame call walks the Python stack and makes four
+  extra JVM calls (active session, conf read, origin set and clear):
+  8.6k of the 19.8k py4j calls that build the ``analytics_mix``
+  basket's plans. The cost: an ``AnalysisException`` raised by a
+  DataFrame call no longer carries the Python ``file:line`` fragment in
+  its query context; the Python traceback still names the call site.
+  ``extra_conf`` can turn it back on.
 """
 
 from __future__ import annotations
@@ -50,6 +59,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")

@@ -3,7 +3,8 @@ production runs: the exact-fingerprint store keeps one doc per text
 across batches, and the MinHash and SimHash delta probes
 (``sources/dedup_store.py``) must agree with the full-corpus batch
 forms, hash only the new batch, never read the stored text and
-broadcast the new side. ``near_dup_applier`` hashes each batch once."""
+broadcast the new side. ``near_dup_applier`` and its batch reference
+``minhash_near_dup_keepers`` hash each batch once."""
 
 from __future__ import annotations
 
@@ -13,6 +14,7 @@ import io
 from pyspark.sql import functions as F
 
 from node_js_etl_processor_spark.catalog import load_table
+from node_js_etl_processor_spark.operators import dedup as odedup
 from node_js_etl_processor_spark.operators.dedup import (
     minhash_band_postings,
     minhash_candidates,
@@ -213,12 +215,8 @@ def test_simhash_append_closes_the_ingest_loop(spark, sf_dir, tmp_path):
     assert n_store_bands == 4
 
 
-def test_near_dup_applier_hashes_each_batch_once(spark, sf_dir, tmp_path, monkeypatch):
-    """The applier bands the signatures it keeps for verification: one
-    ``minhash_signatures`` call per batch, not a second from
-    ``minhash_band_postings``."""
-    from node_js_etl_processor_spark.operators import dedup as odedup
-
+def _count_signature_calls(monkeypatch) -> list:
+    """Record each ``operators.dedup.minhash_signatures`` call."""
     calls = []
     real = odedup.minhash_signatures
 
@@ -227,6 +225,24 @@ def test_near_dup_applier_hashes_each_batch_once(spark, sf_dir, tmp_path, monkey
         return real(*args, **kwargs)
 
     monkeypatch.setattr(odedup, "minhash_signatures", counted)
+    return calls
+
+
+def test_near_dup_applier_hashes_each_batch_once(spark, sf_dir, tmp_path, monkeypatch):
+    """The applier bands the signatures it keeps for verification: one
+    ``minhash_signatures`` call per batch, not a second from
+    ``minhash_band_postings``."""
+    calls = _count_signature_calls(monkeypatch)
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 40)
     _store(tmp_path, near_dup_applier, "mh_store", docs)
+    assert len(calls) == 1
+
+
+def test_near_dup_keepers_hash_each_batch_once(spark, sf_dir, monkeypatch):
+    """The batch keeper rule bands the signatures it cuts for
+    verification: one ``minhash_signatures`` call, not a second from
+    ``minhash_band_postings``."""
+    calls = _count_signature_calls(monkeypatch)
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 40)
+    odedup.minhash_near_dup_keepers(docs).count()
     assert len(calls) == 1
