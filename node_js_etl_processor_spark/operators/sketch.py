@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from node_js_etl_processor_spark.functions import literals
+
 #: Grid geometry: 4 hash rows × 64 columns. ε ≈ e/w ≈ 4.2% of the
 #: stream mass per estimate, δ ≈ e^-d ≈ 1.8% failure rate — sized so
 #: the fixture (thousands of keys) actually collides and the
@@ -274,7 +276,7 @@ def hll_estimate(regs: DataFrame, group_col: str) -> DataFrame:
         " DIV (CAST(1000000 AS BIGINT) * harmonic_scaled)"
     )
     n_zero = f"({HLL_M} - n_buckets_hit)"
-    lc_arr = "array(" + ",".join(f"{v}L" for v in lc) + ")"
+    lc_arr = f"cast({literals.sql(lc)} as array<bigint>)"
     return per_group.select(
         F.col(group_col),
         F.lit(HLL_M).cast("long").alias("m"),

@@ -18,9 +18,11 @@ and stages empty outputs (the reference's ``if (rawData)`` gate is
 always-truthy for arrays, server.js:147); sink failures DO fail the run
 (server.js:134-135, 163-165).
 
-A refresh costs one Spark job: ``stage`` collects the transformed rows
-once and renders both staged files from them on the driver, so the
-JSON and the CSV of one refresh share one ``last_updated`` stamp.
+A refresh runs no Spark job: the driver-fetched feed is a local
+relation, so the optimizer folds the transform and the ISO render into
+one ``LocalTableScan``. ``stage`` collects the transformed rows once and
+renders both staged files from them on the driver, so the JSON and the
+CSV of one refresh share one ``last_updated`` stamp.
 Concurrent ``run()`` calls on one pipeline take turns.
 """
 

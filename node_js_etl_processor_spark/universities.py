@@ -21,9 +21,12 @@ Semantics pinned by tests (tests/test_universities.py, FIXTURES.md §2):
   ``new Date().toISOString()`` (server.js:90).
 
 Everything is a narrow dependency: no shuffle anywhere in the parity
-pipeline, so Catalyst fuses the whole chain into a single
-WholeStageCodegen pass over the source partitions — at 100 TB this is
-a pure scan-bandwidth job.
+pipeline. Over a file or stream source Catalyst fuses the whole chain
+into a single WholeStageCodegen pass over the source partitions — at
+100 TB this is a pure scan-bandwidth job. The refresh's driver-fetched
+feed is a local relation instead (sources/http_json.py), and the
+optimizer folds the whole chain over it into one ``LocalTableScan``:
+no Spark job at all.
 """
 
 from __future__ import annotations

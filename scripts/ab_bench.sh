@@ -10,12 +10,16 @@
 # working tree is never stashed or switched. Odd pairs run NEW first,
 # even pairs OLD first. Before every run the script waits (up to
 # 10 min) for the 1-min load average to drop below AB_LOAD_GATE
-# (default 2.0).
+# (default 2.0). A run whose wait timed out goes ahead under load: a
+# stderr line names its side and pair, and its result line carries
+# "gate_timed_out": true.
 #
-# Prints each run's result line, then per end-to-end metric each
-# side's median and quartiles, the spread (quartile distance over the
-# median), NEW's win count over the pairs (ties count for neither) and
-# whether the median gap exceeds OLD's quartile distance.
+# Prints each run's result line, then per side the correctness, the
+# failed operations and the count of gate time-outs, then per
+# end-to-end metric each side's median and quartiles, the spread
+# (quartile distance over the median), NEW's win count over the pairs
+# (ties count for neither) and whether the median gap exceeds OLD's
+# quartile distance.
 set -euo pipefail
 if [ $# -lt 3 ]; then
   echo "usage: $0 <workload> <pairs> <seed> [rev]" >&2
@@ -32,22 +36,28 @@ mkdir "$WORK/old"
 git -C "$ROOT" archive "$REV" | tar -x -C "$WORK/old"
 RESULTS="$WORK/results.jsonl"
 
-wait_quiet() {
+wait_quiet() {  # fails if the load average never dropped under the gate
   for _ in $(seq 1 60); do
     L=$(cut -d' ' -f1 /proc/loadavg)
     awk -v l="$L" -v g="$GATE" 'BEGIN{exit !(l<g)}' && return 0
     sleep 10
   done
+  return 1
 }
 
 run_side() {  # <side> <pair> <checkout>
-  wait_quiet
-  local line
+  local line timed_out=0
+  if ! wait_quiet; then
+    timed_out=1
+    echo "# $1 pair $2: load average still >= $GATE after 10 min; running under load" >&2
+  fi
   line="$(cd "$3" && python3 perfbench/run.py --workload "$WORKLOAD" \
     --seed "$SEED" --seconds "$SECONDS_PER_RUN" --trace 0 2>/dev/null | tail -n 1)"
   python3 -c 'import json,sys
 r = json.loads(sys.argv[3]); r["side"] = sys.argv[1]; r["pair"] = int(sys.argv[2])
-print(json.dumps(r))' "$1" "$2" "$line" | tee -a "$RESULTS"
+if sys.argv[4] == "1":
+    r["gate_timed_out"] = True
+print(json.dumps(r))' "$1" "$2" "$line" "$timed_out" | tee -a "$RESULTS"
 }
 
 echo "# $WORKLOAD seed $SEED, $PAIRS pairs, --seconds $SECONDS_PER_RUN: NEW = working tree, OLD = $REV ($(git -C "$ROOT" rev-parse --short "$REV"))"
@@ -71,7 +81,8 @@ pairs = sorted(set(side["old"]) & set(side["new"]))
 for s in ("old", "new"):
     rs = side[s].values()
     print(f"{s}: correct {all(r['correct'] for r in rs)}, "
-          f"failed {sum(r['failed'] for r in rs)}/{sum(r['attempted'] for r in rs)}")
+          f"failed {sum(r['failed'] for r in rs)}/{sum(r['attempted'] for r in rs)}, "
+          f"gate timed out {sum(r.get('gate_timed_out', False) for r in rs)}/{len(rs)}")
 for m in metrics:
     name, lower = m["name"], m["better"] == "lower"
     stats = {}

@@ -138,11 +138,17 @@ def test_json_and_csv_of_one_refresh_share_last_updated(spark, tmp_path):
     assert {row[-1] for row in lines[1:]} == stamps
 
 
-def test_one_refresh_runs_one_spark_job(spark, tmp_path):
+def test_one_refresh_runs_no_spark_job(spark, tmp_path):
+    """The feed reaches Spark as a local relation, so the optimizer folds
+    the transform into one LocalTableScan and the refresh's collect
+    runs on the driver without a job."""
     p = UniversitiesPipeline(
         spark, json_path=str(tmp_path / "u.json"), csv_path=str(tmp_path / "u.csv"),
         fetcher=fake_fetcher,
     )
+    raw, _ = p.extract()
+    leaves = raw._jdf.queryExecution().analyzed().collectLeaves()
+    assert [leaves.apply(i).nodeName() for i in range(leaves.size())] == ["LocalRelation"]
     sc = spark.sparkContext
     group = f"refresh-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
@@ -152,7 +158,7 @@ def test_one_refresh_runs_one_spark_job(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert len(jobs) == 1
+    assert len(jobs) == 0
 
 
 def test_readers_never_see_a_partial_staged_file(spark, tmp_path):
@@ -211,8 +217,9 @@ def test_js_number_string_matches_node():
 
 
 def test_malformed_feed_rows_do_not_fail_refresh(spark, tmp_path):
-    """Non-array domains/web_pages and non-string scalars are coerced at
-    the driver boundary instead of failing createDataFrame."""
+    """Non-array domains/web_pages, non-string scalars and lone UTF-16
+    surrogates are coerced at the driver boundary instead of failing
+    the Arrow table the refresh hands to Spark."""
     feed = [
         {"name": "Str Domains U", "country": "X", "domains": "a.edu", "web_pages": ["w1"]},
         {"name": "Str Pages U", "country": "X", "web_pages": "https://p.edu"},
@@ -220,6 +227,13 @@ def test_malformed_feed_rows_do_not_fail_refresh(spark, tmp_path):
         {"name": {"k": 1}, "country": "X", "web_pages": ["w3"]},
         {"name": "List State U", "country": "X", "state-province": ["s"],
          "domains": [{"d": 1}, "b.edu"], "web_pages": ["w4"]},
+        # lone high, lone low and a reversed pair, as scalars and elements;
+        # the valid pair decodes to one code point and stays
+        json.loads(
+            r'{"name": "Lone \ud800 U", "country": "X", "state-province": "\udc00",'
+            r' "alpha_two_code": "\udc00\ud800", "domains": ["\ud800", "a\udc00b",'
+            r' "\udc00\ud800", "\ud83d\ude00"], "web_pages": ["w\ud800"]}'
+        ),
     ]
     p = UniversitiesPipeline(
         spark, json_path=str(tmp_path / "u.json"), csv_path=str(tmp_path / "u.csv"),
@@ -229,13 +243,18 @@ def test_malformed_feed_rows_do_not_fail_refresh(spark, tmp_path):
     assert res.success, res.error
     data, _ = _staged_rows(p.json_path, p.csv_path)
     by_name = {r["name"]: r for r in data}
-    assert set(by_name) == {"Str Domains U", "42", "List State U"}
+    assert set(by_name) == {"Str Domains U", "42", "List State U", "Lone \ufffd U"}
     assert by_name["Str Domains U"]["domains"] == []
     assert by_name["42"]["country"] == "true"
     assert by_name["42"]["alpha_two_code"] is None  # JS: 0 is falsy
     assert by_name["42"]["web_pages"] == ["7", "false"]
     assert by_name["List State U"]["state_province"] is None
     assert by_name["List State U"]["domains"] == [None, "b.edu"]
+    lone = by_name["Lone \ufffd U"]  # one U+FFFD per lone surrogate
+    assert lone["state_province"] == "\ufffd"
+    assert lone["alpha_two_code"] == "\ufffd\ufffd"
+    assert lone["domains"] == ["\ufffd", "a\ufffdb", "\ufffd\ufffd", "\U0001f600"]
+    assert lone["web_pages"] == ["w\ufffd"]
 
 
 def test_every_module_imports_without_spark_session():

@@ -103,7 +103,7 @@ def test_transform_matches_js_model(spark, rows):
 FLOAT_TEXT = {0.0: "0", 0.5: "0.5", 1.0: "1", -2.5: "-2.5", 1e21: "1e+21", 1e-7: "1e-7"}
 SCALAR = st.one_of(
     st.none(),
-    st.text(alphabet=" abX", max_size=4),
+    st.text(alphabet=" abX\ud800", max_size=4),  # a lone surrogate is valid JSON
     st.booleans(),
     st.integers(-2, 2),
     st.sampled_from(sorted(FLOAT_TEXT)),
@@ -122,7 +122,8 @@ MESSY_ROW = st.fixed_dictionaries(
 
 
 def _js_string(x):
-    """Node's ``String(x)`` on a JSON value, with the engine's documented
+    """Node's ``String(x)`` on a JSON value as Node writes it to a UTF-8
+    file (a lone surrogate becomes U+FFFD), with the engine's documented
     divergences: null, objects and arrays map to null."""
     if x is None or isinstance(x, (dict, list)):
         return None
@@ -130,7 +131,7 @@ def _js_string(x):
         return "true" if x else "false"
     if isinstance(x, float):
         return FLOAT_TEXT[x]
-    return str(x)
+    return str(x).replace("\ud800", "\ufffd")
 
 
 def _js_model_messy(rows):
@@ -170,6 +171,8 @@ def _js_model_messy(rows):
          "domains": ["d"], "web_pages": "https://w.edu"},
         {"name": 1, "country": True, "state-province": {"k": 1}, "alpha_two_code": 0.5,
          "domains": [1e21, False, [0]], "web_pages": [0, None]},
+        {"name": "\ud800b", "country": "X", "state-province": "\ud800", "alpha_two_code": None,
+         "domains": ["a\ud800"], "web_pages": ["\ud800"]},
     ]
 )
 def test_refresh_over_malformed_feed_matches_js_model(spark, rows):
